@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tank_spark import cache
 from tank_spark.plans.registry import register
 from tank_spark.sources.tables import load
 from tank_spark.util import local_values_df
@@ -329,36 +330,13 @@ def _bands_sql() -> str:
     return f"bands AS ({rows})"
 
 
-
-
-# Signature DataFrames memoized per (session, sf_dir, k, lanes): the
-# k-wide min aggregate is the one large codegen unit in this pipeline,
-# and a fresh plan per call re-compiles it (new expression ids -> janino
-# cache miss, ~tens of seconds at K=128). Reusing the SAME DataFrame
-# object makes repeated executions hit both the persisted data and the
-# compiled code — execution cost, not planning cost, is what scales.
-# Entry: key -> [fingerprint, DataFrame, materialized?]; entries are
-# evicted (unpersisted) when the sf_dir's parquet is regenerated.
-_SIGS_CACHE: dict[tuple, list] = {}
-
-# Plan-inspection tools (explain/plan-dump flows) set this True so
-# building a pairs plan never runs the signature job; execution paths
-# leave it False and materialize eagerly on first build (see below).
-PLAN_ONLY = False
-
-
-def _docs_fingerprint(sf_dir: str) -> tuple:
-    """(mtime_ns, size) of the corpus parquet — detects in-session data
-    regeneration so memoized signatures can't go stale."""
-    import os
-
-    try:
-        st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-        return (st.st_mtime_ns, st.st_size)
-    except OSError:
-        return (0, 0)
-
-
+# Signature DataFrames memoized per (session, sf_dir, k, lanes) and the
+# documents.parquet fingerprint: the k-wide min aggregate is the one large
+# codegen unit in this pipeline, and a fresh plan per call re-compiles it
+# (new expression ids -> janino cache miss, ~tens of seconds at K=128).
+# Reusing the SAME DataFrame object makes repeated executions hit both the
+# persisted data and the compiled code — execution cost, not planning
+# cost, is what scales. Regenerating the corpus unpersists the entry.
 def _sig_array(spark: SparkSession, sf_dir: str, k: int,
                lanes: int, band_w: int) -> DataFrame:
     """(cid, sig: array[k], bands: array[k/band_w]) — signatures AND their
@@ -367,16 +345,7 @@ def _sig_array(spark: SparkSession, sf_dir: str, k: int,
     array slices per doc per run measured 73x data-ratio scaling at 100x
     (the only superlinear probe); stored, the per-run cost is the
     candidate join itself."""
-    key = (spark.sparkContext.applicationId, sf_dir, k, lanes, band_w)
-    fp = _docs_fingerprint(sf_dir)
-    entry = _SIGS_CACHE.get(key)
-    if entry is not None and entry[0] != fp:
-        # data regenerated under the same path: unpersist the stale
-        # relation (executor storage is not free) and rebuild
-        entry[1].unpersist()
-        del _SIGS_CACHE[key]
-        entry = None
-    if entry is None:
+    def build():
         sigs = _sigs_map_only(corpus_df(spark, sf_dir), k, lanes)
         n_bands = k // band_w
         sig_col = F.array(*[F.col(f"h{i}") for i in range(k)])
@@ -387,19 +356,20 @@ def _sig_array(spark: SparkSession, sf_dir: str, k: int,
                 lambda bi: F.md5(F.concat_ws("", F.slice(
                     "sig", bi * band_w + 1, band_w))),
             ).alias("bands"),
-        )
-        entry = [fp, arr.persist(), False]
-        _SIGS_CACHE[key] = entry
-    if not PLAN_ONLY and not entry[2]:
+        ).persist()
         # materialize before first use: the pairs query consumes this
         # relation three times (band explode + both join sides); against
         # a lazy persist those subtrees race to fill the cache and the
         # signature compute runs up to 3x (measured 26 s vs 2 s at
-        # sf0.1, K=128). PLAN_ONLY defers it so explain-only flows
-        # (tools/dump_plans.py) can build the plan without running it.
-        entry[1].count()
-        entry[2] = True
-    return entry[1]
+        # sf0.1, K=128)
+        arr.count()
+        return arr
+
+    return cache.cached(
+        "dedup.sigs",
+        (spark.sparkContext.applicationId, sf_dir, k, lanes, band_w),
+        build, cache.fingerprint(f"{sf_dir}/documents.parquet"),
+        DataFrame.unpersist)
 
 
 def _bucket_pairs_col(id_col: str, a_name: str, b_name: str):
@@ -975,13 +945,10 @@ def dedup_lsh_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return default_lsh_clusters(spark, sf_dir)
 
 
-_CC_CACHE: dict[tuple, list] = {}
-
-
 def default_lsh_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The default-config (capped) LSH cluster relation, memoized per
-    (session, sf_dir) with the same fingerprint-keyed eviction as
-    _SIGS_CACHE: three registered consumers (clusters, min-id survivors,
+    """The default-config (capped) LSH cluster relation, a session-cache
+    entry per (session, sf_dir) keyed by the corpus fingerprint like the
+    signatures: three registered consumers (clusters, min-id survivors,
     quality survivors) plus ad-hoc reporting all need the SAME
     components, and a production pipeline computes clusters ONCE per
     snapshot and reuses the artifact. The cached relation is a
@@ -989,19 +956,12 @@ def default_lsh_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage-free already, so this only pins the final (cid, component,
     is_canonical) table (pair-graph-node-bounded, tiny next to the
     corpus)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    fp = _docs_fingerprint(sf_dir)
-    entry = _CC_CACHE.get(key)
-    if entry is not None and entry[0] != fp:
-        del _CC_CACHE[key]
-        entry = None
-    if entry is None:
-        df = lsh_components(
+    return cache.cached(
+        "dedup.components", (spark.sparkContext.applicationId, sf_dir),
+        lambda: lsh_components(
             minhash_lsh_pairs(spark, sf_dir).select("cid_a", "cid_b")
-        ).localCheckpoint(eager=True)
-        entry = [fp, df]
-        _CC_CACHE[key] = entry
-    return entry[1]
+        ).localCheckpoint(eager=True),
+        cache.fingerprint(f"{sf_dir}/documents.parquet"))
 
 
 @register(
@@ -1238,30 +1198,21 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 CONTAINMENT_MIN = 0.8  # of the smaller shingle set
 
 
-_DS_CACHE: dict[tuple, list] = {}
-
-
 def _distinct_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persisted (cid, shingle) distinct set, memoized per (session,
-    sf_dir) with the same fingerprint-keyed eviction as _SIGS_CACHE —
-    the containment surface consumes it four times per plan and across
-    repeated runs. Eagerly materialized (lazy persists race their
-    consumers; module gotcha)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    fp = _docs_fingerprint(sf_dir)
-    entry = _DS_CACHE.get(key)
-    if entry is not None and entry[0] != fp:
-        entry[1].unpersist()
-        del _DS_CACHE[key]
-        entry = None
-    if entry is None:
+    """Persisted (cid, shingle) distinct set, a session-cache entry per
+    (session, sf_dir) keyed by the corpus fingerprint like the
+    signatures — the containment surface consumes it four times per plan
+    and across repeated runs. Eagerly materialized (lazy persists race
+    their consumers; module gotcha)."""
+    def build():
         ds = _shingles_df(corpus_df(spark, sf_dir)).distinct().persist()
-        if not PLAN_ONLY:
-            ds.count()
-        _DS_CACHE[key] = [fp, ds]
-        entry = _DS_CACHE[key]
-    return entry[1]
+        ds.count()
+        return ds
 
+    return cache.cached(
+        "dedup.shingles", (spark.sparkContext.applicationId, sf_dir),
+        build, cache.fingerprint(f"{sf_dir}/documents.parquet"),
+        DataFrame.unpersist)
 
 
 @register(
@@ -1319,9 +1270,9 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exceed either doc's hot-shingle count)."""
     # the distinct shingle set feeds four consumers (hot list, kept/hot
     # splits, sizes) — materialize once instead of four explode+distinct
-    # passes (measured 12.1s -> 4.6s at sf0.1); memoized like _SIGS_CACHE
-    # so repeated runs reuse one persisted relation instead of leaking a
-    # new one per call, with fingerprint-keyed staleness eviction
+    # passes (measured 12.1s -> 4.6s at sf0.1); a session-cache entry, so
+    # repeated runs reuse one persisted relation instead of leaking a new
+    # one per call, with fingerprint-keyed staleness eviction
     ds = _distinct_shingles(spark, sf_dir)
     hot = (
         ds.groupBy("shingle").agg(F.count(F.lit(1)).alias("n"))

@@ -51,10 +51,12 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tank_spark import cache
 from tank_spark.llm.semdedup_inc import (INC_OFFSET, _SEM_CORPUS_CTE,
                                          _sem_corpus)
 from tank_spark.llm.similarity import DIM, _dot_cols, _dot_sql
 from tank_spark.plans.registry import register
+from tank_spark.util import memo_col
 
 HP_PLANES = 16       # signature bits (the module-default width)
 HP_BANDS = 2         # bands of HP_BITS bits each
@@ -91,19 +93,12 @@ def _hp_planes(n_planes: int = HP_PLANES) -> list[list[float]]:
     return planes
 
 
-_PLANES_BY_WIDTH: dict[int, list[list[float]]] = {}
-
-
 def _planes_for(n_planes: int) -> list[list[float]]:
-    if n_planes not in _PLANES_BY_WIDTH:
-        _PLANES_BY_WIDTH[n_planes] = _hp_planes(n_planes)
-    return _PLANES_BY_WIDTH[n_planes]
+    return cache.cached("hyperplane.planes", n_planes,
+                        lambda: _hp_planes(n_planes))
 
 
 _PLANES = _planes_for(HP_PLANES)
-
-
-_BAND_COLS_MEMO: dict[tuple[int, int], list] = {}
 
 
 def _band_cols(n_planes: int = HP_PLANES, n_bands: int = HP_BANDS):
@@ -127,10 +122,12 @@ def _band_cols(n_planes: int = HP_PLANES, n_bands: int = HP_BANDS):
     denominator whose repr() is a finite decimal that parses back to
     the same double on the JVM side. The finished band Columns are
     memoized per (n_planes, n_bands) — an unresolved Column is
-    plan-independent (the _CENTROID_CACHE precedent)."""
-    memo = _BAND_COLS_MEMO.get((n_planes, n_bands))
-    if memo is not None:
-        return memo
+    plan-independent (util.memo_col)."""
+    return memo_col(("hp_band_cols", n_planes, n_bands),
+                    lambda: _build_band_cols(n_planes, n_bands))
+
+
+def _build_band_cols(n_planes: int, n_bands: int) -> list:
     bits_per_band = n_planes // n_bands
     planes_lit = F.expr("array(" + ", ".join(
         "array(" + ", ".join(
@@ -152,7 +149,6 @@ def _band_cols(n_planes: int = HP_PLANES, n_bands: int = HP_BANDS):
             F.zip_with(band_bits, weights, lambda x, w: x * w),
             F.lit(0), lambda acc, x: acc + x)
         bands.append(val.cast("long").alias(f"band_{b}"))
-    _BAND_COLS_MEMO[(n_planes, n_bands)] = bands
     return bands
 
 

@@ -236,9 +236,12 @@ def _media_hash_fp_kernel(batches):
         if hashed is None:
             base["phash"] = pd.array([None] * len(base), dtype="Int64")
         else:
+            # nullable Int64 BEFORE the left merge: a dropped row would
+            # otherwise upcast int64 phash to float64 and round away the
+            # low bits of full-width hashes
+            hashed["phash"] = hashed["phash"].astype("Int64")
             base = base.merge(hashed[["doc_id", "phash"]],
                               on="doc_id", how="left")
-            base["phash"] = base["phash"].astype("Int64")
         yield base[["doc_id", "modality", "phash", "fp"]]
 
 

@@ -24,6 +24,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tank_spark import cache
 from tank_spark.plans.registry import register
 from tank_spark.sources.tables import load
 
@@ -279,66 +280,35 @@ _IVF_QUERY_IDS = (20, 21)
 N_PROBE = 2              # probe the 2 nearest inverted lists
 
 
-# Collected centroid rows memoized per (session, sf_dir, n_centroids)
-# with the same fingerprint-keyed eviction as dedup._SIGS_CACHE: the
-# plan-construction collect is a real Spark job, and ivf_recall_eval
-# used to trigger it twice per plan build (directly and via
-# ivf_probe_search) — ADVICE r9. Values are tiny driver lists
-# (n_centroids x DIM floats).
-_CENTROID_CACHE: dict[tuple, list] = {}
-
-
-def _emb_fingerprint(sf_dir: str) -> tuple:
-    """(mtime_ns, size) of the embeddings parquet — detects in-session
-    data regeneration so memoized centroids can't go stale."""
-    import os
-
-    try:
-        st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-        return (st.st_mtime_ns, st.st_size)
-    except OSError:
-        return (0, 0)
-
-
 def _centroid_rows(spark: SparkSession, sf_dir: str,
                    n_centroids: int = N_CENTROIDS) -> list:
     """[(vec_id, [float x DIM])] for the coarse quantizer, sorted by
     vec_id — ONE bounded collect per (session, sf_dir, n_centroids),
-    memoized. Explain-only flows (dedup.PLAN_ONLY, set by
-    tools/dump_plans.py) get deterministic zero-valued placeholders on a
-    cache MISS instead of running the job: the plan SHAPE (a literal
-    array of n_centroids score structs) is identical, and placeholders
-    are never cached, so the first executing caller still collects the
-    real values."""
-    from tank_spark.llm import dedup as _dedup
-
-    key = (spark.sparkContext.applicationId, sf_dir, n_centroids)
-    fp = _emb_fingerprint(sf_dir)
-    entry = _CENTROID_CACHE.get(key)
-    if entry is not None and entry[0] != fp:
-        del _CENTROID_CACHE[key]
-        entry = None
-    if entry is None:
-        if _dedup.PLAN_ONLY:
-            return [(i, [0.0] * DIM) for i in range(n_centroids)]
+    a session-cache entry keyed by the embeddings fingerprint: the
+    plan-construction collect is a real Spark job, and ivf_recall_eval
+    used to trigger it twice per plan build (directly and via
+    ivf_probe_search) — ADVICE r9. Values are tiny driver lists
+    (n_centroids x DIM floats)."""
+    def build():
         # collect from a DIRECT parquet read: the bounded
         # n_centroids-row collect doesn't need the materialized table.
-        # (load()'s persisted cache is fingerprint-evicted too since
-        # r11 — ADVICE r10 — so consumers' corpus DataFrames refresh in
-        # lockstep with these centroids after a data regeneration.)
-        import os
-
-        e = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+        # (load()'s persisted cache is fingerprint-evicted too, so
+        # consumers' corpus DataFrames refresh in lockstep with these
+        # centroids after a data regeneration.)
+        e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         rows = sorted(
             e.filter(F.col("vec_id") < n_centroids)
             .select("vec_id", "embedding")
             .collect(),
             key=lambda r: r.vec_id,
         )
-        entry = [fp, [(int(r.vec_id), [float(v) for v in r.embedding])
-                      for r in rows]]
-        _CENTROID_CACHE[key] = entry
-    return entry[1]
+        return [(int(r.vec_id), [float(v) for v in r.embedding])
+                for r in rows]
+
+    return cache.cached(
+        "similarity.centroids",
+        (spark.sparkContext.applicationId, sf_dir, n_centroids),
+        build, cache.fingerprint(f"{sf_dir}/embeddings.parquet"))
 
 
 def _centroid_score_structs(spark: SparkSession, sf_dir: str,
@@ -384,9 +354,9 @@ def _centroid_score_structs(spark: SparkSession, sf_dir: str,
     bit-identical (oracle parity re-verified at both SFs).
     """
     ckey = ("col", spark.sparkContext.applicationId, sf_dir, n_centroids)
-    fp = _emb_fingerprint(sf_dir)
     return _score_structs_from_rows(
-        _centroid_rows(spark, sf_dir, n_centroids), ckey, fp)
+        _centroid_rows(spark, sf_dir, n_centroids), ckey,
+        cache.fingerprint(f"{sf_dir}/embeddings.parquet"))
 
 
 def _score_structs_from_rows(rows: list, ckey: tuple, fp: tuple):
@@ -399,23 +369,14 @@ def _score_structs_from_rows(rows: list, ckey: tuple, fp: tuple):
     n=8 — pure driver-side Column assembly, before any analysis).
     Doubles are embedded as CAST('<repr>' AS DOUBLE): shortest-repr
     strings round-trip bit-exact through Double.parseDouble, so values
-    are identical to the former literal tree."""
-    from tank_spark.llm import dedup as _dedup
-
-    cached = _CENTROID_CACHE.get(ckey)
-    if cached is not None and cached[0] == fp:
-        return cached[1]
-
-    cents = F.expr("array(" + ", ".join(
-        _struct_lit(cid, c) for cid, c in rows) + ")")
-    col = F.transform(cents, _literal_score)
-    if not _dedup.PLAN_ONLY:
-        # an unresolved Column is plan-independent: memoize it so
-        # repeated builds in one session skip even the expr parse.
-        # (Under PLAN_ONLY the raw path's rows may be placeholders —
-        # never cache those.)
-        _CENTROID_CACHE[ckey] = [fp, col]
-    return col
+    are identical to the former literal tree. An unresolved Column is
+    plan-independent, so repeated builds in one session skip even the
+    expr parse."""
+    return cache.cached(
+        "similarity.centroids", ckey,
+        lambda: F.transform(F.expr("array(" + ", ".join(
+            _struct_lit(cid, c) for cid, c in rows) + ")"), _literal_score),
+        fp)
 
 
 def _frozen_score_structs(spark: SparkSession):
@@ -1041,19 +1002,19 @@ def _frozen2_exprs(spark: SparkSession):
         FROZEN2_GROUPS,
     )
 
-    ckey = ("frozen2-exprs", spark.sparkContext.applicationId)
-    cached = _CENTROID_CACHE.get(ckey)
-    if cached is not None:
-        return cached[1]
-    coarse = F.expr("array(" + ", ".join(
-        _struct_lit(g, emb) for g, emb in FROZEN2_COARSE) + ")")
-    cent_by_id = dict(FROZEN2_CENTROIDS)
-    fine = F.expr("array(" + ", ".join(
-        "array(" + ", ".join(
-            _struct_lit(cid, cent_by_id[cid]) for cid in grp) + ")"
-        for grp in FROZEN2_GROUPS) + ")")
-    _CENTROID_CACHE[ckey] = [(), (coarse, fine)]
-    return coarse, fine
+    def build():
+        cent_by_id = dict(FROZEN2_CENTROIDS)
+        coarse = F.expr("array(" + ", ".join(
+            _struct_lit(g, emb) for g, emb in FROZEN2_COARSE) + ")")
+        fine = F.expr("array(" + ", ".join(
+            "array(" + ", ".join(
+                _struct_lit(cid, cent_by_id[cid]) for cid in grp) + ")"
+            for grp in FROZEN2_GROUPS) + ")")
+        return coarse, fine
+
+    return cache.cached("similarity.centroids",
+                        ("frozen2-exprs", spark.sparkContext.applicationId),
+                        build)
 
 
 def _frozen2_assign_col(spark: SparkSession):
@@ -1062,17 +1023,16 @@ def _frozen2_assign_col(spark: SparkSession):
     group's fine-literal array, argmin its members. Constant-size
     expression tree; memoized per session like the other quantizer
     literals."""
-    ckey = ("frozen2-col", spark.sparkContext.applicationId)
-    cached = _CENTROID_CACHE.get(ckey)
-    if cached is not None:
-        return cached[1]
-    coarse, fine = _frozen2_exprs(spark)
-    gid = F.array_min(F.transform(coarse, _literal_score))["centroid_id"]
-    col = F.array_min(F.transform(
-        F.element_at(fine, (gid + 1).cast("int")),
-        _literal_score))["centroid_id"]
-    _CENTROID_CACHE[ckey] = [(), col]
-    return col
+    def build():
+        coarse, fine = _frozen2_exprs(spark)
+        gid = F.array_min(F.transform(coarse, _literal_score))["centroid_id"]
+        return F.array_min(F.transform(
+            F.element_at(fine, (gid + 1).cast("int")),
+            _literal_score))["centroid_id"]
+
+    return cache.cached("similarity.centroids",
+                        ("frozen2-col", spark.sparkContext.applicationId),
+                        build)
 
 
 def _frozen2_cents_cte() -> str:

@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tank_spark import cache
 from tank_spark.geom import clip as clipmod
 from tank_spark.geom import mvt as mvtmod
 from tank_spark.geom import mvt_np
@@ -343,39 +344,6 @@ OVERVIEW_ZOOM = 9       # tree-path routing boundary ONLY: UNSAMPLED tiles
                         # overview_sample_mods / mvt_tiles_for docstrings).
 
 
-# Driver-side memo bound shared by _MOD_CACHE/_DICT_CACHE: both key on
-# (plan, data fingerprint, request batch), so a long-lived tile server
-# receiving varied request batches would otherwise grow them for the app
-# lifetime (ADVICE r4). Values are small driver lists/tuples — the bound
-# is about unbounded GROWTH, not size per entry; LRU keeps the hot
-# data-version/request-batch combinations resident.
-MEMO_CAP = 128
-_MEMO_MISS = object()
-
-
-def _memo_get(cache: dict, key):
-    """LRU lookup: a hit is moved to the insertion-order tail (= most
-    recently used under _memo_put's evict-from-head policy)."""
-    val = cache.pop(key, _MEMO_MISS)
-    if val is not _MEMO_MISS:
-        cache[key] = val
-    return val
-
-
-def _memo_put(cache: dict, key, value, cap: int = MEMO_CAP):
-    cache[key] = value
-    while len(cache) > cap:
-        cache.pop(next(iter(cache)))  # evict least-recently-used head
-    return value
-
-
-# per-(data-version, request-batch) memo of derived sampling moduli — a
-# tile server derives its sampling cube once per data version, not per
-# request; keyed like _DICT_CACHE (plan semanticHash + file fingerprint)
-# so in-session data regeneration can't serve stale moduli; LRU-bounded
-_MOD_CACHE: dict[tuple, list] = {}
-
-
 def _sample_mods_list(spark: SparkSession, feats: DataFrame,
                       ov_reqs: list[tuple[int, int, int]]
                       ) -> list[tuple[int, int, int, int]]:
@@ -389,24 +357,29 @@ def _sample_mods_list(spark: SparkSession, feats: DataFrame,
     measured; OOMs a 32-worker local run), while per-tile counts make
     every served tile O(budget) by construction. Returning the list
     (instead of a DataFrame) lets callers test emptiness without a Spark
-    job — the old ``mods.head(1)`` probe cost a 3-stage job per serve."""
-    key = (feats._jdf.queryExecution().analyzed().semanticHash(),
-           _input_fingerprint(feats), tuple(sorted(ov_reqs)),
-           OVERVIEW_FEATURE_BUDGET)
-    mods = _memo_get(_MOD_CACHE, key)
-    if mods is _MEMO_MISS:
+    job — the old ``mods.head(1)`` probe cost a 3-stage job per serve.
+
+    Memoized per (data version, request batch) — a tile server derives
+    its sampling cube once per data version, not per request; keyed on
+    the plan's semanticHash + input-file fingerprint so in-session data
+    regeneration can't serve stale moduli."""
+    def build():
         counts = (
             _request_join(spark, feats, ov_reqs)
             .groupBy("z", "x", "y").agg(F.count("*").alias("n")).collect()
         )
-        mods = _memo_put(_MOD_CACHE, key, [
+        return [
             (int(r["z"]), int(r["x"]), int(r["y"]),
              (int(r["n"]) + OVERVIEW_FEATURE_BUDGET - 1)
              // OVERVIEW_FEATURE_BUDGET)
             for r in counts
             if int(r["n"]) > OVERVIEW_FEATURE_BUDGET
-        ])
-    return mods
+        ]
+
+    key = (feats._jdf.queryExecution().analyzed().semanticHash(),
+           _input_fingerprint(feats), tuple(sorted(ov_reqs)),
+           OVERVIEW_FEATURE_BUDGET)
+    return cache.cached("mvt.mods", key, build)
 
 
 def overview_sample_mods(spark: SparkSession, feats: DataFrame,
@@ -814,27 +787,15 @@ TREE_FRAMED_SCHEMA = "z int, x int, y int, sub int, n long, chunk binary"
 DICT_CAP = 65536
 
 
-_DICT_CACHE: dict[tuple, tuple] = {}
-
-
-def _input_fingerprint(df: DataFrame) -> str:
-    """Fingerprint of the plan's underlying data files (path, mtime,
-    size). A plan's semanticHash does NOT change when the parquet files
-    it reads are regenerated in-session — the fingerprint does, so caches
-    keyed on it can't serve stale derived state. Metadata-only (no job)."""
-    import hashlib
-    import os
+def _input_fingerprint(df: DataFrame) -> tuple:
+    """(paths, fingerprint) of the plan's underlying data files. A plan's
+    semanticHash does NOT change when the parquet files it reads are
+    regenerated in-session — the fingerprint does, so memo keys carrying
+    it can't serve stale derived state. Metadata-only (no job)."""
     from urllib.parse import urlparse
 
-    parts = []
-    for uri in sorted(df.inputFiles()):
-        path = urlparse(uri).path or uri
-        try:
-            st = os.stat(path)
-            parts.append(f"{path}:{st.st_mtime_ns}:{st.st_size}")
-        except OSError:
-            parts.append(uri)
-    return hashlib.md5("|".join(parts).encode()).hexdigest()
+    paths = tuple(urlparse(u).path or u for u in sorted(df.inputFiles()))
+    return paths, cache.fingerprint(*paths)
 
 
 def _collect_global_dicts(joined: DataFrame, prop_cols: tuple[str, ...],
@@ -861,9 +822,11 @@ def _collect_global_dicts(joined: DataFrame, prop_cols: tuple[str, ...],
                     _input_fingerprint(joined))
     key = (joined.sparkSession.sparkContext.applicationId,
            *memo_key, prop_cols, cap)
-    hit = _memo_get(_DICT_CACHE, key)
-    if hit is not _MEMO_MISS:
-        return hit
+    return cache.cached("mvt.dicts", key,
+                        lambda: _global_dicts(joined, prop_cols, cap))
+
+
+def _global_dicts(joined: DataFrame, prop_cols: tuple[str, ...], cap: int):
     row = joined.agg(
         *[F.slice(F.sort_array(F.collect_set(c)), 1, cap + 1).alias(c)
           for c in prop_cols],
@@ -881,7 +844,7 @@ def _collect_global_dicts(joined: DataFrame, prop_cols: tuple[str, ...],
         dicts[c] = vals            # sort_array already ordered them
     kmin = 0 if row["_kmin"] is None else int(row["_kmin"])
     span = max((0 if row["_kmax"] is None else int(row["_kmax"])) - kmin + 1, 1)
-    return _memo_put(_DICT_CACHE, key, (dicts, kmin, span))
+    return dicts, kmin, span
 
 
 def _dict_values_array(vals: list):

@@ -41,6 +41,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tank_spark import cache
 from tank_spark.plans.registry import register
 
 # hidden from Spark's parquet discovery (underscore prefix, like
@@ -290,8 +291,6 @@ SKIP_N_FILES = 16
 # FLOOR identical)
 SKIP_LO_PCT, SKIP_HI_PCT = 20, 35
 
-_LAYOUT_CACHE: dict = {}
-
 
 def clustered_layout(spark: SparkSession, sf_dir: str, table: str,
                      stat_cols: tuple,
@@ -309,10 +308,10 @@ def clustered_layout(spark: SparkSession, sf_dir: str, table: str,
     ``zorder`` (2-D Morton) when given, else 1-D on ``cluster_by``.
     Returns (layout_path, per-column global bounds) — the bounds are
     folded driver-side once at build time so steady-state planning
-    never re-reads the manifest for them. The fingerprint is
-    tables._table_fingerprint (ONE cache-key convention across the
-    repo; review r11); an evicted layout's directory is removed,
-    mirroring tables' unpersist-on-evict.
+    never re-reads the manifest for them. The entry lives in the
+    session cache keyed by the table parquet's fingerprint (ONE cache
+    convention across the repo); an evicted layout's directory is
+    removed, mirroring tables' unpersist-on-evict.
 
     ``reader`` (optional, () -> DataFrame) overrides the raw parquet
     read when the source needs normalization before the rewrite —
@@ -324,8 +323,6 @@ def clustered_layout(spark: SparkSession, sf_dir: str, table: str,
     would never hit), so a reader REQUIRES ``reader_tag`` — a short
     stable name for the source semantics (e.g. "read_events")."""
     import shutil
-
-    from tank_spark.sources.tables import _table_fingerprint
 
     if (reader is None) != (reader_tag is None):
         raise ValueError("reader and reader_tag come together: the tag "
@@ -339,35 +336,33 @@ def clustered_layout(spark: SparkSession, sf_dir: str, table: str,
     # a consumer needing the normalized ns->us ts reader)
     key = (spark.sparkContext.applicationId, sf_dir, table,
            stat_cols, cluster_by, zorder, n_files, reader_tag)
-    fp = _table_fingerprint(sf_dir, table)
-    hit = _LAYOUT_CACHE.get(key)
-    # a fingerprint hit must also still EXIST on disk — external /tmp
+    # a cached layout must also still EXIST on disk — external /tmp
     # cleanup mid-session otherwise turns a cache hit into a read
     # failure (ADVICE r11); a vanished layout just rebuilds
-    if hit is not None and hit[0] == fp and os.path.isdir(hit[1]):
-        return hit[1], hit[2]
-    if hit is not None:
-        # drop the cache entry BEFORE touching disk: if the rebuild
-        # below fails mid-way, a later call must rebuild rather than
-        # serve a stale pointer at a removed directory (review r11)
-        _LAYOUT_CACHE.pop(key, None)
-        shutil.rmtree(hit[1], ignore_errors=True)
-    path = tempfile.mkdtemp(prefix=f"tank_spark_skip_{table}_")
-    try:
-        src = (reader() if reader is not None else
-               spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet")))
-        nf = n_files if n_files is not None else SKIP_N_FILES
-        if zorder is not None:
-            write_clustered_zorder(src, path, zorder, nf)
-        else:
-            write_clustered(src, path, cluster_by or stat_cols[0], nf)
-        build_manifest(spark, path, list(stat_cols))
-        bounds = _manifest_bounds(path, list(stat_cols))
-    except BaseException:
-        shutil.rmtree(path, ignore_errors=True)
-        raise
-    _LAYOUT_CACHE[key] = (fp, path, bounds)
-    return path, bounds
+    hit = cache.lookup("skipping.layout", key)
+    if hit is not None and not os.path.isdir(hit[0]):
+        cache.clear("skipping.layout", lambda k: k == key)
+
+    def build():
+        path = tempfile.mkdtemp(prefix=f"tank_spark_skip_{table}_")
+        try:
+            src = (reader() if reader is not None else spark.read.parquet(
+                os.path.join(sf_dir, f"{table}.parquet")))
+            nf = n_files if n_files is not None else SKIP_N_FILES
+            if zorder is not None:
+                write_clustered_zorder(src, path, zorder, nf)
+            else:
+                write_clustered(src, path, cluster_by or stat_cols[0], nf)
+            build_manifest(spark, path, list(stat_cols))
+            return path, _manifest_bounds(path, list(stat_cols))
+        except BaseException:
+            shutil.rmtree(path, ignore_errors=True)
+            raise
+
+    return cache.cached(
+        "skipping.layout", key, build,
+        cache.fingerprint(os.path.join(sf_dir, f"{table}.parquet")),
+        lambda v: shutil.rmtree(v[0], ignore_errors=True))
 
 
 def _skipping_layout(spark: SparkSession, sf_dir: str) -> str:

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tank_spark import cache
 from tank_spark.geom.morton import morton_col, morton_sql
 
 HASH_LEVEL = 13           # reference application.conf:53 (data.hash_level)
@@ -44,32 +45,32 @@ BLOCK = 64
 KINDS = ("road", "building", "poi", "water")  # plays tank's main_attr role
 
 
-# one materialized feature table per (session, sf_dir) — mirrors the
-# reference's physical design (a stored table clustered by `hash`,
-# application.kt:677-681) instead of re-deriving per query. The cache is
-# range-partitioned + sorted on `hash`, so cached-batch min/max stats give
-# the same Z-ORDER-style data skipping a 100 TB parquet layout would: a
-# Morton BETWEEN touches only the batches whose hash range overlaps.
-# (Deriving inline also blows up the pushed-down filter into a giant
-# non-codegen-able expression — measured 5x slower than the cached scan.)
-_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# one materialized feature table per (session, sf_dir, lineitem version) —
+# mirrors the reference's physical design (a stored table clustered by
+# `hash`, application.kt:677-681) instead of re-deriving per query. The
+# cache is range-partitioned + sorted on `hash`, so cached-batch min/max
+# stats give the same Z-ORDER-style data skipping a 100 TB parquet layout
+# would: a Morton BETWEEN touches only the batches whose hash range
+# overlaps. (Deriving inline also blows up the pushed-down filter into a
+# giant non-codegen-able expression — measured 5x slower than the cached
+# scan.) Rewriting lineitem.parquet in-session rebuilds it.
 def features_df(spark: SparkSession, sf_dir: str, materialized: bool = True) -> DataFrame:
     """The features table for ``sf_dir`` (cached, hash-clustered)."""
     if not materialized:
         return _derive(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CACHE:
+
+    def build():
         n_part = max(spark.sparkContext.defaultParallelism // 2, 4)
-        df = (
+        return (
             _derive(spark, sf_dir)
             .repartitionByRange(n_part, "hash")
             .sortWithinPartitions("hash")
             .persist()
         )
-        _CACHE[key] = df
-    return _CACHE[key]
+
+    return cache.cached("features", (spark.sparkContext.applicationId, sf_dir),
+                        build, cache.fingerprint(f"{sf_dir}/lineitem.parquet"),
+                        DataFrame.unpersist)
 
 
 def _derive(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from tank_spark import cache
+
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -25,87 +27,55 @@ _CLUSTER_KEY = {
     "embeddings": "vec_id",
 }
 
-# The driver's parquet files are single-row-group (unsplittable): a raw
+
+def _n_partitions(spark: SparkSession, size_bytes: int) -> int:
+    """Scale-adaptive partition count for a materialized table: ~8 MB of
+    compressed parquet per partition, floored at
+    ``max(defaultParallelism // 2, 4)``. At cluster scale size/8MB
+    dominates; at small scale the floor decides scan parallelism, and a
+    query's per-row CPU is invisible to byte-derived sizing, so bytes
+    alone must never push the count far below the core count (r13's
+    floor of 4 regressed ~25 scan-family queries at local[32]). The
+    floor is //2, not the full core count, because derived corpora
+    union 2-5 branches of the same cached table, so scan stages already
+    fan out 2-5x; a floor at the core count made the light-per-row
+    dedup family pay pure scheduling overhead (dedup_exact 0.38 ->
+    0.66 s at sf0.1)."""
+    n_par = spark.sparkContext.defaultParallelism
+    return max(n_par // 2, 4, min(n_par, (size_bytes >> 23) + 1))
+
+
+# The source parquet files are single-row-group (unsplittable): a raw
 # scan is one task no matter the config. Materializing each table once per
 # session — repartitioned on its cluster key — restores the parallelism and
 # co-location a real multi-file/bucketed layout has. Results are identical;
-# only the physical plan changes. Entries are fingerprint-keyed
-# ((mtime_ns, size) of the parquet) so an in-session regeneration of a
-# table evicts the stale persisted relation instead of serving it forever
-# (ADVICE r10: similarity._centroid_rows dodged this cache for exactly
-# that staleness; now centroids and corpus cannot diverge).
-_CACHE: dict[tuple[str, str, str], tuple[tuple, DataFrame]] = {}
-
-
-def _table_fingerprint(sf_dir: str, name: str) -> tuple:
-    import os
-
-    try:
-        st = os.stat(f"{sf_dir}/{name}.parquet")
-        return (st.st_mtime_ns, st.st_size)
-    except OSError:
-        return (0, 0)
-
-
-def _n_partitions(spark: SparkSession, size_bytes: int) -> int:
-    """Scale-ADAPTIVE partition count for a materialized table
-    (optimization guide §2.2/§6: derive partitioning from input size,
-    don't fix a constant tuned for one scale). ~8 MB of compressed
-    parquet per partition, floored at defaultParallelism//2 — at
-    cluster scale size/8MB dominates long before the floor matters;
-    at small scale the floor decides SCAN parallelism, and r13's floor
-    of 4 collapsed it 16 -> 4 at local[32], regressing ~25 bench
-    queries (the text/sketch/embedding scan families, per the driver's
-    PERF_r13 — a query's per-row CPU is invisible to byte-derived
-    sizing, so bytes alone must never push the count far below the
-    core count; VERDICT r13 #1). The floor is //2, not the full core
-    count: derived corpora union 2-5 branches of the SAME cached
-    table, so scan stages already fan out 2-5x the table's count, and
-    an r14 A/B at floor=cores measured the light-per-row dedup family
-    paying pure scheduling overhead (dedup_exact 0.38 -> 0.66 s,
-    dedup_minhash_lsh_pairs 0.8 -> ~2 s at sf0.1) — //2 is exactly the
-    r12 layout the driver's scan-family gate is calibrated against.
-    SPARK_GRAFT_PART_FLOOR overrides the floor for A/B;
-    SPARK_GRAFT_ADAPTIVE_PARTS=0 restores the legacy fixed constant.
-    """
-    import os
-
-    n_par = spark.sparkContext.defaultParallelism
-    if os.environ.get("SPARK_GRAFT_ADAPTIVE_PARTS", "1") == "0":
-        return max(n_par // 2, 4)
-    floor = int(os.environ.get("SPARK_GRAFT_PART_FLOOR",
-                               str(max(n_par // 2, 4))))
-    return max(floor, min(n_par, (size_bytes >> 23) + 1))
-
-
+# only the physical plan changes. Entries are session-cache entries keyed
+# by the parquet's fingerprint, so an in-session regeneration of a table
+# unpersists the stale relation instead of serving it forever (ADVICE r10:
+# centroids and corpus cannot diverge).
 def load(spark: SparkSession, sf_dir: str, name: str,
          materialized: bool = True) -> DataFrame:
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
     if not materialized:
         return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    fp = _table_fingerprint(sf_dir, name)
-    entry = _CACHE.get(key)
-    if entry is not None and entry[0] != fp:
-        entry[1].unpersist()
-        entry = None
-    if entry is None:
+    fp = cache.fingerprint(f"{sf_dir}/{name}.parquet")
+
+    def build():
         # the parquet read is built only on a cache miss (r14): the
         # DataFrameReader re-reads the file footer for schema on every
         # call (~0.16 s of driver-side work per call on this VM), and
         # warm serves — the bench's timed reps — only need the cached
-        # relation. Staleness is still caught: fp is re-stat'ed above.
+        # relation. Staleness is still caught: fp is re-stat'ed per call.
         raw = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        n = _n_partitions(spark, fp[1])
+        n = _n_partitions(spark, fp[0][1])
         ck = _CLUSTER_KEY.get(name)
         df = raw.repartition(n, ck) if ck else raw.repartition(n)
-        entry = (fp, df.persist())
-        _CACHE[key] = entry
-    return entry[1]
+        return df.persist()
 
-
-_EVENTS_CACHE: dict[tuple[str, str], tuple[tuple, DataFrame]] = {}
+    return cache.cached("tables.load",
+                        (spark.sparkContext.applicationId, sf_dir, name),
+                        build, fp, DataFrame.unpersist)
 
 
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -121,26 +91,19 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cached per session clustered on user_id (the sessionization key), for
     the same single-row-group reason as ``load``.
     """
-    from pyspark.sql import functions as F
+    fp = cache.fingerprint(f"{sf_dir}/events.parquet")
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    fp = _table_fingerprint(sf_dir, "events")
-    entry = _EVENTS_CACHE.get(key)
-    if entry is not None and entry[0] != fp:
-        entry[1].unpersist()
-        entry = None
-    if entry is None:
+    def build():
         # harmless when ts is already TIMESTAMP; required to even read the
         # schema when it is TIMESTAMP(NANOS)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
-        n = _n_partitions(spark, fp[1])
-        entry = (fp, df.repartition(n, "user_id").persist())
-        _EVENTS_CACHE[key] = entry
-    return entry[1]
+        n = _n_partitions(spark, fp[0][1])
+        return df.repartition(n, "user_id").persist()
 
-
-_DERIVED_CACHE: dict[tuple[str, str, str], tuple[tuple, DataFrame]] = {}
+    return cache.cached("tables.events",
+                        (spark.sparkContext.applicationId, sf_dir),
+                        build, fp, DataFrame.unpersist)
 
 
 def session_memo(spark: SparkSession, sf_dir: str, tag: str,
@@ -157,18 +120,17 @@ def session_memo(spark: SparkSession, sf_dir: str, tag: str,
     eviction convention as ``load`` — and eagerly materialized, because
     a lazily-persisted relation consumed by several subtrees of one
     query races to fill the cache."""
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    fp = tuple(_table_fingerprint(sf_dir, d) for d in deps)
-    entry = _DERIVED_CACHE.get(key)
-    if entry is not None and entry[0] != fp:
-        entry[1].unpersist()
-        entry = None
-    if entry is None:
+    def build():
         df = builder().persist()
         df.count()
-        entry = (fp, df)
-        _DERIVED_CACHE[key] = entry
-    return entry[1]
+        return df
+
+    return cache.cached("tables.derived",
+                        (spark.sparkContext.applicationId, sf_dir, tag),
+                        build,
+                        cache.fingerprint(*(f"{sf_dir}/{d}.parquet"
+                                            for d in deps)),
+                        DataFrame.unpersist)
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:

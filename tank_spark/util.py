@@ -8,9 +8,7 @@ import zipfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-_SHIPPED: set[str] = set()
-
-_COL_MEMO: dict = {}
+from tank_spark import cache
 
 
 def memo_col(key, build):
@@ -23,14 +21,12 @@ def memo_col(key, build):
     re-compose the same literal-quantizer/cosine expressions on every
     serve spend 0.3-1.4 s per query in PYTHON before Spark sees a
     plan. An unresolved Column is plan-independent and immutable
-    (the similarity._CENTROID_CACHE precedent): build it once per
-    process, reference it from every plan. Key on everything the
-    expression closes over (column NAMES, dials, and the session
-    applicationId when the expression embeds session-derived data)."""
-    col = _COL_MEMO.get(key)
-    if col is None:
-        col = _COL_MEMO[key] = build()
-    return col
+    (like the centroid literals): build it once per process, reference
+    it from every plan — a session-cache entry with no fingerprint. Key
+    on everything the expression closes over (column NAMES, dials, and
+    the session applicationId when the expression embeds session-derived
+    data)."""
+    return cache.cached("util.col", key, build)
 
 
 def local_values_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
@@ -87,9 +83,11 @@ def ensure_workers_have_package(spark: SparkSession) -> None:
     package once per session and ``addPyFile``-ing it makes every kernel
     location-independent. No-op after the first call per session.
     """
-    key = spark.sparkContext.applicationId
-    if key in _SHIPPED:
-        return
+    sc = spark.sparkContext
+    cache.cached("util.shipped", sc.applicationId, lambda: _ship(sc))
+
+
+def _ship(sc) -> str:
     import tank_spark
 
     pkg_dir = os.path.dirname(tank_spark.__file__)
@@ -105,5 +103,5 @@ def ensure_workers_have_package(spark: SparkSession) -> None:
                         "tank_spark", os.path.relpath(full, pkg_dir)
                     )
                     zf.write(full, rel)
-    spark.sparkContext.addPyFile(zpath)
-    _SHIPPED.add(key)
+    sc.addPyFile(zpath)
+    return zpath

@@ -1,0 +1,234 @@
+"""tank_spark.cache — the one session-cache primitive: per-path file
+fingerprints, fingerprint staleness (release + rebuild), a per-namespace
+LRU bound, hit/miss/evict counters, and the rule that no other module
+keeps a process-global cache of its own."""
+
+from __future__ import annotations
+
+import ast
+import os
+import pathlib
+
+import pytest
+
+from tank_spark import cache
+from tests.conftest import SF_DIR
+
+
+def _delta(ns, before):
+    after = cache.stats(ns)
+    return {k: after[k] - before[k] for k in ("hits", "misses", "evictions")}
+
+
+def test_fingerprint_per_path_and_missing_file(tmp_path):
+    a = tmp_path / "a.parquet"
+    a.write_bytes(b"xyz")
+    st = os.stat(a)
+    assert cache.fingerprint(str(a), str(tmp_path / "gone.parquet")) == (
+        (st.st_mtime_ns, 3), (0, 0))
+    assert cache.fingerprint() == ()
+
+
+def test_stale_fingerprint_releases_and_rebuilds():
+    ns = "test.stale"
+    cache.clear(ns)
+    before = cache.stats(ns)
+    built, released = [], []
+
+    def get(fp):
+        return cache.cached(ns, "k", lambda: built.append(fp) or f"v{fp}",
+                            (fp,), released.append)
+
+    assert get(1) == "v1" and get(1) == "v1"
+    assert get(2) == "v2"
+    assert built == [1, 2] and released == ["v1"]
+    assert _delta(ns, before) == {"hits": 1, "misses": 2, "evictions": 1}
+    # a failed rebuild leaves a miss behind, never the released value
+    with pytest.raises(ZeroDivisionError):
+        cache.cached(ns, "k", lambda: 1 // 0, (3,), released.append)
+    assert released == ["v1", "v2"] and cache.lookup(ns, "k") is None
+    assert cache.stats(ns)["size"] == 0
+
+
+def test_clear_releases_matching_keys_only():
+    ns = "test.clear"
+    cache.clear(ns)
+    released = []
+    for k in ("a", "b", "c"):
+        cache.cached(ns, k, lambda k=k: k.upper(), release=released.append)
+    assert cache.clear(ns, lambda k: k != "b") == 2
+    assert sorted(released) == ["A", "C"]
+    assert cache.lookup(ns, "b") == "B" and cache.lookup(ns, "a") is None
+
+
+def test_memo_caches_are_lru_bounded(monkeypatch):
+    """A long-lived tile server over many (data version, request batch)
+    keys must not grow the driver-side memos without bound — entries
+    evict LRU at MEMO_CAP (ADVICE r4)."""
+    monkeypatch.setattr(cache, "MEMO_CAP", 3)
+    ns = "test.lru"
+    cache.clear(ns)
+    before = cache.stats(ns)
+
+    def hit(k):  # a hit refreshes recency and never builds
+        return cache.cached(ns, k, lambda: pytest.fail(f"{k!r} rebuilt"))
+
+    for i in range(5):
+        cache.cached(ns, i, lambda i=i: [i])
+    assert cache.stats(ns)["size"] == 3
+    assert cache.lookup(ns, 0) is None  # oldest evicted
+    assert cache.lookup(ns, 1) is None
+    assert hit(2) == [2]
+
+    # a hit refreshes recency: touch 2, insert two more -> 3/4 evict, 2 stays
+    cache.cached(ns, 5, lambda: [5])
+    hit(2)
+    cache.cached(ns, 6, lambda: [6])
+    assert cache.lookup(ns, 3) is None
+    assert hit(2) == [2]
+    assert hit(6) == [6]
+
+    # falsy values are legitimate cache entries, not misses
+    cache.cached(ns, "empty", lambda: [])
+    assert hit("empty") == []
+    assert _delta(ns, before) == {"hits": 5, "misses": 8, "evictions": 5}
+
+
+def test_tile_burst_does_not_evict_table_loads(monkeypatch):
+    """The bound is per namespace: a burst of tile batches fills its own
+    LRU and leaves the session's table loads resident."""
+    monkeypatch.setattr(cache, "MEMO_CAP", 2)
+    cache.clear("test.tables")
+    cache.clear("test.tiles")
+    released = []
+    cache.cached("test.tables", "lineitem", lambda: "rel", (1,),
+                 released.append)
+    for i in range(10):
+        cache.cached("test.tiles", i, lambda i=i: i)
+    assert cache.lookup("test.tables", "lineitem") == "rel"
+    assert released == []
+    assert cache.stats("test.tiles")["size"] == 2
+
+
+def test_release_failure_does_not_fail_the_lookup(monkeypatch):
+    """A release that raises (an evicted relation of a stopped session
+    cannot unpersist) still lets the insert that evicted it return."""
+    monkeypatch.setattr(cache, "MEMO_CAP", 1)
+    ns = "test.release_fails"
+    cache.clear(ns)
+
+    def gone(_value):
+        raise RuntimeError("owner stopped")
+
+    cache.cached(ns, "old", lambda: 1, release=gone)
+    assert cache.cached(ns, "new", lambda: 2) == 2
+    assert cache.lookup(ns, "old") is None
+
+
+def test_concurrent_lookups_lose_no_updates(monkeypatch):
+    """Threads serving from one namespace (foreachBatch callbacks run on
+    their own threads) under constant LRU churn keep the counters and
+    the store consistent."""
+    import sys
+    import threading
+
+    monkeypatch.setattr(cache, "MEMO_CAP", 4)
+    ns = "test.threads"
+    cache.clear(ns)
+    before = cache.stats(ns)
+    n_threads, n_calls = 2 * (os.cpu_count() or 2), 5000
+    errors = []
+
+    def work():
+        try:
+            for i in range(n_calls):
+                cache.cached(ns, i % 7, lambda i=i: i % 7)
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work) for _ in range(n_threads)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors[:3]
+    d = _delta(ns, before)
+    assert d["hits"] + d["misses"] == n_threads * n_calls
+    assert cache.stats(ns)["size"] == 4
+
+
+def test_features_df_follows_lineitem_rewrite(spark, tmp_path):
+    """features_df is derived from lineitem.parquet: rewriting the file
+    in-session must rebuild the persisted features table, so its count
+    follows load(lineitem) instead of serving the old version."""
+    import pyarrow.parquet as pq
+
+    from tank_spark.sources.features import features_df
+    from tank_spark.sources.tables import load
+
+    src = pq.read_table(f"{SF_DIR}/lineitem.parquet")
+    d = str(tmp_path)
+    pq.write_table(src, f"{d}/lineitem.parquet")
+    assert features_df(spark, d).count() == src.num_rows
+    assert load(spark, d, "lineitem").count() == src.num_rows
+
+    fewer = src.slice(0, src.num_rows // 2)
+    pq.write_table(fewer, f"{d}/lineitem.parquet")
+    assert load(spark, d, "lineitem").count() == fewer.num_rows
+    assert features_df(spark, d).count() == fewer.num_rows
+
+
+_CONTAINERS = {"dict", "set", "OrderedDict", "defaultdict",
+               "WeakValueDictionary", "WeakKeyDictionary"}
+# the query registry: filled once at import by @register, never evicted —
+# a catalogue, not a cache of derived state
+_NOT_CACHES = {("plans/registry.py", "QUERIES")}
+
+
+def _is_empty_container(node) -> bool:
+    if isinstance(node, ast.Dict):
+        return not node.keys
+    if isinstance(node, ast.Call) and not node.args:
+        f = node.func
+        name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
+        return name in _CONTAINERS
+    return False
+
+
+def test_cache_py_is_the_only_process_global_cache():
+    """Every process-global memo goes through tank_spark.cache: no other
+    module may define a module-level empty dict/set (a hand-rolled
+    cache), memoize with functools, or stat files for a fingerprint."""
+    root = pathlib.Path(cache.__file__).parent
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "cache.py":
+            continue
+        tree = ast.parse(path.read_text())
+        for node in tree.body:
+            if isinstance(node, ast.Assign):
+                targets, value = node.targets, node.value
+            elif isinstance(node, ast.AnnAssign):
+                targets, value = [node.target], node.value
+            else:
+                continue
+            if value is not None and _is_empty_container(value):
+                for t in targets:
+                    name = getattr(t, "id", ast.unparse(t))
+                    if (rel, name) not in _NOT_CACHES:
+                        found.append(f"{rel}:{node.lineno} {name}")
+        for node in ast.walk(tree):
+            name = (node.attr if isinstance(node, ast.Attribute) else
+                    node.id if isinstance(node, ast.Name) else None)
+            if name in ("lru_cache", "st_mtime_ns") or (
+                    name == "cache" and isinstance(node, ast.Attribute)
+                    and getattr(node.value, "id", "") == "functools"):
+                found.append(f"{rel}:{node.lineno} {name}")
+    assert not found, found

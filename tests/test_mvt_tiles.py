@@ -96,6 +96,35 @@ def test_tree_path_decode_parity(spark):
     assert got == want
 
 
+def test_tree_blob_bytes_independent_of_fanout(spark, monkeypatch):
+    """The tree path's sub-merge fan-out is max(NSUB, defaultParallelism)
+    — machine-dependent — so the blob bytes must not depend on it:
+    rendering the z7 tree-route tile at NSUB and at 3*NSUB gives
+    byte-equal blobs."""
+    from tank_spark.operators import mvt_tiles as mt
+
+    fanouts = []
+    real = mt.make_geom_stage
+
+    def spy(prop_cols, nsub, **kw):
+        fanouts.append(nsub)
+        return real(prop_cols, nsub, **kw)
+
+    def blob():
+        rows = mt.mvt_tiles(spark, SF_DIR, requests=[(7, 20, 49)]).collect()
+        assert len(rows) == 1 and rows[0]["n_features"] > 0
+        return bytes(rows[0]["mvt"])
+
+    monkeypatch.setattr(mt, "make_geom_stage", spy)
+    base = blob()
+    monkeypatch.setattr(mt, "NSUB", 3 * mt.NSUB)
+    wide = blob()
+    par = spark.sparkContext.defaultParallelism
+    assert fanouts == [max(mt.NSUB // 3, par), max(mt.NSUB, par)]
+    assert fanouts[0] != fanouts[1]
+    assert base == wide
+
+
 def test_assemble_layer_empty_props():
     """A layer declaring ZERO attributes still assembles: every feature
     gets an empty tag list, not a crashed length mismatch (ADVICE r2)."""
@@ -151,6 +180,7 @@ def test_tree_path_dict_overflow_fallback(spark, monkeypatch):
     fall back to the bottom-up value-table merge and still produce a
     decode-identical tile (the dictionary path is an optimization, never
     a semantics change)."""
+    from tank_spark import cache
     from tank_spark.geom import mvt as mvtmod
     from tank_spark.operators import mvt_tiles as mt
 
@@ -159,10 +189,12 @@ def test_tree_path_dict_overflow_fallback(spark, monkeypatch):
             mt.mvt_tiles(spark, SF_DIR, requests=[(7, 20, 49)]).collect()}
     # force overflow: every column has > 0 distinct values
     monkeypatch.setattr(mt, "DICT_CAP", 0)
-    mt._DICT_CACHE.clear()
+    cache.clear("mvt.dicts")
+    misses = cache.stats("mvt.dicts")["misses"]
     slow = mt.mvt_tiles(spark, SF_DIR, requests=[(7, 20, 49)]).collect()
+    assert cache.stats("mvt.dicts")["misses"] == misses + 1  # stats job ran
     monkeypatch.undo()
-    mt._DICT_CACHE.clear()
+    cache.clear("mvt.dicts")
     assert len(slow) == 1 and len(fast) == 1
     a = mvtmod.decode(bytes(next(iter(fast.values()))["mvt"]))[mt.LAYER]
     b = mvtmod.decode(bytes(slow[0]["mvt"]))[mt.LAYER]
@@ -211,8 +243,7 @@ def test_dict_nan_prop_falls_back(spark):
     table merge instead of crashing the tile job."""
     import math
 
-    from pyspark.sql import functions as F
-
+    from tank_spark import cache
     from tank_spark.operators import mvt_tiles as mt
 
     df = spark.createDataFrame(
@@ -227,7 +258,7 @@ def test_dict_nan_prop_falls_back(spark):
     assert dicts2 == {"score": [1.0, 2.5]}
     assert not any(isinstance(v, float) and math.isnan(v)
                    for v in dicts2["score"])
-    mt._DICT_CACHE.clear()
+    cache.clear("mvt.dicts")
 
 
 def test_stale_dictionary_raises():
@@ -285,33 +316,6 @@ def test_overview_budget_bounds_features(spark, monkeypatch):
     ref = mt.mvt_tiles(spark, SF_DIR,
                        requests=[(13, 1281, 3137)]).collect()[0]
     assert full["mvt_md5"] == ref["mvt_md5"]
-
-
-def test_memo_caches_are_lru_bounded():
-    """_MOD_CACHE/_DICT_CACHE memo helper: a long-lived tile server over
-    many (data version, request batch) keys must not grow the driver-side
-    memos without bound — entries evict LRU at MEMO_CAP (ADVICE r4)."""
-    from tank_spark.operators.mvt_tiles import _MEMO_MISS, _memo_get, _memo_put
-
-    cache: dict = {}
-    for i in range(5):
-        _memo_put(cache, i, [i], cap=3)
-    assert len(cache) == 3
-    assert _memo_get(cache, 0) is _MEMO_MISS  # oldest evicted
-    assert _memo_get(cache, 1) is _MEMO_MISS
-    assert _memo_get(cache, 2) == [2]
-
-    # a hit refreshes recency: touch 2, insert two more -> 3/4 evict, 2 stays
-    _memo_put(cache, 5, [5], cap=3)
-    _memo_get(cache, 2)
-    _memo_put(cache, 6, [6], cap=3)
-    assert _memo_get(cache, 3) is _MEMO_MISS
-    assert _memo_get(cache, 2) == [2]
-    assert _memo_get(cache, 6) == [6]
-
-    # falsy values are legitimate cache entries, not misses
-    _memo_put(cache, "empty", [], cap=3)
-    assert _memo_get(cache, "empty") == []
 
 
 def test_sampled_tree_routing_equivalent(spark, monkeypatch):

@@ -39,10 +39,13 @@ def test_media_fp_kernel_matches_hash_kernel_plus_fp(spark):
     assert enriched.count() == corpus.count()
 
 
-def test_media_fp_kernel_null_phash_on_dropped_rows():
+def test_media_fp_kernel_null_phash_on_dropped_rows(monkeypatch):
     """Rows the hash kernels drop (too-short payload) keep their fp
-    with a NULL phash — the fp-only consumers must still see them."""
-    from tank_spark.llm.media_inc import _media_hash_fp_kernel
+    with a NULL phash — the fp-only consumers must still see them — and
+    a full-width 64-bit hash beside a dropped row survives exactly: the
+    left merge must not route phash through float64 (which rounds
+    -6917529027641081855 to -6917529027641081856)."""
+    from tank_spark.llm import media_inc
 
     pdf = pd.DataFrame({
         "doc_id": pd.Series([1, 2], dtype="int64"),
@@ -50,11 +53,24 @@ def test_media_fp_kernel_null_phash_on_dropped_rows():
         # row 1: full 32-byte stub; row 2: too short -> dropped
         "payload": [bytes(range(32)), b"\x01\x02"],
     })
-    out = pd.concat(list(_media_hash_fp_kernel(iter([pdf]))))
+    out = pd.concat(list(media_inc._media_hash_fp_kernel(iter([pdf]))))
     assert list(out["doc_id"]) == [1, 2]
     assert out["fp"].iloc[0] == bytes(range(32)).hex()
     assert out["fp"].iloc[1] == b"\x01\x02".hex()
     assert not pd.isna(out["phash"].iloc[0])
+    assert pd.isna(out["phash"].iloc[1])
+
+    high = -6917529027641081855
+    real = media_inc._hash_pdf
+
+    def hash_pdf(pdf, dispatch):
+        out = real(pdf, dispatch)
+        out["phash"] = pd.Series([high] * len(out), dtype="int64")
+        return out
+
+    monkeypatch.setattr(media_inc, "_hash_pdf", hash_pdf)
+    out = pd.concat(list(media_inc._media_hash_fp_kernel(iter([pdf]))))
+    assert int(out["phash"].iloc[0]) == high
     assert pd.isna(out["phash"].iloc[1])
 
 

@@ -355,12 +355,11 @@ def test_layout_cache_rebuilds_after_external_tmp_cleanup(spark):
     """A fingerprint-valid cache hit whose directory an external /tmp
     sweeper removed must REBUILD, not serve the dead pointer
     (ADVICE r11)."""
+    import os
     import shutil
 
-    from tank_spark.operators.skipping import (
-        _LAYOUT_CACHE,
-        _skipping_layout,
-    )
+    from tank_spark import cache
+    from tank_spark.operators.skipping import _skipping_layout
     from tank_spark.plans.registry import load_all
 
     reg = load_all()
@@ -372,10 +371,14 @@ def test_layout_cache_rebuilds_after_external_tmp_cleanup(spark):
     # table never collide
     key = (spark.sparkContext.applicationId, SF_DIR, "documents",
            ("doc_id", "n_chars"), None, ("doc_id", "n_chars"), None, None)
-    first = _LAYOUT_CACHE[key][1]
+    first = cache.lookup("skipping.layout", key)[0]
+    assert _skipping_layout(spark, SF_DIR) == first  # a hit serves it
     shutil.rmtree(first)
+    before = cache.stats("skipping.layout")
     path2 = _skipping_layout(spark, SF_DIR)
-    assert path2 != first or not _LAYOUT_CACHE  # fresh dir built
+    assert os.path.isdir(path2)  # fresh dir built
+    assert cache.lookup("skipping.layout", key)[0] == path2
+    assert cache.stats("skipping.layout")["misses"] == before["misses"] + 1
     assert q.spark(spark, SF_DIR).count() == n0
 
 
@@ -388,6 +391,7 @@ def test_layout_cache_keeps_same_table_specs_apart(spark):
     needing the normalized ns->us ts reader)."""
     import pytest
 
+    from tank_spark import cache
     from tank_spark.operators.skipping import clustered_layout, prune_files
     from tank_spark.sources.tables import read_events
 
@@ -411,11 +415,13 @@ def test_layout_cache_keeps_same_table_specs_apart(spark):
     assert prune_files(spark, p1, "event_type", "signup", "signup")
     assert prune_files(spark, p2, "event_type", "signup", "signup")
     # a repeated identical request still serves the cached layout
+    hits = cache.stats("skipping.layout")["hits"]
     assert clustered_layout(spark, SF_DIR, "events",
                             ("event_type", "ts"),
                             cluster_by="event_type",
                             reader=lambda: read_events(spark, SF_DIR),
                             reader_tag="read_events")[0] == p1
+    assert cache.stats("skipping.layout")["hits"] == hits + 1
     # a reader without its stable tag (or vice versa) is a hard error
     with pytest.raises(ValueError):
         clustered_layout(spark, SF_DIR, "events", ("event_type",),

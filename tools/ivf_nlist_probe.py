@@ -77,6 +77,7 @@ def main() -> None:
     big = spark.read.parquet(f"{out_dir}/embeddings.parquet")
     print(f"corpus: {big.count()} vectors ({k}x {src})")
 
+    from tank_spark import cache
     from tank_spark.llm import similarity as sim
 
     def timed(tag, nlist, mk, runs=3):
@@ -95,9 +96,8 @@ def main() -> None:
         # already-memoized Column): drop every cache entry for this key,
         # then time collect + expr assembly + one analyze end-to-end —
         # the once-per-data-version cost a long-lived server pays
-        for key in [k for k in sim._CENTROID_CACHE
-                    if k[-2:] == (out_dir, nlist)]:
-            del sim._CENTROID_CACHE[key]
+        cache.clear("similarity.centroids",
+                    lambda k: k[-2:] == (out_dir, nlist))
         t0 = time.perf_counter()
         arr = sim._centroid_score_structs(spark, out_dir, nlist)
         spark.createDataFrame([], "embedding array<float>") \
