@@ -25,12 +25,13 @@ twins are the explicit recall-strict opt-outs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tank_spark import cache
 from tank_spark.plans.registry import register
 from tank_spark.sources.tables import load
+from tank_spark.streaming.epoch_index import IndexSpec, Relation
 from tank_spark.util import local_values_df
 
 # Checked (oracle) configuration — toy-sized so the DuckDB twin stays
@@ -216,27 +217,6 @@ def _sig_sql() -> str:
     return f"sigs AS (SELECT cid, {mins} FROM shingled GROUP BY cid)"
 
 
-def _sigs_df(sh: DataFrame, k: int = K, lanes: int = 1) -> DataFrame:
-    """Per-doc MinHash signature: k permutation minima.
-
-    ``lanes`` > 1 derives that many independent 32-bit permutations from
-    each 128-bit md5 (8-hex-char substrings) instead of salting one md5
-    per permutation — k/lanes digest computations and an 8-char (not
-    32-char) min buffer per lane. At production K this is the difference
-    between 128 and 32 md5 evaluations per shingle; a 32-bit lane min is
-    statistically equivalent for corpus sizes << 2^32 shingles per doc.
-    lanes=1 keeps the toy oracle configuration byte-identical.
-    """
-    aggs = []
-    for i in range(k):
-        salt, lane = divmod(i, lanes) if lanes > 1 else (i, 0)
-        h = F.md5(F.concat(F.col("shingle"), F.lit(f":{salt}")))
-        if lanes > 1:
-            h = F.substring(h, lane * 8 + 1, 8)
-        aggs.append(F.min(h).alias(f"h{i}"))
-    return sh.groupBy("cid").agg(*aggs)
-
-
 def _shingle_arrays(c: DataFrame, **extra) -> DataFrame:
     """(cid, [**extra,] sh): each doc's 3-word shingles as ONE array
     column — the map-only twin of _shingles_df (identical shingle
@@ -269,9 +249,14 @@ def _sigs_map_only(c: DataFrame, k: int = K, lanes: int = 1) -> DataFrame:
     (guide §2.4 — remove shuffles outright): every shingle of a doc
     lives in that doc's own array row, so MIN(md5(shingle||':i'))
     GROUP BY cid == array_min over one in-row transform. Values are
-    byte-identical to _sigs_df (same shingle set, same salted md5,
-    same string MIN); docs with <3 words are filtered like the row
-    form's lead()-null guard drops them. The signature stage becomes a
+    byte-identical to the oracle's row form (_sig_sql: same shingle
+    set, same salted md5, same string MIN); docs with <3 words are
+    filtered like the row form's lead()-null guard drops them.
+    ``lanes`` > 1 derives that many independent 32-bit permutations
+    from each 128-bit md5 (8-hex-char substrings) instead of salting
+    one md5 per permutation — k/lanes digest computations and an
+    8-char (not 32-char) min buffer per lane; lanes=1 keeps the toy
+    oracle configuration byte-identical. The signature stage becomes a
     pure projection over the corpus scan — at 100 TB the token stream
     never shuffles at all (it used to shuffle once, into the window).
     Measured at sf0.1 (dedup_incremental_batch's signature job):
@@ -389,19 +374,36 @@ def _bucket_pairs_col(id_col: str, a_name: str, b_name: str):
     return memo_col(("lsh_bucket_pairs", id_col, a_name, b_name), build)
 
 
+def _drop_hot_buckets(rel: DataFrame, bucket: list[str],
+                      cap: int) -> DataFrame:
+    """``rel`` without the rows of buckets (``bucket`` columns) holding
+    more than ``cap`` rows — the standing LSH skew guard: a census
+    aggregate (tiny by construction: only oversized buckets survive
+    the filter) broadcast back into a left-anti join."""
+    oversized = (
+        rel.groupBy(*bucket)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") > cap)
+        .select(*bucket)
+    )
+    return rel.join(F.broadcast(oversized), bucket, "left_anti")
+
+
 def _bucket_grouped_pairs(bands: DataFrame, id_col: str,
-                          a_name: str, b_name: str) -> DataFrame:
-    """(a_name, b_name) candidate pairs from a CAP-BOUNDED band relation
-    via ONE groupBy + in-row pair expansion (r14, guide §2.3/§2.4):
-    collect each bucket's ids (bounded by the skew cap — callers must
-    filter oversized buckets FIRST, so no agg buffer ever holds a hot
-    bucket), sort, expand all i<j pairs in-row, inline, distinct. The
-    old same-bucket self-join consumed the band relation on BOTH sides
-    (the cap census subtree ran twice — Spark does not CSE across join
-    sides) and at scale shuffles the bands twice where the groupBy
-    shuffles them once."""
+                          a_name: str, b_name: str,
+                          cap: int) -> DataFrame:
+    """(a_name, b_name) candidate pairs from a band relation via ONE
+    groupBy + in-row pair expansion (r14, guide §2.3/§2.4): drop every
+    bucket above ``cap`` first (_drop_hot_buckets — here, where the
+    quadratic happens, so no agg buffer ever holds a hot bucket),
+    collect each remaining bucket's ids, sort, expand all i<j pairs
+    in-row, inline, distinct. The old same-bucket self-join consumed
+    the band relation on BOTH sides (the cap census subtree ran twice
+    — Spark does not CSE across join sides) and at scale shuffles the
+    bands twice where the groupBy shuffles them once."""
+    kept = _drop_hot_buckets(bands, ["band_idx", "band_val"], cap)
     grouped = (
-        bands.groupBy("band_idx", "band_val")
+        kept.groupBy("band_idx", "band_val")
         .agg(F.array_sort(F.collect_list(id_col)).alias("_srt"))
         .filter(F.size("_srt") >= 2)
     )
@@ -415,24 +417,15 @@ def _lsh_candidates(sig: DataFrame,
                     max_band_bucket: int | None) -> DataFrame:
     """Band-bucket candidate pair generation shared by the Jaccard and
     containment surfaces: posexplode per-band digests; capped mode
-    drops oversized buckets (broadcast anti-join on the tiny census)
-    then expands pairs in-row per bucket (_bucket_grouped_pairs);
-    uncapped mode keeps the self-join — an unbounded hot bucket's
-    quadratic output must flow through a shuffle AQE can split, never
-    a single in-row array."""
+    expands pairs in-row per cap-bounded bucket
+    (_bucket_grouped_pairs); uncapped mode keeps the self-join — an
+    unbounded hot bucket's quadratic output must flow through a
+    shuffle AQE can split, never a single in-row array."""
     bands = sig.select("cid", F.posexplode("bands")
                        .alias("band_idx", "band_val"))
     if max_band_bucket is not None:
-        oversized = (
-            bands.groupBy("band_idx", "band_val")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > max_band_bucket)
-            .select("band_idx", "band_val")
-        )
-        kept = bands.join(
-            F.broadcast(oversized), ["band_idx", "band_val"], "left_anti"
-        )
-        return _bucket_grouped_pairs(kept, "cid", "cid_a", "cid_b")
+        return _bucket_grouped_pairs(bands, "cid", "cid_a", "cid_b",
+                                     max_band_bucket)
     a, b = bands.alias("a"), bands.alias("b")
     return (
         a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
@@ -453,7 +446,7 @@ def minhash_lsh_pairs(
     keeping pairs whose signature agreement >= ``min_match_frac``. The
     registered oracle query is this with the toy checked configuration;
     ``lanes`` > 1 packs that many 32-bit permutations per md5 (see
-    _sigs_df) for the production-K sizing.
+    _sigs_map_only) for the production-K sizing.
 
     ``max_band_bucket`` is the SKEW guard and it is ON BY DEFAULT
     (``LSH_BUCKET_CAP``) as of round 5 — pass ``max_band_bucket=None``
@@ -581,7 +574,8 @@ def _pairs_sql_for(k: int, band_w: int, min_match_frac: float = 0.5,
                    max_band_bucket: int | None = LSH_BUCKET_CAP) -> str:
     """Generate the oracle pairs SQL for an arbitrary (k, band_w) sizing —
     the same CTE chain as the toy configuration, parameterized. ``lanes``
-    mirrors _sigs_df: h_i = 8-hex-lane of md5(shingle || ':' || i//lanes).
+    mirrors _sigs_map_only: h_i = 8-hex-lane of md5(shingle || ':' ||
+    i//lanes).
     ``max_band_bucket`` mirrors the builder's capped default (None = the
     recall-strict uncapped candidate join)."""
     def _min(i: int) -> str:
@@ -642,7 +636,7 @@ def _pairs_sql_for(k: int, band_w: int, min_match_frac: float = 0.5,
         "configuration that would run at 100 TB, oracle-checked and "
         "benchmarked (the toy K=12 entry stays the cheap driver row). "
         "Permutations pack 4 32-bit lanes per md5 (32 digests per "
-        "shingle, not 128, and 8-char min buffers) — see _sigs_df; "
+        "shingle, not 128, and 8-char min buffers) — see _sigs_map_only; "
         "banding still bounds the candidate join to same-band buckets, "
         "and the round-5 skew cap applies (oracle carries the matching "
         "capped CTEs).",
@@ -1854,51 +1848,53 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def disposition_against_index(
     bfp: DataFrame, ifp: DataFrame, bb: DataFrame, ib: DataFrame,
-    cap: int = LSH_BUCKET_CAP,
+    keys: tuple[str, ...] = (), cap: int = LSH_BUCKET_CAP,
+    near_filter: Column | None = None,
 ) -> DataFrame:
-    """The incremental-dedup probe shared by the batch op above and the
-    streaming foreachBatch sink (streaming/dedup_stream.py): disposition
-    every batch doc against an index WITHOUT pairwise corpus work.
+    """The incremental-dedup probe of the text AND media families —
+    their batch ops, their stream replays and the streaming sink
+    (streaming/epoch_index.py): disposition every batch row against an
+    index WITHOUT pairwise corpus work.
 
-    Inputs: ``bfp`` (bcid, fp) batch fingerprints, ``ifp`` (icid, fp)
-    index fingerprints, ``bb`` (bcid, band_idx, band_val) batch band
-    digests, ``ib`` (icid, band_idx, band_val) index band digests.
-    Output: (doc_id, disposition, match_cid, n_bands_hit). The batch
-    side is BROADCAST into both probe joins (a crawl increment is small
-    next to the corpus); hot index buckets above ``cap`` are skipped,
-    the standing LSH posture.
+    Inputs: ``bfp`` (bcid, *keys, fp) batch fingerprints, ``ifp``
+    (icid, *keys, fp) index fingerprints, ``bb`` (bcid, *keys,
+    band_idx, band_val, ...) batch band digests, ``ib`` (icid, *keys,
+    band_idx, band_val, ...) index band digests. ``keys`` partition
+    every join (media: ``modality``, so hash families never cross).
+    Output: (doc_id, *keys, disposition, match_cid, n_bands_hit). The
+    batch side is BROADCAST into every probe join (a crawl increment
+    is small next to the corpus); index buckets above ``cap`` are
+    skipped, the standing LSH posture; ``near_filter`` verifies each
+    band hit over the joined (bb, ib) columns (media: exact Hamming on
+    the phash — text bands are already exact MinHash digests).
     """
+    keys = list(keys)
     exact = (
-        ifp.join(F.broadcast(bfp), "fp")
+        ifp.join(F.broadcast(bfp), [*keys, "fp"])
         .groupBy("bcid").agg(F.min("icid").alias("exact_match"))
     )
     # in-batch exact probe WITHOUT the fp self-join (r10 skew-probe
     # hardening): MIN(y.cid | y.fp = x.fp, y.cid < x.cid) == the group
     # minimum whenever it is smaller than x.cid, so one batch-bounded
     # aggregate + a broadcast rejoin replaces the k^2-streaming
-    # self-join a hot batch fingerprint (boilerplate crawl) would feed
-    bmin = bfp.groupBy("fp").agg(F.min("bcid").alias("mn"))
+    # self-join a hot batch fingerprint (boilerplate crawl, a banner
+    # image re-crawled en masse) would feed
+    bmin = bfp.groupBy(*keys, "fp").agg(F.min("bcid").alias("mn"))
     inb = (
-        bfp.join(F.broadcast(bmin), "fp")
+        bfp.join(F.broadcast(bmin), [*keys, "fp"])
         .filter(F.col("mn") < F.col("bcid"))
         # one row per bcid like the old groupBy form: the streaming
         # sink's drop files do not guarantee unique cids, and a
         # duplicated cid would otherwise fan out in the final assembly
         .groupBy("bcid").agg(F.min("mn").alias("batch_match"))
     )
-    oversized = (
-        ib.groupBy("band_idx", "band_val")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > cap)
-        .select("band_idx", "band_val")
-    )
-    ibk = ib.join(F.broadcast(oversized), ["band_idx", "band_val"], "left_anti")
-    near = (
-        ibk.join(F.broadcast(bb), ["band_idx", "band_val"])
-        .groupBy("bcid").agg(
-            F.min("icid").alias("near_match"),
-            F.countDistinct("band_idx").cast("int").alias("n_bands_hit"))
-    )
+    bucket = [*keys, "band_idx", "band_val"]
+    hits = _drop_hot_buckets(ib, bucket, cap).join(F.broadcast(bb), bucket)
+    if near_filter is not None:
+        hits = hits.filter(near_filter)
+    near = hits.groupBy("bcid").agg(
+        F.min("icid").alias("near_match"),
+        F.countDistinct("band_idx").cast("int").alias("n_bands_hit"))
     disposition = (
         F.when(F.col("exact_match").isNotNull(), "exact_dup_of_index")
         .when(F.col("batch_match").isNotNull(), "dup_in_batch")
@@ -1914,18 +1910,62 @@ def disposition_against_index(
     # row per batch doc) — broadcast them so the final assembly is three
     # map-side joins instead of a SortMergeJoin chain on bcid
     return (
-        bfp.select("bcid")
+        bfp.select("bcid", *keys)
         .join(F.broadcast(exact), "bcid", "left")
         .join(F.broadcast(inb), "bcid", "left")
         .join(F.broadcast(near), "bcid", "left")
         .select(
-            F.col("bcid").alias("doc_id"),
+            F.col("bcid").alias("doc_id"), *keys,
             disposition.alias("disposition"),
             match_cid.alias("match_cid"),
             F.coalesce(F.col("n_bands_hit"), F.lit(0)).cast("int")
             .alias("n_bands_hit"),
         )
     )
+
+
+# the probe's dispositions, most duplicate-aware first — one vocabulary
+# for the text and media families (the replay-collapse order)
+DISPOSITION_PRECEDENCE = (
+    "exact_dup_of_index", "dup_in_batch", "near_dup_of_index", "new_unique")
+
+
+def _text_index_rows(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The (fp, bands) index rows of a (cid, text) relation, keyed
+    icid — one corpus pass (_fp_banded), exactly as dedup_index_build
+    derives them."""
+    e = _fp_banded(docs)
+    return (
+        e.select(F.col("cid").alias("icid"), "fp"),
+        e.select(F.col("cid").alias("icid"),
+                 F.posexplode("bands").alias("band_idx", "band_val")),
+    )
+
+
+def _text_probe(batch: DataFrame, index: tuple) -> DataFrame:
+    bfp, bb = (r.withColumnRenamed("icid", "bcid")
+               for r in _text_index_rows(batch))
+    ifp, ib = index
+    return disposition_against_index(bfp, ifp, bb, ib)
+
+
+# the persisted text index of the streaming loop (streaming/epoch_index):
+# fp/ is the exact-dup probe side, bands/ (LSH band digests) the near-dup
+# side, compacted by the probe join keys
+TEXT_INDEX = IndexSpec(
+    relations=(
+        Relation("fp", "icid long, fp string", ("fp",), ("fp",)),
+        Relation("bands", "icid long, band_idx int, band_val string",
+                 ("band_val",), ("band_idx", "band_val")),
+    ),
+    derive=_text_index_rows,
+    probe=_text_probe,
+    batch_schema="cid long, text string",
+    batch_id="cid",
+    out_id="doc_id",
+    match_col="match_cid",
+    precedence=DISPOSITION_PRECEDENCE,
+)
 
 
 @register(
@@ -2071,8 +2111,9 @@ _STREAM_REPLAY_CTES = f"""
     FROM disp_b
     """,
     doc="Batch twin of the streaming incremental-dedup pipeline "
-        "(streaming/dedup_stream.py): the crawl batch replayed as TWO "
-        "sequential micro-batches with the production index-growth rule "
+        "(streaming/epoch_index.py with TEXT_INDEX): the crawl batch "
+        "replayed as TWO sequential micro-batches with the production "
+        "index-growth rule "
         "— each micro-batch's new_unique survivors are appended to the "
         "index before the next batch probes it. The derived corpus makes "
         "the sequencing observable: the synthetic-new docs emitted twice "

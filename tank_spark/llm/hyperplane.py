@@ -263,26 +263,20 @@ def _pairs_df(spark: SparkSession, sf_dir: str,
     # the corpus feeds the signature projection AND the verify's two
     # embedding joins — pin it (small: base + derived batch rows)
     corpus = _sem_corpus(spark, sf_dir).localCheckpoint(eager=True)
-    # pin the banded signature too (r13): it feeds FOUR subtrees (the
-    # cap census and both sides of the candidate self-join through
-    # `kept`), so the n_planes interpreted-fold projection ran ~4x per
-    # query; one eager checkpoint of the 3-column relation (vid,
-    # band_idx, band_val — embeddings already dropped) computes it once.
-    # Interleaved in-session A/B at sf0.1: 2.83s -> 2.69s median.
+    # pin the banded signature too (r13): it feeds the cap census AND
+    # the bucket grouping, so the n_planes interpreted-fold projection
+    # ran once per consumer; one eager checkpoint of the 3-column
+    # relation (vid, band_idx, band_val — embeddings already dropped)
+    # computes it once. Interleaved in-session A/B at sf0.1: 2.83s ->
+    # 2.69s median.
     bands = _bands_relation(corpus, n_planes, n_bands) \
         .localCheckpoint(eager=True)
-    # hot-bucket census + drop (tiny aggregate, broadcast back)
-    keep = (bands.groupBy("band_idx", "band_val")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") <= HP_BUCKET_CAP)
-            .select("band_idx", "band_val"))
-    kept = bands.join(F.broadcast(keep), ["band_idx", "band_val"])
     # candidate pairs via ONE groupBy + in-row expansion over the
-    # cap-bounded buckets (r14, the dedup._bucket_grouped_pairs move):
-    # the old same-bucket self-join consumed kept on both sides, so the
-    # census aggregate + broadcast built twice per query
+    # cap-bounded buckets (r14): hot buckets above HP_BUCKET_CAP are
+    # dropped inside _bucket_grouped_pairs, where the quadratic happens
     from tank_spark.llm.dedup import _bucket_grouped_pairs
-    cand = _bucket_grouped_pairs(kept, "vid", "vec_a", "vec_b")
+    cand = _bucket_grouped_pairs(bands, "vid", "vec_a", "vec_b",
+                                 HP_BUCKET_CAP)
     # the distinct's output is a few hundred KB of bare id pairs, so AQE
     # coalesces it to ONE partition — and the exact fold-cosine verify
     # (3 interpreted 64-dim folds per pair) then runs serially in that

@@ -43,8 +43,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tank_spark.llm import media_sql
+from tank_spark.llm.dedup import (
+    DISPOSITION_PRECEDENCE,
+    disposition_against_index,
+)
 from tank_spark.plans.registry import register
 from tank_spark.sources.tables import load
+from tank_spark.streaming.epoch_index import IndexSpec, Relation
 
 # the text family's batch-id offset (high bit; 2x still < 2^63) — one
 # convention for every incremental surface
@@ -294,6 +299,68 @@ def _bands(hashed: DataFrame) -> DataFrame:
     )
 
 
+def _media_probe_kw() -> dict:
+    """The media family's settings of the shared incremental probe
+    (dedup.disposition_against_index): modality keys every join so hash
+    families never cross, hot index buckets above PHASH_BUCKET_CAP are
+    skipped, and every band hit verifies at exact
+    bit_count(phash XOR bphash) <= PHASH_HAM_T."""
+    return {
+        "keys": ("modality",),
+        "cap": media_sql.PHASH_BUCKET_CAP,
+        "near_filter": F.bit_count(
+            F.col("phash").bitwiseXOR(F.col("bphash")))
+        <= media_sql.PHASH_HAM_T,
+    }
+
+
+def _media_index_rows(media: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The (fp, bands) index rows of a (cid, modality, payload)
+    relation, keyed icid — derived exactly as media_index_build does
+    (each payload through its modality's map-only hash kernel; phash
+    rides along for the exact Hamming verify)."""
+    fps = media.select(F.col("cid").alias("icid"), "modality",
+                       F.lower(F.hex("payload")).alias("fp"))
+    bands = _bands(_hashed_media(media.sparkSession, media)).select(
+        F.col("cid").alias("icid"), "modality", "phash",
+        "band_idx", "band_val")
+    return fps, bands
+
+
+def _media_probe(batch: DataFrame, index: tuple) -> DataFrame:
+    bfp, bb = _media_index_rows(batch)
+    ifp, ib = index
+    return disposition_against_index(
+        bfp.withColumnRenamed("icid", "bcid"), ifp,
+        bb.select(F.col("icid").alias("bcid"), "modality",
+                  F.col("phash").alias("bphash"), "band_idx", "band_val"),
+        ib, **_media_probe_kw())
+
+
+# the persisted media index of the streaming loop
+# (streaming/epoch_index): fp/ (lowercase payload hex) is the exact-dup
+# probe side, bands/ (the 4x16-bit phash decomposition, phash riding
+# along) the near-dup side, compacted by (modality, probe join key)
+MEDIA_INDEX = IndexSpec(
+    relations=(
+        Relation("fp", "icid long, modality string, fp string",
+                 ("modality", "fp"), ("modality", "fp")),
+        Relation("bands", "icid long, modality string, phash long, "
+                 "band_idx int, band_val long",
+                 ("modality", "band_val"),
+                 ("modality", "band_idx", "band_val")),
+    ),
+    derive=_media_index_rows,
+    probe=_media_probe,
+    batch_schema="cid long, modality string, payload binary",
+    batch_id="cid",
+    out_id="doc_id",
+    match_col="match_cid",
+    precedence=DISPOSITION_PRECEDENCE,
+    report_keys=("modality",),
+)
+
+
 @register(
     "media_index_build",
     media_sql.MEDIA_INDEX_BUILD_SQL,
@@ -369,7 +436,8 @@ def media_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ib = bands.filter(~is_batch).select(
         F.col("cid").alias("icid"), "modality", "phash",
         "band_idx", "band_val")
-    return media_disposition_against_index(bfp, ifp, bb, ib)
+    return disposition_against_index(bfp, ifp, bb, ib,
+                                     **_media_probe_kw())
 
 
 @register(
@@ -411,9 +479,9 @@ def media_dedup_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ifp0 = _fp_side(is_i, "icid")
     ib0 = _band_side(is_i, "icid", "phash")
-    disp_a = media_disposition_against_index(
+    disp_a = disposition_against_index(
         _fp_side(is_a, "bcid"), ifp0,
-        _band_side(is_a, "bcid", "bphash"), ib0,
+        _band_side(is_a, "bcid", "bphash"), ib0, **_media_probe_kw(),
     ).localCheckpoint(eager=True)  # consumed twice: output + survivors
     new_a = disp_a.filter(F.col("disposition") == "new_unique").select(
         F.col("doc_id").alias("cid"))
@@ -424,9 +492,9 @@ def media_dedup_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands.join(F.broadcast(new_a), "cid")
         .select(F.col("cid").alias("icid"), "modality", "phash",
                 "band_idx", "band_val"))
-    disp_b = media_disposition_against_index(
+    disp_b = disposition_against_index(
         _fp_side(is_b, "bcid"), ifp1,
-        _band_side(is_b, "bcid", "bphash"), ib1)
+        _band_side(is_b, "bcid", "bphash"), ib1, **_media_probe_kw())
     return (
         disp_a.withColumn("batch_id", F.lit(1).cast("int"))
         .unionByName(disp_b.withColumn("batch_id", F.lit(2).cast("int")))
@@ -476,48 +544,12 @@ def _curation_report(spark: SparkSession, sf_dir: str, disp: DataFrame,
     return curation_report_over(d, disp, keys)
 
 
-def collapse_replayed_epochs(disp: DataFrame, id_col: str,
-                             precedence: list[str]) -> DataFrame:
-    """Collapse at-least-once replays in a persisted disposition output
-    to ONE row per (epoch_id, ``id_col``) — the 'readers drop replayed
-    epochs' half of the stream modules' output posture, shared by all
-    three incremental families' production report paths (review r11:
-    the posture was documented but no reader implemented it, so a
-    replayed epoch double-counted in every daily report).
-
-    When the two copies of an epoch disagree (the replay ran AFTER its
-    survivors were folded into the index, flipping new_unique rows to
-    dup-of-index self-matches), keep the most duplicate-aware copy —
-    the replay saw the current index state — via the ``precedence``
-    rank; remaining ties resolve by the smallest payload struct, so the
-    pick is deterministic."""
-    rank = F.coalesce(
-        *[F.when(F.col("disposition") == d, F.lit(i))
-          for i, d in enumerate(precedence)],
-        F.lit(len(precedence)))
-    payload = [c for c in disp.columns if c not in ("epoch_id", id_col)]
-    s = F.struct(rank.alias("_r"),
-                 *[F.col(c).alias(c) for c in payload])
-    return (disp.groupBy("epoch_id", id_col)
-            .agg(F.min(s).alias("_w"))
-            .select("epoch_id", id_col,
-                    *[F.col(f"_w.{c}").alias(c) for c in payload]))
-
-
-# disposition precedence per family (most duplicate-aware first) — the
-# collapse rule's ordering for contradictory replay copies
-MEDIA_DISPOSITION_PRECEDENCE = [
-    "exact_dup_of_index", "dup_in_batch", "near_dup_of_index",
-    "new_unique"]
-
-
 def curation_report_over(docs: DataFrame, disp: DataFrame,
                          keys: list[str]) -> DataFrame:
     """The report aggregation core over an explicit ``docs`` (orig,
-    source) relation — also the PRODUCTION path the streaming modules
-    expose over their persisted disposition outputs
-    (media_dedup_stream.media_stream_report /
-    dedup_stream.dedup_stream_report). Scale shape: ``disp`` is
+    source) relation — also the PRODUCTION path over the streaming
+    loop's persisted disposition output (epoch_index.stream_report).
+    Scale shape: ``disp`` is
     batch-bounded, so it BROADCASTS into the docs join; the per-group
     totals are a tiny aggregate that broadcasts back — no SortMergeJoin
     anywhere in the chain."""
@@ -564,77 +596,3 @@ def media_dedup_stream_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "batch_id", "modality", "disposition", "match_cid"))
     return _curation_report(spark, sf_dir, r,
                             ["batch_id", "modality", "source"])
-
-
-def media_disposition_against_index(
-    bfp: DataFrame, ifp: DataFrame, bb: DataFrame, ib: DataFrame,
-    cap: int = media_sql.PHASH_BUCKET_CAP,
-    ham_t: int = media_sql.PHASH_HAM_T,
-) -> DataFrame:
-    """The media incremental probe: disposition every batch media row
-    against an index without pairwise corpus work. Inputs: ``bfp``
-    (bcid, modality, fp) batch fingerprints, ``ifp`` (icid, modality,
-    fp) index fingerprints, ``bb`` (bcid, modality, bphash, band_idx,
-    band_val) batch bands, ``ib`` (icid, modality, phash, band_idx,
-    band_val) index bands. Output: (doc_id, modality, disposition,
-    match_cid, n_bands_hit). Batch side BROADCAST everywhere; hot index
-    buckets above ``cap`` skipped; band hits verified at exact
-    bit_count(xor) <= ``ham_t``."""
-    exact = (
-        ifp.join(F.broadcast(bfp), ["modality", "fp"])
-        .groupBy("bcid").agg(F.min("icid").alias("exact_match"))
-    )
-    # in-batch exact probe without the fp self-join (r10 skew-probe
-    # hardening, same as the text twin dedup.py): the group-min rejoin
-    # removes the k^2 term a hot batch payload (boilerplate banner
-    # image, re-crawled en masse) would otherwise feed
-    bmin = bfp.groupBy("modality", "fp").agg(F.min("bcid").alias("mn"))
-    inb = (
-        bfp.join(F.broadcast(bmin), ["modality", "fp"])
-        .filter(F.col("mn") < F.col("bcid"))
-        # one row per bcid like the old groupBy form (duplicate cids in
-        # a stream drop file must not fan out in the assembly joins)
-        .groupBy("bcid").agg(F.min("mn").alias("batch_match"))
-    )
-    oversized = (
-        ib.groupBy("modality", "band_idx", "band_val")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > cap)
-        .select("modality", "band_idx", "band_val")
-    )
-    ibk = ib.join(F.broadcast(oversized),
-                  ["modality", "band_idx", "band_val"], "left_anti")
-    near = (
-        ibk.join(F.broadcast(bb), ["modality", "band_idx", "band_val"])
-        .filter(F.bit_count(F.col("phash").bitwiseXOR(F.col("bphash")))
-                <= ham_t)
-        .groupBy("bcid").agg(
-            F.min("icid").alias("near_match"),
-            F.countDistinct("band_idx").cast("int").alias("n_bands_hit"))
-    )
-    disposition = (
-        F.when(F.col("exact_match").isNotNull(), "exact_dup_of_index")
-        .when(F.col("batch_match").isNotNull(), "dup_in_batch")
-        .when(F.col("near_match").isNotNull(), "near_dup_of_index")
-        .otherwise("new_unique")
-    )
-    match_cid = (
-        F.when(F.col("exact_match").isNotNull(), F.col("exact_match"))
-        .when(F.col("batch_match").isNotNull(), F.col("batch_match"))
-        .otherwise(F.col("near_match"))
-    )
-    # the three disposition tables are batch-bounded aggregates (<= one
-    # row per batch row) — broadcast them so the final assembly is three
-    # map-side joins, never a SortMergeJoin chain on bcid
-    return (
-        bfp.join(F.broadcast(exact), "bcid", "left")
-        .join(F.broadcast(inb), "bcid", "left")
-        .join(F.broadcast(near), "bcid", "left")
-        .select(
-            F.col("bcid").alias("doc_id"), "modality",
-            disposition.alias("disposition"),
-            match_cid.alias("match_cid"),
-            F.coalesce(F.col("n_bands_hit"), F.lit(0)).cast("int")
-            .alias("n_bands_hit"),
-        )
-    )

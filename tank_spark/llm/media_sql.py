@@ -706,8 +706,8 @@ def _hash_bands_cte(src: str, name: str) -> str:
 
 
 def media_disposition_ctes(bat: str, idx: str, p: str) -> str:
-    """The full disposition chain twinning media_inc.
-    media_disposition_against_index over hash relations ``bat`` and
+    """The full disposition chain twinning the media settings of
+    dedup.disposition_against_index over hash relations ``bat`` and
     ``idx`` (each (doc_id, h, phash, modality)); emits CTEs prefixed
     ``{p}_`` ending in ``{p}_out(doc_id, modality, disposition,
     match_cid, n_bands_hit)``. Parameterized so the stream-replay

@@ -71,6 +71,7 @@ from tank_spark.llm.similarity import (
 )
 from tank_spark.plans.registry import register
 from tank_spark.sources.tables import load
+from tank_spark.streaming.epoch_index import IndexSpec, Relation
 
 # one id-offset convention for every incremental surface
 INC_OFFSET = media_sql.INC_OFFSET
@@ -272,7 +273,7 @@ def scored_relation(spark: SparkSession, rel: DataFrame,
     the quantizer's top-1 assignment AND the hoisted inverse norm —
     no join between assignment and norm relations, so the corpus never
     shuffles to build its index shape. This is the persisted-artifact
-    schema the streaming module writes."""
+    schema the streaming loop writes (semantic_index)."""
     top1, _ = _quantizer_cols(spark, quantizer)
     inv = _inv_norm_col()
     return rel.select(
@@ -426,6 +427,46 @@ def semdedup_disposition_against_index(
         F.coalesce(F.col("n_index_hits"), F.lit(0)).cast("long")
          .alias("n_index_hits"),
         "best_index_cos",
+    )
+
+
+def semantic_index(quantizer: str = "frozen") -> IndexSpec:
+    """The persisted semantic index of the streaming loop
+    (streaming/epoch_index): ONE relation, ``assign/`` — (ivid,
+    list_id, embedding, inv), the map-only scored projection of every
+    indexed vector (the semdedup_index_build artifact shape),
+    compacted by list_id, the probe join key. The family needs no
+    separate exact-fingerprint side: an exact re-crawl IS a cosine-1
+    vector, caught by the same probe. ``quantizer`` picks the list
+    space ("frozen" k=8 or "twolevel" k=64 — at 100 TB the two-level
+    form with nlist scaled to the corpus); every writer and prober of
+    one index MUST use the same value."""
+
+    def derive(vectors: DataFrame) -> tuple[DataFrame]:
+        return (scored_relation(vectors.sparkSession, vectors, quantizer)
+                .select(F.col("vid").alias("ivid"), "list_id",
+                        "embedding", "inv"),)
+
+    def probe(batch: DataFrame, index: tuple) -> DataFrame:
+        spark = batch.sparkSession
+        (assign,) = index
+        return semdedup_disposition_against_index(
+            scored_relation(spark, batch, quantizer),
+            routed_relation(spark, batch, quantizer=quantizer),
+            assign.withColumnRenamed("ivid", "vid"))
+
+    return IndexSpec(
+        relations=(Relation(
+            "assign",
+            "ivid long, list_id long, embedding array<float>, inv double",
+            ("list_id",), ("list_id", "ivid")),),
+        derive=derive,
+        probe=probe,
+        batch_schema="vid long, embedding array<float>",
+        batch_id="vid",
+        out_id="vec_id",
+        match_col="match_vid",
+        precedence=("semantic_dup_of_index", "dup_in_batch", "new_unique"),
     )
 
 

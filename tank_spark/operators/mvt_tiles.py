@@ -409,15 +409,6 @@ GEOM_STAGE_SCHEMA = "z int, x int, y int, sub int, chunk binary"
 # runs as NSUB parallel sub-merge tasks instead of one assembly task
 NSUB = 16
 
-# Assembly routing for SAMPLED overview tiles (budget-bounded, so tile
-# size is O(OVERVIEW_FEATURE_BUDGET) regardless of table size): measured
-# at the default 30k budget on sf0.1, direct single-task assembly serves
-# the sampled z7 tile faster than the dictionary tree (the tree adds a
-# stats job + a sub-merge shuffle that a 30k-feature tile can't amortize;
-# numbers in SCALE.md §assembly-routing). Flip to True only for budgets
-# large enough (~>=100k features) that one assembly task dominates.
-ROUTE_SAMPLED_TREE = False
-
 
 def range_sub_assign(bkeys, kmin: int, span: int, n_sub: int):
     """Contiguous-range sub-group assignment for the merge tree, ordering-
@@ -999,15 +990,12 @@ def mvt_tiles_for(
     # every feature into one tile group — route them through the sub-tile
     # merge tree so per-feature work runs NSUB-way parallel and the final
     # task does O(blob) work. SAMPLED overview tiles are O(budget) by
-    # construction and take the direct shape by default — measured at the
-    # 30k budget the direct path beats the tree (the tree's extra stats
-    # job + sub-merge shuffle outweighs single-task assembly of a
-    # budget-bounded tile; numbers in SCALE.md). ROUTE_SAMPLED_TREE flips
-    # sampled overview tiles onto the tree for budgets large enough that
-    # single-task assembly dominates again (the tree branch applies the
-    # same sampling filter, so blobs are identical either way).
-    tree_reqs = [r for r in requests if r[0] < OVERVIEW_ZOOM
-                 and (not overview_sampling or ROUTE_SAMPLED_TREE)]
+    # construction and take the direct shape — measured at the 30k
+    # budget the direct path beats the tree (the tree's extra stats job
+    # + sub-merge shuffle outweighs single-task assembly of a
+    # budget-bounded tile; numbers in SCALE.md).
+    tree_reqs = [r for r in requests
+                 if r[0] < OVERVIEW_ZOOM and not overview_sampling]
     direct_reqs = [r for r in requests if r not in tree_reqs]
 
     parts = []

@@ -1,4 +1,5 @@
 """Structured-Streaming surface: drop-dir bulk ingest (the reference's
-spool-file pipeline re-expressed), streaming windowed aggregation, and
-streaming sessionization.
+spool-file pipeline re-expressed), streaming windowed aggregation,
+streaming sessionization, and the incremental-dedup index loop
+(epoch_index).
 """

@@ -37,18 +37,12 @@ SLOW_NODEID_PARTS = (
     "test_oracle_parity[media_dedup_survivors]",
     "test_oracle_parity[media_dedup_report]",
     "test_oracle_parity[media_dedup_apply]",
-    "test_oracle_parity[dedup_minhash_lsh_pairs_k128]",
-    "test_oracle_parity[dedup_incremental_stream_report]",
     "test_api.py::test_full_route_surface",
     "test_api.py::test_write_paths_invalidate_tile_cache",
     "test_api.py::test_update_move_invalidates_destination_tile",
     "test_api.py::test_ingest_upsert_replaces_matching_pk",
     "test_api.py::test_tile_cache_roundtrip_and_invalidation",
     "test_api.py::test_layer_config_persists_with_table",
-    "test_media_dedup_stream.py::test_compaction_collapses_epochs_and_preserves_probe",
-    "test_media_dedup_stream.py::test_stream_probe_matches_batch_twin_rule",
-    "test_media_dedup_stream.py::test_all_dup_batch_writes_no_epoch_dir",
-    "test_semdedup_stream.py::test_semdedup_compaction_collapses_and_preserves_probe",
     "test_semdedup_stream.py::test_stream_loop_with_twolevel_quantizer",
     "test_continuous_agg.py::test_rollup_matches_batch_after_incremental_merges",
     "test_ivf_trained.py::test_probe4_staged_parity_at_driver_sf",

@@ -1,5 +1,5 @@
-"""Streaming incremental dedup (streaming/dedup_stream.py): the
-foreachBatch production loop — disposition each micro-batch against the
+"""Streaming incremental dedup (streaming/epoch_index.py driven with
+dedup.TEXT_INDEX): the foreachBatch production loop — disposition each micro-batch against the
 persisted index, append survivors so later epochs AND later runs dedup
 against them. The batch twin dedup_incremental_stream_replay carries
 the full DuckDB oracle; these tests drive the real streaming machinery
@@ -51,11 +51,12 @@ def test_incremental_dedup_stream_e2e(spark, tmp_path):
     the bootstrapped index and appends its new_unique survivor; run 2's
     batch then matches that survivor as exact_dup_of_index — the
     cross-run index-growth property the daily-crawl loop depends on."""
-    from tank_spark.streaming.dedup_stream import (
-        docs_file_stream,
-        read_dedup_index,
-        start_incremental_dedup_stream,
-        write_dedup_index,
+    from tank_spark.llm.dedup import TEXT_INDEX
+    from tank_spark.streaming.epoch_index import (
+        file_stream,
+        read_index,
+        start_stream,
+        write_epoch,
     )
 
     index_dir = str(tmp_path / "index")
@@ -65,16 +66,16 @@ def test_incremental_dedup_stream_e2e(spark, tmp_path):
 
     corpus = spark.createDataFrame(
         sorted(_IDX_TEXTS.items()), "cid long, text string")
-    write_dedup_index(corpus, index_dir)
-    ifp0, ib0 = read_dedup_index(spark, index_dir)
+    write_epoch(TEXT_INDEX, corpus, index_dir)
+    ifp0, ib0 = read_index(spark, TEXT_INDEX, index_dir)
     assert ifp0.count() == 2
     assert ib0.count() == 12  # 6 bands x 2 docs
 
     def run_once() -> None:
-        stream = docs_file_stream(spark, drop_dir, max_files_per_trigger=10)
+        stream = file_stream(spark, TEXT_INDEX, drop_dir,
+                             max_files_per_trigger=10)
         assert stream.isStreaming
-        q = start_incremental_dedup_stream(
-            spark, stream, index_dir, out_dir, ckpt)
+        q = start_stream(spark, TEXT_INDEX, stream, index_dir, out_dir, ckpt)
         q.awaitTermination(120)
         q.stop()
 
@@ -92,7 +93,7 @@ def test_incremental_dedup_stream_e2e(spark, tmp_path):
     assert out[103]["match_cid"] == 102
 
     # only the new_unique survivor joined the index
-    ifp1, ib1 = read_dedup_index(spark, index_dir)
+    ifp1, ib1 = read_index(spark, TEXT_INDEX, index_dir)
     assert {r["icid"] for r in ifp1.collect()} == {1, 2, 102}
     assert ib1.filter("icid = 102").count() == 6
 
@@ -125,13 +126,13 @@ def test_incremental_dedup_stream_e2e(spark, tmp_path):
               for r in spark.read.parquet(out_dir).collect()}
     assert epochs[101] != epochs[201]
 
-    ifp2, _ = read_dedup_index(spark, index_dir)
+    ifp2, _ = read_index(spark, TEXT_INDEX, index_dir)
     expect = {1, 2, 102, 203} | ({202} if not hit else set())
     assert {r["icid"] for r in ifp2.collect()} == expect
 
 
 def test_disposition_batch_matches_batch_twin(spark, tmp_path):
-    """disposition_batch (the streaming probe) must agree with
+    """TEXT_INDEX.probe (the streaming probe) must agree with
     dedup_incremental_batch's registered plan on the same derived
     corpus — same helper underneath, pinned here at the module
     boundary so a streaming-side refactor cannot drift."""
@@ -141,10 +142,10 @@ def test_disposition_batch_matches_batch_twin(spark, tmp_path):
 
     from tank_spark.llm.dedup import (
         INC_BATCH_OFFSET,
+        TEXT_INDEX,
         _inc_corpus_df,
         dedup_incremental_batch,
     )
-    from tank_spark.streaming.dedup_stream import disposition_batch
 
     texts = dict(_IDX_TEXTS)
     texts[15 + 3] = "verbatim recrawl target document with enough words " \
@@ -163,23 +164,11 @@ def test_disposition_batch_matches_batch_twin(spark, tmp_path):
             spark, str(tmp_path)).collect())
     c = _inc_corpus_df(spark, str(tmp_path))
     got = sorted(
-        tuple(r) for r in disposition_batch(
+        tuple(r) for r in TEXT_INDEX.probe(
             c.filter(F.col("cid") >= INC_BATCH_OFFSET),
-            *_index_sides(c.filter(F.col("cid") < INC_BATCH_OFFSET)),
+            TEXT_INDEX.derive(c.filter(F.col("cid") < INC_BATCH_OFFSET)),
         ).collect())
     assert got == want
-
-
-def _index_sides(index_docs):
-    from pyspark.sql import functions as F
-
-    from tank_spark.streaming.dedup_stream import fingerprints_and_bands
-
-    fps, bands = fingerprints_and_bands(index_docs)
-    return (
-        fps.select(F.col("cid").alias("icid"), "fp"),
-        bands.select(F.col("cid").alias("icid"), "band_idx", "band_val"),
-    )
 
 
 def test_disposition_handles_duplicate_batch_cids(spark):
@@ -188,7 +177,7 @@ def test_disposition_handles_duplicate_batch_cids(spark):
     groupBy semantics), never a fanout through the in-batch probe
     (review r10: the first group-min rewrite emitted one inb row per
     qualifying bfp row, multiplying 2x2=4 rows for a duplicated cid).
-    The media twin shares the same shape via its own groupBy."""
+    The media family runs the same probe."""
     from tank_spark.llm.dedup import disposition_against_index
 
     bfp = spark.createDataFrame(
@@ -216,41 +205,42 @@ def test_text_index_epoch_write_idempotent_and_compacts(spark, tmp_path):
     epoch dirs into one base generation with identical relations."""
     import os
 
-    from tank_spark.streaming.dedup_stream import (
-        _write_index_epoch,
-        compact_dedup_index,
-        read_dedup_index,
-        write_dedup_index,
+    from tank_spark.llm.dedup import TEXT_INDEX
+    from tank_spark.streaming.epoch_index import (
+        compact,
+        read_index,
+        write_epoch,
     )
 
     index_dir = str(tmp_path / "index")
     corpus = spark.createDataFrame(
         sorted(_IDX_TEXTS.items()), "cid long, text string")
-    write_dedup_index(corpus, index_dir)
+    write_epoch(TEXT_INDEX, corpus, index_dir)
     epoch = spark.createDataFrame([(101, _NEW_X)], "cid long, text string")
-    _write_index_epoch(epoch, index_dir, 0)
-    _write_index_epoch(epoch, index_dir, 0)  # the replay
-    ifp, ib = read_dedup_index(spark, index_dir)
+    write_epoch(TEXT_INDEX, epoch, index_dir, 0)
+    write_epoch(TEXT_INDEX, epoch, index_dir, 0)  # the replay
+    ifp, ib = read_index(spark, TEXT_INDEX, index_dir)
     assert ifp.count() == 3  # base 2 + ONE copy of the epoch
     assert ib.count() == 18  # 6 bands x 3 docs, not 24
     before_fp = sorted(tuple(r) for r in ifp.collect())
     before_b = sorted(tuple(r) for r in ib.collect())
-    compact_dedup_index(spark, index_dir, n_buckets=4)
+    compact(spark, TEXT_INDEX, index_dir, n_buckets=4)
     dirs = [d for d in os.listdir(os.path.join(index_dir, "bands"))
             if d.startswith("epoch_id=")]
     assert dirs == ["epoch_id=-1"]
-    ifp2, ib2 = read_dedup_index(spark, index_dir)
+    ifp2, ib2 = read_index(spark, TEXT_INDEX, index_dir)
     assert sorted(tuple(r) for r in ifp2.collect()) == before_fp
     assert sorted(tuple(r) for r in ib2.collect()) == before_b
 
 
 def test_text_stream_report_from_persisted_output(spark, tmp_path):
-    """dedup_stream_report (the production report path) aggregates the
+    """stream_report (the production report path) aggregates the
     loop's PERSISTED out_dir directly, keyed per (epoch_id, source) —
     same curation_report_over core as the registered reports."""
     from pyspark.sql import functions as F
 
-    from tank_spark.streaming.dedup_stream import dedup_stream_report
+    from tank_spark.llm.dedup import TEXT_INDEX
+    from tank_spark.streaming.epoch_index import stream_report
 
     out_dir = str(tmp_path / "out")
     spark.createDataFrame(
@@ -267,8 +257,9 @@ def test_text_stream_report_from_persisted_output(spark, tmp_path):
     got = {
         (r["epoch_id"], r["source"], r["disposition"]):
             (r["n_docs"], r["share_ppm"], r["n_matched_distinct"])
-        for r in dedup_stream_report(
-            spark, out_dir, docs, provenance=F.col("doc_id")).collect()
+        for r in stream_report(
+            spark, TEXT_INDEX, out_dir, docs,
+            provenance=F.col("doc_id")).collect()
     }
     assert got == {
         (0, "web", "new_unique"): (1, 500000, 0),
@@ -284,7 +275,8 @@ def test_text_stream_report_collapses_replayed_epochs(spark, tmp_path):
     (review r11)."""
     from pyspark.sql import functions as F
 
-    from tank_spark.streaming.dedup_stream import dedup_stream_report
+    from tank_spark.llm.dedup import TEXT_INDEX
+    from tank_spark.streaming.epoch_index import stream_report
 
     out_dir = str(tmp_path / "out")
     cols = ("doc_id long, disposition string, match_cid long, "
@@ -296,8 +288,9 @@ def test_text_stream_report_collapses_replayed_epochs(spark, tmp_path):
         [(7, "exact_dup_of_index", 7, 0, 3)], cols
     ).write.mode("append").parquet(out_dir)
     docs = spark.createDataFrame([(7, "web")], "orig long, source string")
-    rows = dedup_stream_report(
-        spark, out_dir, docs, provenance=F.col("doc_id")).collect()
+    rows = stream_report(
+        spark, TEXT_INDEX, out_dir, docs,
+        provenance=F.col("doc_id")).collect()
     assert len(rows) == 1
     assert (rows[0]["disposition"], rows[0]["n_docs"],
             rows[0]["share_ppm"]) == ("exact_dup_of_index", 1, 1000000)
@@ -309,17 +302,15 @@ def test_interrupted_compaction_swap_autorecovers(spark, tmp_path):
     read (ADVICE r11; shared recovery helper across the families)."""
     import os
 
-    from tank_spark.streaming.dedup_stream import (
-        read_dedup_index,
-        write_dedup_index,
-    )
+    from tank_spark.llm.dedup import TEXT_INDEX
+    from tank_spark.streaming.epoch_index import read_index, write_epoch
 
     index_dir = str(tmp_path / "index")
     corpus = spark.createDataFrame(
         sorted(_IDX_TEXTS.items()), "cid long, text string")
-    write_dedup_index(corpus, index_dir)
+    write_epoch(TEXT_INDEX, corpus, index_dir)
     for rel in ("fp", "bands"):
         live = os.path.join(index_dir, rel)
         os.rename(live, live + ".old")
-    ifp, ib = read_dedup_index(spark, index_dir)
+    ifp, ib = read_index(spark, TEXT_INDEX, index_dir)
     assert ifp.count() == 2 and ib.count() > 0

@@ -1,5 +1,5 @@
-"""Streaming incremental MEDIA dedup (streaming/media_dedup_stream.py):
-the foreachBatch production loop — disposition each media micro-batch
+"""Streaming incremental MEDIA dedup (streaming/epoch_index.py driven
+with media_inc.MEDIA_INDEX): the foreachBatch production loop — disposition each media micro-batch
 against the persisted phash/fp index, append survivors so later epochs
 AND later runs dedup against them. The batch twin
 media_dedup_stream_replay carries the full DuckDB oracle; this drives
@@ -44,11 +44,12 @@ def test_incremental_media_dedup_stream_e2e(spark, tmp_path):
     the cross-run index-growth property of the daily media-crawl loop."""
     from pyspark.sql import functions as F
 
-    from tank_spark.streaming.media_dedup_stream import (
-        media_file_stream,
-        read_media_index,
-        start_incremental_media_dedup_stream,
-        write_media_index,
+    from tank_spark.llm.media_inc import MEDIA_INDEX
+    from tank_spark.streaming.epoch_index import (
+        file_stream,
+        read_index,
+        start_stream,
+        write_epoch,
     )
 
     index_dir = str(tmp_path / "index")
@@ -68,16 +69,17 @@ def test_incremental_media_dedup_stream_e2e(spark, tmp_path):
     corpus = spark.createDataFrame(
         [(1, "image", pay_a), (2, "image", pay_b)],
         "cid long, modality string, payload binary")
-    write_media_index(spark, corpus, index_dir)
-    ifp0, ib0 = read_media_index(spark, index_dir)
+    write_epoch(MEDIA_INDEX, corpus, index_dir)
+    ifp0, ib0 = read_index(spark, MEDIA_INDEX, index_dir)
     assert ifp0.count() == 2
     assert ib0.count() == 8  # 4 bands x 2 rows
 
     def run_once() -> None:
-        stream = media_file_stream(spark, drop_dir, max_files_per_trigger=10)
+        stream = file_stream(spark, MEDIA_INDEX, drop_dir,
+                             max_files_per_trigger=10)
         assert stream.isStreaming
-        q = start_incremental_media_dedup_stream(
-            spark, stream, index_dir, out_dir, ckpt)
+        q = start_stream(spark, MEDIA_INDEX, stream, index_dir, out_dir,
+                         ckpt)
         q.awaitTermination(120)
         q.stop()
 
@@ -92,7 +94,7 @@ def test_incremental_media_dedup_stream_e2e(spark, tmp_path):
     assert out1[101]["n_bands_hit"] >= 1
     assert out1[102]["disposition"] == "new_unique"
     # index grew by exactly the survivor
-    ifp1, ib1 = read_media_index(spark, index_dir)
+    ifp1, ib1 = read_index(spark, MEDIA_INDEX, index_dir)
     assert ifp1.count() == 3
     assert ifp1.filter(F.col("icid") == 102).count() == 1
     assert ib1.count() == 12
@@ -106,7 +108,7 @@ def test_incremental_media_dedup_stream_e2e(spark, tmp_path):
     assert out2[201]["disposition"] == "exact_dup_of_index"
     assert out2[201]["match_cid"] == 102
     # nothing new appended (201 was a dup)
-    ifp2, _ = read_media_index(spark, index_dir)
+    ifp2, _ = read_index(spark, MEDIA_INDEX, index_dir)
     assert ifp2.count() == 3
 
 
@@ -115,41 +117,38 @@ def test_index_epoch_write_idempotent(spark, tmp_path):
     instead of duplicating rows (ADVICE r10: plain appends inflated
     band-bucket counts toward PHASH_BUCKET_CAP on replay, silently
     disabling near-dup matching in those buckets)."""
-    from tank_spark.streaming.media_dedup_stream import (
-        _write_index_epoch,
-        read_media_index,
-        write_media_index,
-    )
+    from tank_spark.llm.media_inc import MEDIA_INDEX
+    from tank_spark.streaming.epoch_index import read_index, write_epoch
 
     index_dir = str(tmp_path / "index")
     corpus = spark.createDataFrame(
         [(1, "image", _payload("img-a"))],
         "cid long, modality string, payload binary")
-    write_media_index(spark, corpus, index_dir)
+    write_epoch(MEDIA_INDEX, corpus, index_dir)
     epoch = spark.createDataFrame(
         [(101, "image", _payload("img-x"))],
         "cid long, modality string, payload binary")
-    _write_index_epoch(spark, epoch, index_dir, 0)
-    _write_index_epoch(spark, epoch, index_dir, 0)  # the replay
-    ifp, ib = read_media_index(spark, index_dir)
+    write_epoch(MEDIA_INDEX, epoch, index_dir, 0)
+    write_epoch(MEDIA_INDEX, epoch, index_dir, 0)  # the replay
+    ifp, ib = read_index(spark, MEDIA_INDEX, index_dir)
     assert ifp.count() == 2  # base + ONE copy of the epoch
     assert ib.count() == 8  # 4 bands x 2 rows, not 12
 
 
 def test_compaction_collapses_epochs_and_preserves_probe(spark, tmp_path):
-    """compact_media_index folds per-epoch dirs into one co-partitioned
+    """compact folds per-epoch dirs into one co-partitioned
     base generation: epoch count drops to 1, row counts are unchanged,
     and a probe against the compacted index dispositions identically."""
     from pyspark.sql import functions as F
 
-    from tank_spark.streaming.media_dedup_stream import (
-        compact_media_index,
-        disposition_media_batch,
-        index_epoch_count,
-        media_file_stream,
-        read_media_index,
-        start_incremental_media_dedup_stream,
-        write_media_index,
+    from tank_spark.llm.media_inc import MEDIA_INDEX
+    from tank_spark.streaming.epoch_index import (
+        compact,
+        epoch_count,
+        file_stream,
+        read_index,
+        start_stream,
+        write_epoch,
     )
 
     index_dir = str(tmp_path / "index")
@@ -159,19 +158,19 @@ def test_compaction_collapses_epochs_and_preserves_probe(spark, tmp_path):
     corpus = spark.createDataFrame(
         [(1, "image", _payload("img-a")), (2, "image", _payload("img-b"))],
         "cid long, modality string, payload binary")
-    write_media_index(spark, corpus, index_dir)
+    write_epoch(MEDIA_INDEX, corpus, index_dir)
     # 3 crawl increments -> 3 appended epochs (fresh payloads so every
     # batch appends survivors), one file per micro-batch
     for i in range(3):
         _write_batch(spark, drop_dir,
                      [(100 + i, "image", _payload(f"img-{i}"))])
-    stream = media_file_stream(spark, drop_dir, max_files_per_trigger=1)
-    q = start_incremental_media_dedup_stream(
-        spark, stream, index_dir, out_dir, ckpt)
+    stream = file_stream(spark, MEDIA_INDEX, drop_dir,
+                         max_files_per_trigger=1)
+    q = start_stream(spark, MEDIA_INDEX, stream, index_dir, out_dir, ckpt)
     q.awaitTermination(120)
     q.stop()
-    assert index_epoch_count(index_dir) == 4  # base + 3 epochs
-    ifp0, ib0 = read_media_index(spark, index_dir)
+    assert epoch_count(MEDIA_INDEX, index_dir) == 4  # base + 3 epochs
+    ifp0, ib0 = read_index(spark, MEDIA_INDEX, index_dir)
     n_fp, n_b = ifp0.count(), ib0.count()
     probe = spark.createDataFrame(
         [(900, "image", _payload("img-1")),  # exact dup of epoch-1 row
@@ -180,15 +179,14 @@ def test_compaction_collapses_epochs_and_preserves_probe(spark, tmp_path):
         "cid long, modality string, payload binary")
 
     def disp() -> dict:
-        ifp, ib = read_media_index(spark, index_dir)
+        index = read_index(spark, MEDIA_INDEX, index_dir)
         return {r["doc_id"]: (r["disposition"], r["match_cid"])
-                for r in disposition_media_batch(spark, probe, ifp, ib)
-                .collect()}
+                for r in MEDIA_INDEX.probe(probe, index).collect()}
 
     before = disp()
-    compact_media_index(spark, index_dir, n_buckets=4)
-    assert index_epoch_count(index_dir) == 1
-    ifp1, ib1 = read_media_index(spark, index_dir)
+    compact(spark, MEDIA_INDEX, index_dir, n_buckets=4)
+    assert epoch_count(MEDIA_INDEX, index_dir) == 1
+    ifp1, ib1 = read_index(spark, MEDIA_INDEX, index_dir)
     assert (ifp1.count(), ib1.count()) == (n_fp, n_b)
     assert disp() == before
     assert before[900] == ("exact_dup_of_index", 101)
@@ -198,85 +196,18 @@ def test_compaction_collapses_epochs_and_preserves_probe(spark, tmp_path):
     # increment re-crawling 902's payload must match the NEW epoch row
     _write_batch(spark, drop_dir, [(903, "image", _payload("img-fresh"))])
     _write_batch(spark, drop_dir, [(904, "image", _payload("img-fresh"))])
-    stream = media_file_stream(spark, drop_dir, max_files_per_trigger=1)
+    stream = file_stream(spark, MEDIA_INDEX, drop_dir,
+                         max_files_per_trigger=1)
     # compact_every=1: compaction runs after each of the two epochs
-    q = start_incremental_media_dedup_stream(
-        spark, stream, index_dir, out_dir, ckpt, compact_every=1)
+    q = start_stream(spark, MEDIA_INDEX, stream, index_dir, out_dir, ckpt,
+                     compact_every=1)
     q.awaitTermination(120)
     q.stop()
-    assert index_epoch_count(index_dir) == 1
+    assert epoch_count(MEDIA_INDEX, index_dir) == 1
     out = {r["doc_id"]: r for r in spark.read.parquet(out_dir).collect()}
     assert out[903]["disposition"] == "new_unique"
     assert out[904]["disposition"] == "exact_dup_of_index"
     assert out[904]["match_cid"] == 903
-
-
-def test_all_dup_batch_writes_no_epoch_dir(spark, tmp_path):
-    """A batch with zero new_unique survivors must not write an index
-    epoch at all (review r11): besides avoiding empty directories, the
-    skip is load-bearing for crash safety — a replay landing after a
-    partially-swapped compaction re-dispositions as all-dup, and an
-    unconditional overwrite would replace the epoch's only surviving
-    rows with an empty dir."""
-    from tank_spark.streaming.media_dedup_stream import (
-        index_epoch_count,
-        media_file_stream,
-        start_incremental_media_dedup_stream,
-        write_media_index,
-    )
-
-    index_dir = str(tmp_path / "index")
-    drop_dir = str(tmp_path / "drop")
-    pay = _payload("img-a")
-    corpus = spark.createDataFrame(
-        [(1, "image", pay)], "cid long, modality string, payload binary")
-    write_media_index(spark, corpus, index_dir)
-    _write_batch(spark, drop_dir, [(101, "image", pay)])  # exact dup
-    stream = media_file_stream(spark, drop_dir)
-    q = start_incremental_media_dedup_stream(
-        spark, stream, index_dir, str(tmp_path / "out"),
-        str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-    q.stop()
-    assert index_epoch_count(index_dir) == 1  # base only, no epoch dir
-
-
-def test_flat_pre_r11_index_layout_migrates(spark, tmp_path):
-    """An index bootstrapped by the pre-r11 FLAT layout (part files
-    directly under fp/ and bands/) must keep working when the stream
-    resumes: the first epoch write / read migrates the flat files into
-    the base generation instead of tripping Spark's 'Conflicting
-    directory structures' partition-discovery error (review r11)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from tank_spark.streaming.media_dedup_stream import (
-        _write_index_epoch,
-        media_fp_and_bands,
-        read_media_index,
-    )
-
-    index_dir = str(tmp_path / "index")
-    corpus = spark.createDataFrame(
-        [(1, "image", _payload("img-a"))],
-        "cid long, modality string, payload binary")
-    # the OLD layout: flat writes to the relation roots
-    fps, bands = media_fp_and_bands(spark, corpus)
-    fps.select(F.col("cid").alias("icid"), "modality", "fp") \
-        .write.parquet(os.path.join(index_dir, "fp"))
-    bands.select(F.col("cid").alias("icid"), "modality", "phash",
-                 "band_idx", "band_val") \
-        .write.parquet(os.path.join(index_dir, "bands"))
-    epoch = spark.createDataFrame(
-        [(101, "image", _payload("img-x"))],
-        "cid long, modality string, payload binary")
-    _write_index_epoch(spark, epoch, index_dir, 0)  # migrates, then writes
-    ifp, ib = read_media_index(spark, index_dir)
-    assert ifp.count() == 2
-    assert ib.count() == 8
-    assert not any(f.endswith(".parquet")
-                   for f in os.listdir(os.path.join(index_dir, "fp")))
 
 
 def test_stream_probe_matches_batch_twin_rule(spark, tmp_path):
@@ -289,27 +220,24 @@ def test_stream_probe_matches_batch_twin_rule(spark, tmp_path):
 
     from tank_spark.llm.media_inc import (
         INC_OFFSET,
+        MEDIA_INDEX,
         _inc_media_corpus,
         media_dedup_stream_replay,
     )
-    from tank_spark.streaming.media_dedup_stream import (
-        disposition_media_batch,
-        read_media_index,
-        write_media_index,
-    )
+    from tank_spark.streaming.epoch_index import read_index, write_epoch
     from tests.conftest import SF_DIR
 
     corpus = _inc_media_corpus(spark, SF_DIR)
     index_dir = str(tmp_path / "idx")
-    write_media_index(spark, corpus.filter(F.col("cid") < INC_OFFSET),
-                      index_dir)
+    write_epoch(MEDIA_INDEX, corpus.filter(F.col("cid") < INC_OFFSET),
+                index_dir)
     bat_a = corpus.filter(
         (F.col("cid") >= INC_OFFSET) & (F.col("cid") < 2 * INC_OFFSET))
-    ifp, ib = read_media_index(spark, index_dir)
+    index = read_index(spark, MEDIA_INDEX, index_dir)
     got = {
         r["doc_id"]: (r["modality"], r["disposition"], r["match_cid"],
                       r["n_bands_hit"])
-        for r in disposition_media_batch(spark, bat_a, ifp, ib).collect()
+        for r in MEDIA_INDEX.probe(bat_a, index).collect()
     }
     want = {
         r["doc_id"]: (r["modality"], r["disposition"], r["match_cid"],
@@ -321,14 +249,15 @@ def test_stream_probe_matches_batch_twin_rule(spark, tmp_path):
 
 
 def test_media_stream_report_from_persisted_output(spark, tmp_path):
-    """media_stream_report (the production report path) aggregates the
+    """stream_report (the production report path) aggregates the
     loop's PERSISTED out_dir directly — no replay re-derivation: exact
     per-(epoch_id, modality, source) counts, day-normalized ppm shares
     that sum to ~1e6 within each group, and distinct-match counts, via
     the same curation_report_over core as the registered reports."""
     from pyspark.sql import functions as F
 
-    from tank_spark.streaming.media_dedup_stream import media_stream_report
+    from tank_spark.llm.media_inc import MEDIA_INDEX
+    from tank_spark.streaming.epoch_index import stream_report
 
     out_dir = str(tmp_path / "out")
     # two epochs of disposition output, as the foreachBatch sink writes
@@ -348,8 +277,8 @@ def test_media_stream_report_from_persisted_output(spark, tmp_path):
     got = {
         (r["epoch_id"], r["modality"], r["source"], r["disposition"]):
             (r["n_docs"], r["share_ppm"], r["n_matched_distinct"])
-        for r in media_stream_report(
-            spark, out_dir, docs,
+        for r in stream_report(
+            spark, MEDIA_INDEX, out_dir, docs,
             provenance=F.col("doc_id")).collect()
     }
     assert got == {
@@ -369,7 +298,8 @@ def test_media_stream_report_collapses_replayed_epochs(spark, tmp_path):
     self-match); the duplicate-aware copy wins (review r11)."""
     from pyspark.sql import functions as F
 
-    from tank_spark.streaming.media_dedup_stream import media_stream_report
+    from tank_spark.llm.media_inc import MEDIA_INDEX
+    from tank_spark.streaming.epoch_index import stream_report
 
     out_dir = str(tmp_path / "out")
     cols = ("doc_id long, modality string, disposition string, "
@@ -382,8 +312,9 @@ def test_media_stream_report_collapses_replayed_epochs(spark, tmp_path):
     ).write.mode("append").parquet(out_dir)
     docs = spark.createDataFrame([(101, "crawlA")],
                                  "orig long, source string")
-    rows = media_stream_report(
-        spark, out_dir, docs, provenance=F.col("doc_id")).collect()
+    rows = stream_report(
+        spark, MEDIA_INDEX, out_dir, docs,
+        provenance=F.col("doc_id")).collect()
     assert len(rows) == 1
     assert (rows[0]["disposition"], rows[0]["n_docs"],
             rows[0]["share_ppm"]) == ("exact_dup_of_index", 1, 1000000)
@@ -395,18 +326,16 @@ def test_interrupted_compaction_swap_autorecovers(spark, tmp_path):
     recovery helper across the families)."""
     import os
 
-    from tank_spark.streaming.media_dedup_stream import (
-        read_media_index,
-        write_media_index,
-    )
+    from tank_spark.llm.media_inc import MEDIA_INDEX
+    from tank_spark.streaming.epoch_index import read_index, write_epoch
 
     index_dir = str(tmp_path / "index")
     corpus = spark.createDataFrame(
         [(1, "image", _payload("img-a")), (2, "image", _payload("img-b"))],
         "cid long, modality string, payload binary")
-    write_media_index(spark, corpus, index_dir)
+    write_epoch(MEDIA_INDEX, corpus, index_dir)
     for rel in ("fp", "bands"):
         live = os.path.join(index_dir, rel)
         os.rename(live, live + ".old")
-    ifp, ib = read_media_index(spark, index_dir)
+    ifp, ib = read_index(spark, MEDIA_INDEX, index_dir)
     assert ifp.count() == 2 and ib.count() == 8

@@ -319,24 +319,18 @@ def test_overview_budget_bounds_features(spark, monkeypatch):
 
 
 def test_sampled_tree_routing_equivalent(spark, monkeypatch):
-    """ROUTE_SAMPLED_TREE flips sampled overview tiles onto the merge
-    tree; the tree branch applies the same sampling filter, so the blob
-    must be bit-identical to the default direct route (the routing choice
-    is purely a performance decision — measured in SCALE.md)."""
+    """Sampled overview tiles take the direct route (the tree's stats
+    job + sub-merge shuffle can't amortize a budget-bounded tile —
+    measured in SCALE.md): the z7 tile comes back sampled and
+    budget-bounded."""
     from tank_spark.operators import mvt_tiles as mt
 
     monkeypatch.setattr(mt, "OVERVIEW_FEATURE_BUDGET", 200)
     req = [(7, 20, 49), (13, 1281, 3137)]
 
-    monkeypatch.setattr(mt, "ROUTE_SAMPLED_TREE", False)
     direct = {(r["z"], r["x"], r["y"]): (r["n_features"], r["mvt_md5"], r["sample_mod"])
               for r in mt.mvt_tiles(spark, SF_DIR, requests=req,
                                     overview_sampling=True).collect()}
-    monkeypatch.setattr(mt, "ROUTE_SAMPLED_TREE", True)
-    tree = {(r["z"], r["x"], r["y"]): (r["n_features"], r["mvt_md5"], r["sample_mod"])
-            for r in mt.mvt_tiles(spark, SF_DIR, requests=req,
-                                  overview_sampling=True).collect()}
-    assert direct == tree
     assert direct[(7, 20, 49)][2] > 1       # the overview tile IS sampled
     assert 0 < direct[(7, 20, 49)][0] <= 2 * 200
 

@@ -208,7 +208,8 @@ def test_bucket_grouped_pairs_matches_self_join(spark):
         (1, 4, "e"), (2, 4, "e"),                     # duplicate pair (1,2)
     ]
     bands = spark.createDataFrame(rows, "cid long, band_idx int, band_val string")
-    got = _sorted_rows(_bucket_grouped_pairs(bands, "cid", "cid_a", "cid_b"))
+    got = _sorted_rows(_bucket_grouped_pairs(bands, "cid", "cid_a", "cid_b",
+                                             cap=3))
     a, b = bands.alias("a"), bands.alias("b")
     want = _sorted_rows(
         a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
@@ -218,3 +219,18 @@ def test_bucket_grouped_pairs_matches_self_join(spark):
         .distinct())
     assert got == want
     assert (1, 2) in got and (2, 4) in got and len(got) == len(set(got))
+
+
+def test_bucket_grouped_pairs_drops_buckets_over_cap(spark):
+    """The skew cap is enforced where the quadratic happens: a bucket of
+    cap + 1 ids emits NO pairs (never collected into one in-row array),
+    while a 2-id bucket still yields its pair."""
+    from tank_spark.llm.dedup import _bucket_grouped_pairs
+
+    cap = 4
+    rows = [(i, 0, "hot") for i in range(10, 10 + cap + 1)]  # cap + 1 ids
+    rows += [(1, 1, "ok"), (2, 1, "ok")]
+    bands = spark.createDataFrame(rows, "cid long, band_idx int, band_val string")
+    got = _sorted_rows(_bucket_grouped_pairs(bands, "cid", "cid_a", "cid_b",
+                                             cap=cap))
+    assert got == [(1, 2)]

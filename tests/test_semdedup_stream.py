@@ -1,5 +1,6 @@
-"""Streaming incremental SEMANTIC dedup
-(streaming/semdedup_stream.py): the foreachBatch production loop —
+"""Streaming incremental SEMANTIC dedup (streaming/epoch_index.py
+driven with semdedup_inc.semantic_index): the foreachBatch production
+loop —
 disposition each embedding micro-batch against the persisted semantic
 index, append survivors so later epochs AND later runs dedup against
 them. The batch twin semdedup_stream_replay carries the full DuckDB
@@ -68,13 +69,15 @@ def test_incremental_semdedup_stream_e2e(spark, tmp_path):
     re-crawls that survivor and must match it as semantic_dup_of_index
     — the cross-run index-growth property of the daily crawl loop,
     semantic edition."""
-    from tank_spark.streaming.semdedup_stream import (
-        read_semdedup_index,
-        start_incremental_semdedup_stream,
-        vector_file_stream,
-        write_semdedup_index,
+    from tank_spark.llm.semdedup_inc import semantic_index
+    from tank_spark.streaming.epoch_index import (
+        file_stream,
+        read_index,
+        start_stream,
+        write_epoch,
     )
 
+    spec = semantic_index()
     _routing_precondition(spark)
     index_dir = str(tmp_path / "index")
     drop_dir = str(tmp_path / "drop")
@@ -83,18 +86,17 @@ def test_incremental_semdedup_stream_e2e(spark, tmp_path):
 
     corpus = spark.createDataFrame(
         [(1, VEC_A), (2, VEC_B)], "vid long, embedding array<float>")
-    write_semdedup_index(spark, corpus, index_dir)
-    idx0 = read_semdedup_index(spark, index_dir)
+    write_epoch(spec, corpus, index_dir)
+    (idx0,) = read_index(spark, spec, index_dir)
     assert idx0.count() == 2
     assert [f.name for f in idx0.schema.fields] == [
-        "vid", "list_id", "embedding", "inv"]
+        "ivid", "list_id", "embedding", "inv"]
 
     def run_once() -> None:
-        stream = vector_file_stream(spark, drop_dir,
-                                    max_files_per_trigger=10)
+        stream = file_stream(spark, spec, drop_dir,
+                             max_files_per_trigger=10)
         assert stream.isStreaming
-        q = start_incremental_semdedup_stream(
-            spark, stream, index_dir, out_dir, ckpt)
+        q = start_stream(spark, spec, stream, index_dir, out_dir, ckpt)
         q.awaitTermination(120)
         q.stop()
 
@@ -108,9 +110,9 @@ def test_incremental_semdedup_stream_e2e(spark, tmp_path):
     assert out1[101]["best_index_cos"] >= 0.9
     assert out1[102]["disposition"] == "new_unique"
     # index grew by exactly the survivor
-    idx1 = read_semdedup_index(spark, index_dir)
+    (idx1,) = read_index(spark, spec, index_dir)
     assert idx1.count() == 3
-    assert idx1.filter(F.col("vid") == 102).count() == 1
+    assert idx1.filter(F.col("ivid") == 102).count() == 1
 
     # run 2 (same checkpoint): a re-crawl of run 1's survivor must now
     # be a dup OF THE INDEX — yesterday's novelty, today's duplicate
@@ -120,7 +122,7 @@ def test_incremental_semdedup_stream_e2e(spark, tmp_path):
     assert out2[201]["disposition"] == "semantic_dup_of_index"
     assert out2[201]["match_vid"] == 102
     # nothing new appended (201 was a dup)
-    assert read_semdedup_index(spark, index_dir).count() == 3
+    assert read_index(spark, spec, index_dir)[0].count() == 3
 
 
 def test_semdedup_epoch_write_idempotent(spark, tmp_path):
@@ -128,57 +130,55 @@ def test_semdedup_epoch_write_idempotent(spark, tmp_path):
     instead of duplicating rows — the ADVICE r10 posture all three
     incremental families share (here duplicate index rows would double
     n_index_hits and skew every report's n_matched_distinct)."""
-    from tank_spark.streaming.semdedup_stream import (
-        _write_index_epoch,
-        read_semdedup_index,
-        write_semdedup_index,
-    )
+    from tank_spark.llm.semdedup_inc import semantic_index
+    from tank_spark.streaming.epoch_index import read_index, write_epoch
 
+    spec = semantic_index()
     index_dir = str(tmp_path / "index")
     corpus = spark.createDataFrame(
         [(1, VEC_A)], "vid long, embedding array<float>")
-    write_semdedup_index(spark, corpus, index_dir)
+    write_epoch(spec, corpus, index_dir)
     epoch = spark.createDataFrame(
         [(101, FRESH_X)], "vid long, embedding array<float>")
-    _write_index_epoch(spark, epoch, index_dir, 0)
-    _write_index_epoch(spark, epoch, index_dir, 0)  # the replay
-    assert read_semdedup_index(spark, index_dir).count() == 2
+    write_epoch(spec, epoch, index_dir, 0)
+    write_epoch(spec, epoch, index_dir, 0)  # the replay
+    assert read_index(spark, spec, index_dir)[0].count() == 2
 
 
 def test_semdedup_compaction_collapses_and_preserves_probe(spark, tmp_path):
-    """compact_semdedup_index folds per-epoch dirs into one
+    """compact folds per-epoch dirs into one
     list_id-co-located base generation: epoch count drops to 1, row
     count unchanged, probe dispositions identical, and the loop keeps
     appending against the compacted generation."""
-    from tank_spark.streaming.semdedup_stream import (
-        compact_semdedup_index,
-        disposition_vector_batch,
-        index_epoch_count,
-        read_semdedup_index,
-        start_incremental_semdedup_stream,
-        vector_file_stream,
-        write_semdedup_index,
+    from tank_spark.llm.semdedup_inc import semantic_index
+    from tank_spark.streaming.epoch_index import (
+        compact,
+        epoch_count,
+        file_stream,
+        read_index,
+        start_stream,
+        write_epoch,
     )
 
+    spec = semantic_index()
     index_dir = str(tmp_path / "index")
     drop_dir = str(tmp_path / "drop")
     out_dir = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     corpus = spark.createDataFrame(
         [(1, VEC_A), (2, VEC_B)], "vid long, embedding array<float>")
-    write_semdedup_index(spark, corpus, index_dir)
+    write_epoch(spec, corpus, index_dir)
     # 3 crawl increments -> 3 appended epochs (fresh orthogonal-ish
     # vectors so every batch appends survivors), one file per batch
     for i in range(3):
         _write_batch(spark, drop_dir,
                      [(100 + i, _vec((20 + i, 1.0), (40 + i, 0.5)))])
-    stream = vector_file_stream(spark, drop_dir, max_files_per_trigger=1)
-    q = start_incremental_semdedup_stream(
-        spark, stream, index_dir, out_dir, ckpt)
+    stream = file_stream(spark, spec, drop_dir, max_files_per_trigger=1)
+    q = start_stream(spark, spec, stream, index_dir, out_dir, ckpt)
     q.awaitTermination(120)
     q.stop()
-    assert index_epoch_count(index_dir) == 4  # base + 3 epochs
-    n0 = read_semdedup_index(spark, index_dir).count()
+    assert epoch_count(spec, index_dir) == 4  # base + 3 epochs
+    n0 = read_index(spark, spec, index_dir)[0].count()
     probe = spark.createDataFrame(
         [(900, _vec((21, 1.0), (41, 0.5))),   # exact dup of epoch row 101
          (901, NEAR_A),                        # near dup of base row 1
@@ -186,15 +186,14 @@ def test_semdedup_compaction_collapses_and_preserves_probe(spark, tmp_path):
         "vid long, embedding array<float>")
 
     def disp() -> dict:
-        idx = read_semdedup_index(spark, index_dir)
+        index = read_index(spark, spec, index_dir)
         return {r["vec_id"]: (r["disposition"], r["match_vid"])
-                for r in disposition_vector_batch(spark, probe, idx)
-                .collect()}
+                for r in spec.probe(probe, index).collect()}
 
     before = disp()
-    compact_semdedup_index(spark, index_dir, n_buckets=4)
-    assert index_epoch_count(index_dir) == 1
-    assert read_semdedup_index(spark, index_dir).count() == n0
+    compact(spark, spec, index_dir, n_buckets=4)
+    assert epoch_count(spec, index_dir) == 1
+    assert read_index(spark, spec, index_dir)[0].count() == n0
     assert disp() == before
     assert before[900] == ("semantic_dup_of_index", 101)
     assert before[901] == ("semantic_dup_of_index", 1)
@@ -203,77 +202,52 @@ def test_semdedup_compaction_collapses_and_preserves_probe(spark, tmp_path):
     # compaction running after each epoch
     _write_batch(spark, drop_dir, [(903, FRESH_X)])
     _write_batch(spark, drop_dir, [(904, FRESH_X)])
-    stream = vector_file_stream(spark, drop_dir, max_files_per_trigger=1)
-    q = start_incremental_semdedup_stream(
-        spark, stream, index_dir, out_dir, ckpt, compact_every=1)
+    stream = file_stream(spark, spec, drop_dir, max_files_per_trigger=1)
+    q = start_stream(spark, spec, stream, index_dir, out_dir, ckpt,
+                     compact_every=1)
     q.awaitTermination(120)
     q.stop()
-    assert index_epoch_count(index_dir) == 1
+    assert epoch_count(spec, index_dir) == 1
     out = {r["vec_id"]: r for r in spark.read.parquet(out_dir).collect()}
     assert out[903]["disposition"] == "new_unique"
     assert out[904]["disposition"] == "semantic_dup_of_index"
     assert out[904]["match_vid"] == 903
 
 
-def test_all_dup_vector_batch_writes_no_epoch_dir(spark, tmp_path):
-    """A batch with zero new_unique survivors must not write an index
-    epoch (the media twin's crash-safety argument: an unconditional
-    overwrite after a partially-swapped compaction would replace the
-    epoch's only surviving rows with an empty directory)."""
-    from tank_spark.streaming.semdedup_stream import (
-        index_epoch_count,
-        start_incremental_semdedup_stream,
-        vector_file_stream,
-        write_semdedup_index,
-    )
-
-    index_dir = str(tmp_path / "index")
-    drop_dir = str(tmp_path / "drop")
-    corpus = spark.createDataFrame(
-        [(1, VEC_A)], "vid long, embedding array<float>")
-    write_semdedup_index(spark, corpus, index_dir)
-    _write_batch(spark, drop_dir, [(101, VEC_A)])  # exact re-crawl
-    stream = vector_file_stream(spark, drop_dir)
-    q = start_incremental_semdedup_stream(
-        spark, stream, index_dir, str(tmp_path / "out"),
-        str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-    q.stop()
-    assert index_epoch_count(index_dir) == 1  # base only, no epoch dir
-
-
 def test_semdedup_stream_report_from_persisted_output(spark, tmp_path):
-    """semdedup_stream_report (the production report path) aggregates
+    """stream_report (the production report path) aggregates
     the persisted disposition output through the shared
     curation_report_over core — per (epoch_id, label, disposition)
     with in-group ppm shares."""
-    from tank_spark.streaming.semdedup_stream import (
-        semdedup_stream_report,
-        start_incremental_semdedup_stream,
-        vector_file_stream,
-        write_semdedup_index,
+    from tank_spark.llm.semdedup_inc import semantic_index
+    from tank_spark.streaming.epoch_index import (
+        file_stream,
+        start_stream,
+        stream_report,
+        write_epoch,
     )
 
+    spec = semantic_index()
     index_dir = str(tmp_path / "index")
     drop_dir = str(tmp_path / "drop")
     out_dir = str(tmp_path / "out")
     corpus = spark.createDataFrame(
         [(1, VEC_A), (2, VEC_B)], "vid long, embedding array<float>")
-    write_semdedup_index(spark, corpus, index_dir)
+    write_epoch(spec, corpus, index_dir)
     # provenance ids ARE the doc ids here (small ints), so pass an
     # explicit identity provenance instead of the % INC_OFFSET default
     _write_batch(spark, drop_dir, [(1, VEC_A), (2, VEC_B), (3, FRESH_X)])
-    stream = vector_file_stream(spark, drop_dir, max_files_per_trigger=10)
-    q = start_incremental_semdedup_stream(
-        spark, stream, index_dir, out_dir, str(tmp_path / "ckpt"))
+    stream = file_stream(spark, spec, drop_dir, max_files_per_trigger=10)
+    q = start_stream(spark, spec, stream, index_dir, out_dir,
+                     str(tmp_path / "ckpt"))
     q.awaitTermination(120)
     q.stop()
     docs = spark.createDataFrame(
         [(1, 7), (2, 7), (3, 8)], "orig long, label int")
     rep = {(r["epoch_id"], r["label"], r["disposition"]):
            (r["n_docs"], r["share_ppm"])
-           for r in semdedup_stream_report(
-               spark, out_dir, docs,
+           for r in stream_report(
+               spark, spec, out_dir, docs,
                provenance=F.col("vec_id")).collect()}
     assert rep[(0, 7, "semantic_dup_of_index")] == (2, 1000000)
     assert rep[(0, 8, "new_unique")] == (1, 1000000)
@@ -287,7 +261,8 @@ def test_stream_report_collapses_replayed_epochs(spark, tmp_path):
     self-match — collapses to ONE row per (epoch_id, vec_id), keeping
     the most duplicate-aware copy (review r11: the 'readers drop
     replayed epochs' posture was documented but unimplemented)."""
-    from tank_spark.streaming.semdedup_stream import semdedup_stream_report
+    from tank_spark.llm.semdedup_inc import semantic_index
+    from tank_spark.streaming.epoch_index import stream_report
 
     out_dir = str(tmp_path / "out")
     cols = ("vec_id long, list_id long, disposition string, "
@@ -300,8 +275,9 @@ def test_stream_report_collapses_replayed_epochs(spark, tmp_path):
     first.write.mode("append").parquet(out_dir)
     replay.write.mode("append").parquet(out_dir)
     docs = spark.createDataFrame([(3, 8)], "orig long, label int")
-    rows = semdedup_stream_report(
-        spark, out_dir, docs, provenance=F.col("vec_id")).collect()
+    rows = stream_report(
+        spark, semantic_index(), out_dir, docs,
+        provenance=F.col("vec_id")).collect()
     assert len(rows) == 1
     r = rows[0]
     # counted once, as the duplicate-aware copy
@@ -315,43 +291,43 @@ def test_stream_loop_with_twolevel_quantizer(spark, tmp_path):
     Exact re-crawl detection is unconditional there too (the route set
     prepends the vector's own assigned list), and survivors append
     with two-level assignments."""
-    from tank_spark.streaming.semdedup_stream import (
-        read_semdedup_index,
-        start_incremental_semdedup_stream,
-        vector_file_stream,
-        write_semdedup_index,
+    from tank_spark.llm.semdedup_inc import semantic_index
+    from tank_spark.streaming.epoch_index import (
+        file_stream,
+        read_index,
+        start_stream,
+        write_epoch,
     )
 
+    spec = semantic_index(quantizer="twolevel")
     index_dir = str(tmp_path / "index")
     drop_dir = str(tmp_path / "drop")
     out_dir = str(tmp_path / "out")
     corpus = spark.createDataFrame(
         [(1, VEC_A), (2, VEC_B)], "vid long, embedding array<float>")
-    write_semdedup_index(spark, corpus, index_dir, quantizer="twolevel")
-    idx0 = read_semdedup_index(spark, index_dir)
+    write_epoch(spec, corpus, index_dir)
+    (idx0,) = read_index(spark, spec, index_dir)
     assert idx0.count() == 2  # the bootstrap produced real assignments
     _write_batch(spark, drop_dir, [(101, VEC_A),      # exact re-crawl
                                    (102, FRESH_X)])   # fresh survivor
-    stream = vector_file_stream(spark, drop_dir, max_files_per_trigger=10)
-    q = start_incremental_semdedup_stream(
-        spark, stream, index_dir, out_dir, str(tmp_path / "ckpt"),
-        quantizer="twolevel")
+    stream = file_stream(spark, spec, drop_dir, max_files_per_trigger=10)
+    q = start_stream(spark, spec, stream, index_dir, out_dir,
+                     str(tmp_path / "ckpt"))
     q.awaitTermination(120)
     q.stop()
     out = {r["vec_id"]: r for r in spark.read.parquet(out_dir).collect()}
     assert out[101]["disposition"] == "semantic_dup_of_index"
     assert out[101]["match_vid"] == 1
     assert out[102]["disposition"] == "new_unique"
-    idx1 = {r.vid: r.list_id
-            for r in read_semdedup_index(spark, index_dir).collect()}
+    idx1 = {r.ivid: r.list_id
+            for r in read_index(spark, spec, index_dir)[0].collect()}
     assert set(idx1) == {1, 2, 102}
     # the survivor's assignment is consistent with the index's space:
     # probing the same vector again must match it (cross-run growth)
     _write_batch(spark, drop_dir, [(201, FRESH_X)])
-    stream = vector_file_stream(spark, drop_dir, max_files_per_trigger=10)
-    q = start_incremental_semdedup_stream(
-        spark, stream, index_dir, out_dir, str(tmp_path / "ckpt"),
-        quantizer="twolevel")
+    stream = file_stream(spark, spec, drop_dir, max_files_per_trigger=10)
+    q = start_stream(spark, spec, stream, index_dir, out_dir,
+                     str(tmp_path / "ckpt"))
     q.awaitTermination(120)
     q.stop()
     out2 = {r["vec_id"]: r for r in spark.read.parquet(out_dir).collect()}
@@ -366,27 +342,31 @@ def test_interrupted_compaction_swap_autorecovers(spark, tmp_path):
     renames it back (ADVICE r11)."""
     import os
 
-    from tank_spark.streaming.semdedup_stream import (
-        compact_semdedup_index,
-        index_epoch_count,
-        read_semdedup_index,
-        write_semdedup_index,
+    from tank_spark.llm.semdedup_inc import semantic_index
+    from tank_spark.streaming.epoch_index import (
+        compact,
+        epoch_count,
+        read_index,
+        write_epoch,
     )
 
+    spec = semantic_index()
     index_dir = str(tmp_path / "index")
     corpus = spark.createDataFrame(
         [(1, VEC_A), (2, VEC_B)], "vid long, embedding array<float>")
-    write_semdedup_index(spark, corpus, index_dir)
-    rows0 = sorted(r["vid"] for r in
-                   read_semdedup_index(spark, index_dir).collect())
+    write_epoch(spec, corpus, index_dir)
+
+    def vids() -> list:
+        return sorted(r["ivid"] for r in
+                      read_index(spark, spec, index_dir)[0].collect())
+
+    rows0 = vids()
     live = os.path.join(index_dir, "assign")
     os.rename(live, live + ".old")  # the exact crash window
-    got = sorted(r["vid"] for r in
-                 read_semdedup_index(spark, index_dir).collect())
+    got = vids()
     assert got == rows0  # restored, not FileNotFound
     # and a compaction started in the same state also recovers
     os.rename(live, live + ".old")
-    compact_semdedup_index(spark, index_dir, n_buckets=2)
-    assert index_epoch_count(index_dir) == 1
-    assert sorted(r["vid"] for r in
-                  read_semdedup_index(spark, index_dir).collect()) == rows0
+    compact(spark, spec, index_dir, n_buckets=2)
+    assert epoch_count(spec, index_dir) == 1
+    assert vids() == rows0
