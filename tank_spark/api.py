@@ -162,11 +162,10 @@ class Tank:
 
         ensure_workers_have_package(self.spark)
 
-        attr_cols = [n for n in self._attr_types
-                     if n in self.features().columns]
-        src = self.tile(z, x, y).withColumns(
+        tile = self.tile(z, x, y)
+        src = tile.withColumns(
             {"z": F.lit(z), "x": F.lit(x), "y": F.lit(y)}
-        ).select("z", "x", "y", "key", "geometry", *attr_cols)
+        ).select("z", "x", "y", "key", "geometry", *self._attr_cols(tile))
         # thread the configured layer name into the kernel so non-empty and
         # empty tiles serve under the same layer
         kernel = make_tile_kernel(self.base_layer)
@@ -204,14 +203,18 @@ class Tank:
         strict reference parity / full-fidelity rendering at every zoom."""
         from tank_spark.operators.mvt_tiles import mvt_tiles_for
 
-        attr_cols = tuple(
-            n for n in self._attr_types if n in self.features().columns
-        )
+        feats = self.features()
         return mvt_tiles_for(
-            self.spark, self.features(), requests,
-            prop_cols=attr_cols, layer=self.base_layer,
+            self.spark, feats, requests,
+            prop_cols=self._attr_cols(feats), layer=self.base_layer,
             overview_sampling=overview_sampling,
         )
+
+    def _attr_cols(self, df: DataFrame) -> tuple[str, ...]:
+        """The declared attributes the stored table carries — the MVT
+        properties (``df.columns`` once: each evaluation is a py4j call)."""
+        cols = set(df.columns)
+        return tuple(n for n in self._attr_types if n in cols)
 
     def heatmap(self, z: int, x: int, y: int) -> DataFrame:
         """GET /heatmap/{z}/{x}/{y}: grid cells with counts > 0
@@ -284,6 +287,7 @@ class Tank:
         costs no extra job (streaming.progress has the per-epoch form)."""
         import logging
 
+        from tank_spark.operators.table_ops import refresh_table
         from tank_spark.streaming.ingest import coerce_features
 
         _ilog = logging.getLogger("tank_spark.ingest")
@@ -304,7 +308,16 @@ class Tank:
                 else F.lit(None).cast(f.dataType).alias(f.name)
                 for f in table_fields
             ])
-        n_ok, n_bad = ok.count(), bad.count()
+        # counts and dirty tiles in one job over the checkpointed frame
+        n_ok = n_bad = 0
+        dirty: list[tuple[int, int]] = []
+        for r in coerced.groupBy("rejected", "tile_x", "tile_y").count().collect():
+            if r["rejected"]:
+                n_bad += r["count"]
+            else:
+                n_ok += r["count"]
+                if r["tile_x"] is not None:
+                    dirty.append((int(r["tile_x"]), int(r["tile_y"])))
         n_replaced = 0
         if upsert and n_ok and table_fields is not None:
             from tank_spark.operators.table_ops import delete_matching_keys
@@ -315,16 +328,11 @@ class Tank:
              .write.mode("append").partitionBy("bucket").parquet(self.table_dir))
         if n_bad:
             bad.write.mode("append").parquet(f"{self.table_dir}/_rejects")
-        self.spark.catalog.refreshByPath(self.table_dir)
-        if self._cache is not None and n_ok:
-            # reference parity: every import feeds the region manager and
-            # the cache cover is invalidated (Tyler.kt:139, :183) — else a
-            # cached tile would keep serving without the new features
-            self._invalidate_feature_tiles([
-                (int(r["tile_x"]), int(r["tile_y"]))
-                for r in ok.select("tile_x", "tile_y").distinct().collect()
-                if r["tile_x"] is not None
-            ])
+        refresh_table(self.spark, self.table_dir)
+        # reference parity: every import feeds the region manager and the
+        # cache cover is invalidated (Tyler.kt:139, :183) — else a cached
+        # tile would keep serving without the new features
+        self._invalidate_feature_tiles(sorted(dirty))
         _ilog.info("#%d features importing finished "
                    "(accepted=%d rejected=%d replaced=%d layer=%s)",
                    n_ok + n_bad, n_ok, n_bad, n_replaced, self.base_layer)
@@ -385,40 +393,31 @@ class Tank:
         """PUT /{uuid} (+ cache invalidation of the feature's tile —
         the reference pairs every write with regionManager bookkeeping,
         Tyler.kt:139)."""
-        from tank_spark.operators.table_ops import update_by_uid
+        from tank_spark.operators.table_ops import uid_rows, update_by_uid
 
-        # snapshot tiles BEFORE and AFTER: an update may move the feature
-        # (tile_x/tile_y/geometry are updatable columns), and invalidating
-        # only the pre-update tiles would leave the destination tile's
-        # cached blob stale (ADVICE r5)
-        tiles = self._tiles_of_uid(uid)
-        n = update_by_uid(self.spark, self.table_dir, uid, updates)
-        if n:
-            after = self._tiles_of_uid(uid)
-            self._invalidate_feature_tiles(
-                sorted(set(tiles) | set(after))
-            )
+        # one probe gives the buckets to rewrite and the tiles before the
+        # update; an update that sets tile_x/tile_y moves the feature, and
+        # invalidating only the pre-update tiles would leave the
+        # destination tile's cached blob stale (ADVICE r5) — only then is
+        # the table probed again
+        rows = uid_rows(self.spark, self.table_dir, uid)
+        n = update_by_uid(self.spark, self.table_dir, uid, updates, rows)
+        if n and self._cache is not None:
+            tiles = _tiles_of(rows)
+            if {"tile_x", "tile_y"} & set(updates):
+                tiles |= _tiles_of(uid_rows(self.spark, self.table_dir, uid))
+            self._invalidate_feature_tiles(sorted(tiles))
         return n
 
     def delete_feature(self, uid: str) -> int:
         """DELETE /{uuid} (+ cache invalidation of the feature's tile)."""
-        from tank_spark.operators.table_ops import delete_by_uid
+        from tank_spark.operators.table_ops import delete_by_uid, uid_rows
 
-        tiles = self._tiles_of_uid(uid)
-        n = delete_by_uid(self.spark, self.table_dir, uid)
+        rows = uid_rows(self.spark, self.table_dir, uid)
+        n = delete_by_uid(self.spark, self.table_dir, uid, rows)
         if n:
-            self._invalidate_feature_tiles(tiles)
+            self._invalidate_feature_tiles(sorted(_tiles_of(rows)))
         return n
-
-    def _tiles_of_uid(self, uid: str) -> list[tuple[int, int]]:
-        if self._cache is None:
-            return []
-        return [
-            (int(r["tile_x"]), int(r["tile_y"]))
-            for r in self.features().filter(F.col("uid") == uid)
-            .select("tile_x", "tile_y").distinct().collect()
-            if r["tile_x"] is not None
-        ]
 
     def _invalidate_feature_tiles(self, tiles_z13: list[tuple[int, int]]) -> None:
         """The write-path half of the reference's cache discipline
@@ -450,3 +449,9 @@ class Tank:
 
         lon_min, lat_min, lon_max, lat_max = tilemath.tile_bbox(z, x, y)
         self._cache.invalidate_bboxes([BBox(lon_min, lat_min, lon_max, lat_max)])
+
+
+def _tiles_of(rows) -> set[tuple[int, int]]:
+    """The z13 tiles of a ``table_ops.uid_rows`` probe."""
+    return {(int(r["tile_x"]), int(r["tile_y"]))
+            for r in rows if r["tile_x"] is not None}

@@ -21,7 +21,9 @@ What differs between callers — a lazy or eager persist, a
 localCheckpoint, unpersist, removing a layout directory — lives in the
 caller's ``build``/``release`` callables. Keys carry everything the value
 depends on besides the data version (session applicationId, sf_dir,
-dials); the fingerprint carries the data version.
+dials); the fingerprint carries the data version — ``fingerprint`` for
+files, ``dir_version`` for partitioned table directories (the feature
+table's and the tile cache's session handles).
 """
 
 from __future__ import annotations
@@ -50,6 +52,56 @@ def fingerprint(*paths: str) -> tuple:
             out.append((st.st_mtime_ns, st.st_size))
         except OSError:
             out.append((0, 0))
+    return tuple(out)
+
+
+def local_fs_path(path: str) -> str:
+    """Normalize a 'file:' URI to a plain filesystem path so driver-side
+    readers (os.stat, glob, pyarrow) see the real directory — without
+    this, 'file:///tmp/t' passed the driver-side routing guard but the
+    raw-string glob found nothing and raised manifest-missing even when
+    the manifest existed (ADVICE r11)."""
+    if path.startswith("file:"):
+        from urllib.parse import urlparse
+
+        return urlparse(path).path or path
+    return path
+
+
+def dir_version(path: str, depth: int) -> tuple:
+    """The data version of a partitioned parquet directory: ``(relative
+    path, mtime_ns, size)`` of ``path`` and of every ``key=value``
+    partition directory below it, down to ``depth`` levels, in name
+    order; ``(("", 0, 0),)`` for a missing directory.
+
+    Writers never rewrite a data file in place, so a change shows in a
+    directory's mtime: an append adds a file to a partition directory,
+    and an overwrite removes and recreates it (its parent's entries
+    change). Metadata only: one listing per directory, no Spark job.
+
+    Local paths and 'file:' URIs only: a remote path (hdfs://, s3a://,
+    ...) raises ValueError, since reading it as a missing directory would
+    give a version that never moves."""
+    if "://" in path and not path.startswith("file:"):
+        raise ValueError(f"dir_version needs a local directory: {path!r}")
+    out = []
+
+    def visit(d: str, rel: str, level: int) -> None:
+        subs = []
+        try:
+            st = os.stat(d)
+            if level < depth:
+                with os.scandir(d) as it:
+                    subs = sorted(e.name for e in it
+                                  if "=" in e.name and e.is_dir())
+        except OSError:  # missing, or removed while listed
+            out.append((rel, 0, 0))
+            return
+        out.append((rel, st.st_mtime_ns, st.st_size))
+        for name in subs:
+            visit(os.path.join(d, name), f"{rel}/{name}", level + 1)
+
+    visit(local_fs_path(path), "", 0)
     return tuple(out)
 
 

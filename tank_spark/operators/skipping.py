@@ -175,19 +175,6 @@ def prune_files(spark: SparkSession, path: str, col: str,
     return keep
 
 
-def _local_fs_path(path: str) -> str:
-    """Normalize a 'file:' URI to a plain filesystem path so the
-    driver-side glob/pyarrow readers see the real directory — without
-    this, 'file:///tmp/t' passed the driver-side routing guard but the
-    raw-string glob found nothing and raised manifest-missing even when
-    the manifest existed (ADVICE r11)."""
-    if path.startswith("file:"):
-        from urllib.parse import urlparse
-
-        return urlparse(path).path or path
-    return path
-
-
 def _local_manifest_parts(path: str) -> list[str]:
     """The driver-side manifest part files (local paths only) — ONE
     guard shared by every driver-side planner so 'manifest missing'
@@ -196,7 +183,7 @@ def _local_manifest_parts(path: str) -> list[str]:
     import glob as _glob
 
     parts = sorted(_glob.glob(os.path.join(
-        _glob.escape(_local_fs_path(path)), MANIFEST_DIR, "*.parquet")))
+        _glob.escape(cache.local_fs_path(path)), MANIFEST_DIR, "*.parquet")))
     if not parts:
         raise FileNotFoundError(
             f"no manifest under {path}/{MANIFEST_DIR} — run "

@@ -12,12 +12,29 @@ Layout: ``<dir>/bucket=<hash % n_buckets>/*.parquet``. The read path
 filters on ``bucket`` (derived from ``hash``), so tile queries prune
 directories — the on-disk analogue of the reference's partition key, and
 of what a 100 TB deployment gets from hash-bucketed table layout.
+
+Session handle: every read of a table goes through ``read_table``
+(``read_feature_table`` for the feature table, ``tile_cache.TileCache``
+for the cache table), which serves one DataFrame per (session, table
+directory, data version) from the session cache — listed and
+schema-read once, like the reference's one Cassandra table per process
+(application.kt:677-681), instead of two Spark jobs per call. The
+version is ``cache.dir_version`` of the directory and its partition
+subdirectories (``bucket=*`` here). Every writer (here, ``api.Tank``'s
+ingest, the streaming sink, the tile cache) ends with ``refresh_table``,
+which drops the handle, so in-process writes are seen exactly; the
+directory version catches writers this process does not see (a direct
+append, another process).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import os
+
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+
+from tank_spark import cache
 
 N_BUCKETS = 64
 
@@ -33,14 +50,78 @@ def write_feature_table(df: DataFrame, table_dir: str, n_buckets: int = N_BUCKET
         .partitionBy("bucket")
         .parquet(table_dir)
     )
+    refresh_table(df.sparkSession, table_dir)
+
+
+def _handle_key(spark: SparkSession, table_dir: str) -> tuple:
+    return (spark.sparkContext.applicationId,
+            os.path.abspath(cache.local_fs_path(table_dir)))
+
+
+def read_table(spark: SparkSession, table_dir: str, depth: int) -> DataFrame:
+    """The session handle of the parquet table at ``table_dir`` at its
+    current data version: the directory and its partition directories
+    down to ``depth`` levels."""
+    return cache.cached(
+        "table_ops.table", _handle_key(spark, table_dir),
+        lambda: spark.read.parquet(table_dir),
+        fp=cache.dir_version(table_dir, depth),
+    )
 
 
 def read_feature_table(spark: SparkSession, table_dir: str) -> DataFrame:
-    return spark.read.parquet(table_dir)
+    """The feature table's handle (partitions: ``bucket=*``)."""
+    return read_table(spark, table_dir, 1)
+
+
+def refresh_table(spark: SparkSession, table_dir: str) -> None:
+    """After a write: drop the handle (the next read lists the new files)
+    and refresh any persisted relation over the path."""
+    key = _handle_key(spark, table_dir)
+    cache.clear("table_ops.table", lambda k: k == key)
+    spark.catalog.refreshByPath(table_dir)
+
+
+def uid_rows(spark: SparkSession, table_dir: str, uid: str) -> list[Row]:
+    """The one probe of a uid write: ``(bucket, tile_x, tile_y)`` per
+    stored row carrying ``uid`` — the buckets to rewrite, the tiles to
+    invalidate, and the row count."""
+    return (read_feature_table(spark, table_dir)
+            .filter(F.col("uid") == uid)
+            .select("bucket", "tile_x", "tile_y").collect())
+
+
+def _rewrite_buckets(spark: SparkSession, table_dir: str, content: DataFrame,
+                     buckets: list[int]) -> None:
+    """Copy-on-write tail of every mutation: ``content`` holds the rows
+    ``buckets`` keep; each bucket is overwritten as one hash-sorted file."""
+    # localCheckpoint CUTS LINEAGE: a plain cache() can silently recompute
+    # from source files we are about to overwrite (observed: FileNotFound
+    # mid-rewrite). Eager checkpoint = durable copy of the new content.
+    content = content.localCheckpoint(eager=True)
+    for b in buckets:
+        (
+            content.filter(F.col("bucket") == b).drop("bucket")
+            .sortWithinPartitions("hash")
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(f"{table_dir}/bucket={b}")
+        )
+    content.unpersist()
+    refresh_table(spark, table_dir)
 
 
 def _buckets_of(pred_buckets: list[int]) -> Column:
     return F.col("bucket").isin(pred_buckets)
+
+
+def _delete_in(spark: SparkSession, table_dir: str, predicate: Column,
+               buckets: list[int]) -> None:
+    """Rewrite ``buckets`` without the rows matching ``predicate``."""
+    df = read_feature_table(spark, table_dir)
+    _rewrite_buckets(spark, table_dir,
+                     df.filter(_buckets_of(buckets)).filter(~predicate),
+                     buckets)
 
 
 def delete_where(spark: SparkSession, table_dir: str, predicate: Column,
@@ -62,38 +143,21 @@ def delete_where(spark: SparkSession, table_dir: str, predicate: Column,
     n_deleted = hit.count()
     if n_deleted == 0:
         return 0
-    # localCheckpoint CUTS LINEAGE: a plain cache() can silently recompute
-    # from source files we are about to overwrite (observed: FileNotFound
-    # mid-rewrite). Eager checkpoint = durable copy of the survivors.
-    survivors = (
-        df.filter(_buckets_of(candidate_buckets))
-        .filter(~predicate)
-        .localCheckpoint(eager=True)
-    )
-    for b in candidate_buckets:
-        (
-            survivors.filter(F.col("bucket") == b).drop("bucket")
-            .sortWithinPartitions("hash")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{table_dir}/bucket={b}")
-        )
-    survivors.unpersist()
-    spark.catalog.refreshByPath(table_dir)
+    _delete_in(spark, table_dir, predicate, candidate_buckets)
     return n_deleted
 
 
-def delete_by_uid(spark: SparkSession, table_dir: str, uid: str) -> int:
+def delete_by_uid(spark: SparkSession, table_dir: str, uid: str,
+                  rows: list[Row]) -> int:
     """C2: read the row to find its partition, delete within it
-    (reference application.kt:302-315 does the same read-then-delete)."""
-    df = read_feature_table(spark, table_dir)
-    rows = df.filter(F.col("uid") == uid).select("bucket").collect()
+    (reference application.kt:302-315 does the same read-then-delete).
+    ``rows`` is ``uid_rows(spark, table_dir, uid)``: the read that finds
+    the buckets, and whose count is returned."""
     if not rows:
         return 0
-    return delete_where(
-        spark, table_dir, F.col("uid") == uid,
-        candidate_buckets=sorted({r["bucket"] for r in rows}),
-    )
+    _delete_in(spark, table_dir, F.col("uid") == uid,
+               sorted({r["bucket"] for r in rows}))
+    return len(rows)
 
 
 def delete_tile(spark: SparkSession, table_dir: str, z: int, x: int, y: int) -> int:
@@ -140,21 +204,12 @@ def delete_matching_keys(spark: SparkSession, table_dir: str,
         if not dirty:
             return 0
         n_deleted = hit.count()
-        survivors = (
+        _rewrite_buckets(
+            spark, table_dir,
             df.filter(_buckets_of(dirty))
-            .join(F.broadcast(k), ["hash", "uid"], "left_anti")
-            .localCheckpoint(eager=True)  # cut lineage before overwrite
+            .join(F.broadcast(k), ["hash", "uid"], "left_anti"),
+            dirty,
         )
-        for b in dirty:
-            (
-                survivors.filter(F.col("bucket") == b).drop("bucket")
-                .sortWithinPartitions("hash")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(f"{table_dir}/bucket={b}")
-            )
-        survivors.unpersist()
-        spark.catalog.refreshByPath(table_dir)
         return n_deleted
     finally:
         k.unpersist()
@@ -178,8 +233,6 @@ def compact_table(spark: SparkSession, table_dir: str,
     uses the local filesystem; a cluster deployment swaps in the Hadoop
     FileSystem API, the rewrite is unchanged.
     """
-    import os
-
     fragmented: dict[int, int] = {}
     for entry in sorted(os.listdir(table_dir)):
         if not entry.startswith("bucket="):
@@ -190,35 +243,39 @@ def compact_table(spark: SparkSession, table_dir: str,
         ]
         if len(files) >= min_files:
             fragmented[int(entry.split("=", 1)[1])] = len(files)
+    if not fragmented:
+        return fragmented
+    # one handle for the loop: each rewrite replaces only its own bucket's
+    # files, so the listing stays valid for the buckets still to come
+    df = read_feature_table(spark, table_dir)
     for b in fragmented:
-        part_dir = f"{table_dir}/bucket={b}"
         # checkpoint cuts lineage from the files about to be overwritten
         # (same FileNotFound hazard as delete_where)
-        rows = spark.read.parquet(part_dir).localCheckpoint(eager=True)
+        rows = (df.filter(F.col("bucket") == b).drop("bucket")
+                .localCheckpoint(eager=True))
         (
             rows.coalesce(1)
             .sortWithinPartitions("hash")  # coalesce first -> globally sorted file
             .write.mode("overwrite")
-            .parquet(part_dir)
+            .parquet(f"{table_dir}/bucket={b}")
         )
         rows.unpersist()
-    if fragmented:
-        spark.catalog.refreshByPath(table_dir)
+    refresh_table(spark, table_dir)
     return fragmented
 
 
 def update_by_uid(spark: SparkSession, table_dir: str, uid: str,
-                  updates: dict[str, object]) -> int:
+                  updates: dict[str, object], rows: list[Row]) -> int:
     """C3: update = delete + re-insert under the same uid (the reference's
     read-copy-reinsert, application.kt:317-348) — here a single-bucket
     copy-on-write rewrite with CASE-d columns. uid is a clustering key,
     not unique (reference PK ((hash), uid, timestamp)): every row carrying
-    the uid is updated; the count of touched rows is returned."""
-    df = read_feature_table(spark, table_dir)
-    rows = df.filter(F.col("uid") == uid).select("bucket").collect()
+    the uid is updated; the count of touched rows is returned. ``rows``
+    is ``uid_rows(spark, table_dir, uid)``, as for ``delete_by_uid``."""
     if not rows:
         return 0
     buckets = sorted({r["bucket"] for r in rows})
+    df = read_feature_table(spark, table_dir)
     hit = F.col("uid") == uid
     target = df.filter(_buckets_of(buckets))
     dtypes = {f.name: f.dataType for f in df.schema.fields}
@@ -228,15 +285,5 @@ def update_by_uid(spark: SparkSession, table_dir: str, uid: str,
         # silently rewrite the bucket with a drifted schema
         lit = F.lit(val).cast(dtypes[col])
         target = target.withColumn(col, F.when(hit, lit).otherwise(F.col(col)))
-    target = target.localCheckpoint(eager=True)  # cut lineage before overwrite
-    for b in buckets:
-        (
-            target.filter(F.col("bucket") == b).drop("bucket")
-            .sortWithinPartitions("hash")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{table_dir}/bucket={b}")
-        )
-    target.unpersist()
-    spark.catalog.refreshByPath(table_dir)
+    _rewrite_buckets(spark, table_dir, target, buckets)
     return len(rows)

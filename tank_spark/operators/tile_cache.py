@@ -11,6 +11,14 @@ partition-pruned lookup; invalidation deletes matching rows copy-on-write
 (subtree roots become range predicates, so a world-sized invalidation is
 one partition rewrite, not 4^13 tombstones).
 
+Session handle: the cache table is read through the feature table's
+handle rule (``table_ops.read_table``): one DataFrame per (session, cache
+directory, data version), so a probe lists and schema-reads the table
+once per write, not once per call. The version is ``cache.dir_version``
+over ``kind=*/z=*``; ``put`` and ``invalidate_cover`` end with
+``table_ops.refresh_table``, which drops the handle, and the directory
+version catches writers this process does not see.
+
 At 100 TB the same layout holds on any parquet store; the serving layer
 would front this with an in-process LRU — this table is the shared,
 durable layer the reference kept in memcached.
@@ -20,6 +28,7 @@ from __future__ import annotations
 
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,6 +36,8 @@ from tank_spark.operators.invalidation import (
     ZOOM_END, ZOOM_START, BBox, FeatureBoundingManager, cluster_regions,
     quadtree_cover,
 )
+from tank_spark.operators.table_ops import read_table, refresh_table
+from tank_spark.util import local_values_df
 
 TTL_SECONDS = 10_000  # reference application.kt:470
 
@@ -39,10 +50,12 @@ class TileCache:
         self.ttl = ttl_seconds
 
     def _table(self) -> DataFrame | None:
+        """The cache table's handle at its current version; None while
+        the cache is empty (no table yet)."""
         try:
-            return self.spark.read.parquet(self.cache_dir)
-        except Exception:
-            return None  # cache empty (no table yet)
+            return read_table(self.spark, self.cache_dir, 2)
+        except AnalysisException:
+            return None
 
     @staticmethod
     def cacheable(z: int) -> bool:
@@ -74,6 +87,7 @@ class TileCache:
             "kind string, z int, x int, y int, blob binary, created_at double",
         )
         df.write.mode("append").partitionBy("kind", "z").parquet(self.cache_dir)
+        refresh_table(self.spark, self.cache_dir)
 
     def invalidate_bboxes(self, dirty: list[BBox]) -> int:
         """V1 + V2: cluster dirty bboxes, cover with the quadtree, delete
@@ -115,12 +129,10 @@ class TileCache:
         t = self._table()
         if t is None:
             return 0
-        tiles_df = self.spark.createDataFrame(
-            list(tiles) or [(-1, -1, -1)], "tz int, tx int, ty int"
-        )
-        roots_df = self.spark.createDataFrame(
-            list(roots) or [(99, 0, 0)], "rz int, rx int, ry int"
-        )
+        tiles_df = local_values_df(self.spark, list(tiles),
+                                   "tz int, tx int, ty int")
+        roots_df = local_values_df(self.spark, list(roots),
+                                   "rz int, rx int, ry int")
         hit_tiles = t.join(
             F.broadcast(tiles_df),
             (F.col("z") == F.col("tz")) & (F.col("x") == F.col("tx"))
@@ -137,16 +149,22 @@ class TileCache:
             & ((F.col("y").cast("long") / shift_div).cast("long") == F.col("ry")),
             "left_semi",
         )
-        hit = hit_tiles.unionAll(hit_roots).select("kind", "z", "x", "y").distinct()
-        n = hit.count()
-        if n == 0:
-            return 0
-        survivors = t.join(
-            hit, ["kind", "z", "x", "y"], "left_anti"
-        ).localCheckpoint(eager=True)
-        (
-            survivors.write.mode("overwrite").partitionBy("kind", "z")
-            .parquet(self.cache_dir)
-        )
-        self.spark.catalog.refreshByPath(self.cache_dir)
-        return n
+        # the cover is matched once: its keys stay on the executors as a
+        # checkpoint, which both the count and the survivors' anti-join read
+        hit = (hit_tiles.unionAll(hit_roots).select("kind", "z", "x", "y")
+               .distinct().localCheckpoint(eager=True))
+        try:
+            n = hit.count()
+            if n == 0:
+                return 0
+            survivors = t.join(
+                hit, ["kind", "z", "x", "y"], "left_anti"
+            ).localCheckpoint(eager=True)
+            (
+                survivors.write.mode("overwrite").partitionBy("kind", "z")
+                .parquet(self.cache_dir)
+            )
+            refresh_table(self.spark, self.cache_dir)
+            return n
+        finally:
+            hit.unpersist()

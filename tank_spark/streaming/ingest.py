@@ -225,6 +225,9 @@ def start_ingest_stream(
     fail-fast-to-the-query behavior (Spark task retries still cover
     task-level failures inside the write jobs either way).
     """
+    from tank_spark.operators.table_ops import (
+        delete_matching_keys, refresh_table,
+    )
     from tank_spark.streaming.backpressure import AdaptiveBackoff
 
     backoff = AdaptiveBackoff(step_s=sink_backoff_s,
@@ -250,10 +253,6 @@ def start_ingest_stream(
                 if upsert:
                     import os
 
-                    from tank_spark.operators.table_ops import (
-                        delete_matching_keys,
-                    )
-
                     # first epoch: nothing stored yet -> nothing to
                     # replace (re-running this after a failed append is
                     # safe: the delete is keyed on the incoming rows)
@@ -267,6 +266,7 @@ def start_ingest_stream(
                 # mutation paths that filter on `bucket`
                 (ok.withColumn("bucket", F.pmod(F.col("hash"), F.lit(64)))
                  .write.mode("append").partitionBy("bucket").parquet(table_dir))
+                refresh_table(spark, table_dir)
 
             def store_rejects() -> None:
                 rejects = batch.filter(F.col("rejected")) \

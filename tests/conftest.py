@@ -38,8 +38,6 @@ SLOW_NODEID_PARTS = (
     "test_oracle_parity[media_dedup_report]",
     "test_oracle_parity[media_dedup_apply]",
     "test_api.py::test_full_route_surface",
-    "test_api.py::test_write_paths_invalidate_tile_cache",
-    "test_api.py::test_update_move_invalidates_destination_tile",
     "test_api.py::test_ingest_upsert_replaces_matching_pk",
     "test_api.py::test_tile_cache_roundtrip_and_invalidation",
     "test_api.py::test_layer_config_persists_with_table",

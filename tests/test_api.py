@@ -239,6 +239,20 @@ def test_sql_function_registration(spark):
     assert abs(row["gd"][0] - 57.64911) < 1e-6
 
 
+def test_tile_mvt_reads_the_table_handle_once(tank):
+    """A tile_mvt miss on an unchanged table lists nothing: the handle
+    built by the first call serves the second, once per call (not once
+    per declared attribute)."""
+    from tank_spark import cache
+
+    tank.tile_mvt(13, 1281, 3137)
+    before = cache.stats("table_ops.table")
+    assert len(tank.tile_mvt(12, 641, 1569)) > 25
+    after = cache.stats("table_ops.table")
+    assert (after["misses"] - before["misses"],
+            after["hits"] - before["hits"]) == (0, 1)
+
+
 def test_tile_cache_roundtrip_and_invalidation(spark, tmp_path):
     from tank_spark.api import Tank
     from tank_spark.operators.table_ops import write_feature_table

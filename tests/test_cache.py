@@ -29,6 +29,54 @@ def test_fingerprint_per_path_and_missing_file(tmp_path):
     assert cache.fingerprint() == ()
 
 
+def test_dir_version_follows_partition_dirs(tmp_path):
+    """The directory version covers the partition directories down to
+    ``depth``: a file added two levels down moves a depth-2 version and
+    not a depth-1 one; a missing directory has the (0, 0) version."""
+    leaf = tmp_path / "kind=tile" / "z=3"
+    leaf.mkdir(parents=True)
+    (leaf / "a.parquet").write_bytes(b"a")
+    (tmp_path / "_rejects").mkdir()   # not a partition directory
+    d = str(tmp_path)
+    v1, v2 = cache.dir_version(d, 1), cache.dir_version(d, 2)
+    assert [rel for rel, *_ in v2] == ["", "/kind=tile", "/kind=tile/z=3"]
+    os.utime(leaf, ns=(1, 1))   # so the write below surely moves it
+    v2 = cache.dir_version(d, 2)
+    (leaf / "b.parquet").write_bytes(b"b")
+    assert cache.dir_version(d, 1) == v1
+    assert cache.dir_version(d, 2) != v2
+    assert cache.dir_version(str(tmp_path / "gone"), 1) == (("", 0, 0),)
+
+
+def test_dir_version_of_uris(tmp_path):
+    """A 'file:' URI has its plain path's version; a remote path raises
+    rather than passing for a missing directory whose version never
+    moves."""
+    (tmp_path / "bucket=1").mkdir()
+    d = str(tmp_path)
+    assert cache.dir_version("file://" + d, 1) == cache.dir_version(d, 1)
+    assert cache.dir_version("file:" + d, 1) == cache.dir_version(d, 1)
+    with pytest.raises(ValueError, match="local directory"):
+        cache.dir_version("hdfs://nn/tables/features", 1)
+
+
+def test_tile_cache_put_then_get_in_one_session(spark, tmp_path):
+    """The cache table's handle is dropped by put: a blob put is served
+    by the next get, and a get with no write between reuses the handle."""
+    from tank_spark.operators.tile_cache import TileCache
+
+    tc = TileCache(spark, str(tmp_path / "cache"))
+    assert tc.get("tile", 9, 80, 196) is None
+    tc.put("tile", 9, 80, 196, b"blob-1")
+    assert tc.get("tile", 9, 80, 196) == b"blob-1"
+    tc.put("heatmap", 9, 80, 196, b"hm-1")
+    before = cache.stats("table_ops.table")
+    assert tc.get("heatmap", 9, 80, 196) == b"hm-1"
+    assert tc.get("tile", 9, 80, 196) == b"blob-1"
+    assert _delta("table_ops.table", before) == {
+        "hits": 1, "misses": 1, "evictions": 0}
+
+
 def test_stale_fingerprint_releases_and_rebuilds():
     ns = "test.stale"
     cache.clear(ns)

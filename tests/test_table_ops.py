@@ -39,16 +39,22 @@ def test_bucket_pruning_visible_in_plan(spark, table_dir):
 
 
 def test_delete_by_uid(spark, table_dir):
-    from tank_spark.operators.table_ops import delete_by_uid, read_feature_table
+    from tank_spark.operators.table_ops import (
+        delete_by_uid, read_feature_table, uid_rows,
+    )
+
+    def delete(uid):
+        return delete_by_uid(spark, table_dir, uid,
+                             uid_rows(spark, table_dir, uid))
 
     before = read_feature_table(spark, table_dir).count()
-    n = delete_by_uid(spark, table_dir, "feat-8001")
+    n = delete("feat-8001")
     assert n == 1
     after = read_feature_table(spark, table_dir)
     assert after.count() == before - 1
     assert after.filter(F.col("uid") == "feat-8001").count() == 0
     # deleting a missing uid is a no-op
-    assert delete_by_uid(spark, table_dir, "feat-nope") == 0
+    assert delete("feat-nope") == 0
     assert read_feature_table(spark, table_dir).count() == before - 1
 
 
@@ -71,14 +77,17 @@ def test_delete_tile_range(spark, table_dir):
 
 
 def test_update_by_uid(spark, table_dir):
-    from tank_spark.operators.table_ops import read_feature_table, update_by_uid
+    from tank_spark.operators.table_ops import (
+        read_feature_table, uid_rows, update_by_uid,
+    )
 
     # uid is NOT unique (the reference's PK is ((hash), uid, timestamp) —
     # several rows may share a uid; the driver's lineitem has duplicate
     # (orderkey, linenumber) pairs, so derived uids repeat too): the update
     # touches every copy
     n = update_by_uid(spark, table_dir, "feat-4005",
-                      {"score": 99.5, "tag": "tag-upd"})
+                      {"score": 99.5, "tag": "tag-upd"},
+                      uid_rows(spark, table_dir, "feat-4005"))
     assert n >= 1
     df = read_feature_table(spark, table_dir)
     rows = df.filter(F.col("uid") == "feat-4005").collect()
@@ -167,3 +176,127 @@ def test_update_by_uid_preserves_typed_column_schema(spark, tmp_path):
     # the untouched row is intact
     other = after.filter(after["uid"] == "u2").collect()[0]
     assert other["rank"] == 2 and str(other["seen"]) == "2024-02-02"
+
+
+# ------------------------------------------------------- session handle
+
+def _handle_stats():
+    from tank_spark import cache
+
+    return cache.stats("table_ops.table")
+
+
+def test_unchanged_table_reads_list_once(spark, table_dir):
+    """Two reads of an unchanged table: one build, then the handle."""
+    from tank_spark.operators.table_ops import read_feature_table
+
+    before = _handle_stats()
+    first = read_feature_table(spark, table_dir)
+    second = read_feature_table(spark, table_dir)
+    after = _handle_stats()
+    assert second is first
+    assert (after["misses"] - before["misses"],
+            after["hits"] - before["hits"]) == (1, 1)
+
+
+def test_out_of_band_append_is_visible(spark, table_dir):
+    """A writer this process does not track (no refresh_table, no
+    refreshByPath) appends to the table: the directory version moves and
+    the next read lists the new files."""
+    from tank_spark.operators.table_ops import read_feature_table
+
+    df = read_feature_table(spark, table_dir)
+    before = df.count()
+    extra = df.limit(5).withColumn("uid", F.concat(F.lit("oob-"), F.col("uid")))
+    extra.write.mode("append").partitionBy("bucket").parquet(table_dir)
+    again = read_feature_table(spark, table_dir)
+    assert again.count() == before + 5
+    assert again.filter(F.col("uid").startswith("oob-")).count() == 5
+
+
+def test_file_uri_table_sees_out_of_band_append(spark, table_dir):
+    """A table named by a 'file:' URI follows the same version rule as
+    its plain path: an append the handle did not see is listed."""
+    from tank_spark.operators.table_ops import read_feature_table
+
+    uri = "file://" + table_dir
+    df = read_feature_table(spark, uri)
+    before = df.count()
+    (df.limit(3).withColumn("uid", F.concat(F.lit("oob-"), F.col("uid")))
+     .write.mode("append").partitionBy("bucket").parquet(table_dir))
+    again = read_feature_table(spark, uri)
+    assert again.count() == before + 3
+    assert again.filter(F.col("uid").startswith("oob-")).count() == 3
+
+
+def test_out_of_band_bucket_overwrite_is_visible(spark, table_dir, tmp_path):
+    """Another writer swaps one bucket's files in place (the bucket
+    directory stays, the table directory is untouched): the next read
+    serves the new bucket content, not the old listing."""
+    import os
+    import shutil
+
+    from tank_spark.operators.table_ops import read_feature_table
+
+    df = read_feature_table(spark, table_dir)
+    before = df.count()
+    b = df.filter(F.col("uid") == "feat-8001").collect()[0]["bucket"]
+    part = os.path.join(table_dir, f"bucket={b}")
+    staged = str(tmp_path / "staged")
+    (df.filter((F.col("bucket") == b) & (F.col("uid") != "feat-8001"))
+     .drop("bucket").coalesce(1).write.parquet(staged))
+    for name in os.listdir(part):
+        os.remove(os.path.join(part, name))
+    for name in os.listdir(staged):
+        if name.endswith(".parquet"):
+            shutil.move(os.path.join(staged, name), part)
+    again = read_feature_table(spark, table_dir)
+    assert again.count() == before - 1
+    assert again.filter(F.col("uid") == "feat-8001").count() == 0
+
+
+def test_table_ops_writers_drop_the_handle(spark, table_dir, monkeypatch):
+    """Every writer here ends with refresh_table: with the directory
+    version frozen, each write is still seen by the next read."""
+    from tank_spark import cache
+    from tank_spark.operators import table_ops as ops
+
+    monkeypatch.setattr(cache, "dir_version", lambda *a, **k: ())
+
+    def count():
+        return ops.read_feature_table(spark, table_dir).count()
+
+    def uid_count(uid):
+        return (ops.read_feature_table(spark, table_dir)
+                .filter(F.col("uid") == uid).count())
+
+    n = count()
+    assert ops.delete_by_uid(spark, table_dir, "feat-8001",
+                             ops.uid_rows(spark, table_dir, "feat-8001")) == 1
+    assert count() == n - 1
+    assert ops.delete_where(spark, table_dir, F.col("uid") == "feat-8002") == 1
+    assert count() == n - 2
+    keys = (ops.read_feature_table(spark, table_dir)
+            .filter(F.col("uid") == "feat-11").select("hash", "uid"))
+    assert ops.delete_matching_keys(spark, table_dir, keys) == 1
+    assert count() == n - 3
+    assert ops.update_by_uid(spark, table_dir, "feat-4005",
+                             {"tag": "tag-handle"},
+                             ops.uid_rows(spark, table_dir, "feat-4005")) >= 1
+    assert (ops.read_feature_table(spark, table_dir)
+            .filter(F.col("tag") == "tag-handle").count()) == uid_count("feat-4005")
+    n_tile = ops.delete_tile(spark, table_dir, 11, 320, 784)
+    assert n_tile > 0 and count() == n - 3 - n_tile
+    n = count()
+    # a direct append is the one write no table_ops function makes: drop
+    # the handle by hand so compaction starts from the appended listing
+    (ops.read_feature_table(spark, table_dir).limit(4).repartition(1)
+     .write.mode("append").partitionBy("bucket").parquet(table_dir))
+    ops.refresh_table(spark, table_dir)
+    assert count() == n + 4
+    assert ops.compact_table(spark, table_dir)     # old files are gone
+    assert count() == n + 4
+    src = ops.read_feature_table(spark, table_dir).limit(10).drop("bucket") \
+        .localCheckpoint(eager=True)
+    ops.write_feature_table(src, table_dir)
+    assert count() == 10
