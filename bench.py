@@ -148,9 +148,9 @@ HEADLINE = [
     # brute-force semantic tower at the same fusion tail)
     "neardup_hyperplane_lsh_pairs_w12", "hybrid_search_rrf_ivf",
     # BENCH-ONLY entry: full-fidelity z7 overview encode. NOT a serving
-    # path (serving uses the budgeted sample below OVERVIEW_ZOOM — the
-    # full blob hits the MVT format ceiling at 100x, see SCALE.md);
-    # benchmarked to keep the distributed encode pipeline honest.
+    # path (serving samples every over-budget tile — the full blob hits
+    # the MVT format ceiling at 100x, see SCALE.md); benchmarked as the
+    # largest tile the batch encode renders.
     "tile_mvt_z7_full",
 ]
 

@@ -145,6 +145,12 @@ def _encode_geometry(geom_type: str, coords) -> list[int]:
     return cmds
 
 
+def geometry_bytes(geom_type: str, coords) -> bytes:
+    """Integer tile-local coords -> the varint-packed command stream (the
+    ``Feature.geometry`` payload)."""
+    return b"".join(_varint(c) for c in _encode_geometry(geom_type, coords))
+
+
 # -------------------------------------------------------------- public API
 
 def encode(features, layer_name: str = "io.marauder.tank", extent: int = 4096) -> bytes:
@@ -152,7 +158,10 @@ def encode(features, layer_name: str = "io.marauder.tank", extent: int = 4096) -
 
     ``features``: iterable of dicts ``{"geom_type", "coords", "props",
     "id"(optional int)}`` with integer tile-local coordinates (post
-    transform, reference application.kt:459-467).
+    transform, reference application.kt:459-467). A feature may instead
+    carry its geometry pre-encoded: ``"gtype"`` (MVT type code 1..3) and
+    ``"geom"`` (the :func:`geometry_bytes` payload), as the tile
+    pipeline's geometry encoder emits it.
     """
     keys: list[str] = []
     key_ix: dict[str, int] = {}
@@ -180,8 +189,12 @@ def encode(features, layer_name: str = "io.marauder.tank", extent: int = 4096) -
         if tags:
             packed = b"".join(_varint(t) for t in tags)
             body += _len_delim(2, packed)
-        body += _tag(3, 0) + _varint(GEOM_TYPES[f["geom_type"]])
-        geom = b"".join(_varint(c) for c in _encode_geometry(f["geom_type"], f["coords"]))
+        if "geom" in f:
+            gtype, geom = f["gtype"], f["geom"]
+        else:
+            gtype = GEOM_TYPES[f["geom_type"]]
+            geom = geometry_bytes(f["geom_type"], f["coords"])
+        body += _tag(3, 0) + _varint(gtype)
         body += _len_delim(4, geom)
         feats += _len_delim(2, bytes(body))
 

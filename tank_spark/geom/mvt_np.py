@@ -1,19 +1,21 @@
-"""Numpy-vectorized MVT layer assembly — the scale path for big tiles.
+"""Numpy-vectorized MVT encoding — the batch tile pipeline's assembler.
 
 The pure-Python encoder (geom/mvt.py) walks features one at a time; at
 ~600k features per overview tile that loop alone is tens of seconds of
 single-task Python (measured: 20s of a 42s z7 encode at sf0.1). This
-module assembles the SAME wire format (vector-tile-spec 2.1 protobuf) in
-whole-array numpy passes: varint encoding, tag packing, and feature
-framing are all vectorized; only the per-unique value table (a few
-hundred entries) stays a Python loop.
+module emits the SAME wire format (vector-tile-spec 2.1 protobuf) in
+whole-array numpy passes: geometry command streams for points, 2-point
+lines and single-ring polygons, varints, tag packing and feature framing
+are all vectorized, and numeric value tables are framed by dtype.
 
-Works on columnar inputs (ids, geometry-command bytes, prop columns) —
-the distributed tile pipeline's geometry stage (operators/mvt_tiles.py)
-produces exactly that shape. Decoded output is identical to
-``mvt.encode`` on the same features (tests assert this); byte layout may
-differ only in key/value table ordering, which the spec leaves to the
-encoder.
+Works on columnar inputs (ids, geometry-command bytes, prop columns).
+The geometry encoder in operators/mvt_tiles.py produces that shape; its
+batch stage packs one chunk per (tile, Arrow batch) with
+:func:`pack_chunk`, and the per-tile assembly merges the chunks
+(:func:`merge_chunks`) and frames the layer (:func:`assemble_layer`).
+Decoded output is identical to ``mvt.encode`` on the same features
+(tests assert this); byte layout may differ only in key/value table
+ordering, which the spec leaves to the encoder.
 """
 
 from __future__ import annotations
@@ -194,10 +196,10 @@ def frame_values(uniques) -> bytes:
         rec[:, 2] = 0x38                      # Value.bool_value tag
         rec[:, 3] = u.astype(np.uint8)
         return rec.tobytes()
-    # strings / mixed objects / pre-encoded Value payload bytes
+    # strings / mixed objects
     parts = []
     for v in uniques:
-        payload = v if isinstance(v, bytes) else mvtmod._encode_value(_pyval(v))
+        payload = mvtmod._encode_value(_pyval(v))
         parts.append(b"\x22" + mvtmod._varint(len(payload)) + payload)
     return b"".join(parts)
 
@@ -235,13 +237,7 @@ def _factorize_props(props, n: int) -> tuple[
         base = n_values
         n_values += len(uniques)
         cols.append((key_ix, base + codes, mask))
-    flat, per_feat = _interleave_tags(cols, n)
-    return keys, b"".join(framed), flat, per_feat
-
-
-def _interleave_tags(cols, n: int) -> tuple[np.ndarray, np.ndarray]:
-    """Feature-major (key_ix, val_ix) tag stream from per-column
-    ``(key_ix, value_codes, non-null mask)`` triples."""
+    # feature-major (key_ix, val_ix) tag stream
     per_feat = np.zeros(n, dtype=np.int64)
     for _, _, mask in cols:
         per_feat += mask.astype(np.int64) * 2
@@ -255,7 +251,7 @@ def _interleave_tags(cols, n: int) -> tuple[np.ndarray, np.ndarray]:
         flat[pos] = key_ix
         flat[pos + 1] = val_codes[mask]
         cursor[mask] += 2
-    return flat, per_feat
+    return keys, b"".join(framed), flat, per_feat
 
 
 def _pyval(u):
@@ -285,12 +281,18 @@ def assemble_layer(
     per-feature lengths; ``props``: column name -> pandas Series (nulls
     skipped per feature, like the scalar encoder).
     """
-    n = len(ids)
-    keys, values_framed, tag_flat, tags_per_feat = _factorize_props(props, n)
-    feats = frame_features(
+    keys, values_framed, tag_flat, tags_per_feat = _factorize_props(
+        props, len(ids))
+    layer = bytearray()
+    layer += mvtmod._tag(15, 0) + mvtmod._varint(2)
+    layer += mvtmod._len_delim(1, layer_name.encode("utf-8"))
+    layer += frame_features(
         ids, gtypes, geom_flat, geom_lens, tag_flat, tags_per_feat)
-    return layer_from_framed(
-        [feats], keys, values_framed, layer_name=layer_name, extent=extent)
+    for k in keys:
+        layer += mvtmod._len_delim(3, k.encode("utf-8"))
+    layer += values_framed
+    layer += mvtmod._tag(5, 0) + mvtmod._varint(extent)
+    return bytes(mvtmod._len_delim(3, bytes(layer)))
 
 
 def frame_features(ids: np.ndarray, gtypes: np.ndarray,
@@ -298,8 +300,8 @@ def frame_features(ids: np.ndarray, gtypes: np.ndarray,
                    tag_flat: np.ndarray, tags_per_feat: np.ndarray) -> bytes:
     """Columnar features + tag stream -> the concatenated, FRAMED
     ``Layer.features`` records (``0x12 | varint(len) | Feature``), fully
-    vectorized. The tag value indexes must already point into whatever
-    value table the final layer will carry."""
+    vectorized. The tag value indexes point into the layer's value
+    table."""
     n = len(ids)
     id_buf, id_lens = varints_np(ids.astype(np.uint64))
     tag_buf, tag_lens_each = varints_np(tag_flat.astype(np.uint64))
@@ -345,24 +347,6 @@ def frame_features(ids: np.ndarray, gtypes: np.ndarray,
     _scatter(buf, p + 1 + glen_lens, geom_flat, geom_lens)
 
     return buf.tobytes()
-
-
-def layer_from_framed(feats_parts: list[bytes], keys: list[str],
-                      values_framed: bytes,
-                      layer_name: str = "io.marauder.tank",
-                      extent: int = 4096) -> bytes:
-    """Pre-framed feature byte runs + ready key/value tables -> the tile
-    blob. Pure concatenation — the distributed encode's final stage."""
-    layer = bytearray()
-    layer += mvtmod._tag(15, 0) + mvtmod._varint(2)
-    layer += mvtmod._len_delim(1, layer_name.encode("utf-8"))
-    for part in feats_parts:
-        layer += part
-    for k in keys:
-        layer += mvtmod._len_delim(3, k.encode("utf-8"))
-    layer += values_framed
-    layer += mvtmod._tag(5, 0) + mvtmod._varint(extent)
-    return bytes(mvtmod._len_delim(3, bytes(layer)))
 
 
 def split_bytes(flat: np.ndarray, lens: np.ndarray) -> list[bytes]:
@@ -451,148 +435,3 @@ def merge_chunks(blobs) -> tuple[np.ndarray, np.ndarray, np.ndarray,
             remapped.append(out)
         props[name] = (np.concatenate(remapped), global_uniques)
     return keys, gtypes, geom_flat, geom_lens, props
-
-
-# ----------------------------------------------------- sub-tile merge tree
-#
-# A full-fidelity OVERVIEW tile (z < 9, unsampled) funnels every feature
-# into one assembly task. The O(features) numpy passes there are cheap;
-# what is NOT cheap is the per-unique Python value encoding (one
-# _encode_value call per distinct property value — ~600k for a double
-# column at sf0.1). The merge tree moves exactly that work into parallel
-# sub-merge tasks (chunks salted by key % NSUB), which emit payloads whose
-# value tables are already protobuf-encoded BYTES; the final task then
-# only concatenates arrays, dedups ready bytes, remaps indices
-# (vectorized), and varint-packs — O(blob) with numpy constants.
-
-def merge_chunks_sorted_encoded(blobs) -> bytes:
-    """Sub-merge task: stage-1 chunk blobs -> ONE merged payload, features
-    sorted by key, value tables deduped/sorted and pre-encoded to protobuf
-    Value bytes. Deterministic regardless of chunk arrival order."""
-    import pickle
-
-    keys, gtypes, geom_flat, geom_lens, props = merge_chunks(blobs)
-    order = np.argsort(keys, kind="stable")
-    geom_flat, geom_lens = reorder_var(geom_flat, geom_lens, order)
-    enc_props = {}
-    for name, (codes, uniques) in props.items():
-        enc_props[name] = (
-            codes[order].astype("<i4").tobytes(),
-            [mvtmod._encode_value(_pyval(u)) for u in uniques],
-        )
-    payload = {
-        "n": int(len(keys)),
-        "keys": keys[order].astype("<i8").tobytes(),
-        "gtypes": gtypes[order].astype("<i1").tobytes(),
-        "geom": geom_flat.tobytes(),
-        "geom_lens": geom_lens.astype("<i4").tobytes(),
-        "props": enc_props,
-    }
-    return pickle.dumps(payload, protocol=5)
-
-
-def merge_encoded(blobs) -> tuple[np.ndarray, np.ndarray, np.ndarray,
-                                  np.ndarray, dict]:
-    """Final task: merged payloads -> columnar arrays where each props
-    value is (codes, value_bytes) over a DEDUPED concatenation of the
-    payloads' pre-encoded value tables. Callers must pass ``blobs`` in a
-    deterministic order (the first-seen dedup order follows it)."""
-    import pickle
-
-    chunks = [pickle.loads(b) for b in blobs]
-    keys = np.concatenate([np.frombuffer(c["keys"], "<i8") for c in chunks])
-    gtypes = np.concatenate(
-        [np.frombuffer(c["gtypes"], "<i1") for c in chunks])
-    geom_flat = np.frombuffer(b"".join(c["geom"] for c in chunks), np.uint8)
-    geom_lens = np.concatenate(
-        [np.frombuffer(c["geom_lens"], "<i4") for c in chunks]).astype(np.int64)
-
-    props: dict[str, tuple[np.ndarray, list[bytes]]] = {}
-    names = list(chunks[0]["props"]) if chunks else []
-    for name in names:
-        table: dict[bytes, int] = {}
-        remapped = []
-        for c in chunks:
-            codes_b, vbytes = c["props"][name]
-            codes = np.frombuffer(codes_b, "<i4").astype(np.int64)
-            l2g = np.empty(len(vbytes), dtype=np.int64)
-            for i, vb in enumerate(vbytes):
-                g = table.get(vb)
-                if g is None:
-                    g = len(table)
-                    table[vb] = g
-                l2g[i] = g
-            out = np.full(len(codes), -1, dtype=np.int64)
-            m = codes >= 0
-            if m.any():
-                out[m] = l2g[codes[m]]
-            remapped.append(out)
-        props[name] = (np.concatenate(remapped), list(table))
-    return keys, gtypes, geom_flat, geom_lens, props
-
-
-# --------------------------------------------- global-dictionary tree path
-#
-# The merge-tree above still leaves O(features) framing work (varints,
-# tag packing) in the ONE final task. When the layer's property columns
-# have a bounded number of distinct values (checked before running — the
-# usual case: enum-ish kinds/tags, bucketed scores), the pipeline can
-# instead broadcast a GLOBAL value dictionary, frame every feature
-# completely in the parallel sub-merge stage, and reduce the final task
-# to a byte concatenation: header + framed-features runs + key/value
-# tables. That is O(blob) memcpy — the design that survives an unsampled
-# overview tile at 100 TB.
-
-def pack_chunk_codes(keys: np.ndarray, gtypes: np.ndarray, geom_objs,
-                     codes: dict[str, np.ndarray]) -> bytes:
-    """Chunk blob for the global-dictionary path: per-prop GLOBAL value
-    codes (int32, -1 = null) instead of per-chunk local value tables."""
-    import pickle
-
-    n = len(keys)
-    payload = {
-        "n": n,
-        "keys": keys.astype("<i8").tobytes(),
-        "gtypes": np.asarray(gtypes).astype("<i1").tobytes(),
-        "geom": b"".join(geom_objs),
-        "geom_lens": np.fromiter(map(len, geom_objs), "<i4", count=n).tobytes(),
-        "codes": {name: np.asarray(c).astype("<i4").tobytes()
-                  for name, c in codes.items()},
-    }
-    return pickle.dumps(payload, protocol=5)
-
-
-def submerge_frame(blobs, dict_sizes: dict[str, int]) -> tuple[int, bytes]:
-    """Sub-merge task, global-dictionary path: code-chunk blobs -> (number
-    of features, fully-framed ``Layer.features`` bytes), features sorted
-    by key. Tag value indexes = global code + the column's base offset in
-    the concatenated global value table (``dict_sizes`` iteration order
-    defines both key_ix and base)."""
-    import pickle
-
-    chunks = [pickle.loads(b) for b in blobs]
-    keys = np.concatenate([np.frombuffer(c["keys"], "<i8") for c in chunks])
-    gtypes = np.concatenate(
-        [np.frombuffer(c["gtypes"], "<i1") for c in chunks])
-    geom_flat = np.frombuffer(b"".join(c["geom"] for c in chunks), np.uint8)
-    geom_lens = np.concatenate(
-        [np.frombuffer(c["geom_lens"], "<i4") for c in chunks]).astype(np.int64)
-
-    order = np.argsort(keys, kind="stable")
-    keys = keys[order]
-    gtypes = gtypes[order]
-    geom_flat, geom_lens = reorder_var(geom_flat, geom_lens, order)
-
-    cols = []
-    base = 0
-    for key_ix, (name, size) in enumerate(dict_sizes.items()):
-        codes = np.concatenate(
-            [np.frombuffer(c["codes"][name], "<i4") for c in chunks]
-        ).astype(np.int64)[order]
-        mask = codes >= 0
-        cols.append((key_ix, base + codes, mask))
-        base += size
-    tag_flat, per_feat = _interleave_tags(cols, len(keys))
-    feats = frame_features(
-        keys, gtypes, geom_flat, geom_lens, tag_flat, per_feat)
-    return len(keys), feats

@@ -2,22 +2,27 @@
 a distributed Arrow-vectorized pipeline (reference application.kt:420-467,
 SURVEY.md §2.3 T1e-T1j).
 
-Spark shape (batch path): tile requests equi-join the feature table on
-the Morton-prefix block id (one BroadcastHashJoin per zoom band — never
-a nested-loop range join); a map-only ``mapInPandas`` geometry stage
-parses/projects/clips/command-encodes features on every input partition
-and packs columnar chunks; a per-tile ``applyInPandas`` assembly stage
-merges the chunks and emits the protobuf layer through the vectorized
-assembler (geom/mvt_np.py). This is the one place SQL genuinely can't
-express the semantics (stateful polygon clipping + protobuf encoding),
-so it's isolated here per SURVEY.md §7.3.
+One geometry encoder, :func:`_encode_rows`, parses, projects, clips,
+transforms and command-encodes feature rows against their request tile.
+Both tile paths call it:
 
-At 100 TB: geometry work scales with input partitions (map-only, no
-driver involvement); the per-tile shuffle moves #arrow-batches compact
-binary chunks, not per-feature rows; assembly parallelism = #tiles and
-each output blob is bounded. The single-group scalar kernel
-(``make_tile_kernel``) remains for one-tile serving (api.Tank.tile_mvt)
-and as the decode-parity reference for the distributed path.
+* the batch path (:func:`mvt_tiles_for`): tile requests equi-join the
+  feature table on the Morton-prefix block id (one BroadcastHashJoin per
+  zoom band — never a nested-loop range join); a map-only
+  ``mapInPandas`` geometry stage encodes every input partition and packs
+  one columnar chunk per (tile, Arrow batch); a per-tile
+  ``applyInPandas`` assembly merges the chunks and frames the protobuf
+  layer with the vectorized assembler (geom/mvt_np.py);
+* the single-tile kernel (``make_tile_kernel``, api.Tank.tile_mvt and
+  the decode-parity reference for the batch path), which feeds the
+  encoded rows to ``mvt.encode``.
+
+This is the one place SQL genuinely can't express the semantics
+(stateful polygon clipping + protobuf encoding), so it's isolated here
+per SURVEY.md §7.3. Geometry work scales with input partitions; the
+per-tile shuffle moves #arrow-batches compact binary chunks, not
+per-feature rows; assembly parallelism = #tiles, and the serving policy
+bounds every over-budget tile by a per-tile sample.
 
 Reference constants: extent 4096, buffer 64 (application.conf:33-36);
 layer name io.marauder.tank (application.conf:31); heatmap cells carry a
@@ -40,6 +45,7 @@ from tank_spark.operators.heatmap import grid_n, heatmap_oracle
 from tank_spark.operators.tiles import OVERVIEW_FEATURE_BUDGET, tile_hash_range
 from tank_spark.plans.registry import register
 from tank_spark.sources.features import HASH_LEVEL, features_df
+from tank_spark.util import ensure_workers_have_package, local_values_df
 
 EXTEND = 4096
 BUFFER = 64
@@ -224,11 +230,11 @@ def _pyprop(v):
 def _tile_kernel_impl(pdf: pd.DataFrame, layer: str) -> pd.DataFrame:
     """Kernel for one (z, x, y) group: rows with WKT + props -> one MVT.
 
-    Points (the dominant geometry) run a fully-vectorized numpy path:
-    regex coordinate extraction, batch mercator projection, mask clip,
-    integer transform — measured ~20x faster than per-row WKT parsing on
-    a 600k-point overview tile. Lines/polygons take the general per-row
-    clip path.
+    The rows go through the shared geometry encoder and the pre-encoded
+    features through ``mvt.encode``, in key order (ties: points first,
+    then the other geometries, each in input order). A null property
+    (None, or the NaN pandas makes of a null number) gets no tag, as on
+    the batch path.
 
     Property columns are whatever non-core columns arrive — the caller
     (api.Tank.tile_mvt) selects the layer's DECLARED attributes, so a
@@ -241,74 +247,20 @@ def _tile_kernel_impl(pdf: pd.DataFrame, layer: str) -> pd.DataFrame:
     z = int(pdf["z"].iloc[0])
     x = int(pdf["x"].iloc[0])
     y = int(pdf["y"].iloc[0])
-    z2 = 1 << z
-    k1 = 0.5 * BUFFER / EXTEND
-    xmin, ymin = (x - k1) / z2, (y - k1) / z2
-    xmax, ymax = (x + 1 + k1) / z2, (y + 1 + k1) / z2
     prop_cols = [c for c in pdf.columns if c not in _CORE_COLUMNS]
-
-    # rows lacking geometry or key can't be rendered/keyed — skip them
-    # instead of crashing the whole tile (legacy/partial appends)
-    pdf = pdf[pdf["geometry"].notna() & pdf["key"].notna()]
     # deterministic encode order (pandas group order is partition-dependent)
-    pdf = pdf.sort_values("key")
-
-    is_point, coords_pt = _extract_re_np(pdf["geometry"].to_numpy(), _POINT_RE)
-
-    feats = []
-
-    # ---- vectorized point path
-    if is_point.any():
-        pts = pdf.loc[is_point]
-        lon = coords_pt[0][is_point].astype(np.float64)
-        lat = coords_pt[1][is_point].astype(np.float64)
-        wx, wy = tilemath.project_np(lon, lat)
-        keep = (wx >= xmin) & (wx <= xmax) & (wy >= ymin) & (wy <= ymax)
-        ix = np.rint((wx[keep] * z2 - x) * EXTEND).astype(np.int64)
-        iy = np.rint((wy[keep] * z2 - y) * EXTEND).astype(np.int64)
-        kept = pts.loc[keep]
-        prop_arrays = [(c, kept[c].to_numpy()) for c in prop_cols]
-        for i, (px, py, key) in enumerate(
-            zip(ix, iy, kept["key"].to_numpy())
-        ):
-            feats.append({
-                "geom_type": "Point", "coords": [int(px), int(py)],
-                "id": int(key),
-                "props": {c: _pyprop(arr[i]) for c, arr in prop_arrays},
-            })
-
-    # ---- general path for non-point geometries
-    for row in pdf.loc[~is_point].itertuples(index=False):
-        try:
-            gtype, coords = wkt.loads(row.geometry)
-        except ValueError:
-            continue  # unparseable geometry -> skip (dead-letter at ingest)
-        proj = _project_geom(gtype, coords)
-        clipped = clipmod.clip(proj[0], proj[1], xmin, ymin, xmax, ymax)
-        if clipped is None:
-            continue
-        t, c = clipped
-
-        def tx(p):
-            return [round((p[0] * z2 - x) * EXTEND), round((p[1] * z2 - y) * EXTEND)]
-
-        if t == "Point":
-            c2 = tx(c)
-        elif t in ("LineString", "MultiPoint"):
-            c2 = [tx(p) for p in c]
-        elif t in ("Polygon", "MultiLineString"):
-            c2 = [[tx(p) for p in part] for part in c]
-        else:  # MultiPolygon
-            c2 = [[[tx(p) for p in ring] for ring in poly] for poly in c]
-        feats.append({
-            "geom_type": t, "coords": c2, "id": int(row.key),
-            "props": {col: _pyprop(getattr(row, col)) for col in prop_cols},
-        })
-
-    # fast path appended points after other geometries would break the
-    # deterministic key order: restore it
-    feats.sort(key=lambda f: f["id"])
-
+    enc = _encode_rows(pdf.sort_values("key"), prop_cols)
+    order = np.argsort(enc["key"].to_numpy(), kind="stable")
+    enc = enc.iloc[order]
+    props = [(c, enc[c].to_numpy(), enc[c].notna().to_numpy())
+             for c in prop_cols]
+    feats = [
+        {"id": int(key), "gtype": int(gtype), "geom": geom,
+         "props": {c: _pyprop(vals[i]) for c, vals, ok in props if ok[i]}}
+        for i, (key, gtype, geom) in enumerate(zip(
+            enc["key"].to_numpy(), enc["gtype"].to_numpy(),
+            enc["geom"].to_numpy()))
+    ]
     blob = mvtmod.encode(feats, layer_name=layer, extent=EXTEND)
     return pd.DataFrame([{
         "z": z, "x": x, "y": y, "n_features": len(feats),
@@ -334,14 +286,6 @@ def _project_geom(gtype: str, coords):
     return gtype, [
         [[list(pj(p[0], p[1])) for p in ring] for ring in poly] for poly in coords
     ]
-
-
-OVERVIEW_ZOOM = 9       # tree-path routing boundary ONLY: UNSAMPLED tiles
-                        # below this zoom funnel the whole table into one
-                        # assembly group and go through the merge tree.
-                        # Sampling itself is NOT zoom-gated — the per-tile
-                        # feature budget applies at EVERY zoom (see
-                        # overview_sample_mods / mvt_tiles_for docstrings).
 
 
 def _sample_mods_list(spark: SparkSession, feats: DataFrame,
@@ -382,48 +326,10 @@ def _sample_mods_list(spark: SparkSession, feats: DataFrame,
     return cache.cached("mvt.mods", key, build)
 
 
-def overview_sample_mods(spark: SparkSession, feats: DataFrame,
-                         ov_reqs: list[tuple[int, int, int]]) -> DataFrame:
-    """DataFrame face of :func:`_sample_mods_list` (kept for tests/API)."""
-    return _tiny_df(spark, _sample_mods_list(spark, feats, ov_reqs),
-                    "z int, x int, y int, mod long")
-
-
-def _tiny_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
-    """A driver-list DataFrame as a JVM LocalRelation — zero-task
-    broadcasts/unions for request batches, sentinels and sampling mods
-    (measured: the five per-band request broadcasts of a batch serve
-    burned seconds of Python-RDD scheduling). See util.local_values_df."""
-    from tank_spark.util import local_values_df
-
-    return local_values_df(spark, rows, schema)
-
-# stage-1 output: one packed columnar chunk per (tile, sub-group, arrow
-# batch) — the per-tile assembly group receives #batches compact rows, not
-# #features (the per-row shuffle + Arrow serialization dominated at
-# overview sizes). ``sub`` is the merge-tree fan-out salt (key % NSUB for
-# the tree path, constant 0 for the direct path).
-GEOM_STAGE_SCHEMA = "z int, x int, y int, sub int, chunk binary"
-
-# merge-tree fan-out: a full-fidelity overview tile's value-table encoding
-# runs as NSUB parallel sub-merge tasks instead of one assembly task
-NSUB = 16
-
-
-def range_sub_assign(bkeys, kmin: int, span: int, n_sub: int):
-    """Contiguous-range sub-group assignment for the merge tree, ordering-
-    preserving and int64-overflow-free: divide by a fixed bucket width
-    instead of multiplying first ((bkeys - kmin) * n_sub wraps for key
-    domains wider than 2^63/n_sub — e.g. hash-derived keys in a custom
-    attr_fields layer — which would scramble the final concat order).
-    The offset itself is computed in uint64: a full-width int64 domain's
-    (key - kmin) exceeds int64 too, but the true difference is always
-    < 2^64, so mod-2^64 wraparound arithmetic is exact."""
-    import numpy as np
-
-    bucket_w = np.uint64((span + n_sub - 1) // n_sub)
-    off = bkeys.astype(np.uint64) - np.uint64(np.int64(kmin).view(np.uint64))
-    return np.minimum(off // bucket_w, n_sub - 1).astype(np.int64)
+# stage-1 output: one packed columnar chunk per (tile, arrow batch) — the
+# per-tile assembly group receives #batches compact rows, not #features
+# (the per-row shuffle + Arrow serialization dominated at overview sizes)
+GEOM_STAGE_SCHEMA = "z int, x int, y int, chunk binary"
 
 
 def _request_join(spark: SparkSession, feats: DataFrame,
@@ -439,11 +345,10 @@ def _request_join(spark: SparkSession, feats: DataFrame,
     the parquet/cached scan still prunes on the hash range.
     """
     from tank_spark.geom import morton
-    from tank_spark.sources.features import HASH_LEVEL
 
     if not requests:
         # empty batch -> empty result with the joined schema, not IndexError
-        req_df = _tiny_df(spark, [], "z int, x int, y int, blk long")
+        req_df = local_values_df(spark, [], "z int, x int, y int, blk long")
         return (
             feats.filter(F.lit(False))
             .withColumn("blk", F.col("hash"))
@@ -462,7 +367,7 @@ def _request_join(spark: SparkSession, feats: DataFrame,
 
     parts = []
     for d, reqs in bands.items():
-        req_df = _tiny_df(spark, reqs, "z int, x int, y int, blk long")
+        req_df = local_values_df(spark, reqs, "z int, x int, y int, blk long")
         lo = min(b << (2 * d) for *_, b in reqs)
         hi = max(((b + 1) << (2 * d)) - 1 for *_, b in reqs)
         part = (
@@ -482,209 +387,164 @@ def _request_join(spark: SparkSession, feats: DataFrame,
 DEFAULT_PROPS = ("kind", "score", "cnt", "tag")
 
 
-def make_geom_stage(prop_cols: tuple[str, ...] = DEFAULT_PROPS,
-                    n_sub: int = 1,
-                    dicts: dict[str, list] | None = None,
-                    key_bounds: tuple[int, int] | None = None):
+def _encode_rows(pdf: pd.DataFrame, prop_cols) -> pd.DataFrame:
+    """The one geometry encoder: feature rows (z, x, y, key, geometry WKT,
+    props) -> parse -> project -> clip to the row's buffered request tile
+    -> transform -> command-encode. Returns the columns z, x, y, key,
+    gtype, geom (command-stream bytes), *prop_cols: points first, then
+    the other geometries, each in input order. Rows lacking geometry or
+    key, unparseable WKT and geometries clipped away are dropped.
+
+    Points take a fully-vectorized numpy path (regex coordinate
+    extraction, batch mercator projection, mask clip, integer transform —
+    ~20x per-row WKT parsing on a 600k-point overview tile); simple
+    fully-inside lines and rings take ``_fast_nonpoint``; everything
+    else runs the general per-row clip."""
+    import numpy as np
+
+    cols = ["z", "x", "y", "key", "gtype", "geom", *prop_cols]
+    # rows lacking geometry or key can't be rendered/keyed — skip them
+    # instead of crashing the tile (legacy/partial appends)
+    pdf = pdf[pdf["geometry"].notna() & pdf["key"].notna()]
+    if not len(pdf):
+        return pd.DataFrame(columns=cols)
+    z = pdf["z"].to_numpy()
+    x = pdf["x"].to_numpy()
+    y = pdf["y"].to_numpy()
+    z2 = (1 << z.astype(np.int64)).astype(np.float64)
+    k1 = 0.5 * BUFFER / EXTEND
+    xmin, ymin = (x - k1) / z2, (y - k1) / z2
+    xmax, ymax = (x + 1 + k1) / z2, (y + 1 + k1) / z2
+
+    is_point, coords_pt = _extract_re_np(pdf["geometry"].to_numpy(), _POINT_RE)
+
+    out_parts = []
+
+    if is_point.any():
+        lon = coords_pt[0][is_point].astype(np.float64)
+        lat = coords_pt[1][is_point].astype(np.float64)
+        wx, wy = tilemath.project_np(lon, lat)
+        m = is_point.copy()
+        keep = (
+            (wx >= xmin[is_point]) & (wx <= xmax[is_point])
+            & (wy >= ymin[is_point]) & (wy <= ymax[is_point])
+        )
+        m[is_point] = keep
+        ix = np.rint((wx[keep] * z2[m] - x[m]) * EXTEND).astype(np.int64)
+        iy = np.rint((wy[keep] * z2[m] - y[m]) * EXTEND).astype(np.int64)
+        gbuf, glens = mvt_np.encode_point_geoms(ix, iy)
+        kept = pdf.loc[m]
+        out_parts.append(pd.DataFrame({
+            "z": kept["z"].to_numpy(), "x": kept["x"].to_numpy(),
+            "y": kept["y"].to_numpy(), "key": kept["key"].to_numpy(),
+            "gtype": np.full(int(m.sum()), 1, dtype=np.int32),
+            "geom": mvt_np.split_bytes(gbuf, glens),
+            **{c: kept[c].to_numpy() for c in prop_cols},
+        }))
+
+    gen = pdf.loc[~is_point]
+    if len(gen):
+        gen = gen.reset_index(drop=True)
+        # vectorized fast path: simple fully-inside lines/rings
+        # (bit-identical to the loop below); leftovers per-row
+        handled, fgt, fgm = _fast_nonpoint(gen, k1)
+        slow = gen if not handled.any() else gen.loc[~handled]
+        rows = []
+        for pos, row in zip(slow.index.to_numpy(),
+                            slow.itertuples(index=False)):
+            try:
+                gtype, coords = wkt.loads(row.geometry)
+            except ValueError:
+                continue  # unparseable geometry (dead-letter at ingest)
+            rz2 = 1 << int(row.z)
+            bxmin, bymin = (row.x - k1) / rz2, (row.y - k1) / rz2
+            bxmax, bymax = (row.x + 1 + k1) / rz2, (row.y + 1 + k1) / rz2
+            proj = _project_geom(gtype, coords)
+            clipped = clipmod.clip(proj[0], proj[1], bxmin, bymin, bxmax, bymax)
+            if clipped is None:
+                continue
+            t, c = clipped
+
+            def tx(p, _z2=rz2, _x=row.x, _y=row.y):
+                return [round((p[0] * _z2 - _x) * EXTEND),
+                        round((p[1] * _z2 - _y) * EXTEND)]
+
+            if t == "Point":
+                c2 = tx(c)
+            elif t in ("LineString", "MultiPoint"):
+                c2 = [tx(p) for p in c]
+            elif t in ("Polygon", "MultiLineString"):
+                c2 = [[tx(p) for p in part] for part in c]
+            else:
+                c2 = [[[tx(p) for p in ring] for ring in poly] for poly in c]
+            rows.append((pos, row.z, row.x, row.y, row.key,
+                         mvtmod.GEOM_TYPES[t], mvtmod.geometry_bytes(t, c2),
+                         *[getattr(row, col) for col in prop_cols]))
+        parts_g = []
+        if handled.any():
+            fdf = gen.loc[handled, ["z", "x", "y", "key", *prop_cols]].copy()
+            fdf["gtype"] = fgt[handled]
+            fdf["geom"] = fgm[handled]
+            fdf["_pos"] = np.where(handled)[0]
+            parts_g.append(fdf[["_pos", *cols]])
+        if rows:
+            parts_g.append(pd.DataFrame(rows, columns=["_pos", *cols]))
+        if parts_g:
+            merged = pd.concat(parts_g, ignore_index=True)
+            # restore the input row order the per-row path produced
+            merged = merged.sort_values("_pos", kind="stable")
+            out_parts.append(merged[cols])
+
+    if not out_parts:
+        return pd.DataFrame(columns=cols)
+    return pd.concat(out_parts, ignore_index=True)
+
+
+def make_geom_stage(prop_cols: tuple[str, ...] = DEFAULT_PROPS):
     """Build the mapInPandas stage-1 function bound to a property-column
-    list: project -> clip -> transform -> command-encode every feature
-    against its request tile. Map-only (no shuffle), runs on every input
+    list: :func:`_encode_rows` on every Arrow batch, then one packed
+    columnar chunk per tile. Map-only (no shuffle), runs on every input
     partition in parallel — the per-tile funnel only sees pre-encoded
-    compact bytes. Points take a fully-vectorized numpy path;
-    lines/polygons run the general per-row clip.
-
-    ``prop_cols`` is whatever attribute schema the layer declares — the
-    batch path serves custom ``attr_fields`` layers through the same
-    code as the default benchmark table. ``n_sub`` > 1 salts chunks by
-    key % n_sub so the merge tree can sub-merge them in parallel.
-
-    ``dicts`` switches chunks to the GLOBAL-dictionary format: prop
-    values resolve to broadcast dictionary codes here (pack_chunk_codes),
-    so downstream stages never build value tables. ``key_bounds``
-    = (kmin, span) then assigns ``sub`` by contiguous key RANGE instead
-    of modulo — sub-merges each sort locally and the final stage's
-    sub-order concatenation is globally key-sorted."""
+    compact bytes. ``prop_cols`` is whatever attribute schema the layer
+    declares, so custom ``attr_fields`` layers serve through the same
+    code as the default benchmark table."""
     prop_cols = tuple(prop_cols)
 
     def geom_stage(iterator):
         import numpy as np
 
-        from tank_spark.geom import mvt_np
-
         for pdf in iterator:
-            # rows lacking geometry or key can't be rendered/keyed — skip
-            # them instead of crashing the tile (legacy/partial appends)
-            pdf = pdf[pdf["geometry"].notna() & pdf["key"].notna()]
-            if not len(pdf):
+            batch = _encode_rows(pdf, prop_cols)
+            if not len(batch):
                 continue
-            z = pdf["z"].to_numpy()
-            x = pdf["x"].to_numpy()
-            y = pdf["y"].to_numpy()
-            z2 = (1 << z.astype(np.int64)).astype(np.float64)
-            k1 = 0.5 * BUFFER / EXTEND
-            xmin, ymin = (x - k1) / z2, (y - k1) / z2
-            xmax, ymax = (x + 1 + k1) / z2, (y + 1 + k1) / z2
-
-            is_point, coords_pt = _extract_re_np(
-                pdf["geometry"].to_numpy(), _POINT_RE)
-
-            out_parts = []
-
-            if is_point.any():
-                lon = coords_pt[0][is_point].astype(np.float64)
-                lat = coords_pt[1][is_point].astype(np.float64)
-                wx, wy = tilemath.project_np(lon, lat)
-                m = is_point.copy()
-                keep = (
-                    (wx >= xmin[is_point]) & (wx <= xmax[is_point])
-                    & (wy >= ymin[is_point]) & (wy <= ymax[is_point])
-                )
-                m[is_point] = keep
-                ix = np.rint((wx[keep] * z2[m] - x[m]) * EXTEND).astype(np.int64)
-                iy = np.rint((wy[keep] * z2[m] - y[m]) * EXTEND).astype(np.int64)
-                gbuf, glens = mvt_np.encode_point_geoms(ix, iy)
-                kept = pdf.loc[m]
-                out_parts.append(pd.DataFrame({
-                    "z": kept["z"].to_numpy(), "x": kept["x"].to_numpy(),
-                    "y": kept["y"].to_numpy(), "key": kept["key"].to_numpy(),
-                    "gtype": np.full(int(m.sum()), 1, dtype=np.int32),
-                    "geom": mvt_np.split_bytes(gbuf, glens),
-                    **{c: kept[c].to_numpy() for c in prop_cols},
-                }))
-
-            gen = pdf.loc[~is_point]
-            if len(gen):
-                gen = gen.reset_index(drop=True)
-                # vectorized fast path: simple fully-inside lines/rings
-                # (bit-identical to the loop below); leftovers per-row
-                handled, fgt, fgm = _fast_nonpoint(gen, k1)
-                slow = gen if not handled.any() else gen.loc[~handled]
-                rows = []
-                for pos, row in zip(slow.index.to_numpy(),
-                                    slow.itertuples(index=False)):
-                    if row.geometry is None or row.key is None:
-                        continue
-                    try:
-                        gtype, coords = wkt.loads(row.geometry)
-                    except ValueError:
-                        continue  # unparseable geometry (dead-letter at ingest)
-                    rz2 = 1 << int(row.z)
-                    bxmin, bymin = (row.x - k1) / rz2, (row.y - k1) / rz2
-                    bxmax, bymax = (row.x + 1 + k1) / rz2, (row.y + 1 + k1) / rz2
-                    proj = _project_geom(gtype, coords)
-                    clipped = clipmod.clip(proj[0], proj[1], bxmin, bymin, bxmax, bymax)
-                    if clipped is None:
-                        continue
-                    t, c = clipped
-
-                    def tx(p, _z2=rz2, _x=row.x, _y=row.y):
-                        return [round((p[0] * _z2 - _x) * EXTEND),
-                                round((p[1] * _z2 - _y) * EXTEND)]
-
-                    if t == "Point":
-                        c2 = tx(c)
-                    elif t in ("LineString", "MultiPoint"):
-                        c2 = [tx(p) for p in c]
-                    elif t in ("Polygon", "MultiLineString"):
-                        c2 = [[tx(p) for p in part] for part in c]
-                    else:
-                        c2 = [[[tx(p) for p in ring] for ring in poly] for poly in c]
-                    cmds = mvtmod._encode_geometry(t, c2)
-                    geom = b"".join(mvtmod._varint(cc) for cc in cmds)
-                    rows.append((pos, row.z, row.x, row.y, row.key,
-                                 mvtmod.GEOM_TYPES[t], geom,
-                                 *[getattr(row, col) for col in prop_cols]))
-                cols = ["z", "x", "y", "key", "gtype", "geom", *prop_cols]
-                parts_g = []
-                if handled.any():
-                    fdf = gen.loc[handled,
-                                  ["z", "x", "y", "key", *prop_cols]].copy()
-                    fdf["gtype"] = fgt[handled]
-                    fdf["geom"] = fgm[handled]
-                    fdf["_pos"] = np.where(handled)[0]
-                    parts_g.append(fdf[["_pos", *cols]])
-                if rows:
-                    parts_g.append(pd.DataFrame(rows, columns=["_pos", *cols]))
-                if parts_g:
-                    merged = pd.concat(parts_g, ignore_index=True)
-                    # restore the input row order the per-row path produced
-                    merged = merged.sort_values("_pos", kind="stable")
-                    out_parts.append(merged[cols])
-
-            if not out_parts:
-                continue
-            batch = pd.concat(out_parts, ignore_index=True)
-            bkeys = batch["key"].to_numpy().astype(np.int64)
-            if n_sub > 1 and key_bounds is not None:
-                kmin, span = key_bounds
-                batch["sub"] = range_sub_assign(bkeys, kmin, span, n_sub)
-            elif n_sub > 1:
-                batch["sub"] = bkeys % n_sub
-            else:
-                batch["sub"] = 0
-            # pack one columnar chunk per (tile, sub) in this arrow batch
-            packed = []
-            for (bz, bx, by, bs), grp in batch.groupby(
-                ["z", "x", "y", "sub"], sort=False
-            ):
-                if dicts is not None:
-                    codes = {}
-                    for c in prop_cols:
-                        cd = pd.Categorical(grp[c], categories=dicts[c]).codes
-                        # a non-null value absent from the broadcast
-                        # dictionary means the dictionary is stale (data
-                        # regenerated under a memoized plan) — failing
-                        # loudly beats silently dropping the property tag
-                        bad = (cd < 0) & grp[c].notna().to_numpy()
-                        if bad.any():
-                            raise ValueError(
-                                f"prop {c!r}: {int(bad.sum())} value(s) "
-                                "absent from the global dictionary — "
-                                "stale dictionary cache?")
-                        codes[c] = cd
-                    blob = mvt_np.pack_chunk_codes(
-                        grp["key"].to_numpy().astype(np.int64),
-                        grp["gtype"].to_numpy(),
-                        grp["geom"].to_numpy(),
-                        codes,
-                    )
-                else:
-                    blob = mvt_np.pack_chunk(
-                        grp["key"].to_numpy().astype(np.int64),
-                        grp["gtype"].to_numpy(),
-                        grp["geom"].to_numpy(),
-                        {c: grp[c] for c in prop_cols},
-                    )
-                packed.append((int(bz), int(bx), int(by), int(bs), blob))
-            yield pd.DataFrame(
-                packed, columns=["z", "x", "y", "sub", "chunk"]
-            )
+            packed = [
+                (int(bz), int(bx), int(by), mvt_np.pack_chunk(
+                    grp["key"].to_numpy().astype(np.int64),
+                    grp["gtype"].to_numpy(), grp["geom"].to_numpy(),
+                    {c: grp[c] for c in prop_cols}))
+                for (bz, bx, by), grp in batch.groupby(
+                    ["z", "x", "y"], sort=False)
+            ]
+            yield pd.DataFrame(packed, columns=["z", "x", "y", "chunk"])
 
     return geom_stage
-
-
-# default-props stage (the registered batch queries and tests use this)
-_geom_stage = make_geom_stage()
 
 
 def make_assemble_kernel(layer: str = LAYER):
     """Stage-2 applyInPandas kernel: one (z,x,y) group of packed chunks ->
     one MVT blob. Merges the chunks' columnar arrays (global value-table
     remap), sorts by key for determinism, and runs the vectorized
-    assembler — pure numpy end-to-end."""
+    assembler — pure numpy end-to-end. The per-request sentinel chunk is
+    null, so an empty tile encodes in the same pass."""
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         import hashlib
 
         import numpy as np
 
-        from tank_spark.geom import mvt_np
-
         z = int(pdf["z"].iloc[0])
         x = int(pdf["x"].iloc[0])
         y = int(pdf["y"].iloc[0])
-        # the per-request sentinel (null chunk) only guarantees this group
-        # exists so empty tiles encode in the same single pass
         blobs = [b for b in pdf["chunk"] if b is not None]
         n_features = 0
         if not blobs:
@@ -709,75 +569,6 @@ def make_assemble_kernel(layer: str = LAYER):
     return kernel
 
 
-_assemble_kernel = make_assemble_kernel()
-
-
-def _submerge_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Merge-tree middle stage: one (z,x,y,sub) group of stage-1 chunks ->
-    one merged payload with the value tables already protobuf-encoded.
-    Runs NSUB-way parallel per tile — this is where the per-unique Python
-    value encoding (the old single-task assembly's serial cost) happens."""
-    from tank_spark.geom import mvt_np
-
-    return pd.DataFrame([{
-        "z": int(pdf["z"].iloc[0]), "x": int(pdf["x"].iloc[0]),
-        "y": int(pdf["y"].iloc[0]), "sub": int(pdf["sub"].iloc[0]),
-        "chunk": mvt_np.merge_chunks_sorted_encoded(list(pdf["chunk"])),
-    }])
-
-
-def make_tree_final_kernel(layer: str = LAYER):
-    """Merge-tree final stage: concatenate <= NSUB pre-encoded payloads
-    into the tile blob. O(blob) numpy work — byte-table dedup + vectorized
-    index remap + varint framing; no per-value Python encoding left."""
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        import hashlib
-
-        import numpy as np
-
-        from tank_spark.geom import mvt_np
-
-        z = int(pdf["z"].iloc[0])
-        x = int(pdf["x"].iloc[0])
-        y = int(pdf["y"].iloc[0])
-        # deterministic blob: payload order = sub order (arrival order is
-        # shuffle-dependent); the sentinel row (null chunk) sorts first
-        pdf = pdf.sort_values("sub")
-        blobs = [b for b in pdf["chunk"] if b is not None]
-        n_features = 0
-        if not blobs:
-            blob = mvtmod.encode([], layer_name=layer, extent=EXTEND)
-        else:
-            keys, gtypes, geom_flat, geom_lens, props = (
-                mvt_np.merge_encoded(blobs)
-            )
-            n_features = len(keys)
-            order = np.argsort(keys, kind="stable")
-            geom_flat, geom_lens = mvt_np.reorder_var(geom_flat, geom_lens, order)
-            props = {name: (codes[order], vbytes)
-                     for name, (codes, vbytes) in props.items()}
-            blob = mvt_np.assemble_layer(
-                keys[order], gtypes[order], geom_flat, geom_lens, props,
-                layer_name=layer, extent=EXTEND,
-            )
-        return pd.DataFrame([{
-            "z": z, "x": x, "y": y, "n_features": n_features,
-            "mvt_size": len(blob), "mvt_md5": hashlib.md5(blob).hexdigest(),
-            "mvt": blob,
-        }])
-
-    return kernel
-
-
-# global-dictionary tree path: per-sub FRAMED feature bytes + counts
-TREE_FRAMED_SCHEMA = "z int, x int, y int, sub int, n long, chunk binary"
-
-# a layer value table larger than this stops being a dictionary — fall
-# back to the merge-tree path that builds value tables bottom-up
-DICT_CAP = 65536
-
-
 def _input_fingerprint(df: DataFrame) -> tuple:
     """(paths, fingerprint) of the plan's underlying data files. A plan's
     semanticHash does NOT change when the parquet files it reads are
@@ -787,121 +578,6 @@ def _input_fingerprint(df: DataFrame) -> tuple:
 
     paths = tuple(urlparse(u).path or u for u in sorted(df.inputFiles()))
     return paths, cache.fingerprint(*paths)
-
-
-def _collect_global_dicts(joined: DataFrame, prop_cols: tuple[str, ...],
-                          cap: int = DICT_CAP, memo_key: tuple | None = None):
-    """ONE aggregation job -> (per-column sorted distinct values, key
-    min, key span) for the requests' feature set — the broadcast value
-    dictionary of the concat-only tree path. Dictionary part is None when
-    any column exceeds ``cap`` distinct values OR contains float NaN
-    (collect_set keeps NaN — it is not null — and NaN can't be a
-    Categorical category; such a column falls back to the bottom-up
-    value-table merge). collect_set aggregates are parallel with bounded
-    driver transfer (sliced at cap+1); at 100 TB this is the same pattern
-    as building a parquet dictionary page. Memoized so repeated serves of
-    the same request batch skip the stats job, while regenerating the
-    underlying parquet invalidates the entry. Callers that can name their
-    inputs pass ``memo_key`` built from STABLE parts (the cached feature
-    plan's semanticHash + file fingerprint + the request/mod lists) — the
-    default key hashes the per-serve ``joined`` plan, whose embedded
-    request parallelization gets a fresh RDD id every build, so its
-    semanticHash never repeats and the memo never hit (measured: the
-    stats agg re-ran ~0.7 s on every overview serve)."""
-    if memo_key is None:
-        memo_key = (joined._jdf.queryExecution().analyzed().semanticHash(),
-                    _input_fingerprint(joined))
-    key = (joined.sparkSession.sparkContext.applicationId,
-           *memo_key, prop_cols, cap)
-    return cache.cached("mvt.dicts", key,
-                        lambda: _global_dicts(joined, prop_cols, cap))
-
-
-def _global_dicts(joined: DataFrame, prop_cols: tuple[str, ...], cap: int):
-    row = joined.agg(
-        *[F.slice(F.sort_array(F.collect_set(c)), 1, cap + 1).alias(c)
-          for c in prop_cols],
-        F.min("key").alias("_kmin"), F.max("key").alias("_kmax"),
-    ).first()
-    dicts: dict[str, list] | None = {}
-    for c in prop_cols:
-        vals = list(row[c])
-        if len(vals) > cap:
-            dicts = None
-            break
-        if any(isinstance(v, float) and v != v for v in vals):
-            dicts = None       # NaN present -> dictionary-ineligible
-            break
-        dicts[c] = vals            # sort_array already ordered them
-    kmin = 0 if row["_kmin"] is None else int(row["_kmin"])
-    span = max((0 if row["_kmax"] is None else int(row["_kmax"])) - kmin + 1, 1)
-    return dicts, kmin, span
-
-
-def _dict_values_array(vals: list):
-    """Dictionary values -> numpy array with the dtype frame_values
-    expects (numeric kinds vectorize; strings go through the scalar
-    value encoder)."""
-    import numpy as np
-
-    if vals and all(isinstance(v, bool) for v in vals):
-        return np.array(vals, dtype=bool)
-    if vals and all(isinstance(v, int) and not isinstance(v, bool)
-                    for v in vals):
-        return np.array(vals, dtype=np.int64)
-    if vals and all(isinstance(v, float) for v in vals):
-        return np.array(vals, dtype=np.float64)
-    return np.array(vals, dtype=object)
-
-
-def make_submerge_frame_kernel(dict_sizes: dict[str, int]):
-    """Sub-merge, global-dictionary path: this sub's code-chunks -> ONE
-    row carrying the fully-framed (key-sorted) Layer.features bytes and
-    the feature count. All per-feature work ends here, NSUB-way parallel."""
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        from tank_spark.geom import mvt_np
-
-        n, feats = mvt_np.submerge_frame(list(pdf["chunk"]), dict_sizes)
-        return pd.DataFrame([{
-            "z": int(pdf["z"].iloc[0]), "x": int(pdf["x"].iloc[0]),
-            "y": int(pdf["y"].iloc[0]), "sub": int(pdf["sub"].iloc[0]),
-            "n": n, "chunk": feats,
-        }])
-
-    return kernel
-
-
-def make_concat_final_kernel(layer: str, key_names: list[str],
-                             values_framed: bytes):
-    """Final stage, global-dictionary path: concatenate the sub-framed
-    feature runs (sub order == global key order under range fan-out) with
-    the broadcast key/value tables — O(blob) memcpy, no per-feature work."""
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        import hashlib
-
-        from tank_spark.geom import mvt_np
-
-        z = int(pdf["z"].iloc[0])
-        x = int(pdf["x"].iloc[0])
-        y = int(pdf["y"].iloc[0])
-        pdf = pdf.sort_values("sub")      # sentinel (sub=-1, null) first
-        parts = [bytes(b) for b in pdf["chunk"] if b is not None]
-        n_features = int(pdf["n"].fillna(0).sum())
-        if not parts:
-            blob = mvtmod.encode([], layer_name=layer, extent=EXTEND)
-        else:
-            blob = mvt_np.layer_from_framed(
-                parts, key_names, values_framed,
-                layer_name=layer, extent=EXTEND)
-        return pd.DataFrame([{
-            "z": z, "x": x, "y": y, "n_features": n_features,
-            "mvt_size": len(blob), "mvt_md5": hashlib.md5(blob).hexdigest(),
-            "mvt": blob,
-        }])
-
-    return kernel
 
 
 def mvt_tiles_for(
@@ -917,12 +593,13 @@ def mvt_tiles_for(
     its declared attr_fields here, so custom-schema layers serve through
     the same two-stage distributed pipeline as the benchmark table.
 
-    Two-stage distributed shape: a map-only mapInPandas geometry stage
-    (parse/project/clip/command-encode, parallel across input partitions)
-    feeds a per-tile assembly stage that only concatenates pre-encoded
-    bytes with the vectorized assembler — so a full-fidelity overview tile
-    no longer serializes the whole pipeline into one Python task (measured
-    37s -> ~4s for the 600k-feature z7 tile at sf0.1).
+    One route: request join -> sample filter -> repartition -> map-only
+    geometry stage (parse/project/clip/command-encode, parallel across
+    input partitions) -> sentinel union -> per-tile assembly that only
+    concatenates pre-encoded bytes with the vectorized assembler. A
+    full-fidelity overview tile therefore no longer serializes the whole
+    pipeline into one Python task (measured 37s -> ~4s for the
+    600k-feature z7 tile at sf0.1).
 
     ``overview_sampling``: EVERY over-budget tile serves a deterministic
     per-tile-budgeted sample (materialized-sampling-cube policy, modulus =
@@ -933,171 +610,58 @@ def mvt_tiles_for(
     fidelity (mod=1 — bit-identical to unsampled). Costs one bounded
     count job per batch.
     """
-    from tank_spark.util import ensure_workers_have_package
-
     ensure_workers_have_package(spark)
 
+    joined = _request_join(spark, feats, requests).select(
+        "z", "x", "y", "key", "geometry", *prop_cols
+    )
     # budget pass: count every requested tile (one bounded job), sample
-    # only the over-budget ones; mod_df empty -> skip the filter (and its
-    # per-row md5) entirely
+    # only the over-budget ones; no over-budget tile -> skip the filter
+    # (and its per-row md5) entirely. The memoized list is a local
+    # Python list, so its emptiness costs no Spark job.
     mod_df = None
-    mods_list: list = []
     if overview_sampling and requests:
-        # the memoized list is driver-side — emptiness costs no Spark job
         mods_list = _sample_mods_list(spark, feats, requests)
         if mods_list:
-            mod_df = _tiny_df(spark, mods_list,
-                              "z int, x int, y int, mod long")
+            from tank_spark.operators.tiles import overview_keep_col
 
-    def sample_filter(joined: DataFrame) -> DataFrame:
-        if mod_df is None:
-            return joined
-        from tank_spark.operators.tiles import overview_keep_col
-
-        return (
-            joined.join(F.broadcast(mod_df), ["z", "x", "y"], "left")
-            .filter(overview_keep_col(F.coalesce(F.col("mod"), F.lit(1))))
-            .drop("mod")
-        )
-
-    def encoded_stage(reqs: list[tuple[int, int, int]], n_sub: int):
-        joined = sample_filter(_request_join(spark, feats, reqs).select(
-            "z", "x", "y", "key", "geometry", *prop_cols
-        ))
-        # spread the Python geometry work across every core (the cached
-        # table uses fewer, fatter partitions) and break any per-band skew
-        # — a cheap round-robin shuffle of narrow rows buys full map
-        # parallelism
-        joined = joined.repartition(spark.sparkContext.defaultParallelism)
-        return joined.mapInPandas(
-            make_geom_stage(prop_cols, n_sub), GEOM_STAGE_SCHEMA
-        )
-
+            mod_df = local_values_df(spark, mods_list,
+                                     "z int, x int, y int, mod long")
+            joined = (
+                joined.join(F.broadcast(mod_df), ["z", "x", "y"], "left")
+                .filter(overview_keep_col(F.coalesce(F.col("mod"), F.lit(1))))
+                .drop("mod")
+            )
+    # spread the Python geometry work across every core (the cached table
+    # uses fewer, fatter partitions) and break any per-band skew — a cheap
+    # round-robin shuffle of narrow rows buys full map parallelism
+    chunks = (
+        joined.repartition(spark.sparkContext.defaultParallelism)
+        .mapInPandas(make_geom_stage(prop_cols), GEOM_STAGE_SCHEMA)
+    )
     # one sentinel row per request guarantees every requested tile has an
     # assembly group, so a request matching zero features serves a (valid,
     # empty) tile — the reference encodes an empty FeatureCollection, not
-    # a 404. (The previous left-anti-join formulation re-executed the
-    # whole two-stage pipeline a second time just to find empty tiles.)
-    def sentinels(reqs: list[tuple[int, int, int]], sub: int):
-        return _tiny_df(
-            spark, [(z, x, y) for z, x, y in reqs], "z int, x int, y int"
-        ).select(
-            "z", "x", "y", F.lit(sub).alias("sub"),
-            F.lit(None).cast("binary").alias("chunk"),
-        )
-
-    # FULL-FIDELITY overview tiles (z < OVERVIEW_ZOOM, unsampled) funnel
-    # every feature into one tile group — route them through the sub-tile
-    # merge tree so per-feature work runs NSUB-way parallel and the final
-    # task does O(blob) work. SAMPLED overview tiles are O(budget) by
-    # construction and take the direct shape — measured at the 30k
-    # budget the direct path beats the tree (the tree's extra stats job
-    # + sub-merge shuffle outweighs single-task assembly of a
-    # budget-bounded tile; numbers in SCALE.md).
-    tree_reqs = [r for r in requests
-                 if r[0] < OVERVIEW_ZOOM and not overview_sampling]
-    direct_reqs = [r for r in requests if r not in tree_reqs]
-
-    parts = []
-    if direct_reqs or not tree_reqs:
-        enc = encoded_stage(direct_reqs, 1)
-        parts.append(
-            enc.unionAll(sentinels(direct_reqs, 0))
-            .groupBy("z", "x", "y")
-            .applyInPandas(make_assemble_kernel(layer), TILE_OUT_SCHEMA)
-        )
-    if tree_reqs:
-        # Preferred: GLOBAL-DICTIONARY tree — broadcast per-column value
-        # dictionaries (bounded distinct values, checked), frame every
-        # feature in the parallel sub-merges, concat-only final task.
-        # Range (not modulo) sub fan-out keeps sub order == key order.
-        joined = sample_filter(_request_join(spark, feats, tree_reqs).select(
-            "z", "x", "y", "key", "geometry", *prop_cols
-        ))
-        # stable memo key: the cached feats plan + data fingerprint + the
-        # request/mod lists fully determine `joined`'s content
-        dict_key = (feats._jdf.queryExecution().analyzed().semanticHash(),
-                    _input_fingerprint(feats), tuple(sorted(tree_reqs)),
-                    tuple(sorted(mods_list)))
-        dicts, kmin, span = _collect_global_dicts(
-            joined, prop_cols, DICT_CAP, memo_key=dict_key)
-        if dicts is not None:
-            # sub fan-out scaled to the session's core count (r14): a
-            # fixed NSUB=16 capped the sub-merge at 16 groups, and AQE's
-            # byte-based coalescing then packed those into ~9 tasks at
-            # local[32] — a CPU-bound Python stage must not inherit
-            # byte-based coalescing (guide §2, the hyperplane-verify
-            # lesson), so the explicit keyed repartition pins the stage
-            # width. Blob bytes are NSUB-independent by construction:
-            # range fan-out keeps sub order == key order and every
-            # feature's frame is self-contained, so the final concat
-            # yields identical bytes for any fan-out (md5-verified in
-            # the r14 A/B and pinned by the z7 decode-parity entry).
-            nsub = max(NSUB, spark.sparkContext.defaultParallelism)
-            geom = (
-                joined.repartition(spark.sparkContext.defaultParallelism)
-                .mapInPandas(
-                    make_geom_stage(prop_cols, nsub, dicts=dicts,
-                                    key_bounds=(kmin, span)),
-                    GEOM_STAGE_SCHEMA,
-                )
-            )
-            dict_sizes = {c: len(dicts[c]) for c in prop_cols}
-            merged = (
-                geom.repartition(2 * spark.sparkContext.defaultParallelism,
-                                 "z", "x", "y", "sub")
-                .groupBy("z", "x", "y", "sub")
-                .applyInPandas(make_submerge_frame_kernel(dict_sizes),
-                               TREE_FRAMED_SCHEMA)
-            )
-            tree_sentinels = _tiny_df(
-                spark, [(z, x, y) for z, x, y in tree_reqs],
-                "z int, x int, y int"
-            ).select(
-                "z", "x", "y", F.lit(-1).alias("sub"),
-                F.lit(None).cast("long").alias("n"),
-                F.lit(None).cast("binary").alias("chunk"),
-            )
-            values_framed = b"".join(
-                mvt_np.frame_values(_dict_values_array(dicts[c]))
-                for c in prop_cols
-            )
-            parts.append(
-                merged.unionAll(tree_sentinels)
-                .groupBy("z", "x", "y")
-                .applyInPandas(
-                    make_concat_final_kernel(
-                        layer, list(prop_cols), values_framed),
-                    TILE_OUT_SCHEMA,
-                )
-            )
-        else:
-            # dictionary overflow: bottom-up value-table merge tree
-            merged = (
-                encoded_stage(tree_reqs, NSUB)
-                .groupBy("z", "x", "y", "sub")
-                .applyInPandas(_submerge_kernel, GEOM_STAGE_SCHEMA)
-            )
-            parts.append(
-                merged.unionAll(sentinels(tree_reqs, -1))
-                .groupBy("z", "x", "y")
-                .applyInPandas(make_tree_final_kernel(layer), TILE_OUT_SCHEMA)
-            )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
+    # a 404. (A left-anti-join formulation would re-execute the whole
+    # two-stage pipeline a second time just to find empty tiles.)
+    sentinels = local_values_df(
+        spark, [(z, x, y) for z, x, y in requests], "z int, x int, y int"
+    ).select("z", "x", "y", F.lit(None).cast("binary").alias("chunk"))
+    out = (
+        chunks.unionAll(sentinels)
+        .groupBy("z", "x", "y")
+        .applyInPandas(make_assemble_kernel(layer), TILE_OUT_SCHEMA)
+    )
     # surface the applied sampling modulus (1 = exact tile) so API
     # consumers can detect lossy blobs (ADVICE r4); broadcast join on a
     # <= #requests-row frame, so this costs nothing at scale
     if mod_df is not None:
-        out = (
+        return (
             out.join(F.broadcast(mod_df), ["z", "x", "y"], "left")
             .withColumn("sample_mod", F.coalesce(F.col("mod"), F.lit(1)))
             .drop("mod")
         )
-    else:
-        out = out.withColumn("sample_mod", F.lit(1).cast("long"))
-    return out
+    return out.withColumn("sample_mod", F.lit(1).cast("long"))
 
 
 def mvt_tiles(
@@ -1137,12 +701,12 @@ def tile_mvt_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     None,  # rows-only: MVT bytes
     doc="BENCH-ONLY, not a serving path: full-fidelity overview tile (NO "
         "sampling) — the whole table renders into one z7 tile through the "
-        "two-stage distributed encode. SERVING POLICY: full fidelity is "
-        "served only for z >= OVERVIEW_ZOOM; below that the budgeted "
-        "sample is the product (SCALE.md measured the full-fidelity z7 "
-        "blob at ~1.8 GB at 100x — past the MVT format's practical "
-        "ceiling, Arrow's 2 GB cell limit). Kept benchmarked at full "
-        "fidelity so the distributed-encode scale path stays honest.",
+        "two-stage distributed encode. SERVING POLICY: over-budget tiles "
+        "serve the budgeted sample (mvt_tiles_for overview_sampling; "
+        "SCALE.md measured the full-fidelity z7 blob at ~1.8 GB at 100x — "
+        "past the MVT format's practical ceiling, Arrow's 2 GB cell "
+        "limit). Kept benchmarked at full fidelity as the largest tile "
+        "the batch encode renders.",
 )
 def tile_mvt_z7_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mvt_tiles(spark, sf_dir, requests=[(7, 20, 49)]).drop("mvt")
@@ -1164,8 +728,6 @@ def tile_mvt_z7_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         "through the window.",
 )
 def tile_mvt_z7_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tank_spark.util import ensure_workers_have_package
-
     ensure_workers_have_package(spark)
     tiles = mvt_tiles(spark, sf_dir, requests=[(7, 20, 49)])
 
@@ -1283,8 +845,6 @@ def _batch_parity_oracle() -> str:
         "numerically, not just blob stability.",
 )
 def tile_mvt_batch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tank_spark.util import ensure_workers_have_package
-
     ensure_workers_have_package(spark)
     tiles = mvt_tiles(spark, sf_dir, requests=PARITY_REQUESTS,
                       overview_sampling=True)
@@ -1366,8 +926,6 @@ def _heatmap_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def heatmap_mvt(spark: SparkSession, sf_dir: str, z: int, x: int, y: int) -> DataFrame:
     from tank_spark.operators.heatmap import heatmap
-    from tank_spark.util import ensure_workers_have_package
-
     ensure_workers_have_package(spark)
 
     cells = heatmap(spark, sf_dir, z, x, y).withColumns(
@@ -1404,8 +962,6 @@ def heatmap_mvt_z9(spark: SparkSession, sf_dir: str) -> DataFrame:
         "path from rows-only to hash-matched (VERDICT r8 #5 class).",
 )
 def heatmap_mvt_z9_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tank_spark.util import ensure_workers_have_package
-
     ensure_workers_have_package(spark)
     z, x, y = 9, 80, 196
     tiles = heatmap_mvt(spark, sf_dir, z, x, y)

@@ -27,8 +27,8 @@ from tank_spark.geom import morton
 from tank_spark.plans.registry import register
 from tank_spark.sources.features import FEATURES_CTE, HASH_LEVEL, features_df
 
-# Per-tile feature budget for sampled overview tiles (z < OVERVIEW_ZOOM in
-# mvt_tiles). The sampling modulus is DERIVED per tile as ceil(n / budget),
+# Per-tile feature budget for sampled tiles (mvt_tiles_for with
+# overview_sampling, at any zoom). The sampling modulus is DERIVED per tile as ceil(n / budget),
 # so the served payload stays constant-size no matter how big the table
 # grows (a fixed `key % 20` sample scales the overview payload linearly
 # with the table — measured at 100x in SCALE.md before this policy).

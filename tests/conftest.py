@@ -34,7 +34,6 @@ SLOW_NODEID_PARTS = (
     "test_oracle_parity[neardup_hyperplane_lsh_pairs_w12]",
     "test_oracle_parity[neardup_hyperplane_lsh_pairs]",
     "test_oracle_parity[neardup_hyperplane_recall_eval]",
-    "test_oracle_parity[media_dedup_survivors]",
     "test_oracle_parity[media_dedup_report]",
     "test_oracle_parity[media_dedup_apply]",
     "test_api.py::test_full_route_surface",

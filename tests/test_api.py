@@ -219,6 +219,39 @@ def test_custom_attr_layer_batch_render(spark, tmp_path):
     assert "io.marauder.tank" in mvtmod.decode(bytes(empty["mvt"]))
 
 
+def test_null_attribute_serves_the_same_props_on_both_routes(spark, tmp_path):
+    """A stored null in a declared attribute gets no tag through
+    tile_mvt, exactly as through tile_mvt_batch. (pandas turns a null
+    double into NaN, which the single-tile route once encoded as a
+    double NaN value.)"""
+    from tank_spark.api import Tank
+    from tank_spark.geom import mvt as mvtmod
+    from tank_spark.operators.table_ops import write_feature_table
+    from tank_spark.operators.tiles import tile_hash_range
+    from tank_spark.sources.features import features_df
+
+    z, x, y = 9, 80, 196
+    lo, hi = tile_hash_range(z, x, y)
+    d = str(tmp_path / "nulls")
+    feats = features_df(spark, SF_DIR).drop("ts").filter(
+        F.col("hash").between(lo, hi))
+    write_feature_table(feats.withColumn(
+        "score", F.when(F.col("key") % 2 == 0, F.lit(None).cast("double"))
+        .otherwise(F.col("score"))), d)
+    t = Tank(spark, d)
+
+    def props(blob):
+        feats = mvtmod.decode(blob)["io.marauder.tank"]["features"]
+        return sorted((f["id"], sorted(f["props"].items())) for f in feats)
+
+    single = props(t.tile_mvt(z, x, y))
+    batch = props(bytes(t.tile_mvt_batch([(z, x, y)]).collect()[0]["mvt"]))
+    assert single == batch
+    assert {key % 2 for key, _ in single} == {0, 1}
+    for key, kv in single:
+        assert ("score" in dict(kv)) == (key % 2 == 1)
+
+
 def test_sql_function_registration(spark):
     from tank_spark.functions.geo import register_sql_functions
     from tank_spark.geom import morton

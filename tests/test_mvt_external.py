@@ -318,7 +318,7 @@ def test_hand_decode_scalar_encoder():
 
 def test_hand_decode_np_assembler_parity():
     """Scalar encoder and numpy assembler agree under the INDEPENDENT
-    decoder — the parity that backs the distributed merge-tree path."""
+    decoder — the parity that backs the batch tile pipeline."""
     ids = np.array([10, 11, 12], dtype=np.int64)
     gtypes = np.array([1, 2, 3], dtype=np.int8)
     streams = [

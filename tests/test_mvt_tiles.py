@@ -68,9 +68,9 @@ def test_tile_mvt_determinism(spark):
 
 
 def test_tree_path_decode_parity(spark):
-    """The z7 full-fidelity tile goes through the sub-tile MERGE TREE
-    (key-salted sub-merges -> byte-concat final); its decoded feature set
-    must equal the whole table, with props intact and ids key-sorted."""
+    """The z7 full-fidelity tile funnels the whole table into one
+    assembly group; its decoded feature set must equal the whole table,
+    with props intact and ids key-sorted."""
     from tank_spark.geom import mvt as mvtmod
     from tank_spark.operators.mvt_tiles import LAYER, mvt_tiles
     from tank_spark.sources.features import features_df
@@ -94,35 +94,6 @@ def test_tree_path_decode_parity(spark):
         for e in exp
     )
     assert got == want
-
-
-def test_tree_blob_bytes_independent_of_fanout(spark, monkeypatch):
-    """The tree path's sub-merge fan-out is max(NSUB, defaultParallelism)
-    — machine-dependent — so the blob bytes must not depend on it:
-    rendering the z7 tree-route tile at NSUB and at 3*NSUB gives
-    byte-equal blobs."""
-    from tank_spark.operators import mvt_tiles as mt
-
-    fanouts = []
-    real = mt.make_geom_stage
-
-    def spy(prop_cols, nsub, **kw):
-        fanouts.append(nsub)
-        return real(prop_cols, nsub, **kw)
-
-    def blob():
-        rows = mt.mvt_tiles(spark, SF_DIR, requests=[(7, 20, 49)]).collect()
-        assert len(rows) == 1 and rows[0]["n_features"] > 0
-        return bytes(rows[0]["mvt"])
-
-    monkeypatch.setattr(mt, "make_geom_stage", spy)
-    base = blob()
-    monkeypatch.setattr(mt, "NSUB", 3 * mt.NSUB)
-    wide = blob()
-    par = spark.sparkContext.defaultParallelism
-    assert fanouts == [max(mt.NSUB // 3, par), max(mt.NSUB, par)]
-    assert fanouts[0] != fanouts[1]
-    assert base == wide
 
 
 def test_assemble_layer_empty_props():
@@ -175,113 +146,43 @@ def test_heatmap_mvt_counts_match(spark):
         assert ring[0] == ring[-1] and len(ring) == 5
 
 
-def test_tree_path_dict_overflow_fallback(spark, monkeypatch):
-    """When a prop column exceeds the dictionary cap, the tree path must
-    fall back to the bottom-up value-table merge and still produce a
-    decode-identical tile (the dictionary path is an optimization, never
-    a semantics change)."""
-    from tank_spark import cache
-    from tank_spark.geom import mvt as mvtmod
-    from tank_spark.operators import mvt_tiles as mt
-
-    # capture the default-path blob first (global dictionaries)
-    fast = {r["mvt_md5"]: r for r in
-            mt.mvt_tiles(spark, SF_DIR, requests=[(7, 20, 49)]).collect()}
-    # force overflow: every column has > 0 distinct values
-    monkeypatch.setattr(mt, "DICT_CAP", 0)
-    cache.clear("mvt.dicts")
-    misses = cache.stats("mvt.dicts")["misses"]
-    slow = mt.mvt_tiles(spark, SF_DIR, requests=[(7, 20, 49)]).collect()
-    assert cache.stats("mvt.dicts")["misses"] == misses + 1  # stats job ran
-    monkeypatch.undo()
-    cache.clear("mvt.dicts")
-    assert len(slow) == 1 and len(fast) == 1
-    a = mvtmod.decode(bytes(next(iter(fast.values()))["mvt"]))[mt.LAYER]
-    b = mvtmod.decode(bytes(slow[0]["mvt"]))[mt.LAYER]
-    assert len(a["features"]) == len(b["features"]) > 0
-    for fa, fb in zip(a["features"], b["features"]):
-        assert fa["id"] == fb["id"]
-        assert fa["coords"] == fb["coords"]
-        assert fa["props"] == fb["props"]
-
-
-def test_range_sub_assign_overflow_free():
-    """Sub assignment must stay ordering-preserving for ANY int64 key
-    domain — the multiply-first formula wrapped for hash-derived keys
-    (span > 2^63/NSUB) and scrambled the final concat order."""
-    import numpy as np
-
-    from tank_spark.operators.mvt_tiles import range_sub_assign
-
-    # normal domain: monotone, in range
-    keys = np.array([0, 5, 999, 1000, 5000, 9999], dtype=np.int64)
-    sub = range_sub_assign(keys, 0, 10000, 16)
-    assert (np.diff(sub) >= 0).all() and 0 <= sub.min() and sub.max() <= 15
-
-    # hash-derived domain the old formula wrapped on
-    keys = np.array([-(2**62), -(2**61), 0, 2**61, 2**62], dtype=np.int64)
-    kmin = int(keys.min())
-    span = int(keys.max()) - kmin + 1
-    sub = range_sub_assign(keys, kmin, span, 16)
-    assert (np.diff(sub) >= 0).all()
-    assert sub[0] == 0 and sub[-1] == 15
-
-    # full-width domain: even (key - kmin) exceeds int64
-    info = np.iinfo(np.int64)
-    keys = np.array([info.min, -1, 0, info.max], dtype=np.int64)
-    kmin = int(keys.min())
-    span = int(keys.max()) - kmin + 1
-    sub = range_sub_assign(keys, kmin, span, 16)
-    assert (np.diff(sub) >= 0).all()
-    assert sub[0] == 0 and sub[-1] == 15
-
-
 def test_dict_nan_prop_falls_back(spark):
-    """A float prop column containing NaN is dictionary-ineligible
-    (collect_set keeps NaN; pd.Categorical rejects NaN categories): the
-    dict must come back None so the tree path falls back to the value-
-    table merge instead of crashing the tile job."""
-    import math
+    """A double prop column containing NaN (which no value table can
+    key: NaN != NaN) still serves its tile instead of crashing the job:
+    every feature comes back, the NaN row falls back to carrying no
+    tag, and the other rows keep their exact values — and a NaN-free
+    column tags every row."""
+    from pyspark.sql import functions as F
 
-    from tank_spark import cache
-    from tank_spark.operators import mvt_tiles as mt
-
-    df = spark.createDataFrame(
-        [(1, 1.0), (2, float("nan")), (3, 2.5)], "key long, score double"
-    )
-    dicts, kmin, span = mt._collect_global_dicts(df, ("score",))
-    assert dicts is None
-    assert kmin == 1 and span == 3
-    # and a NaN-free column still dictionary-encodes
-    clean = spark.createDataFrame([(1, 1.0), (2, 2.5)], "key long, score double")
-    dicts2, _, _ = mt._collect_global_dicts(clean, ("score",))
-    assert dicts2 == {"score": [1.0, 2.5]}
-    assert not any(isinstance(v, float) and math.isnan(v)
-                   for v in dicts2["score"])
-    cache.clear("mvt.dicts")
-
-
-def test_stale_dictionary_raises():
-    """A non-null prop value absent from the broadcast dictionary means
-    the memoized dictionary went stale — the geom stage must raise, not
-    silently drop the property tag."""
-    import pandas as pd
-    import pytest
-
+    from tank_spark.geom import morton
+    from tank_spark.geom import mvt as mvtmod
     from tank_spark.geom.tilemath import tile_bbox
-    from tank_spark.operators.mvt_tiles import make_geom_stage
+    from tank_spark.operators.mvt_tiles import LAYER, mvt_tiles_for
 
-    stage = make_geom_stage(
-        ("kind",), n_sub=16, dicts={"kind": ["road"]}, key_bounds=(0, 10)
-    )
-    lon0, lat0, lon1, lat1 = tile_bbox(13, 1281, 3137)
-    pdf = pd.DataFrame({
-        "z": [13], "x": [1281], "y": [3137], "key": [1],
-        "geometry": [f"POINT ({(lon0 + lon1) / 2} {(lat0 + lat1) / 2})"],
-        "kind": ["building"],
-    })
-    with pytest.raises(ValueError, match="absent from the global dictionary"):
-        list(stage(iter([pdf])))
+    z, x, y = 13, 1281, 3137
+    lon0, lat0, lon1, lat1 = tile_bbox(z, x, y)
+
+    def serve(scores):
+        rows = [
+            (morton.interleave(x, y), k,
+             f"POINT ({lon0 + (lon1 - lon0) * (k + 0.5) / len(scores):.9f} "
+             f"{(lat0 + lat1) / 2:.9f})", s)
+            for k, s in enumerate(scores)
+        ]
+        feats = spark.createDataFrame(
+            rows, "hash long, key long, geometry string, score double")
+        out = mvt_tiles_for(spark, feats, [(z, x, y)],
+                            prop_cols=("score",)).collect()
+        assert len(out) == 1 and out[0]["n_features"] == len(scores)
+        return mvtmod.decode(bytes(out[0]["mvt"]))[LAYER]["features"]
+
+    got = serve([1.0, float("nan"), 2.5, 1.0])
+    assert [f["id"] for f in got] == [0, 1, 2, 3]
+    assert [f["props"] for f in got] == [
+        {"score": 1.0}, {}, {"score": 2.5}, {"score": 1.0}]
+
+    clean = serve([1.0, 2.5])
+    assert [f["props"] for f in clean] == [{"score": 1.0}, {"score": 2.5}]
 
 
 def test_overview_budget_bounds_features(spark, monkeypatch):
@@ -298,8 +199,8 @@ def test_overview_budget_bounds_features(spark, monkeypatch):
     feats = features_df(spark, SF_DIR)
     n = feats.count()
 
-    mods = {(r["z"], r["x"], r["y"]): r["mod"]
-            for r in mt.overview_sample_mods(spark, feats, req).collect()}
+    mods = {(z, x, y): mod
+            for z, x, y, mod in mt._sample_mods_list(spark, feats, req)}
     assert mods[(7, 20, 49)] == (n + budget - 1) // budget > 1
 
     out = mt.mvt_tiles(spark, SF_DIR, requests=req,
@@ -319,9 +220,7 @@ def test_overview_budget_bounds_features(spark, monkeypatch):
 
 
 def test_sampled_tree_routing_equivalent(spark, monkeypatch):
-    """Sampled overview tiles take the direct route (the tree's stats
-    job + sub-merge shuffle can't amortize a budget-bounded tile —
-    measured in SCALE.md): the z7 tile comes back sampled and
+    """A sampled overview tile in a mixed batch comes back sampled and
     budget-bounded."""
     from tank_spark.operators import mvt_tiles as mt
 
@@ -417,7 +316,7 @@ def test_fast_nonpoint_bit_parity_with_per_row_path():
         "kind": "road", "score": 1.5, "cnt": 3, "tag": "tag1",
     })
 
-    stage = mt.make_geom_stage(mt.DEFAULT_PROPS, 1)
+    stage = mt.make_geom_stage(mt.DEFAULT_PROPS)
     fast = list(stage(iter([pdf.copy()])))
 
     k1 = 0.5 * mt.BUFFER / mt.EXTEND
@@ -436,6 +335,6 @@ def test_fast_nonpoint_bit_parity_with_per_row_path():
     fc = pd.concat(fast, ignore_index=True)
     sc = pd.concat(slow, ignore_index=True)
     assert len(fc) == len(sc)
-    for c in ("z", "x", "y", "sub"):
+    for c in ("z", "x", "y"):
         assert (fc[c].to_numpy() == sc[c].to_numpy()).all()
     assert all(a == b for a, b in zip(fc["chunk"], sc["chunk"]))

@@ -159,7 +159,8 @@ def test_pack_token_budget_single_window_shuffle(spark):
 def test_mvt_two_stage_matches_single_task_kernel(spark):
     """The distributed two-stage encode (mapInPandas geometry stage +
     vectorized assembly) decodes identically to the single-task scalar
-    kernel on the same tile."""
+    kernel on the same tile: an sf tile, and a synthetic tile with a
+    NaN in a 70,000-distinct double prop."""
     import pandas as pd
 
     from tank_spark.geom import mvt as mvtmod
@@ -188,6 +189,39 @@ def test_mvt_two_stage_matches_single_task_kernel(spark):
         assert a["geom_type"] == b["geom_type"]
         assert a["coords"] == b["coords"]
         assert a["props"] == b["props"]
+
+    # a double prop holding a NaN, with more distinct values than a
+    # 16-bit value index (65,536): both paths serve every feature, and
+    # the NaN row carries no tag on either
+    from tank_spark.geom import morton
+    from tank_spark.geom.tilemath import tile_bbox
+    from tank_spark.operators.mvt_tiles import mvt_tiles_for
+
+    z, x, y = 13, 1281, 3137
+    lon0, lat0, lon1, lat1 = tile_bbox(z, x, y)
+    n, side = 70_000, 263
+    feats = spark.range(n).select(
+        F.lit(morton.interleave(x, y)).cast("long").alias("hash"),
+        F.col("id").alias("key"),
+        F.format_string(
+            "POINT (%.9f %.9f)",
+            F.lit(lon0) + F.lit(lon1 - lon0) * (F.col("id") % side + 0.5) / side,
+            F.lit(lat0) + F.lit(lat1 - lat0)
+            * (F.floor(F.col("id") / side) % side + 0.5) / side,
+        ).alias("geometry"),
+        F.when(F.col("id") == 7, F.lit(float("nan")))
+        .otherwise(F.col("id") * 0.25 + 0.125).alias("score"),
+    )
+    row = mvt_tiles_for(spark, feats, [(z, x, y)], prop_cols=("score",)).collect()[0]
+    got = mvtmod.decode(bytes(row["mvt"]))[LAYER]["features"]
+    src = feats.select("key", "geometry", "score").toPandas()
+    src["z"], src["x"], src["y"] = z, x, y
+    ref = mvtmod.decode(bytes(_tile_kernel(src)["mvt"].iloc[0]))[LAYER]["features"]
+    assert len(got) == len(ref) == n
+    assert [f["id"] for f in got] == [f["id"] for f in ref] == list(range(n))
+    assert [f["coords"] for f in got] == [f["coords"] for f in ref]
+    assert [f["props"] for f in got] == [f["props"] for f in ref]
+    assert got[7]["props"] == {} and got[8]["props"] == {"score": 2.125}
 
 
 def test_decontamination_broadcasts_eval_side(spark):
