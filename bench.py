@@ -1,12 +1,14 @@
 #!/usr/bin/env python
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
+(default /root/testdata/sf0.1) in one ``perfbench.session`` session
+(host-derived task slots and driver memory) and prints ONE JSON line:
+{"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
 Each query executes end-to-end into the noop sink (full computation, no
-driver collect bottleneck). Times are per-query wall seconds on a warm
-session.
+driver collect bottleneck): one untimed run, then the median of 3 timed
+runs on a warm session. Per-query spreads go to stderr. Compare two
+commits by alternating their runs on the same host.
 """
 
 from __future__ import annotations
@@ -17,58 +19,7 @@ import re
 import sys
 import time
 
-
-def _cpu_ticks() -> tuple[int, int, int]:
-    """(steal_jiffies, system_jiffies, total_jiffies) from the
-    /proc/stat aggregate cpu line. Steal is the hypervisor taking
-    cycles from this VM — invisible to loadavg (the quiet-wait gate)
-    yet it inflates every wall-clock reading; this VM has shown 15-25%
-    steal windows with ZERO local load. System time is the other storm
-    signature observed here: windows of 36-72% sy (kernel/scheduler
-    churn) inflate readings even when steal reads low. Returns zeros
-    where /proc/stat is unavailable (non-Linux dev box)."""
-    try:
-        with open("/proc/stat") as f:
-            vals = [int(x) for x in f.readline().split()[1:]]
-        return ((vals[7] if len(vals) > 7 else 0),
-                (vals[2] if len(vals) > 2 else 0), sum(vals))
-    except (OSError, ValueError, IndexError):
-        return 0, 0, 0
-
-
-def _spin_ms(n: int = 1_000_000) -> float:
-    """Wall milliseconds for a fixed deterministic CPython loop — a
-    direct guest-throughput probe. The steal/sys gauges read /proc
-    counters, and some host throttling is GUEST-INVISIBLE there
-    (observed: a 24x-inflated query window whose steal read 0.8% and
-    sys read normal); a fixed spin can't be fooled — if the guest's
-    cycles are being taken, the spin takes proportionally longer.
-    ~25-40 ms per call on this box, sampled on both edges of each
-    timed run."""
-    t0 = time.perf_counter()
-    x = 0
-    for i in range(n):
-        x += i
-    # keep the loop un-optimizable and the timing honest
-    assert x == n * (n - 1) // 2
-    return (time.perf_counter() - t0) * 1000.0
-
-
-def _steal_pct(t0: tuple, t1: tuple) -> float:
-    """Percent of CPU time the hypervisor stole between two tick
-    snapshots (0.0 when /proc/stat is unavailable or no time passed)."""
-    dt = t1[-1] - t0[-1]
-    return round(100.0 * (t1[0] - t0[0]) / dt, 1) if dt > 0 else 0.0
-
-
-def _sys_pct(t0: tuple, t1: tuple) -> float:
-    """Percent of CPU time spent in the kernel between two snapshots —
-    the second contamination signature (a compute-bound Spark stage
-    should be user-dominated; sustained 30%+ sy here has meant the
-    host was thrashing the guest's scheduler)."""
-    dt = t1[-1] - t0[-1]
-    return round(100.0 * (t1[1] - t0[1]) / dt, 1) if dt > 0 else 0.0
-
+ROOT = os.path.dirname(os.path.abspath(__file__))
 
 HEADLINE = [
     # tank-parity surface
@@ -155,219 +106,38 @@ HEADLINE = [
 ]
 
 
+def _run(spark, q, sf_dir: str) -> float:
+    t0 = time.perf_counter()
+    q.spark(spark, sf_dir).write.mode("overwrite").format("noop").save()
+    return time.perf_counter() - t0
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
-    # WAIT-FOR-QUIET preamble (VERDICT r12 #7: the stored artifact
-    # should be the cleanest reading, and this VM's external load ramps
-    # to 10-19 with zero local JVMs): before starting the JVM, wait —
-    # bounded — for the 1-min loadavg to drop under QUIET_LOAD, so a
-    # run launched into a ramp starts clean instead of recording
-    # contention as regression. The guard records how long we waited
-    # and the load we started at; SPARK_GRAFT_QUIET_WAIT=0 disables.
-    quiet_wait = float(os.environ.get("SPARK_GRAFT_QUIET_WAIT", "300"))
-    quiet_load = float(os.environ.get("SPARK_GRAFT_QUIET_LOAD", "2.0"))
-    # hypervisor steal gate: loadavg can't see the host taking cycles,
-    # so the preamble also waits out steal storms (sampled across each
-    # 10s sleep; >5% means wall readings start inflated)
-    quiet_steal = float(os.environ.get("SPARK_GRAFT_QUIET_STEAL", "5.0"))
-    waited = 0.0
-    tk = _cpu_ticks()
-    steal_now = None  # unknown until one 10s sample window has passed
-    # guest-throughput gate beside the /proc ones: a throttle storm at
-    # launch is invisible to steal (the 24x case) but not to the spin
-    # probe. Break only when the CURRENT spin sample sits near the
-    # quietest sample seen this preamble — if the host is throttled the
-    # whole wait, the floor is inflated too and the gate degrades to
-    # today's behavior (bounded wait, start anyway, gauges flag runs).
-    spin_floor = spin_now = _spin_ms()
-    while waited < quiet_wait:
-        if (steal_now is not None and steal_now < quiet_steal
-                and spin_now < 1.3 * spin_floor
-                and os.getloadavg()[0] < quiet_load):
-            break
-        time.sleep(10)
-        waited += 10
-        tk2 = _cpu_ticks()
-        steal_now = _steal_pct(tk, tk2)
-        tk = tk2
-        spin_now = _spin_ms()
-        spin_floor = min(spin_floor, spin_now)
-    if waited:
-        print(f"# waited {waited:.0f}s for quiet "
-              f"(loadavg now {os.getloadavg()[0]:.2f}, "
-              f"steal now {'?' if steal_now is None else steal_now}%, "
-              f"spin {spin_now:.1f}ms vs floor {spin_floor:.1f}ms)",
-              file=sys.stderr)
-
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("tank_spark_bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "48g"))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
+    from perfbench.session import make_session
     from tank_spark.plans.registry import load_all
 
+    spark = make_session(ROOT)
     registry = load_all()
     # session warm-up: touch the biggest input once so JVM/codegen/file
     # listing costs don't land on the first measured query
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
 
-    # CONTENTION GUARD (round-5, after BENCH_r04 was recorded on a loaded
-    # machine and overstated runtime ~1.9x; gauge-aware since r13): for
-    # any query whose min..max spread exceeds NOISE_RATIO *or* whose
-    # window shows host contamination (per-run steal/sys gauges — a
-    # storm that inflates EVERY run uniformly defeats the spread check:
-    # observed bm25_rank_topk at a confident 19-25s across all runs vs
-    # 1.1s iso), re-run up to EXTRA_RUNS more times; the median prefers
-    # CLEAN runs when at least two exist, and queries whose whole window
-    # stayed dirty land in the guard's `contaminated` list — a
-    # genuinely-regressed query stays slow across clean re-runs.
-    NOISE_RATIO = 2.0
-    EXTRA_RUNS = 3
-    DIRTY_STEAL = float(os.environ.get("SPARK_GRAFT_DIRTY_STEAL", "5.0"))
-    # calibrated on a quiet window at sf0.1: the shuffle-heavy dedup/
-    # phash entries run an INTRINSIC 20-40% sys (many small tasks,
-    # shuffle file IO) with tight spreads — the storm signature starts
-    # above that (observed 36-72% during host churn), so the threshold
-    # sits between the two; a flag should mean a storm, not a family
-    # trait
-    DIRTY_SYS = float(os.environ.get("SPARK_GRAFT_DIRTY_SYS", "45.0"))
-    # third contamination signature (late r13): host throttling that NO
-    # /proc counter shows — a bench window read 24x-inflated walls with
-    # steal 0.8% and normal sys. The spin probe measures guest
-    # throughput directly: a fixed CPython loop timed right after each
-    # run (executors idle by then); ratio vs the session's calibrated
-    # floor > DIRTY_SPIN marks the run dirty exactly like steal/sys do.
-    # Threshold calibrated on this VM's first gauged storm: quiet-window
-    # ratios read 0.9-1.35, while storm-inflated query windows read
-    # 1.6-1.9 even when the burst had partly passed — 1.5 sits between.
-    DIRTY_SPIN = float(os.environ.get("SPARK_GRAFT_DIRTY_SPIN", "1.5"))
-    load_before = os.getloadavg()[0]
-    ticks_start = _cpu_ticks()
-    spin_base = min(_spin_ms() for _ in range(5))
-
-    def timed_run(q):
-        # spin on BOTH edges of the run: a burst can end before a
-        # single post-run sample (observed: a 7x-inflated wall whose
-        # trailing spin read 1.17). The DIRTY test uses the MIN of the
-        # two edges — both inflated means the storm spans the window,
-        # and one jittered sample can't false-flag a clean run; the
-        # guard reports the MAX for visibility. A burst strictly inside
-        # the run stays invisible to edge sampling (documented limit —
-        # the spread check and cross-entry calibration remain the
-        # backstop there).
-        spin_pre = _spin_ms() / spin_base
-        tk0 = _cpu_ticks()
-        t0 = time.perf_counter()
-        q.spark(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        wall = time.perf_counter() - t0
-        tk1 = _cpu_ticks()
-        spin_post = _spin_ms() / spin_base
-        return (wall, _steal_pct(tk0, tk1), _sys_pct(tk0, tk1),
-                min(spin_pre, spin_post), max(spin_pre, spin_post))
-
     times: dict[str, float] = {}
-    spread: dict[str, list[float]] = {}
-    steal: dict[str, float] = {}
-    syspct: dict[str, float] = {}
-    spins: dict[str, float] = {}
-    noisy: list[str] = []
-    contaminated: dict[str, int] = {}
     for name in HEADLINE:
         q = registry[name]
-        ticks_q0 = _cpu_ticks()
-        # one untimed warm-up run (codegen/JIT compilation, file listing,
-        # python-worker spin-up, shared-cache build), then MEDIAN of 3
-        # measured runs with the min/max spread reported — this VM shows
-        # occasional 3-4x single-run noise (GC/scheduler), and the median
-        # makes round-over-round comparisons meaningful
-        q.spark(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        runs = [timed_run(q) for _ in range(3)]
-
-        def dirty(r):
-            return r[1] > DIRTY_STEAL or r[2] > DIRTY_SYS or r[3] > DIRTY_SPIN
-
-        walls = [r[0] for r in runs]
-        if (max(walls) / max(min(walls), 1e-9) > NOISE_RATIO
-                or any(dirty(r) for r in runs)):
-            noisy.append(name)
-            for _ in range(EXTRA_RUNS):
-                runs.append(timed_run(q))
-                if sum(1 for r in runs if not dirty(r)) >= 3:
-                    break
-        clean = sorted(r[0] for r in runs if not dirty(r))
-        pool = clean if len(clean) >= 2 else sorted(r[0] for r in runs)
-        if len(clean) < 2:
-            contaminated[name] = sum(1 for r in runs if dirty(r))
-        times[name] = round(pool[len(pool) // 2], 3)
-        walls = sorted(r[0] for r in runs)
-        spread[name] = [round(walls[0], 3), round(walls[-1], 3)]
-        ticks_q1 = _cpu_ticks()
-        steal[name] = _steal_pct(ticks_q0, ticks_q1)
-        syspct[name] = _sys_pct(ticks_q0, ticks_q1)
-        spins[name] = round(max(r[4] for r in runs), 2)
-        print(f"# {name}: {times[name]:.3f}s "
-              f"(spread {walls[0]:.3f}-{walls[-1]:.3f}, n={len(runs)}, "
-              f"clean {len(clean)}/{len(runs)}, "
-              f"steal {steal[name]:.1f}%, sys {syspct[name]:.1f}%, "
-              f"spin x{spins[name]:.2f})",
+        _run(spark, q, sf_dir)  # untimed: codegen, listing, worker spin-up
+        runs = sorted(_run(spark, q, sf_dir) for _ in range(3))
+        times[name] = round(runs[1], 3)
+        print(f"# {name}: {runs[1]:.3f}s (spread {runs[0]:.3f}-{runs[-1]:.3f})",
               file=sys.stderr)
 
-    total = round(sum(times.values()), 3)
-    # The contention-guard evidence (spreads, re-run list, loadavg) goes to
-    # stderr + a sidecar file; the driver's tail capture truncated the
-    # round-5 stdout line when these rode along (~4.6 KB, "parsed": null).
-    # The stdout line stays the compact driver contract only.
-    guard = {
-        "spread": spread,
-        "noisy_reran": noisy,
-        "loadavg_1m": [round(load_before, 2), round(os.getloadavg()[0], 2)],
-        "quiet_waited_s": round(waited, 0),
-        # hypervisor steal + kernel time over the whole run and per
-        # query — the two contamination signatures loadavg can't see
-        # (steal: host takes cycles; sys: host thrashes the guest
-        # scheduler). Either >~5% sustained means the wall readings in
-        # that window are inflated by the host, not the code.
-        "steal_pct_run": _steal_pct(ticks_start, _cpu_ticks()),
-        "steal_pct": steal,
-        "sys_pct": syspct,
-        # direct guest-throughput probe (worst run per query): the spin
-        # ratio vs the session floor. >2 means the host throttled the
-        # guest in a way /proc never showed (the 24x doc_winnow case)
-        "spin_base_ms": round(spin_base, 2),
-        "spin_ratio": spins,
-        # queries whose window never produced 2 clean runs — their
-        # medians are best-effort over a contaminated pool; adjudicate
-        # against an iso probe before reading them as regressions
-        "contaminated": contaminated,
-    }
-    print(f"# guard: {json.dumps(guard)}", file=sys.stderr)
-    # BENCH_GUARD.json is gitignored (ADVICE r6: the sidecar left a
-    # perpetually-dirty tracked file); the repo-root location stays so the
-    # judge finds it next to BENCH_r*.json.
-    try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_GUARD.json"), "w") as f:
-            json.dump(guard, f, indent=1)
-    except OSError as e:
-        print(f"# guard sidecar not written ({e}); stderr copy above has it",
-              file=sys.stderr)
     print(json.dumps({
         "metric": "headline_queries_total_sec",
-        "value": total,
+        "value": round(sum(times.values()), 3),
         "unit": "sec",
         "queries": times,
         "sf": sf,

@@ -65,7 +65,7 @@ HP_TAU = 0.9         # exact-verify cosine threshold (the semantic-dup regime)
 HP_BUCKET_CAP = 64   # drop band buckets larger than this (skew cap)
 
 # The width-scaled production sizing (VERDICT r12 #4): the 10x scale
-# probe (tools/hyperplane_scale_probe.py, table in SCALE.md) measured
+# probe (SCALE.md, "Round-12: the hyperplane WIDTH dial") measured
 # the default 2x8 width silently collapsing planted recall to 5% via
 # capped buckets at 10x corpus while 2x12 restored 4000/4000 at 1.6x
 # wall — width ~ log2(corpus / target bucket size). The _w12 entries
@@ -311,8 +311,9 @@ SELECT vec_a, vec_b, cosine FROM verified WHERE cosine >= {HP_TAU}
         f"bands x {HP_PLANES_W12 // HP_BANDS} bits (vs the default "
         f"2x{HP_BITS}), same cap {HP_BUCKET_CAP}, same exact verify at "
         f"{HP_TAU}. Why it exists as a REGISTERED entry and not only a "
-        "probe tool: tools/hyperplane_scale_probe.py measured the 2x8 "
-        "width silently collapsing planted recall to 5% at 10x corpus "
+        "probe: the 10x probe (SCALE.md, 'the hyperplane WIDTH dial') "
+        "measured the 2x8 width silently collapsing planted recall to "
+        "5% at 10x corpus "
         "(capped hot buckets swallow the planted pairs while wall time "
         "stays flat) and 2x12 restoring 4000/4000 at 1.6x wall — "
         "signature width must scale ~ log2(corpus / target bucket "
@@ -461,7 +462,7 @@ FROM occ GROUP BY band_idx
     doc=f"The hyperplane index's OPERATIONAL GAUGE: per band, bucket "
         f"count, how many buckets exceed HP_BUCKET_CAP={HP_BUCKET_CAP} "
         "(each capped bucket is silently excluded from candidate "
-        "generation — tools/hyperplane_scale_probe.py measured planted "
+        "generation — the 10x probe in SCALE.md measured planted "
         "recall collapsing to 5% at 10x corpus under the registered "
         "width while wall time stayed flat), max occupancy, and the "
         "candidate-pair upper bound sum(n*(n-1)/2). n_capped > 0 is "

@@ -27,7 +27,7 @@ probe never shuffles the corpus; candidate count per batch row is
 bounded by its routed lists' sizes. At 100 TB nlist scales with the
 corpus (the flat literal quantizer holds to ~10^3 lists and the frozen
 two-level quantizer extends the same map-only posture to ~10^5 —
-SCALE.md, tools/ivf_nlist_probe.py), so list sizes — and therefore
+SCALE.md "Round-11: the nlist-ceiling escape hatch"), so list sizes — and therefore
 per-row probe cost — stay bounded as the corpus grows.
 
 Why this family carries FULL DuckDB oracles while SemDeDup's training
@@ -45,15 +45,9 @@ corpus max pair cosine of ~0.51), and fresh synthetic vectors
 (orig % 5 == 2, derived from md5 bytes — exact integers over 256 — and
 emitted TWICE so the second lands dup_in_batch).
 
-Staged registration (round 11): these five entries registered after the
-r11 driver window froze (the window is byte-identical to VERDICT r10
-#1's prescription and has zero free slots), so they sit in
-registry.STAGED — excluded from the first-50 window, pinned by pytest
-oracle parity at BOTH the driver SF (sf0.01) and the pytest SF
-(sf0.001) in tests/test_semdedup_inc.py, and queued into the next
-windows' flex slots (registry.py R12 WINDOW HANDOFF: four enter r12,
-semdedup_stream_report enters r13 — the 46-entry r8 cohort leaves
-exactly 4 flex slots in r12).
+The entries are pinned by oracle parity at both the driver SF (sf0.01,
+tests/test_semdedup_inc.py) and the pytest SF (sf0.001,
+tests/test_oracle_parity.py).
 """
 
 from __future__ import annotations
@@ -210,7 +204,8 @@ def _quantizer_cols(spark: SparkSession, quantizer: str):
       smaller at this freeze). Same map-only posture; the incremental
       probe's candidate count per batch row shrinks with list size,
       which is THE knob that keeps crawl-cadence semantic dedup linear
-      as the corpus grows (tools/semdedup_scale_probe.py measures it).
+      as the corpus grows (measured in SCALE.md "r11 (late, second
+      pass): the nlist dial measured INSIDE the incremental family").
     """
     if quantizer == "frozen":
         arr = _frozen_score_structs(spark)
@@ -712,8 +707,9 @@ def _incremental_core(spark: SparkSession, sf_dir: str,
                       quantizer: str) -> DataFrame:
     """The incremental probe over the derived corpus, parameterized by
     quantizer — ONE body for the registered frozen-k=8 entry and the
-    at-scale two-level form (tools/semdedup_scale_probe.py measures
-    both; test_twolevel_quantizer_probe pins the routed semantics)."""
+    at-scale two-level form (both measured in SCALE.md "the nlist dial
+    measured INSIDE the incremental family"; test_twolevel_quantizer_probe
+    pins the routed semantics)."""
     corpus = _sem_corpus(spark, sf_dir)
     is_batch = F.col("vid") >= INC_OFFSET
     # materialize the SCORED relation once (r13 optimization): the old

@@ -958,8 +958,8 @@ def ivf_trained_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------- two-level quantizer at larger k, frozen + served
 #
-# The nlist-ceiling escape hatch (SCALE.md r11, tools/ivf_nlist_probe.py)
-# as a REGISTERED, oracle-checked operator instead of a tool demo:
+# The nlist-ceiling escape hatch (SCALE.md "Round-11: the nlist-ceiling
+# escape hatch, demonstrated") as a REGISTERED, oracle-checked operator instead of a tool demo:
 # k=64 trained fine centroids routed through 8 trained coarse groups
 # (tools/freeze_ivf_twolevel.py freezes BOTH levels + the grouping, so
 # the routed assignment is exact double arithmetic on both engines).
@@ -1348,7 +1348,8 @@ def ivf_twolevel_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # #3). The default entry above pins (W_COARSE=2, nprobe=2): recall@3
 # 0.667 at scan_frac ~0.046 — the honest cost of 8.5x less scan.
 # SCALE.md claimed "raise nprobe at k=64 and recall recovers while
-# cost stays list-linear"; tools/twolevel_nprobe_sweep.py measured it:
+# cost stays list-linear"; a sweep measured it (SCALE.md "Round-12: the
+# production operating point, measured"):
 # at (2, 4) recall recovers to 1.000 — the flat-trained k=8 bar — at
 # scan_frac 0.078 vs the flat path's 0.257, i.e. full recall at 3.3x
 # less scan. This entry registers that measured pick with a full
@@ -1364,7 +1365,8 @@ N_PROBE_PROD = 4
         f"point (W_COARSE={W_COARSE}, nprobe={N_PROBE_PROD}): same "
         "frozen k=64/8-group routing and shared recall tail as "
         "ivf_twolevel_recall_eval, probing 4 fine lists instead of 2. "
-        "tools/twolevel_nprobe_sweep.py: recall@3 recovers to 1.000 "
+        "Measured (SCALE.md 'Round-12: the production operating "
+        "point'): recall@3 recovers to 1.000 "
         "(= the flat-trained k=8 reference) at scan_frac 0.078 vs "
         "0.257 flat — full recall at 3.3x less scan, with per-row "
         "routing cost unchanged (list-linear: nprobe only widens the "

@@ -44,381 +44,11 @@ def register(name: str, oracle: str | None, doc: str = ""):
     return wrap
 
 
-# The driver's correctness gate checks the FIRST 50 registry entries
-# (round-1 finding: the llm.* north-star queries registered past the
-# window and got no hard signal). Priority names below are emitted first,
-# in this order; everything else follows in registration order. Queries
-# outside the window stay registered (full pytest oracle-parity sweep
-# still covers them) — they just rely on prior-round driver rows.
-#
-# Round-3 rotation: the 9 round-2 queries that have NEVER had a driver row
-# (pii_detect_mask, lang_id_confusion, corpus_mix_report,
-# dedup_lsh_survivors, decontaminate_train_eval, global_sequence_ids,
-# neardup_embedding_clusters, semantic_vs_lexical, ivf_train_kmeans) plus
-# the two new streaming batch twins enter; eleven r2-green queries whose
-# code is unchanged this round rotate out (tile_z15_parent, heatmap_z14,
-# token_count_bpe, doc_rolling_hash, dedup_simhash, embedding_norms,
-# tumbling_hourly_counts, event_type_rates, salted_user_event_counts,
-# media_frame_sample, heatmap_mvt_z9). Rotated-out queries cycle back in
-# later rounds so every oracle gets a periodic fresh row (ADVICE r2).
-#
-# Round-4 rotation (VERDICT r3 #1): the 10 round-3-new operators that
-# have NEVER had a driver row enter (lsh_recall_eval,
-# dedup_prefix_containment, cross_source_duplication,
-# token_budget_planning, passage_dedup, rare_word_fraction,
-# embedding_sq_quantize, event_value_outliers, dedup_event_stream_replay,
-# temperature_mix_weights), plus the three longest-rotated-out cycle back
-# for a fresh row (delete_by_uid, update_by_uid, tile_z15_parent — green
-# r1, unchecked since). Thirteen r3-green entries whose code is unchanged
-# this round rotate out (text_stats, text_quality_score,
-# lang_id_stopwords, doc_fingerprint, top_words_per_lang,
-# sessionize_events, user_funnel_signup_purchase, weekly_retention_cohorts,
-# knn_brute_cosine, ann_lsh_buckets, neardup_cosine_pairs,
-# array_agg_statuses, spatial_join_points_in_boxes). Entries whose code
-# CHANGES in round 4 (rare_word_fraction broadcast fix, mixing DECIMAL
-# widening, dedup sig-cache laziness, mvt overview budget) stay in or
-# enter the window so the changes get hard driver signal.
-#
-# Round-4 mid-round adjustment: five queries whose code/oracle is NEW or
-# CHANGED in round 4 enter for hard signal — tile_sample_overview
-# (budget-derived hashed modulus, new in-plan count + new SQL oracle),
-# dedup_lsh_pairs_capped (new skew-guard operator), semdedup_prune (new),
-# gopher_quality_rules (new), chunk_documents (new). Five r3-green
-# unchanged entries rotate out to make room (ivf_assignments,
-# streaming_session_windows, streaming_windowed_counts, media_metadata,
-# dedup_ngram_jaccard).
-#
-# Round-5 rotation (VERDICT r4 #3/#5): six never-driver-checked entries
-# enter (top_bigrams, cluster_balanced_sample, dedup_lsh_clusters_capped,
-# dedup_minhash_lsh_pairs_k128, dedup_simhash64, approx_sketches_demo);
-# every query whose code/oracle CHANGED this round stays/enters for hard
-# signal (the capped-default dedup family + its new *_uncapped twins,
-# tile_mvt_batch/tile_sample_overview after the sample_mod + routing
-# refactor); the six round-5-NEW operators enter (bm25_rank_topk,
-# top_distinctive_terms, dedup_containment_pairs,
-# doc_winnow_fingerprints, dedup_lsh_pairs_uncapped,
-# dedup_lsh_clusters_uncapped); the ten out-since-r2 entries cycle back
-# (heatmap_z14, token_count_bpe, doc_rolling_hash, dedup_simhash,
-# embedding_norms, tumbling_hourly_counts, event_type_rates,
-# salted_user_event_counts, media_frame_sample, heatmap_mvt_z9) plus the
-# eighteen out-since-r3/r4 (text_stats ... media_metadata,
-# dedup_ngram_jaccard). r4-green unchanged entries rotate out to make
-# room (tile planner/filter family, crud, ingest family, mixing family,
-# similarity family, events, gopher/chunk/pii/lang text entries — all
-# have fresh r4 rows and unchanged code).
-#
-# Round-6 rotation queue — FIRST the round-5 entries that never got a
-# driver row (registered after the r5 window was sized):
-# neardup_threshold_sweep, quality_percentile_rank (both oracle-pytest
-# green at sf0.001 + sf0.01), heatmap_mvt_z9, media_frame_sample,
-# dedup_simhash, embedding_norms, doc_rolling_hash, event_type_rates,
-# heatmap_z14, token_count_bpe (displaced late r5 by lm_surprisal_score
-# + lm_cross_source_divergence + pq_encode_codes/pq_adc_topk/
-# pq_recall_eval/ivf_pq_search + bloom_decontaminate/cms_heavy_hitters),
-# pq_train_subspace_kmeans, quality_lr_train, quality_lr_eval,
-# bpe_tokenize_corpus (rows-only, twin-pinned, never driver-checked),
-# lm_heldout_surprisal, hll_cardinality_by_source (oracle-checked at
-# 2 SFs, born after the r5 window froze), then array_agg_statuses,
-# spatial_join_points_in_boxes, dedup_ngram_jaccard, media_metadata
-# (displaced late in r5), then (green r4, out since r5 — cycle back):
-# tile_z9_range, tile_z13_single, tile_z15_parent, tile_filter_int,
-# tile_filter_date, heatmap_z9, heatmap_z11, point_lookup_uid,
-# delete_by_uid, update_by_uid, ingest_json_props, ingest_coerce_defaults,
-# ingest_bucket_stats, ingest_declared_schema, text_repetition_signals,
-# pii_detect_mask, lang_id_confusion, corpus_mix_report,
-# rare_word_fraction, gopher_quality_rules, chunk_documents, dedup_exact,
-# dedup_exact_survivors, dedup_minhash_signatures,
-# dedup_prefix_containment, cross_source_duplication, passage_dedup,
-# sample_stratified_sources, pack_token_budget, decontaminate_train_eval,
-# global_sequence_ids, token_budget_planning, temperature_mix_weights,
-# neardup_embedding_clusters, semantic_vs_lexical, ivf_probe_search,
-# ivf_train_kmeans, embedding_sq_quantize, semdedup_prune,
-# event_value_outliers, dedup_event_stream_replay, media_extract_features.
-# Round-7 rotation queue — FIRST the remaining r1-only relational
-# entries not re-checked in r6 (VERDICT r5 #4 asks for all of them by
-# r7): sort_limit_parts, small_quantity_parts, distinct_parts_per_flag,
-# corr_qty_price_by_flag, stddev_value_by_type, string_functions_demo,
-# math_functions_demo, nation_trade_balance, monthly_revenue_trend's
-# peer order_priority_late_ship is in r6 — then the r4-green cycle-backs
-# displaced again this round (tile_z9_range, tile_z13_single,
-# tile_z15_parent, tile_filter_int, tile_filter_date, heatmap_z9,
-# heatmap_z11, point_lookup_uid, delete_by_uid, update_by_uid,
-# delete_tile, ingest_json_props, ingest_coerce_defaults,
-# ingest_bucket_stats, ingest_declared_schema, text_repetition_signals,
-# pii_detect_mask, lang_id_confusion, corpus_mix_report,
-# rare_word_fraction, gopher_quality_rules, chunk_documents, dedup_exact,
-# dedup_exact_survivors, dedup_minhash_signatures,
-# dedup_prefix_containment, cross_source_duplication, passage_dedup,
-# sample_stratified_sources, pack_token_budget, decontaminate_train_eval,
-# global_sequence_ids, token_budget_planning, temperature_mix_weights,
-# neardup_embedding_clusters, semantic_vs_lexical, ivf_probe_search,
-# ivf_train_kmeans, embedding_sq_quantize, semdedup_prune,
-# event_value_outliers, dedup_event_stream_replay, media_extract_features,
-# semdedup families), then the r5-green LSH/search/LM/PQ/sketch entries
-# (all have fresh r5 rows; cycle back by r8).
-# Round-7 window (below): the 14 remaining r1-only relational entries
-# (VERDICT r6 #1 — all of them, closing the refresh), every query whose
-# code CHANGED this round (q5 de-vacuized, DSIR scale-safe cut, the
-# _segs_df short-doc guard shared by the two cross-doc ops, upsert
-# temp-dir fix), the two round-7-NEW operators (image_phash_neardup,
-# dedup_substring_spans), then 29 of the 42 r4-green cycle-backs.
-# Round-8 queue (enforced by tests/test_registry_hygiene.py staleness
-# lint — nothing except BENCH-ONLY may go >3 rounds without a row):
-# FIRST the 16 r4 entries not cycled this round (ivf_probe_search,
-# ivf_train_kmeans, neardup_embedding_clusters, semantic_vs_lexical,
-# embedding_sq_quantize, semdedup_prune, event_value_outliers,
-# dedup_event_stream_replay, global_sequence_ids,
-# decontaminate_train_eval, token_budget_planning,
-# temperature_mix_weights, media_extract_features,
-# sample_stratified_sources, pack_token_budget, cross_source_duplication,
-# dedup_minhash_signatures, dedup_exact_survivors,
-# dedup_prefix_containment, passage_dedup, gopher_quality_rules,
-# chunk_documents, dedup_exact, rare_word_fraction — the last eleven
-# yielded their r7 slots to the late-r7 ops: the substring/image
-# completion pair, media_resize, quality_top_quantile_per_source, the
-# three audio operators, the three VIDEO operators (video_scene_cuts,
-# video_phash_neardup, video_keyframes), and the cross-modality
-# media_dedup_survivors pipeline), then early r5-green entries as space
-# allows (r5 rows stay fresh through r8; the family is DUE in the r9
-# window, where it must lead).
-# Round-9 queue (computed from CORRECTNESS_r* history at the end of r8;
-# staleness bound = max(3, ceil(174/50)) = 4, so every entry whose last
-# driver row is r5 and that is not in the r8 window is DUE in r9 — the
-# r9 window MUST lead with these 41, leaving 9 slots for r9-changed/new
-# ops): ann_lsh_buckets, approx_sketches_demo, bloom_decontaminate,
-# bm25_rank_topk, bpe_train_merges, cluster_balanced_sample,
-# cms_heavy_hitters, dedup_containment_pairs, dedup_lsh_pairs_capped,
-# dedup_lsh_pairs_uncapped, dedup_minhash_lsh_pairs,
-# dedup_minhash_lsh_pairs_k128, dedup_multiplicity, dedup_simhash64,
-# doc_fingerprint, doc_winnow_fingerprints, ivf_assignments,
-# ivf_recall_eval, knn_brute_cosine, lang_id_stopwords,
-# lm_cross_source_divergence, lm_surprisal_score, lsh_recall_eval,
-# neardup_cosine_pairs, pq_encode_codes, pq_recall_eval,
-# salted_user_event_counts, sessionize_events, streaming_session_windows,
-# streaming_windowed_counts, text_quality_score, text_stats,
-# tile_mvt_batch, tile_sample_overview, top_bigrams,
-# top_distinctive_terms, top_words_per_lang, train_eval_split,
-# tumbling_hourly_counts, user_funnel_signup_purchase,
-# weekly_retention_cohorts — plus dedup_lsh_clusters_uncapped and
-# dedup_lsh_clusters_capped (r5 rows; yielded their r8 slots to the
-# late-r8 dedup_incremental_report and export_shard_plan): 43 due,
-# 7 free slots for r9-changed/new ops.
-# Round-9 window (below): EXACTLY the VERDICT r8 #1 prescription — the
-# 43 r5-green entries due under the staleness bound lead (41 listed in
-# the r9 queue above plus dedup_lsh_clusters_uncapped/_capped), and the
-# 7 remaining slots go to this round's changed/new ops:
-# dsir_importance_weights (model-table restructure + fused count+bracket
-# job — VERDICT #2), watermark_late_drop (NEW: the late-data eviction
-# semantic, full oracle — VERDICT #7), tile_mvt_z7_parity (NEW: first
-# driver row for the z7 full-fidelity path — VERDICT #3),
-# bpe_tokenize_corpus + quality_lr_eval (rows-only -> FULL oracles —
-# VERDICT #5; bpe_train_merges also gained an oracle and is already in
-# the due list), heatmap_mvt_z9 (r6 rows-only refresh — VERDICT #3),
-# heatmap_mvt_z9_parity (NEW: the blob decoded back to per-cell counts
-# with heatmap_z9's exact-count SQL as a FULL oracle — closes the
-# heatmap-MVT path's rows-only gap, same pattern as tile_mvt_z7_parity).
-# Displaced to r10 (both r6 rows, inside the staleness bound until r10):
-# quality_lr_train (its eval twin — the round's actual oracle upgrade —
-# stays in-window) and the rows-only pq_train_subspace_kmeans.
-# Round-10 window: EXACTLY the VERDICT r9 #1 prescription. The 42
-# r6-green entries due under the staleness bound lead (this includes the
-# three displaced from r9: quality_lr_train, pq_train_subspace_kmeans,
-# heatmap_mvt_z9). The 8 remaining slots: the three NEW entries of this
-# round (tile_mvt_batch_parity — VERDICT #3, the batch MVT path's full
-# decode-parity oracle; media_index_build + media_dedup_incremental —
-# VERDICT #6, the incremental media dedup pair), the two late-r9
-# code-changed queries named in the r9 handoff (semdedup_prune,
-# semantic_vs_lexical), ivf_probe_search (ADVICE r9: its rewritten plan
-# had no direct r9 slot — only transitive coverage via ivf_recall_eval),
-# tile_mvt_z7_full (VERDICT #2: the ONE registry entry with zero driver
-# rows across r1-r9; BENCH_ONLY-exempt from the lint but rotated in once
-# so every entry has a driver row — rows-only is fine), and
-# media_dedup_stream_replay (the fourth NEW entry: the media
-# index-growth replay, full oracle).
-# Round-11 window (below): EXACTLY the VERDICT r10 #1 prescription.
-# The 38 r7-green entries due under the staleness bound lead (the whole
-# r7 cohort, q5_nation_volume included). The 12 flex slots: the four
-# r10 quantizer-refactor consumers without post-refactor driver rows
-# (ivf_assignments, ivf_recall_eval, cluster_balanced_sample,
-# semdedup_prune_capped — handoff item 1); the three NEW r11 entries
-# (ivf_trained_probe_search + ivf_trained_recall_eval — the frozen
-# trained-quantizer serving path, VERDICT #2; and
-# media_dedup_incremental_report — the media report twin, VERDICT #3);
-# two entries whose code/oracle changed THIS round (media_index_build
-# gained the phash column in both engines; ivf_probe_search's body
-# moved into the shared _probe_core during the trained-quantizer
-# refactor — plan pinned identical, but the driver row should follow
-# the code); the two MVT blob-emitter cadence refreshes
-# (tile_mvt_z7_parity, tile_mvt_batch — VERDICT #7, r9 rows); and the
-# fourth NEW r11 entry, ivf_twolevel_assignments (the nlist-ceiling
-# escape hatch as a registered full-oracle operator — never-checked
-# entries enter unconditionally, so it takes the slot initially
-# reserved for an r8 pre-pull).
-# Round-11 window (kept for the record; superseded by r12 below):
-# EXACTLY the VERDICT r10 #1 prescription — the 38 r7-green due
-# entries, the 4 quantizer-refactor consumers, the NEW r11 entries
-# (trained + two-level quantizer families, media/text stream reports),
-# and the two code-changed entries. Driver result: 50/50 PASS, all
-# fifty full-oracle hash-matches (CORRECTNESS_r11.json).
-# Round-12 window (kept for the record; superseded by r13 below):
-# EXACTLY the R12 WINDOW HANDOFF (== VERDICT r11 #1) — the FULL 46-name
-# r8-green cohort + the four staged semdedup entries in the flex slots.
-# Driver result: 49 full-oracle hash-matches + 1 rows-only
-# (ivf_train_kmeans, the standing training entry), 0 fail
-# (CORRECTNESS_r12.json).
-# Round-13 window: EXACTLY the R13 WINDOW HANDOFF below (== VERDICT r12
-# #1). The 46-name r9 cohort comes due under the staleness bound
-# (recomputed from the CORRECTNESS artifacts: r9 names minus any with a
-# later row — includes the tile_mvt_z7_parity / tile_mvt_batch cadence
-# refreshes and bm25_rank_topk, whose oracle was rebuilt around the
-# shared _BM25_CTES constant in r12). The 4 flex slots:
-# semdedup_stream_report + manifest_skipping_scan (the two remaining
-# r11-staged entries — contract says they MUST enter) +
-# media_index_build + ivf_probe_search (r10 rows; their late-r11 code
-# changes were pytest-oracle-verified meanwhile).
-PRIORITY: tuple[str, ...] = (
-    # ---- the 46 r9-green entries due this round (staleness bound 5)
-    "ann_lsh_buckets", "approx_sketches_demo", "bloom_decontaminate",
-    "bm25_rank_topk", "bpe_tokenize_corpus", "bpe_train_merges",
-    "cms_heavy_hitters", "dedup_containment_pairs",
-    "dedup_lsh_clusters_capped", "dedup_lsh_clusters_uncapped",
-    "dedup_lsh_pairs_capped", "dedup_lsh_pairs_uncapped",
-    "dedup_minhash_lsh_pairs", "dedup_minhash_lsh_pairs_k128",
-    "dedup_multiplicity", "dedup_simhash64", "doc_fingerprint",
-    "doc_winnow_fingerprints", "dsir_importance_weights",
-    "heatmap_mvt_z9_parity", "knn_brute_cosine", "lang_id_stopwords",
-    "lm_cross_source_divergence", "lm_surprisal_score",
-    "lsh_recall_eval", "neardup_cosine_pairs", "pq_encode_codes",
-    "pq_recall_eval", "quality_lr_eval", "salted_user_event_counts",
-    "sessionize_events", "streaming_session_windows",
-    "streaming_windowed_counts", "text_quality_score", "text_stats",
-    "tile_mvt_batch", "tile_mvt_z7_parity", "tile_sample_overview",
-    "top_bigrams", "top_distinctive_terms", "top_words_per_lang",
-    "train_eval_split", "tumbling_hourly_counts",
-    "user_funnel_signup_purchase", "watermark_late_drop",
-    "weekly_retention_cohorts",
-    # ---- the 4 flex slots (dropped from STAGED in the same commit,
-    # per the staged contract, for the first two)
-    "semdedup_stream_report", "manifest_skipping_scan",
-    "media_index_build", "ivf_probe_search",
-)
-
-# Entries registered AFTER this round's window froze. The r11 window is
-# byte-identical to VERDICT r10 #1's prescription (38 due + 4 consumers
-# + 8 new/changed) with ZERO free slots, and the never-checked lint
-# would otherwise force these into it, displacing prescribed entries.
-# Staged entries are a strictly bounded exception with a stronger local
-# substitute: each MUST carry a FULL DuckDB oracle (never rows-only) and
-# is pytest-parity-pinned at BOTH the driver SF (sf0.01) and the pytest
-# SF (sf0.001) — the driver-equivalent check, minus only independence —
-# and they MUST lead the next rounds' flex slots (exact schedule in the
-# R12 WINDOW HANDOFF below: 46 r8-due entries leave 4 flex in r12, so
-# four staged entries enter r12 and semdedup_stream_report — whose
-# replay base gets its r12 row and whose aggregation core has four
-# driver-checked consumers — takes an r13 flex slot).
-# test_registry_hygiene's staged lint enforces: registered, full
-# oracle, outside the window, self-expiry once a driver row exists, and
-# that a test file names the entry alongside a driver-SF compare().
-STAGED: tuple[str, ...] = (
-    # (r12: the four semdedup entries entered the window and left
-    # STAGED per the contract. r13: semdedup_stream_report and
-    # manifest_skipping_scan entered the r13 flex slots and left.)
-    # NEW r12 (VERDICT r11 #3): the two-level quantizer's measured
-    # production operating point (W=2, nprobe=4 — recall recovers to
-    # the flat-trained 1.000 at 3.3x less scan, twolevel_nprobe_sweep).
-    # r13 is fully pre-committed, so this waits for an r14 flex slot.
-    "ivf_twolevel_probe4_recall_eval",
-    # NEW r12: the semantic incremental family's AT-SCALE quantizer
-    # configuration as a full oracle (previously only e2e-tested in
-    # the k=64 stream loop) — r14 flex slot.
-    "semdedup_incremental_twolevel",
-    # NEW r12: random-hyperplane cosine LSH (llm/hyperplane.py) — the
-    # production bucket key neardup_cosine_pairs' label-blocking
-    # stands in for, plus its per-planted-class recall instrument.
-    # Full oracles (derived md5-rational planes are identical literals
-    # in both engines) — r14 flex slots. With the registry at 203 the
-    # staleness bound rises to max(3, ceil(203/50)) = 5, so once r13
-    # runs as pre-committed no cohort is forced into r14 (the r10
-    # cohort's 48 remaining become due r15): r14 leads with ALL FOUR
-    # staged entries and fills the rest from the r10 cohort.
-    "neardup_hyperplane_lsh_pairs", "neardup_hyperplane_recall_eval",
-    # NEW r12: hybrid lexical+semantic retrieval — RRF fusion of the
-    # BM25 top-K and the exact-cosine top-K (llm/search.py), the
-    # two-tower serving shape. Full oracle — r14 flex slot.
-    "hybrid_search_rrf",
-    # NEW r12: the hyperplane index's operational gauge (per-band
-    # bucket/cap census — n_capped > 0 is the widen-the-signature
-    # signal the 10x probe showed losing 95% recall silently without).
-    # Full oracle — r14 flex slot.
-    "hyperplane_band_census",
-    # NEW r12: pairs -> clusters over the hyperplane pair graph (the
-    # text family's dedup_lsh_clusters arc on the banded embedding
-    # side; shared lsh_components core). Full oracle — r14 flex slot.
-    "neardup_hyperplane_clusters",
-    # NEW r13 (VERDICT r12 #4): the WIDTH-SCALED hyperplane sizing —
-    # 2x12 bands, the configuration the 10x probe showed restoring
-    # 4000/4000 planted recall where the default 2x8 silently lost 95%
-    # to capped buckets. The measured width law as a driver-checkable
-    # entry (the MinHash family's k128 precedent). Full oracle —
-    # r14 flex slot.
-    "neardup_hyperplane_lsh_pairs_w12",
-    # NEW r13 (VERDICT r12 #5): the hybrid tower swap made real —
-    # hybrid_search_rrf with the semantic tower = the TRAINED-IVF
-    # probe (the documented 100 TB configuration), lexical tower and
-    # RRF fusion tail byte-shared with the brute twin. Full oracle —
-    # r14 flex slot. (STAGED ends r13 at exactly the prescribed <= 9.)
-    "hybrid_search_rrf_ivf",
-)
-
-# R14 WINDOW HANDOFF (set at r13 window rotation; the r13 PRIORITY
-# above is exactly the r12 handoff's prescription — 46 r9-due + the
-# two remaining r11-staged entries + media_index_build +
-# ivf_probe_search):
-# R14: NO cohort is forced (staleness bound max(3, ceil(207/50)) = 5;
-# the r10 cohort — 48 names after r13's two pre-pulls of
-# media_index_build and ivf_probe_search — comes due in r15). R14
-# therefore leads with ALL NINE staged entries (exact names, final as
-# of end-r13): ivf_twolevel_probe4_recall_eval,
-# semdedup_incremental_twolevel, neardup_hyperplane_lsh_pairs,
-# neardup_hyperplane_recall_eval, hyperplane_band_census,
-# neardup_hyperplane_clusters, hybrid_search_rrf,
-# neardup_hyperplane_lsh_pairs_w12, hybrid_search_rrf_ivf — and fills
-# the remaining 41 slots from the r10 cohort in sorted-name order
-# (first 41 of: array_agg_statuses, asof_purchase_last_click,
-# blocklist_filter_docs, cube_order_status_priority,
-# customers_without_big_orders, dedup_ngram_jaccard, dedup_simhash,
-# doc_rolling_hash, embedding_norms, event_type_rates,
-# grouping_sets_volume, heatmap_mvt_z9, heatmap_z14,
-# hll_cardinality_by_source, ivf_pq_search, lm_heldout_surprisal,
-# media_dedup_incremental, media_dedup_stream_replay, media_metadata,
-# min_price_supplier_per_part, monthly_revenue_trend,
-# nations_customers_without_suppliers, nations_with_both,
-# neardup_threshold_sweep, order_priority_late_ship, orders_above_avg,
-# parts_with_cheap_supply, pivot_qty_by_status, pq_adc_topk,
-# pq_train_subspace_kmeans, price_quantiles_by_flag,
-# q1_pricing_summary, q3_shipping_priority, q6_forecast_revenue,
-# quality_lr_train, quality_percentile_rank, range_join_value_bands,
-# rollup_lineitem_status, semantic_vs_lexical, semdedup_prune,
-# spatial_join_points_in_boxes — leaving tile_mvt_batch_parity,
-# tile_mvt_z7_full, token_count_bpe, topk_orders_per_priority,
-# training_mix_pipeline, union_all_key_space, window_running_revenue
-# for r15, where the whole cohort is due anyway). Whatever r10 names
-# don't enter r14 MUST all take r15 slots.
-#
-# Standing notes: if the driver regenerated /root/testdata, re-run
-# tools/freeze_ivf_centroids.py + tools/freeze_ivf_twolevel.py and
-# give the ivf_trained_*/ivf_twolevel_* entries fresh slots with the
-# new snapshot (oracle parity holds either way — both engines score
-# the same frozen constants — but the recall-win story should track
-# current data).
-
-
 def load_all() -> dict[str, QueryDef]:
     """Import every operator module (side effect: registration) and return
-    the registry, reordered so PRIORITY names come first (driver checks a
-    bounded window from the top). Import errors in one module must not
-    take down the whole surface — they are re-raised only when that query
-    is actually run.
+    the registry in registration order. A module whose import fails makes
+    this raise: a silently skipped module would drop all its entries from
+    ``queries()``, the oracle sweep and the parity tests.
     """
     import importlib
 
@@ -456,35 +86,21 @@ def load_all() -> dict[str, QueryDef]:
         "tank_spark.streaming.stateful",
     ]
     for m in modules:
-        try:
-            importlib.import_module(m)
-        except ModuleNotFoundError:
-            pass  # module not built yet (incremental rounds)
+        importlib.import_module(m)
     _disable_dataframe_debugging()
-    ordered = {n: QUERIES[n] for n in PRIORITY if n in QUERIES}
-    ordered.update((n, q) for n, q in QUERIES.items() if n not in ordered)
-    return ordered
+    return QUERIES
 
 
 def _disable_dataframe_debugging() -> None:
-    """Turn off PySpark's per-call DataFrame-debugging origin capture
-    for the serving session (r14, guide §7.3 driver-side cost / VERDICT
-    r13 #6 planning gap). When enabled (the default), EVERY wrapped
-    DataFrame/Column API call pays ~3 extra py4j round-trips
-    (conf.get + PySparkCurrentOrigin.set/clear) plus a Python stack
-    walk, purely to enrich error messages with the user call site — on
-    these VMs that is ~3 ms per call and 0.3-1 s of driver time per
-    query BUILD, the single largest slice of the measured
-    ~0.4-0.5 s/query planning gap. Pure driver-side bookkeeping: no
-    query result, plan, or execution change. PySpark caches the flag on
-    first wrapped call, so this must run before any DataFrame API use —
-    load_all() is exactly that point for bench/driver/tool sessions.
-    SPARK_GRAFT_DF_DEBUG=1 keeps it on (and restores the richer error
-    call sites) for interactive debugging."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_DF_DEBUG", "0") == "1":
-        return
+    """Turn off PySpark's per-call DataFrame-debugging origin capture.
+    When enabled (the default), every wrapped DataFrame/Column API call
+    pays ~3 extra py4j round-trips (conf.get + PySparkCurrentOrigin
+    set/clear) plus a Python stack walk, purely to enrich error messages
+    with the user call site: ~3 ms per call and 0.3-1 s of driver time
+    per query build. Pure driver-side bookkeeping: no query result, plan
+    or execution change. PySpark caches the flag on the first wrapped
+    call, so this must run before any DataFrame API use; load_all() is
+    that point for bench, driver and tool sessions."""
     try:
         from pyspark.sql import SparkSession
 

@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = "/root/testdata/sf0.001"   # smallest scale: correctness, not perf
 
@@ -34,8 +38,6 @@ SLOW_NODEID_PARTS = (
     "test_oracle_parity[neardup_hyperplane_lsh_pairs_w12]",
     "test_oracle_parity[neardup_hyperplane_lsh_pairs]",
     "test_oracle_parity[neardup_hyperplane_recall_eval]",
-    "test_oracle_parity[media_dedup_report]",
-    "test_oracle_parity[media_dedup_apply]",
     "test_api.py::test_full_route_surface",
     "test_api.py::test_ingest_upsert_replaces_matching_pk",
     "test_api.py::test_tile_cache_roundtrip_and_invalidation",
@@ -56,18 +58,8 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from perfbench.session import make_session
 
-    s = (
-        SparkSession.builder.master("local[8]")
-        .appName("tank_spark_tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
-    s.sparkContext.setLogLevel("ERROR")
+    s = make_session(REPO)
     yield s
     s.stop()

@@ -1,5 +1,5 @@
-"""Hybrid RRF retrieval (llm/search.py hybrid_search_rrf): staged
-parity obligation, fusion arithmetic, and the bounded two-tower plan."""
+"""Hybrid RRF retrieval (llm/search.py hybrid_search_rrf): oracle
+parity at the driver SF, fusion arithmetic, and the bounded two-tower plan."""
 
 from __future__ import annotations
 
@@ -64,10 +64,9 @@ def test_overlap_doc_outranks_single_tower(spark):
 
 
 def test_ivf_twin_staged_parity(spark):
-    """hybrid_search_rrf_ivf's staged obligation: full oracle parity
-    at DRIVER_SF and the pytest SF (VERDICT r12 #5 — the documented
-    'swap brute force for the IVF probe' is a registered entry, not a
-    promise). Both engines compute the IDENTICAL trained probe, so
+    """hybrid_search_rrf_ivf: full oracle parity at DRIVER_SF and the
+    pytest SF (the documented 'swap brute force for the IVF probe' is
+    a registered entry, not a promise). Both engines compute the IDENTICAL trained probe, so
     parity is exact even where the probe's recall misses shift fused
     ranks vs the brute twin."""
     for sf_dir in (SF_DIR, DRIVER_SF):

@@ -1,5 +1,5 @@
-"""Random-hyperplane cosine LSH (llm/hyperplane.py): staged-entry
-parity obligations, the deterministic-collision invariant, the honest
+"""Random-hyperplane cosine LSH (llm/hyperplane.py): oracle parity at
+the driver SF, the deterministic-collision invariant, the honest
 recall instrument, and the banded (never all-pairs) plan shape."""
 
 from __future__ import annotations
@@ -13,18 +13,18 @@ DRIVER_SF = "/root/testdata/sf0.01"
 
 
 def test_staged_parity_at_driver_sf(spark):
-    """Both staged entries owe full oracle parity at the driver SF AND
-    the pytest SF (DRIVER_SF marker for the staged hygiene lint)."""
+    """Both entries hold full oracle parity at the driver SF AND the
+    pytest SF."""
     for sf_dir in (SF_DIR, DRIVER_SF):
         compare(spark, sf_dir, "neardup_hyperplane_lsh_pairs")
         compare(spark, sf_dir, "neardup_hyperplane_recall_eval")
 
 
 def test_w12_staged_parity(spark):
-    """The width-scaled twin's staged obligation: full oracle parity
-    at DRIVER_SF and the pytest SF (VERDICT r12 #4 — the 2x12 sizing
-    the 10x probe showed surviving corpus growth lives as a
-    driver-checkable entry, not only a probe tool)."""
+    """The width-scaled twin: full oracle parity at DRIVER_SF and the
+    pytest SF (the 2x12 sizing that survived corpus growth at 10x,
+    SCALE.md "Round-12: the hyperplane WIDTH dial, measured at 10x",
+    lives as a driver-checkable entry)."""
     for sf_dir in (SF_DIR, DRIVER_SF):
         compare(spark, sf_dir, "neardup_hyperplane_lsh_pairs_w12")
 
@@ -136,10 +136,9 @@ def test_natural_corpus_stays_out_of_the_tau_regime(spark):
 
 
 def test_band_census_staged_parity_and_gauge(spark):
-    """hyperplane_band_census' staged obligation (full oracle parity
-    at DRIVER_SF and the pytest SF) plus the gauge's meaning: at the
-    test corpora the registered width keeps every bucket under the
-    cap (n_capped = 0 — matching the pairs entry's lossless planted
+    """hyperplane_band_census: full oracle parity at DRIVER_SF and the
+    pytest SF, plus the gauge's meaning: at the test corpora the
+    registered width keeps every bucket under the cap (n_capped = 0 — matching the pairs entry's lossless planted
     recall), and the candidate upper bound reconciles with the actual
     banded-join fan-out."""
     from tank_spark.plans.registry import load_all
@@ -155,8 +154,8 @@ def test_band_census_staged_parity_and_gauge(spark):
 
 
 def test_clusters_staged_parity_and_structure(spark):
-    """neardup_hyperplane_clusters' staged obligation (full oracle
-    parity at DRIVER_SF and the pytest SF), plus the component
+    """neardup_hyperplane_clusters: full oracle parity at DRIVER_SF
+    and the pytest SF, plus the component
     semantics on the derived corpus: the planted pairs are DISJOINT
     (recrawl / near_bump / fresh_twin draw from disjoint orig slices),
     so every component has exactly 2 members, component = the lower

@@ -218,9 +218,8 @@ def test_frozen_score_structs_memoized(spark):
 
 
 def test_probe4_staged_parity_at_driver_sf(spark):
-    """ivf_twolevel_probe4_recall_eval's staged obligation (registered
-    after the frozen r12 window; r14 flex slot pre-assigned): full
-    oracle parity at the DRIVER_SF (sf0.01) AND the pytest SF."""
+    """ivf_twolevel_probe4_recall_eval: full oracle parity at the
+    DRIVER_SF (sf0.01) AND the pytest SF."""
     from tests.oracle_util import compare
 
     DRIVER_SF = "/root/testdata/sf0.01"

@@ -1,47 +1,27 @@
-"""Registry-wide hygiene lints (VERDICT r6 #1/#4).
+"""Registry- and harness-wide hygiene lints.
 
-Two structural failure classes got through driver rounds green:
-
-* a VACUOUS green row — q5_nation_volume's predicate matched a region
-  name the regenerated testdata no longer contains, so both engines
-  returned 0 rows and the hash "match" certified nothing (r6);
-* STALE coverage — 14 r1-green relational entries went five rounds
-  without a fresh driver row while the testdata generator changed twice
-  underneath them.
-
-These lints make both classes impossible to ship silently: every oracle
-must be non-empty at the driver's correctness SF, and every entry must
-either hold a driver row from the last 3 rounds or sit in the upcoming
-window (the first 50 registry entries, which the driver checks).
+* A VACUOUS green row: q5_nation_volume's predicate once matched a
+  region name the regenerated testdata no longer contained, so both
+  engines returned 0 rows and the hash "match" certified nothing. Every
+  oracle must be non-empty at the driver's correctness SF.
+* A silently short registry: a module whose import fails must fail
+  ``load_all()``, not drop its entries from every sweep.
+* One session factory: ``perfbench.session.make_session`` is the only
+  place that builds a SparkSession, so core count and driver memory
+  come from the host everywhere.
 """
 
 from __future__ import annotations
 
-import glob
-import json
+import ast
 import os
 import re
+import sys
 
 import pytest
 
 DRIVER_SF_DIR = "/root/testdata/sf0.01"   # the driver's correctness SF
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-WINDOW = 50                                # driver checks the first 50
-
-
-def _max_stale_rounds() -> int:
-    """Tightest FEASIBLE staleness bound: a 50-slot window refreshing an
-    N-entry registry can touch each entry at best every ceil(N/50)
-    rounds, so demanding fresher-than-that is unsatisfiable (at 157
-    entries the original hard 3 became impossible: 157 > 3*50). Floor of
-    3 preserves the VERDICT r6 policy while the registry fits it."""
-    import math
-
-    return max(3, math.ceil(len(_registry()) / WINDOW))
-
-# deliberately bench-only: full-fidelity z7 MVT assembly is a perf probe
-# whose blob output the driver's canonicalizer can't hash
-BENCH_ONLY = {"tile_mvt_z7_full"}
 
 
 def _registry():
@@ -73,152 +53,52 @@ def test_oracle_non_vacuous_at_driver_sf(name):
         assert k >= 1, f"{name}: oracle returns 0 rows at {sf_dir}"
 
 
-def _driver_history():
-    """name -> latest round with a driver correctness row, plus the
-    latest round number seen on disk."""
-    last: dict[str, int] = {}
-    rounds = [0]
-    for p in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
-        m = re.search(r"r(\d+)", os.path.basename(p))
-        if not m:
-            continue
-        r = int(m.group(1))
-        rounds.append(r)
-        try:
-            data = json.load(open(p))
-        except (OSError, json.JSONDecodeError):
-            continue
-        for k in data:
-            last[k] = max(last.get(k, 0), r)
-    return last, max(rounds)
+def test_load_all_raises_when_a_module_import_fails(monkeypatch):
+    """A module that cannot be imported must fail the whole registry:
+    swallowing the error would drop every entry it registers from
+    queries(), the oracle sweep and the parity tests without a signal.
+    A None entry in sys.modules makes the import raise
+    ModuleNotFoundError, the exact class a blanket guard would catch."""
+    from tank_spark.plans import registry
+
+    monkeypatch.setitem(sys.modules, "tank_spark.llm.bpe", None)
+    with pytest.raises(ImportError):
+        registry.load_all()
 
 
-def test_no_entry_goes_stale_without_rotation():
-    """Rotation policy as code: except BENCH_ONLY, every registered
-    query must have a driver row within the last _max_stale_rounds()
-    rounds *after the upcoming round runs* — i.e. a row newer than
-    (latest_round - bound + 1), or a slot in the upcoming window.
-    Never-checked entries (new registrations) must be in the window
-    unconditionally."""
-    from tank_spark.plans.registry import STAGED
-
-    last, latest = _driver_history()
-    if latest == 0:
-        pytest.skip("no CORRECTNESS_r*.json history on disk")
-    bound = _max_stale_rounds()
-    reg = _registry()
-    window = set(list(reg)[:WINDOW])
-    offenders = []
-    for name in reg:
-        if name in BENCH_ONLY or name in window:
-            continue
-        seen = last.get(name)
-        if seen is None:
-            if name in STAGED:
-                # registered after the current round's window froze;
-                # test_staged_entries_are_window_ready pins the
-                # substitute obligations (full oracle + two-SF parity),
-                # and the next window MUST lead with them — once any
-                # driver row exists the exemption self-expires.
-                continue
-            offenders.append(f"{name}: never driver-checked and not in window")
-        elif latest - seen >= bound:
-            offenders.append(
-                f"{name}: last row r{seen}, {latest - seen} rounds ago — "
-                f"must be in the r{latest + 1} window")
-    assert not offenders, "stale driver coverage:\n  " + "\n  ".join(offenders)
+def _harness_sources():
+    yield os.path.join(REPO, "bench.py")
+    for top in ("tests", "tools", "tank_spark"):
+        for d, _, files in os.walk(os.path.join(REPO, top)):
+            yield from (os.path.join(d, f) for f in sorted(files)
+                        if f.endswith(".py"))
 
 
-def _staged_parity_evidence(src: str, name: str) -> bool:
-    """Does this test file actually DRIVE a driver-SF compare() with the
-    staged entry — not merely mention all three tokens somewhere
-    (ADVICE r11: the substring form was satisfiable by an unrelated
-    compare() in a file that mentioned the name in a comment)? Parsed
-    with ast; evidence is, within ONE file that carries a DRIVER_SF
-    marker, either
-      (a) a compare() call taking the name as a literal argument, or
-      (b) the name listed inside a pytest parametrize(...) call AND a
-          compare() call whose query-name argument is a variable (the
-          parametrized one feeding it)."""
-    import ast
-
-    if "DRIVER_SF" not in src:
-        return False
-    try:
-        tree = ast.parse(src)
-    except SyntaxError:
-        return False
-    in_parametrize = False
-    compare_literal = False
-    compare_variable = False
-    for node in ast.walk(tree):
-        if not isinstance(node, ast.Call):
-            continue
-        fn = node.func
-        fname = fn.attr if isinstance(fn, ast.Attribute) else getattr(
-            fn, "id", None)
-        if fname == "parametrize":
-            if any(isinstance(s, ast.Constant) and s.value == name
-                   for s in ast.walk(node)):
-                in_parametrize = True
-        elif fname == "compare" and node.args:
-            qarg = node.args[-1]
-            if isinstance(qarg, ast.Constant) and qarg.value == name:
-                compare_literal = True
-            elif isinstance(qarg, ast.Name):
-                compare_variable = True
-    return compare_literal or (in_parametrize and compare_variable)
+def test_make_session_is_the_only_session_factory():
+    """No SparkSession.builder outside perfbench/session.py, and no
+    hard-coded local[N] master or driver-memory setting in bench.py,
+    tests/ or tools/: slots and memory come from the host."""
+    pinned = re.compile(r"local\[\d+\]|spark\.driver\.memory")
+    found = []
+    for path in _harness_sources():
+        rel = os.path.relpath(path, REPO)
+        tree = ast.parse(open(path).read())
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Attribute) and node.attr == "builder"
+                    and getattr(node.value, "id", "") == "SparkSession"):
+                found.append(f"{rel}:{node.lineno} SparkSession.builder")
+            elif (not rel.startswith("tank_spark")
+                  and isinstance(node, ast.Constant)
+                  and isinstance(node.value, str)
+                  and pinned.search(node.value)):
+                found.append(f"{rel}:{node.lineno} {node.value[:40]!r}")
+    assert not found, found
 
 
-def test_staged_entries_are_window_ready():
-    """STAGED is a bounded exception to the never-checked rule, not a
-    loophole: every staged entry must (a) be registered, (b) carry a
-    FULL DuckDB oracle — rows-only can't be staged, the whole point is
-    that pytest parity substitutes for the missed driver row, (c) sit
-    OUTSIDE the current window (otherwise it isn't 'staged'),
-    (d) self-expire — once a driver row exists the name must leave
-    STAGED (it would then be an ordinary rotation citizen and the
-    exemption would mask real staleness), and (e) be NAMED in a test
-    file that runs compare() at the driver SF — the substitute signal
-    must actually exist in the suite, not just be promised."""
-    from tank_spark.plans.registry import PRIORITY, STAGED
+def test_bench_headline_names_are_registered_and_unique():
+    from bench import HEADLINE
 
     reg = _registry()
-    last, _latest = _driver_history()
-    test_files = {
-        p: open(p).read()
-        for p in glob.glob(os.path.join(REPO, "tests", "test_*.py"))}
-    problems = []
-    for name in STAGED:
-        q = reg.get(name)
-        if q is None:
-            problems.append(f"{name}: staged but not registered")
-            continue
-        if q.oracle is None:
-            problems.append(f"{name}: staged without a full oracle")
-        if name in PRIORITY:
-            problems.append(f"{name}: staged AND in the window")
-        if name in last:
-            problems.append(
-                f"{name}: has a driver row (r{last[name]}) — STAGED "
-                "must drop it")
-        if not any(_staged_parity_evidence(src, name)
-                   for src in test_files.values()):
-            problems.append(
-                f"{name}: no test file drives a driver-SF compare() "
-                "with it — the staged parity obligation is unmet")
-    assert not problems, "STAGED violations:\n  " + "\n  ".join(problems)
-
-
-def test_window_is_exactly_the_priority_tuple():
-    """The driver checks the FIRST 50 load_all() entries; every PRIORITY
-    name must resolve (a typo'd name silently falls out of the window
-    and some other entry drifts in)."""
-    from tank_spark.plans.registry import PRIORITY
-
-    reg = _registry()
-    assert len(PRIORITY) == WINDOW
-    assert len(set(PRIORITY)) == WINDOW, "duplicate names in PRIORITY"
-    missing = [n for n in PRIORITY if n not in reg]
-    assert not missing, f"PRIORITY names not registered: {missing}"
-    assert list(reg)[:WINDOW] == list(PRIORITY)
+    assert len(HEADLINE) == len(set(HEADLINE)) == 57
+    missing = [n for n in HEADLINE if n not in reg]
+    assert not missing, f"HEADLINE names not registered: {missing}"

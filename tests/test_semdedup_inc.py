@@ -1,11 +1,8 @@
-"""Incremental semantic dedup (llm/semdedup_inc.py): staged-entry
-parity obligations, planted-disposition semantics, and plan pins.
+"""Incremental semantic dedup (llm/semdedup_inc.py): oracle parity at
+the driver SF, planted-disposition semantics, and plan pins.
 
-The five semdedup_inc entries are registry.STAGED (registered after the
-r11 window froze), so the missed driver row is substituted by pytest
-oracle parity at BOTH the driver SF (sf0.01) and the pytest SF —
-test_oracle_parity covers sf0.001 for every oracle automatically; the
-sf0.01 run lives here and is the staged obligation's load-bearing half.
+test_oracle_parity covers sf0.001 for every oracle; the driver's
+correctness SF (sf0.01) run of the semdedup entries lives here.
 """
 
 from __future__ import annotations
@@ -23,18 +20,17 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-# ------------------------------------------- staged parity obligation
+# ------------------------------------------- parity at the driver SF
 
 @pytest.mark.parametrize("name", [
     "semdedup_index_build", "semdedup_incremental",
     "semdedup_incremental_report", "semdedup_stream_replay",
     "semdedup_stream_report",
-    # r12: the two-level (k=64) configuration, staged for r14
+    # the two-level (k=64) configuration
     "semdedup_incremental_twolevel",
 ])
 def test_staged_parity_at_driver_sf(spark, name):
-    """The driver-equivalent check the STAGED exemption owes: full
-    oracle parity at the driver's correctness SF."""
+    """Full oracle parity at the driver's correctness SF."""
     compare(spark, DRIVER_SF_DIR, name)
 
 

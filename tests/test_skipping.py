@@ -250,9 +250,8 @@ def test_zorder_clustering_prunes_both_dimensions(spark, tmp_path):
 
 
 def test_manifest_skipping_scan_staged_parity(spark):
-    """The registered entry's staged obligation: full oracle parity at
-    the driver SF AND the pytest SF (compare() is the driver-shaped
-    check; DRIVER_SF marker for the staged hygiene lint), plus the
+    """The registered entry: full oracle parity at the driver SF AND
+    the pytest SF (compare() is the driver-shaped check), plus the
     layer's point — the served scan actually pruned files."""
     from tests.oracle_util import compare
 

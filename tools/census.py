@@ -1,6 +1,6 @@
 #!/usr/bin/env python
-"""Registry-wide timing census (the r9 protocol, now a tool): every
-registered query in ONE session at the bench SF, noop sink, 1 cold +
+"""Registry-wide timing census: every registered query in ONE
+``perfbench.session`` session at the bench SF, noop sink, 1 cold +
 1 warm run each. Numbers are UPPER bounds — all queries share one
 cache, so InMemoryRelation eviction inflates the heavy tail; use
 iso_probe.py for adjudication-grade medians. Prints a sorted-by-warm
@@ -8,69 +8,42 @@ table and the warm total.
 
 Usage: python tools/census.py [SF_DIR]
 """
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
-    import os
-
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "48g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
+    from perfbench.session import make_session
     from tank_spark.plans.registry import load_all
 
-    from bench import _cpu_ticks, _spin_ms, _steal_pct, _sys_pct  # contamination gauges
-
-    spin_base = min(_spin_ms() for _ in range(5))
-    print(f"# loadavg at start: {os.getloadavg()[0]:.2f}, "
-          f"spin base: {spin_base:.1f} ms")
-    ticks_all = _cpu_ticks()
+    spark = make_session(ROOT)
     rows, errs = [], []
     for name, q in load_all().items():
         try:
             t0 = time.perf_counter()
             q.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
             cold = time.perf_counter() - t0
-            tk0 = _cpu_ticks()
             t0 = time.perf_counter()
             q.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
             warm = time.perf_counter() - t0
-            tk1 = _cpu_ticks()
-            st, sy = _steal_pct(tk0, tk1), _sys_pct(tk0, tk1)
-            sp = _spin_ms() / spin_base  # guest-throughput edge sample
-            rows.append((warm, cold, name, st, sy, sp))
-            print(f"{name} cold={cold:.2f} warm={warm:.2f} "
-                  f"steal={st:.1f}% sys={sy:.1f}% spin=x{sp:.2f}",
-                  flush=True)
+            rows.append((warm, cold, name))
+            print(f"{name} cold={cold:.2f} warm={warm:.2f}", flush=True)
         except Exception as e:  # noqa: BLE001 - census must finish
             errs.append((name, str(e)[:200]))
             print(f"ERR {name}: {e}", flush=True)
     rows.sort(reverse=True)
     print(f"\n# entries: {len(rows)}, errors: {len(errs)}, "
-          f"warm total: {sum(r[0] for r in rows):.1f}s, "
-          f"loadavg end: {os.getloadavg()[0]:.2f}, "
-          f"steal over run: {_steal_pct(ticks_all, _cpu_ticks()):.1f}%")
-    print("# top 12 by warm (warm-run steal/sys/spin are the gauge rows"
-          " an out-of-band number is adjudicated against):")
-    for warm, cold, name, st, sy, sp in rows[:12]:
-        print(f"| {name} | {cold:.2f} | {warm:.2f} | {st:.1f}% | {sy:.1f}% "
-              f"| x{sp:.2f} |")
+          f"warm total: {sum(r[0] for r in rows):.1f}s")
+    print("# top 12 by warm:")
+    for warm, cold, name in rows[:12]:
+        print(f"| {name} | {cold:.2f} | {warm:.2f} |")
+    spark.stop()
 
 
 if __name__ == "__main__":

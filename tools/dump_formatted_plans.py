@@ -4,39 +4,28 @@
 
 Usage: python tools/dump_formatted_plans.py SUFFIX [name ...]
 SUFFIX is 'before' or 'after'; with no names, dumps every bench.HEADLINE
-query. The judge checks plan claims against these files (optimization
-deliverable), so they are committed.
+query. OPTIMIZATION_r14.md cites the committed dumps for its plan
+claims.
 """
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 suffix = sys.argv[1]
 names = sys.argv[2:]
 
-from pyspark.sql import SparkSession
+from bench import HEADLINE  # noqa: E402
+from perfbench.session import make_session  # noqa: E402
+from tank_spark.plans.registry import load_all  # noqa: E402
 
-spark = (SparkSession.builder.master("local[32]")
-         .appName("dump_plans")
-         .config("spark.sql.shuffle.partitions", "32")
-         .config("spark.sql.adaptive.enabled", "true")
-         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-         .config("spark.sql.session.timeZone", "UTC")
-         .config("spark.ui.enabled", "false")
-         .config("spark.driver.memory", "24g")
-         .getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
-
-from bench import HEADLINE
-from tank_spark.plans.registry import load_all
-
+spark = make_session(ROOT)
 reg = load_all()
 if not names:
     names = list(HEADLINE)
 
-out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                       "plans", os.environ.get("SPARK_GRAFT_ROUND", "r14"))
+out_dir = os.path.join(ROOT, "plans", os.environ.get("SPARK_GRAFT_ROUND", "r14"))
 os.makedirs(out_dir, exist_ok=True)
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 

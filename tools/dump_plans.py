@@ -5,8 +5,12 @@ queries, with the scale-relevant lines annotated. Run from the repo root:
 
 from __future__ import annotations
 
+import os
 import re
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SHOW = [
     ("tile_z9_range", "Pruned no-shuffle cache scan (Morton BETWEEN reaches "
@@ -156,26 +160,17 @@ KEEP = re.compile(
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
+    from perfbench.session import make_session
     from tank_spark.plans.registry import load_all
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = make_session(ROOT)
     registry = load_all()
     sf = "/root/testdata/sf0.01"
 
     out = [
         "# PLANS — executed physical plans of representative queries",
         "",
-        "Auto-generated by `tools/dump_plans.py` (sf0.01, local[8], AQE on).",
+        "Auto-generated by `tools/dump_plans.py` (sf0.01, `perfbench.session`, AQE on).",
         "Only scale-relevant plan lines are shown; `tests/test_plan_shapes.py`",
         "asserts these properties on every run.",
         "",

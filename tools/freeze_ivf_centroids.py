@@ -12,7 +12,11 @@ Rewrites tank_spark/llm/ivf_frozen.py in place; commit the result.
 
 from __future__ import annotations
 
+import os
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 HEADER = '''"""Frozen IVF coarse centroids — trained once by
 tools/freeze_ivf_centroids.py (Lloyd\'s k-means: llm/similarity.py
@@ -42,18 +46,10 @@ def main() -> None:
     k = int(sys.argv[2]) if len(sys.argv) > 2 else 8
     rounds = int(sys.argv[3]) if len(sys.argv) > 3 else 4
 
-    from pyspark.sql import SparkSession
-
+    from perfbench.session import make_session
     from tank_spark.llm.similarity import train_kmeans
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
+    spark = make_session(ROOT)
     cents = sorted(
         (int(r["centroid_id"]), [float(v) for v in r["c_emb"]])
         for r in train_kmeans(spark, sf_dir, k=k, rounds=rounds).collect()

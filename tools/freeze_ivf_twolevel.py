@@ -1,8 +1,8 @@
 """Freeze a LARGER trained IVF quantizer (k=64) plus its TWO-LEVEL
 coarse grouping as committed literals (tank_spark/llm/ivf_frozen2.py) —
 the deployment artifact behind ivf_twolevel_assignments, which promotes
-the nlist-ceiling escape hatch (tools/ivf_nlist_probe.py, SCALE.md r11)
-from a tool demo to a registered, oracle-checked operator.
+the nlist-ceiling escape hatch (SCALE.md "Round-11: the nlist-ceiling
+escape hatch, demonstrated") from a tool demo to a registered, oracle-checked operator.
 
 Freeze steps (all training-side, none bit-portable, all FROZEN so the
 serving side is exact):
@@ -18,7 +18,11 @@ Rewrites tank_spark/llm/ivf_frozen2.py in place; commit the result.
 
 from __future__ import annotations
 
+import os
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 HEADER = '''"""Frozen TWO-LEVEL IVF quantizer — trained once by
 tools/freeze_ivf_twolevel.py (fine: Lloyd\'s k-means k={k}, {rounds}
@@ -48,18 +52,10 @@ def main() -> None:
     rounds = int(sys.argv[4]) if len(sys.argv) > 4 else 4
 
     import numpy as np
-    from pyspark.sql import SparkSession
-
+    from perfbench.session import make_session
     from tank_spark.llm.similarity import train_kmeans
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
+    spark = make_session(ROOT)
     cents = sorted(
         (int(r["centroid_id"]), [float(v) for v in r["c_emb"]])
         for r in train_kmeans(spark, sf_dir, k=k, rounds=rounds).collect()

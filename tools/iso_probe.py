@@ -1,55 +1,35 @@
 #!/usr/bin/env python
-"""Isolated fresh-session probe (the adjudication protocol from
-SCALE.md round-8): ONE query, fresh SparkSession, sf dir from argv,
-one untimed warm-up then N timed runs to the noop sink; prints the
-sorted runs and median. Run on an idle machine (check loadavg and
-stray JVMs first).
+"""Isolated fresh-session probe: ONE query in a fresh
+``perfbench.session`` session, sf dir from argv, one untimed warm-up
+then N timed runs to the noop sink; prints the sorted runs and median.
+Compare two commits by alternating their runs on the same host.
 
 Usage: python tools/iso_probe.py QUERY [SF_DIR] [RUNS]
 """
-import os, sys, time
-sys.path.insert(0, "/root/repo")
-from bench import _cpu_ticks, _spin_ms, _steal_pct, _sys_pct  # contamination gauges
+import os
+import sys
+import time
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 name = sys.argv[1]
 sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
 runs_n = int(sys.argv[3]) if len(sys.argv) > 3 else 5
 
-from pyspark.sql import SparkSession
-spark = (SparkSession.builder.master("local[32]")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.ui.showConsoleProgress", "false")
-    .config("spark.driver.memory", "48g").getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
-from tank_spark.plans.registry import load_all
+from perfbench.session import make_session  # noqa: E402
+from tank_spark.plans.registry import load_all  # noqa: E402
+
+spark = make_session(ROOT)
 q = load_all()[name]
 t0 = time.perf_counter()
 q.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
 cold = time.perf_counter() - t0
 runs = []
-steals = []
-syss = []
-spins = []
-spin_base = min(_spin_ms() for _ in range(5))
 for _ in range(runs_n):
-    tk0 = _cpu_ticks()
     t0 = time.perf_counter()
     q.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
     runs.append(time.perf_counter() - t0)
-    tk1 = _cpu_ticks()
-    steals.append(_steal_pct(tk0, tk1))
-    syss.append(_sys_pct(tk0, tk1))
-    spins.append(round(_spin_ms() / spin_base, 2))
-order = sorted(range(runs_n), key=lambda i: runs[i])
-runs = [runs[i] for i in order]
-steals = [steals[i] for i in order]  # gauges aligned with sorted runs
-syss = [syss[i] for i in order]
-spins = [spins[i] for i in order]
+runs.sort()
 print(f"RESULT {name} sf={sf_dir} cold={cold:.2f} "
-      f"runs={[round(r, 3) for r in runs]} median={runs[len(runs)//2]:.3f} "
-      f"steal_pct={steals} sys_pct={syss} spin_ratio={spins} "
-      f"loadavg={os.getloadavg()[0]:.2f}")
+      f"runs={[round(r, 3) for r in runs]} median={runs[len(runs)//2]:.3f}")
 spark.stop()

@@ -22,7 +22,11 @@ Usage: python tools/make_scale10.py [K] [OUT_DIR] [SRC_DIR] [HOT_PCT]
 
 from __future__ import annotations
 
+import os
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
@@ -31,19 +35,12 @@ def main() -> None:
     src = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
     hot_pct = int(sys.argv[4]) if len(sys.argv) > 4 else 0
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("make_scale10")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    from perfbench.session import make_session
+
+    spark = make_session(ROOT)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def rd(name):
         return spark.read.parquet(f"{src}/{name}.parquet")

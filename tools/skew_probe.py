@@ -14,8 +14,12 @@ Usage: python tools/skew_probe.py BASE_DIR SKEW_DIR [SKEW_DIR2 ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 PROBES = [
     "dedup_exact",
@@ -52,23 +56,10 @@ def main() -> None:
     if len(dirs) < 2:
         sys.exit("usage: skew_probe.py BASE_DIR SKEW_DIR [SKEW_DIR2 ...]")
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("skew_probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "48g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
+    from perfbench.session import make_session
     from tank_spark.plans.registry import load_all
 
+    spark = make_session(ROOT)
     reg = load_all()
     results = {d: measure(spark, reg, d) for d in dirs}
     base = results[dirs[0]]

@@ -3,46 +3,32 @@ at a given sf dir and compare against DuckDB exactly like the round
 driver does (tests/oracle_util.compare). Rows-only queries get a weaker
 rows>=0 execution check, like the driver.
 
-Usage: PYTHONPATH=/root/repo python tools/sweep_oracles.py [sf_dir] [first_n]
+Usage: python tools/sweep_oracles.py [sf_dir]
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")  # run from anywhere, like the other tools
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)  # run from anywhere, like the other tools
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    first_n = int(sys.argv[2]) if len(sys.argv) > 2 else 0
 
-    from pyspark.sql import SparkSession
-
+    from perfbench.session import make_session
     from tank_spark.plans.registry import load_all
     from tests.oracle_util import compare
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("sweep_oracles")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
+    spark = make_session(ROOT)
     queries = load_all()
-    names = list(queries)
-    if first_n:
-        names = names[:first_n]
     n_pass = n_fail = n_rows_only = 0
     failures: list[str] = []
-    for name in names:
+    for name in queries:
         t0 = time.monotonic()
         try:
             if queries[name].oracle is None:
