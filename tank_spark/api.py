@@ -25,8 +25,14 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+# ingest_features parses a batch of up to this many lines on the driver;
+# past ~20k lines the JSON reader's parallel tasks are faster (parse and
+# coercion on a 4-core host: 8k lines 0.7 s on the driver vs 1.1 s in the
+# reader, 20k lines a tie, 56k lines 3.4 s vs 2.2 s).
+DRIVER_PARSE_MAX_LINES = 10_000
 
 
 class Tank:
@@ -244,12 +250,32 @@ class Tank:
         rows matching an incoming (hash, uid) before the append
         (bucket-pruned CoW; a feature re-ingested at a NEW position keeps
         its old row, exactly as a changed Cassandra partition key would).
-        The returned dict then carries a ``replaced`` count."""
+        The returned dict then carries a ``replaced`` count.
+
+        A batch of at most ``DRIVER_PARSE_MAX_LINES`` lines of JSON
+        objects parses in the driver's JVM with ``from_json`` over an
+        Arrow-built local relation: no Python worker, no task. A larger
+        batch, or one with a line holding a JSON array, goes through
+        Spark's JSON reader in parallel tasks (its array rule: an array of
+        objects is one row per object). Both skip blank lines and turn any
+        other line that is not one JSON object (a truncated object,
+        ``null``, ``[1,2]``) into one all-null row, which dead-letters."""
         from tank_spark.streaming.ingest import attr_wire_schema
 
-        raw = self.spark.read.schema(attr_wire_schema(self.attr_fields)).json(
-            self.spark.sparkContext.parallelize(ndjson_rows)
-        )
+        wire = attr_wire_schema(self.attr_fields)
+        lines = [r for r in ndjson_rows if r.strip(" \t\r\n")]
+        if len(lines) > DRIVER_PARSE_MAX_LINES or any(
+                r.lstrip(" \t\r\n").startswith("[") for r in lines):
+            raw = self.spark.read.schema(wire).json(
+                self.spark.sparkContext.parallelize(lines))
+        else:
+            import pyarrow as pa
+
+            raw = (self.spark.createDataFrame(
+                       pa.table({"value": pa.array(lines, pa.string())}),
+                       "value string")
+                   .select(F.from_json("value", wire).alias("r"))
+                   .select("r.*"))
         return self._ingest_raw(raw, upsert=upsert)
 
     def ingest_csv(self, csv_path: str | None = None,
@@ -287,20 +313,31 @@ class Tank:
         costs no extra job (streaming.progress has the per-epoch form)."""
         import logging
 
-        from tank_spark.operators.table_ops import refresh_table
+        from tank_spark.operators.table_ops import has_data, refresh_table
         from tank_spark.streaming.ingest import coerce_features
 
         _ilog = logging.getLogger("tank_spark.ingest")
         _ilog.info("features importing starts (layer=%s)", self.base_layer)
-        coerced = coerce_features(raw, self.attr_fields).localCheckpoint(eager=True)
+        # counts and dirty tiles are observed by the checkpoint's own job;
+        # a tile is one long (its coordinates are below 2^HASH_LEVEL), so
+        # a bulk batch's tile set reaches Python as plain ints, not Rows
+        ok_row = ~F.col("rejected")
+        seen = Observation("ingest")
+        coerced = coerce_features(raw, self.attr_fields).observe(
+            seen,
+            F.count_if(ok_row).alias("ok"),
+            F.count_if(F.col("rejected")).alias("bad"),
+            F.collect_set(F.when(ok_row & F.col("tile_x").isNotNull(),
+                                 F.col("tile_x") * (1 << 32) + F.col("tile_y"))
+                          ).alias("tiles"),
+        ).localCheckpoint(eager=True)
         ok = coerced.filter(~F.col("rejected")).drop("rejected")
         bad = coerced.filter(F.col("rejected")).drop("rejected", "hash")
-        try:
+        table_fields = None  # brand-new table: write the full serve set
+        if has_data(self.table_dir):
             table_fields = [
                 f for f in self.features().schema.fields if f.name != "bucket"
             ]
-        except Exception:
-            table_fields = None  # brand-new table: write the full serve set
         if table_fields is not None:
             ok = ok.select(*[
                 F.col(f.name).cast(f.dataType).alias(f.name)
@@ -308,16 +345,9 @@ class Tank:
                 else F.lit(None).cast(f.dataType).alias(f.name)
                 for f in table_fields
             ])
-        # counts and dirty tiles in one job over the checkpointed frame
-        n_ok = n_bad = 0
-        dirty: list[tuple[int, int]] = []
-        for r in coerced.groupBy("rejected", "tile_x", "tile_y").count().collect():
-            if r["rejected"]:
-                n_bad += r["count"]
-            else:
-                n_ok += r["count"]
-                if r["tile_x"] is not None:
-                    dirty.append((int(r["tile_x"]), int(r["tile_y"])))
+        counts = seen.get
+        n_ok, n_bad = counts["ok"], counts["bad"]
+        dirty = [(t >> 32, t & 0xFFFFFFFF) for t in counts["tiles"]]
         n_replaced = 0
         if upsert and n_ok and table_fields is not None:
             from tank_spark.operators.table_ops import delete_matching_keys

@@ -16,27 +16,45 @@ of what a 100 TB deployment gets from hash-bucketed table layout.
 Session handle: every read of a table goes through ``read_table``
 (``read_feature_table`` for the feature table, ``tile_cache.TileCache``
 for the cache table), which serves one DataFrame per (session, table
-directory, data version) from the session cache — listed and
-schema-read once, like the reference's one Cassandra table per process
-(application.kt:677-681), instead of two Spark jobs per call. The
-version is ``cache.dir_version`` of the directory and its partition
-subdirectories (``bucket=*`` here). Every writer (here, ``api.Tank``'s
-ingest, the streaming sink, the tile cache) ends with ``refresh_table``,
-which drops the handle, so in-process writes are seen exactly; the
-directory version catches writers this process does not see (a direct
-append, another process).
+directory, data version) from the session cache, like the reference's
+one Cassandra table per process (application.kt:677-681). The version is
+``cache.dir_version`` of the directory and its partition subdirectories
+(``bucket=*`` here). Every writer (here, ``api.Tank``'s ingest, the
+streaming sink, the tile cache) ends with ``refresh_table``, which drops
+the handle, so in-process writes are seen exactly; the directory version
+catches writers this process does not see (a direct append, another
+process).
+
+A handle (re)build starts no Spark job: the data schema is the Spark
+schema the writer stored in one data file's parquet footer, read on the
+driver, and the partition directories are listed on the driver (Spark
+lists more than ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+sibling directories with a job; the threshold is raised above the
+table's directory count for the duration of the read). Spark still infers
+the partition columns from the paths. Every writer of these tables
+(Spark's, and ``TileCache.put``'s) stores that schema, so a data file
+without it raises instead of falling back to a job-starting inference.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import threading
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from tank_spark import cache
 
 N_BUCKETS = 64
+
+LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+# the footer key under which Spark's parquet writer stores the schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+# read_table raises the session-wide listing threshold around one read
+_LISTING_LOCK = threading.Lock()
 
 
 def write_feature_table(df: DataFrame, table_dir: str, n_buckets: int = N_BUCKETS) -> None:
@@ -58,13 +76,71 @@ def _handle_key(spark: SparkSession, table_dir: str) -> tuple:
             os.path.abspath(cache.local_fs_path(table_dir)))
 
 
+def _hidden(name: str) -> bool:
+    """Names Spark's file index skips (``_SUCCESS``, ``_rejects``,
+    ``.crc`` files, dot-prefixed temp files); ``_x=1`` is a partition."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _scan(table_dir: str) -> tuple[int, str | None]:
+    """Driver-side walk of what Spark would list: the number of
+    directories below ``table_dir`` and the first data file in name
+    order (None when there is none)."""
+    n_dirs, first = 0, None
+    for root, dirs, files in os.walk(table_dir):
+        dirs[:] = sorted(d for d in dirs if not _hidden(d))
+        n_dirs += len(dirs)
+        if first is None:
+            names = sorted(f for f in files if not _hidden(f))
+            if names:
+                first = os.path.join(root, names[0])
+    return n_dirs, first
+
+
+def has_data(table_dir: str) -> bool:
+    """Whether the table holds a data file Spark would read: a driver-side
+    walk, no Spark call (a failed read logs an error in every session
+    that has used an ``Observation``)."""
+    return _scan(cache.local_fs_path(table_dir))[1] is not None
+
+
+def _footer_schema(path: str) -> StructType:
+    """The Spark schema a Spark (or Spark-compatible) writer stored in
+    the parquet footer of ``path``. One footer read, no Spark job."""
+    import pyarrow.parquet as pq
+
+    raw = (pq.read_schema(path).metadata or {}).get(SPARK_SCHEMA_KEY)
+    if raw is None:
+        raise ValueError(f"{path}: no Spark schema in the parquet footer")
+    return StructType.fromJson(json.loads(raw))
+
+
+def _build_table(spark: SparkSession, table_dir: str) -> DataFrame:
+    n_dirs, first = _scan(cache.local_fs_path(table_dir))
+    reader = spark.read   # no data file: Spark raises its AnalysisException
+    if first is not None:
+        reader = reader.schema(_footer_schema(first))
+    with _LISTING_LOCK:
+        conf = spark.conf
+        old = conf.get(LISTING_THRESHOLD, None)   # None: not set
+        if int(conf.get(LISTING_THRESHOLD)) <= n_dirs:
+            conf.set(LISTING_THRESHOLD, str(n_dirs + 1))
+        try:
+            return reader.parquet(table_dir)
+        finally:
+            if old is None:
+                conf.unset(LISTING_THRESHOLD)
+            else:
+                conf.set(LISTING_THRESHOLD, old)
+
+
 def read_table(spark: SparkSession, table_dir: str, depth: int) -> DataFrame:
     """The session handle of the parquet table at ``table_dir`` at its
     current data version: the directory and its partition directories
     down to ``depth`` levels."""
     return cache.cached(
         "table_ops.table", _handle_key(spark, table_dir),
-        lambda: spark.read.parquet(table_dir),
+        lambda: _build_table(spark, table_dir),
         fp=cache.dir_version(table_dir, depth),
     )
 

@@ -503,3 +503,63 @@ def test_ingest_csv_route(tank, tmp_path):
         f.get("props", {}).get("kind") == "poi,main"
         for f in layer["features"]
     )
+
+
+@pytest.mark.parametrize("route", ["driver", "reader", "arrays"])
+def test_ingest_parse_edge_lines(spark, tmp_path, monkeypatch, route):
+    """One NDJSON batch with blank, malformed and tricky lines: blank and
+    whitespace-only lines are skipped, every other unparseable line is
+    one dead-lettered reject, and string escapes and unknown nested
+    fields parse exactly — the JSON reader's rules. The same batch parses
+    on the driver (``driver``) and through the reader (``reader``, past
+    the line cut-off); with array lines (``arrays``) an array of objects
+    is one row per object, ``[]`` none, and an array holding anything
+    else one reject."""
+    import json as _json
+
+    from tank_spark import api
+    from tank_spark.api import Tank
+
+    if route == "reader":
+        monkeypatch.setattr(api, "DRIVER_PARSE_MAX_LINES", 0)
+    d = str(tmp_path / "layer")
+    t = Tank(spark, d)
+    tricky = {"id": "esc", "lon": 11.0, "lat": 51.0,
+              "kind": 'q"uo\\te\'s', "score": "2.5", "cnt": "3",
+              "tag": "back\\\\slash \\\"x\\\"",
+              "extra": {"nested": [1, {"deep": None}], "s": "\\"}}
+    rows = [
+        _json.dumps({"id": "ok", "lon": 10.0, "lat": 50.0, "kind": "poi",
+                     "score": "1.5", "cnt": "2", "tag": "t"}),
+        "",
+        " \t ",
+        '{"id": "trunc", "lon": 10.0, "lat": ',
+        "null",
+        _json.dumps(tricky),
+        _json.dumps({"id": "bad", "lon": 12.0, "lat": 52.0, "score": "abc"}),
+    ]
+    uids, n_ok, n_bad = {"ok", "esc"}, 2, 3
+    if route == "arrays":
+        rows += [
+            "[1,2]",
+            " " + _json.dumps([
+                {"id": "arr1", "lon": 13.0, "lat": 53.0, "kind": "a"},
+                {"id": "arr2", "lon": 14.0, "lat": 54.0, "kind": "b"}]),
+            "[]",
+            '[{"id": "half", "lon": 15.0, "lat": 55.0}, null]',
+        ]
+        uids, n_ok, n_bad = uids | {"arr1", "arr2"}, 4, 5
+    assert t.ingest_features(rows) == {"accepted": n_ok, "rejected": n_bad}
+    got = {r["uid"]: r for r in t.features().collect()}
+    assert set(got) == uids
+    esc = got["esc"]
+    assert (esc["kind"], esc["score"], esc["cnt"], esc["tag"]) == (
+        tricky["kind"], 2.5, 3, tricky["tag"])
+    assert (got["ok"]["kind"], got["ok"]["score"], got["ok"]["cnt"]) == (
+        "poi", 1.5, 2)
+    if route == "arrays":
+        assert (got["arr1"]["kind"], got["arr2"]["kind"]) == ("a", "b")
+    rejects = spark.read.parquet(f"{d}/_rejects").collect()
+    assert len(rejects) == n_bad
+    assert sorted(r["uid"] for r in rejects if r["uid"] == "bad") == ["bad"]
+    assert sum(r["lon"] is None for r in rejects) == n_bad - 1

@@ -61,20 +61,160 @@ def test_dir_version_of_uris(tmp_path):
 
 
 def test_tile_cache_put_then_get_in_one_session(spark, tmp_path):
-    """The cache table's handle is dropped by put: a blob put is served
-    by the next get, and a get with no write between reuses the handle."""
-    from tank_spark.operators.tile_cache import TileCache
+    """A blob put is served by the next get, from the in-process front:
+    that hit looks up no table handle. The put moves the directory
+    version, so another key's entry re-probes the table once."""
+    from tank_spark.operators.tile_cache import FRONT, TileCache
 
     tc = TileCache(spark, str(tmp_path / "cache"))
     assert tc.get("tile", 9, 80, 196) is None
     tc.put("tile", 9, 80, 196, b"blob-1")
     assert tc.get("tile", 9, 80, 196) == b"blob-1"
     tc.put("heatmap", 9, 80, 196, b"hm-1")
-    before = cache.stats("table_ops.table")
+    before, front = cache.stats("table_ops.table"), cache.stats(FRONT)
     assert tc.get("heatmap", 9, 80, 196) == b"hm-1"
+    assert _delta("table_ops.table", before) == {
+        "hits": 0, "misses": 0, "evictions": 0}
+    assert _delta(FRONT, front) == {"hits": 1, "misses": 0, "evictions": 0}
+    assert tc.get("tile", 9, 80, 196) == b"blob-1"
     assert tc.get("tile", 9, 80, 196) == b"blob-1"
     assert _delta("table_ops.table", before) == {
-        "hits": 1, "misses": 1, "evictions": 0}
+        "hits": 0, "misses": 1, "evictions": 0}
+    assert _delta(FRONT, front) == {"hits": 2, "misses": 1, "evictions": 1}
+
+
+def test_tile_cache_front_checks_ttl_on_every_serve(spark, tmp_path, monkeypatch):
+    """A blob older than the TTL is not served, from the front or from
+    the table probe."""
+    import time
+
+    from tank_spark.operators.tile_cache import TileCache
+
+    tc = TileCache(spark, str(tmp_path / "cache"), ttl_seconds=60)
+    tc.put("tile", 9, 80, 196, b"blob-1")
+    assert tc.get("tile", 9, 80, 196) == b"blob-1"
+    later = time.time() + 61
+    monkeypatch.setattr(time, "time", lambda: later)
+    assert tc.get("tile", 9, 80, 196) is None
+    cache.clear()
+    assert tc.get("tile", 9, 80, 196) is None
+    monkeypatch.undo()
+    assert tc.get("tile", 9, 80, 196) == b"blob-1"
+
+
+def test_tile_cache_front_sees_an_append_it_did_not_make(spark, tmp_path):
+    """A newer blob for a key, appended by Spark outside the front, moves
+    the directory version: the next get serves it."""
+    import time
+
+    from tank_spark.operators.tile_cache import TileCache
+
+    d = str(tmp_path / "cache")
+    tc = TileCache(spark, d)
+    tc.put("tile", 9, 80, 196, b"blob-1")
+    assert tc.get("tile", 9, 80, 196) == b"blob-1"
+    (spark.createDataFrame(
+        [("tile", 9, 80, 196, bytearray(b"blob-2"), time.time() + 1)],
+        "kind string, z int, x int, y int, blob binary, created_at double")
+     .write.mode("append").partitionBy("kind", "z").parquet(d))
+    assert tc.get("tile", 9, 80, 196) == b"blob-2"
+
+
+def test_tile_cache_put_vouches_only_for_its_own_key(spark, tmp_path,
+                                                     monkeypatch):
+    """A newer blob another writer appends while a put runs is served by
+    the next get of its key: the put moves the directory version, and
+    only the put key is stored under the new one."""
+    import os
+    import time
+
+    from tank_spark.operators.tile_cache import TileCache
+
+    d = str(tmp_path / "cache")
+    tc = TileCache(spark, d)
+    tc.put("tile", 9, 81, 196, b"old")
+    assert tc.get("tile", 9, 81, 196) == b"old"
+    rename = os.replace
+
+    def rename_then_foreign_append(src, dst):
+        rename(src, dst)
+        (spark.createDataFrame(
+            [("tile", 9, 81, 196, bytearray(b"new"), time.time() + 1)],
+            "kind string, z int, x int, y int, blob binary, created_at double")
+         .write.mode("append").partitionBy("kind", "z").parquet(d))
+
+    monkeypatch.setattr(os, "replace", rename_then_foreign_append)
+    tc.put("tile", 9, 80, 196, b"blob-1")
+    monkeypatch.undo()
+    assert tc.get("tile", 9, 81, 196) == b"new"
+    assert tc.get("tile", 9, 80, 196) == b"blob-1"
+
+
+def test_tile_cache_invalidation_marks_at_most_the_front_cap(
+        spark, tmp_path, monkeypatch):
+    """An invalidation counts every key it deletes but holds at most
+    ``cache.MEMO_CAP`` of them as absent in the front; every deleted key
+    reads as absent."""
+    from tank_spark.operators.tile_cache import FRONT, TileCache
+
+    monkeypatch.setattr(cache, "MEMO_CAP", 4)
+    tc = TileCache(spark, str(tmp_path / "cache"))
+    keys = [(9, 80 + i, 196) for i in range(6)]
+    for k in keys:
+        tc.put("tile", *k, b"blob")
+    before = cache.stats(FRONT)
+    assert tc.invalidate_cover(keys, []) == 6
+    assert cache.stats(FRONT)["evictions"] == before["evictions"]
+    held = [cache.lookup(FRONT, tc._key("tile", *k), "none") for k in keys]
+    assert held.count(None) == 4
+    assert all(tc.get("tile", *k) is None for k in keys)
+
+
+def test_tile_cache_writers_drop_the_front(spark, tmp_path, monkeypatch):
+    """With the directory version frozen, a put and an invalidation made
+    in this process are still seen exactly: every writer replaces or drops
+    the front's entries for its directory."""
+    from tank_spark.operators.tile_cache import TileCache
+
+    monkeypatch.setattr(cache, "dir_version", lambda *a, **k: ())
+    tc = TileCache(spark, str(tmp_path / "cache"))
+    assert tc.get("tile", 9, 80, 196) is None
+    tc.put("tile", 9, 80, 196, b"blob-1")
+    tc.put("tile", 9, 81, 196, b"other")
+    assert tc.get("tile", 9, 80, 196) == b"blob-1"
+    tc.put("tile", 9, 80, 196, b"blob-2")
+    assert tc.get("tile", 9, 80, 196) == b"blob-2"
+    assert tc.get("tile", 9, 81, 196) == b"other"
+    assert tc.invalidate_cover([(9, 80, 196)], []) == 1
+    assert tc.get("tile", 9, 80, 196) is None
+    assert tc.get("tile", 9, 81, 196) == b"other"
+
+
+def test_tile_cache_put_reads_back_through_the_table(spark, tmp_path):
+    """A driver-side put is a Spark-readable cache row: with the front
+    cleared, the table probe serves the blob byte-identical, and the
+    table's Spark schema is the one Spark's own writer gives it."""
+    import time
+
+    from tank_spark.operators.tile_cache import TileCache
+
+    schema = "kind string, z int, x int, y int, blob binary, created_at double"
+    d = str(tmp_path / "cache")
+    blob = bytes(range(256)) * 3
+    tc = TileCache(spark, d)
+    tc.put("tile", 9, 80, 196, blob)
+    tc.put("heatmap", 10, 160, 392, b"")
+    cache.clear()
+    assert tc.get("tile", 9, 80, 196) == blob
+    assert tc.get("heatmap", 10, 160, 392) == b""
+    ref = str(tmp_path / "ref")
+    (spark.createDataFrame([("tile", 9, 80, 196, bytearray(blob), time.time())],
+                           schema)
+     .write.partitionBy("kind", "z").parquet(ref))
+    got = spark.read.parquet(d).schema
+    assert got == spark.read.parquet(ref).schema
+    assert sorted(got.simpleString()[7:-1].split(",")) == sorted(
+        f.replace(" ", ":") for f in schema.split(", "))
 
 
 def test_stale_fingerprint_releases_and_rebuilds():

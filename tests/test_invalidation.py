@@ -244,3 +244,39 @@ def test_tile_cache_invalidate_features(spark, tmp_path):
     assert cache.get("tile", *zin) is None
     assert cache.get("heatmap", *zin) is None
     assert cache.get("tile", *zout) == b"out"
+
+
+def test_tile_cache_large_cover_matches_the_driver_model(spark, tmp_path):
+    """A cover of thousands of tiles and roots at many zooms deletes
+    exactly the cached keys a driver-side descendant test selects."""
+    import random
+
+    from tank_spark.operators.tile_cache import TileCache
+
+    rng = random.Random(7)
+    keys = {(k, z, rng.randrange(1 << z), rng.randrange(1 << z))
+            for k in ("tile", "heatmap") for z in (2, 5, 9, 13, 15)
+            for _ in range(6)}
+    tiles = {(z, rng.randrange(1 << z), rng.randrange(1 << z))
+             for z in (9, 13, 15) for _ in range(1500)}
+    tiles |= {key[1:] for key in sorted(keys)[::4]}
+    # ancestors two zooms up of some keys, and one root over no key
+    roots = [(z - 2, x >> 2, y >> 2) for _k, z, x, y in sorted(keys)[1::5]
+             if z > 4]
+    roots.append((3, 1, 2))
+
+    def covered(z, x, y):
+        return (z, x, y) in tiles or any(
+            z >= rz and (x >> (z - rz), y >> (z - rz)) == (rx, ry)
+            for rz, rx, ry in roots)
+
+    cache = TileCache(spark, str(tmp_path / "cache"))
+    for k, z, x, y in sorted(keys):
+        cache.put(k, z, x, y, f"{k}/{z}/{x}/{y}".encode())
+    want = {key for key in keys if covered(*key[1:])}
+    assert 0 < len(want) < len(keys)
+    assert cache.invalidate_cover(sorted(tiles), roots) == len(want)
+    for k, z, x, y in sorted(keys):
+        got = cache.get(k, z, x, y)
+        assert got == (None if (k, z, x, y) in want
+                       else f"{k}/{z}/{x}/{y}".encode())

@@ -300,3 +300,132 @@ def test_table_ops_writers_drop_the_handle(spark, table_dir, monkeypatch):
         .localCheckpoint(eager=True)
     ops.write_feature_table(src, table_dir)
     assert count() == 10
+
+
+# ------------------------------------------------- zero-job handle builds
+
+def _spark_jobs(spark, fn) -> int:
+    """The Spark jobs ``fn`` starts from this thread, counted by job
+    group once the listener bus has delivered every job event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _same_schema(spark, table_dir, depth):
+    from tank_spark.operators.table_ops import read_table
+
+    got = read_table(spark, table_dir, depth).schema
+    assert got == spark.read.parquet(table_dir).schema, got.simpleString()
+
+
+def test_handle_without_a_spark_footer_raises(spark, tmp_path):
+    """A data file whose footer holds no Spark schema (or is not
+    parquet) fails the handle build instead of falling back to Spark's
+    job-starting schema inference."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tank_spark.operators import table_ops as ops
+
+    d = tmp_path / "plain"
+    (d / "bucket=0").mkdir(parents=True)
+    pq.write_table(pa.table({"uid": ["a"]}), str(d / "bucket=0" / "part-0.parquet"))
+    with pytest.raises(ValueError, match="no Spark schema"):
+        ops.read_feature_table(spark, str(d))
+    (d / "bucket=0" / "part-0.parquet").write_bytes(b"not parquet")
+    with pytest.raises(pa.ArrowInvalid):
+        ops.read_feature_table(spark, str(d))
+
+
+def test_handle_schema_is_the_parquet_readers(spark, tmp_path):
+    """The handle's schema is exactly what ``spark.read.parquet`` infers
+    (types, nullability, column order, partition columns) after every
+    writer: ``ts`` stays ``timestamp_ntz``, which ingest casts its
+    appends to."""
+    import json as _json
+
+    from tank_spark.api import Tank
+    from tank_spark.operators import table_ops as ops
+    from tank_spark.sources.features import features_df
+
+    d = str(tmp_path / "layer")
+    ops.write_feature_table(features_df(spark, SF_DIR), d)
+    assert dict(ops.read_feature_table(spark, d).dtypes)["ts"] == "timestamp_ntz"
+    _same_schema(spark, d, 1)
+    t = Tank(spark, d, cache_dir=str(tmp_path / "cache"))
+    assert t.ingest_features([_json.dumps(
+        {"id": "s-1", "lon": -123.7, "lat": 38.7, "kind": "poi",
+         "score": "5", "cnt": "1", "tag": "t"})])["accepted"] == 1
+    _same_schema(spark, d, 1)
+    assert t.update_feature("feat-4005", {"tag": "tag-s"}) >= 1
+    _same_schema(spark, d, 1)
+    assert t.delete_feature("feat-8001") == 1
+    _same_schema(spark, d, 1)
+    assert ops.compact_table(spark, d)
+    _same_schema(spark, d, 1)
+
+    c = str(tmp_path / "cache")
+    t._cache.put("tile", 9, 80, 196, b"blob")
+    t._cache.put("heatmap", 9, 80, 196, b"hm")
+    t._cache.put("tile", 10, 160, 392, b"blob-2")
+    _same_schema(spark, c, 2)
+    assert t._cache.invalidate_cover([(9, 80, 196)], []) == 2
+    _same_schema(spark, c, 2)               # the survivors, rewritten
+    t._cache.put("tile", 9, 81, 196, b"blob-3")
+    _same_schema(spark, c, 2)
+
+
+def test_handle_builds_and_cache_hits_start_no_spark_job(spark, tmp_path):
+    """A feature-handle rebuild after a write, a second ``get`` of one
+    key and the first ``get`` after a ``put`` start no Spark job; the
+    listing threshold is back at its old value after every build,
+    including one that raises."""
+    from pyspark.errors import AnalysisException
+
+    from tank_spark.operators import table_ops as ops
+    from tank_spark.operators.tile_cache import TileCache
+    from tank_spark.sources.features import features_df
+
+    key = ops.LISTING_THRESHOLD
+    old = spark.conf.get(key, None)
+    assert _spark_jobs(spark, lambda: spark.range(3).collect()) >= 1
+
+    d = str(tmp_path / "features")
+    ops.write_feature_table(features_df(spark, SF_DIR), d)
+    assert ops.delete_by_uid(spark, d, "feat-8001",
+                             ops.uid_rows(spark, d, "feat-8001")) == 1
+    assert _spark_jobs(spark, lambda: ops.read_feature_table(spark, d)) == 0
+    assert spark.conf.get(key, None) == old
+
+    tc = TileCache(spark, str(tmp_path / "cache"))
+    # a threshold below any listing, so the failing build must raise it
+    spark.conf.set(key, "0")
+    try:
+        with pytest.raises(AnalysisException):
+            ops.read_table(spark, tc.cache_dir, 2)
+        assert spark.conf.get(key) == "0"
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    assert tc.get("tile", 9, 80, 196) is None
+    tc.put("tile", 9, 80, 196, b"blob-1")
+    assert _spark_jobs(spark, lambda: tc.get("tile", 9, 80, 196)) == 0
+    tc.put("tile", 9, 81, 196, b"blob-2")
+    assert _spark_jobs(spark, lambda: tc.get("tile", 9, 81, 196)) == 0
+    assert tc.get("tile", 9, 82, 196) is None       # a miss probes once
+    assert _spark_jobs(spark, lambda: tc.get("tile", 9, 82, 196)) == 0
+    # the put moved the version: another key re-probes once, then hits
+    assert tc.get("tile", 9, 80, 196) == b"blob-1"
+    assert _spark_jobs(spark, lambda: tc.get("tile", 9, 80, 196)) == 0
+    assert spark.conf.get(key, None) == old

@@ -1,8 +1,10 @@
 #!/usr/bin/env python
-"""Dump .explain('formatted') for headline queries to plans/$SPARK_GRAFT_ROUND/
-(default r14).
+"""Dump .explain('formatted') for headline queries into a directory.
 
-Usage: python tools/dump_formatted_plans.py SUFFIX [name ...]
+Usage: python tools/dump_formatted_plans.py OUT_DIR SUFFIX [name ...]
+
+OUT_DIR is created if missing (the committed r14 dumps live in
+plans/r14/); each plan is written to OUT_DIR/<name>_<SUFFIX>.txt.
 SUFFIX is 'before' or 'after'; with no names, dumps every bench.HEADLINE
 query. OPTIMIZATION_r14.md cites the committed dumps for its plan
 claims.
@@ -13,8 +15,10 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-suffix = sys.argv[1]
-names = sys.argv[2:]
+if len(sys.argv) < 3:
+    sys.exit(__doc__)
+out_dir, suffix = os.path.abspath(sys.argv[1]), sys.argv[2]
+names = sys.argv[3:]
 
 from bench import HEADLINE  # noqa: E402
 from perfbench.session import make_session  # noqa: E402
@@ -25,7 +29,6 @@ reg = load_all()
 if not names:
     names = list(HEADLINE)
 
-out_dir = os.path.join(ROOT, "plans", os.environ.get("SPARK_GRAFT_ROUND", "r14"))
 os.makedirs(out_dir, exist_ok=True)
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
