@@ -35,6 +35,11 @@ from pyspark.sql import functions as F
 DRIVER_PARSE_MAX_LINES = 10_000
 
 
+def _run(fn, what: str):
+    """The batch routes' commit-phase runner: run ``fn`` once."""
+    return fn()
+
+
 class Tank:
     """One feature layer backed by a bucket-partitioned parquet table."""
 
@@ -276,7 +281,7 @@ class Tank:
                        "value string")
                    .select(F.from_json("value", wire).alias("r"))
                    .select("r.*"))
-        return self._ingest_raw(raw, upsert=upsert)
+        return self._ingest_batch(raw, upsert)
 
     def ingest_csv(self, csv_path: str | None = None,
                    csv_rows: list[str] | None = None,
@@ -287,7 +292,7 @@ class Tank:
         missing values; records are line-delimited — pass files through
         spark.read.option("multiLine", True) upstream if quoted
         newlines are needed), then the identical coercion + dead-letter +
-        hash + store path via _ingest_raw. The reference has no CSV
+        hash + store tail, ``_ingest_raw``. The reference has no CSV
         route; this is the extension surface's 'another source format'
         (SURVEY §2.11 posture) — crawl/export tooling emits CSV as often
         as NDJSON. Scale shape: spark.read.csv is a splittable
@@ -301,23 +306,43 @@ class Tank:
             raw = reader.csv(csv_path)
         else:
             raw = reader.csv(self.spark.sparkContext.parallelize(csv_rows or []))
-        return self._ingest_raw(raw, upsert=upsert)
+        return self._ingest_batch(raw, upsert)
 
-    def _ingest_raw(self, raw, upsert: bool = False) -> dict:
-        """Shared store tail of every bulk route (NDJSON/GeoJSON/CSV):
-        coerce + dead-letter split + schema-align + optional upsert CoW +
-        bucketed append + cache invalidation. Logs the reference's I7
-        import start/finish lines (Tyler.kt:52-54) on the
-        tank_spark.ingest logger — the finish line reuses the counts
-        this method already computes for its return value, so progress
-        costs no extra job (streaming.progress has the per-epoch form)."""
+    def _ingest_batch(self, raw: DataFrame, upsert: bool) -> dict:
+        """A batch route's ingest (NDJSON/GeoJSON/CSV): the store tail
+        between the reference's I7 import start/finish lines
+        (Tyler.kt:52-54) on the tank_spark.ingest logger. The finish line
+        reuses the tail's counts, so progress costs no extra job (a
+        drop-dir stream logs per epoch, streaming.progress)."""
         import logging
 
-        from tank_spark.operators.table_ops import has_data, refresh_table
+        log = logging.getLogger("tank_spark.ingest")
+        log.info("features importing starts (layer=%s)", self.base_layer)
+        res = self._ingest_raw(raw, upsert)
+        log.info("#%d features importing finished "
+                 "(accepted=%d rejected=%d replaced=%d layer=%s)",
+                 res["accepted"] + res["rejected"], res["accepted"],
+                 res["rejected"], res.get("replaced", 0), self.base_layer)
+        return res
+
+    def _ingest_raw(self, raw: DataFrame, upsert: bool = False,
+                    phase=_run) -> dict:
+        """The one store tail of every ingest, batch or drop-dir stream
+        (one call per micro-batch): coerce + dead-letter split +
+        schema-align + optional upsert CoW + bucketed append + rejects
+        (``<table>/_rejects``) + cache invalidation of the dirty tiles.
+
+        ``phase(fn, what)`` runs each commit phase (accepted-store,
+        rejects-store): once for the batch routes, through
+        ``AdaptiveBackoff.call`` for the stream. A phase that has
+        committed is never re-entered because a later one failed, and a
+        failed parquet write commits nothing, so a retried phase cannot
+        duplicate rows."""
+        from tank_spark.operators.table_ops import (
+            delete_matching_keys, has_data, refresh_table, write_buckets,
+        )
         from tank_spark.streaming.ingest import coerce_features
 
-        _ilog = logging.getLogger("tank_spark.ingest")
-        _ilog.info("features importing starts (layer=%s)", self.base_layer)
         # counts and dirty tiles are observed by the checkpoint's own job;
         # a tile is one long (its coordinates are below 2^HASH_LEVEL), so
         # a bulk batch's tile set reaches Python as plain ints, not Rows
@@ -331,41 +356,40 @@ class Tank:
                                  F.col("tile_x") * (1 << 32) + F.col("tile_y"))
                           ).alias("tiles"),
         ).localCheckpoint(eager=True)
-        ok = coerced.filter(~F.col("rejected")).drop("rejected")
+        ok = coerced.filter(ok_row).drop("rejected")
         bad = coerced.filter(F.col("rejected")).drop("rejected", "hash")
-        table_fields = None  # brand-new table: write the full serve set
-        if has_data(self.table_dir):
-            table_fields = [
-                f for f in self.features().schema.fields if f.name != "bucket"
-            ]
-        if table_fields is not None:
+        stored = has_data(self.table_dir)
+        if stored:  # align to the table (a brand-new one takes the full set)
             ok = ok.select(*[
                 F.col(f.name).cast(f.dataType).alias(f.name)
                 if f.name in ok.columns
                 else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in table_fields
+                for f in self.features().schema.fields if f.name != "bucket"
             ])
         counts = seen.get
         n_ok, n_bad = counts["ok"], counts["bad"]
         dirty = [(t >> 32, t & 0xFFFFFFFF) for t in counts["tiles"]]
         n_replaced = 0
-        if upsert and n_ok and table_fields is not None:
-            from tank_spark.operators.table_ops import delete_matching_keys
 
-            n_replaced = delete_matching_keys(self.spark, self.table_dir, ok)
+        def store_accepted() -> None:
+            nonlocal n_replaced
+            if upsert and stored:
+                # a retry after a failed append finds nothing left to
+                # replace: the delete is keyed on the incoming rows
+                n_replaced += delete_matching_keys(
+                    self.spark, self.table_dir, ok)
+            write_buckets(ok, self.table_dir)
+
         if n_ok:
-            (ok.withColumn("bucket", F.pmod(F.col("hash"), F.lit(64)))
-             .write.mode("append").partitionBy("bucket").parquet(self.table_dir))
+            phase(store_accepted, "accepted-store")
         if n_bad:
-            bad.write.mode("append").parquet(f"{self.table_dir}/_rejects")
+            phase(lambda: bad.write.mode("append").parquet(
+                f"{self.table_dir}/_rejects"), "rejects-store")
         refresh_table(self.spark, self.table_dir)
         # reference parity: every import feeds the region manager and the
         # cache cover is invalidated (Tyler.kt:139, :183) — else a cached
         # tile would keep serving without the new features
-        self._invalidate_feature_tiles(sorted(dirty))
-        _ilog.info("#%d features importing finished "
-                   "(accepted=%d rejected=%d replaced=%d layer=%s)",
-                   n_ok + n_bad, n_ok, n_bad, n_replaced, self.base_layer)
+        self._invalidate_tiles(13, sorted(dirty))
         res = {"accepted": n_ok, "rejected": n_bad}
         if upsert:
             res["replaced"] = n_replaced
@@ -413,11 +437,7 @@ class Tank:
         returns the running StreamingQuery immediately)."""
         from tank_spark.streaming.ingest import start_ingest_stream
 
-        return start_ingest_stream(
-            self.spark, drop_dir, self.table_dir,
-            f"{self.table_dir}/_rejects", checkpoint_dir,
-            attr_fields=self.attr_fields,
-        )
+        return start_ingest_stream(self.spark, self, drop_dir, checkpoint_dir)
 
     def update_feature(self, uid: str, updates: dict) -> int:
         """PUT /{uuid} (+ cache invalidation of the feature's tile —
@@ -436,7 +456,7 @@ class Tank:
             tiles = _tiles_of(rows)
             if {"tile_x", "tile_y"} & set(updates):
                 tiles |= _tiles_of(uid_rows(self.spark, self.table_dir, uid))
-            self._invalidate_feature_tiles(sorted(tiles))
+            self._invalidate_tiles(13, sorted(tiles))
         return n
 
     def delete_feature(self, uid: str) -> int:
@@ -446,21 +466,21 @@ class Tank:
         rows = uid_rows(self.spark, self.table_dir, uid)
         n = delete_by_uid(self.spark, self.table_dir, uid, rows)
         if n:
-            self._invalidate_feature_tiles(sorted(_tiles_of(rows)))
+            self._invalidate_tiles(13, sorted(_tiles_of(rows)))
         return n
 
-    def _invalidate_feature_tiles(self, tiles_z13: list[tuple[int, int]]) -> None:
+    def _invalidate_tiles(self, z: int, tiles: list[tuple[int, int]]) -> None:
         """The write-path half of the reference's cache discipline
-        (Tyler.kt:139 regionManager.add per feature + :183 flush):
-        dirty z13 tile bboxes -> V1 region clustering -> V2 quadtree
-        cover -> paired tile/heatmap cache deletes."""
-        if self._cache is None or not tiles_z13:
+        (Tyler.kt:139 regionManager.add per feature + :183 flush): the
+        bboxes of the dirty zoom-``z`` tiles -> V1 region clustering ->
+        V2 quadtree cover -> paired tile/heatmap cache deletes."""
+        if self._cache is None or not tiles:
             return
         from tank_spark.geom import tilemath
         from tank_spark.operators.invalidation import BBox
 
         self._cache.invalidate_bboxes([
-            BBox(*tilemath.tile_bbox(13, x, y)) for x, y in tiles_z13
+            BBox(*tilemath.tile_bbox(z, x, y)) for x, y in tiles
         ])
 
     def delete_tile(self, z: int, x: int, y: int) -> int:
@@ -468,17 +488,8 @@ class Tank:
         from tank_spark.operators.table_ops import delete_tile
 
         n = delete_tile(self.spark, self.table_dir, z, x, y)
-        self._invalidate_tile_bbox(z, x, y)
+        self._invalidate_tiles(z, [(x, y)])
         return n
-
-    def _invalidate_tile_bbox(self, z: int, x: int, y: int) -> None:
-        if self._cache is None:
-            return
-        from tank_spark.geom import tilemath
-        from tank_spark.operators.invalidation import BBox
-
-        lon_min, lat_min, lon_max, lat_max = tilemath.tile_bbox(z, x, y)
-        self._cache.invalidate_bboxes([BBox(lon_min, lat_min, lon_max, lat_max)])
 
 
 def _tiles_of(rows) -> set[tuple[int, int]]:

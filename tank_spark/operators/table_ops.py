@@ -8,10 +8,13 @@ semantics are copy-on-write: rewrite only the partitions whose rows change
 dependency-free parquet version, bucket-partitioned so a mutation touches
 one ``bucket=`` directory, not the table.
 
-Layout: ``<dir>/bucket=<hash % n_buckets>/*.parquet``. The read path
-filters on ``bucket`` (derived from ``hash``), so tile queries prune
-directories — the on-disk analogue of the reference's partition key, and
-of what a 100 TB deployment gets from hash-bucketed table layout.
+Layout: ``<dir>/bucket=<pmod(hash, N_BUCKETS)>/*.parquet``, written only
+here: ``write_buckets`` appends (or, for ``write_feature_table``,
+overwrites) rows into their bucket, and ``_rewrite_buckets`` replaces
+whole buckets. The read path filters on ``bucket`` (derived from
+``hash``), so tile queries prune directories — the on-disk analogue of
+the reference's partition key, and of what a 100 TB deployment gets from
+hash-bucketed table layout.
 
 Session handle: every read of a table goes through ``read_table``
 (``read_feature_table`` for the feature table, ``tile_cache.TileCache``
@@ -19,11 +22,11 @@ for the cache table), which serves one DataFrame per (session, table
 directory, data version) from the session cache, like the reference's
 one Cassandra table per process (application.kt:677-681). The version is
 ``cache.dir_version`` of the directory and its partition subdirectories
-(``bucket=*`` here). Every writer (here, ``api.Tank``'s ingest, the
-streaming sink, the tile cache) ends with ``refresh_table``, which drops
-the handle, so in-process writes are seen exactly; the directory version
-catches writers this process does not see (a direct append, another
-process).
+(``bucket=*`` here). Every writer (the functions here, ``api.Tank``'s
+ingest tail, which every batch and drop-dir stream ingest runs, and the
+tile cache) ends with ``refresh_table``, which drops the handle, so
+in-process writes are seen exactly; the directory version catches
+writers this process does not see (a direct append, another process).
 
 A handle (re)build starts no Spark job: the data schema is the Spark
 schema the writer stored in one data file's parquet footer, read on the
@@ -57,17 +60,27 @@ SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 _LISTING_LOCK = threading.Lock()
 
 
-def write_feature_table(df: DataFrame, table_dir: str, n_buckets: int = N_BUCKETS) -> None:
-    """Materialize a feature DataFrame as a bucket-partitioned parquet
-    table, sorted by hash within partitions (row-group skipping)."""
+def _bucket_of(hash_col: Column) -> Column:
+    return F.pmod(hash_col, F.lit(N_BUCKETS))
+
+
+def write_buckets(df: DataFrame, table_dir: str, mode: str = "append") -> None:
+    """Write ``df``'s rows into their ``bucket=`` partitions, sorted by
+    hash within each file (row-group skipping). The caller refreshes."""
     (
-        df.withColumn("bucket", F.pmod(F.col("hash"), F.lit(n_buckets)))
-        .repartition(F.col("bucket"))
-        .sortWithinPartitions("hash")
-        .write.mode("overwrite")
+        df.withColumn("bucket", _bucket_of(F.col("hash")))
+        .sortWithinPartitions("bucket", "hash")
+        .write.mode(mode)
         .partitionBy("bucket")
         .parquet(table_dir)
     )
+
+
+def write_feature_table(df: DataFrame, table_dir: str) -> None:
+    """Materialize a feature DataFrame as a bucket-partitioned parquet
+    table: one task, so one file, per bucket."""
+    write_buckets(df.repartition(_bucket_of(F.col("hash"))), table_dir,
+                  "overwrite")
     refresh_table(df.sparkSession, table_dir)
 
 
@@ -169,8 +182,9 @@ def uid_rows(spark: SparkSession, table_dir: str, uid: str) -> list[Row]:
 
 def _rewrite_buckets(spark: SparkSession, table_dir: str, content: DataFrame,
                      buckets: list[int]) -> None:
-    """Copy-on-write tail of every mutation: ``content`` holds the rows
-    ``buckets`` keep; each bucket is overwritten as one hash-sorted file."""
+    """Copy-on-write tail of every mutation and of compaction:
+    ``content`` holds the rows ``buckets`` keep; each bucket is
+    overwritten as one hash-sorted file."""
     # localCheckpoint CUTS LINEAGE: a plain cache() can silently recompute
     # from source files we are about to overwrite (observed: FileNotFound
     # mid-rewrite). Eager checkpoint = durable copy of the new content.
@@ -178,8 +192,8 @@ def _rewrite_buckets(spark: SparkSession, table_dir: str, content: DataFrame,
     for b in buckets:
         (
             content.filter(F.col("bucket") == b).drop("bucket")
-            .sortWithinPartitions("hash")
             .coalesce(1)
+            .sortWithinPartitions("hash")  # coalesce first: one sorted run
             .write.mode("overwrite")
             .parquet(f"{table_dir}/bucket={b}")
         )
@@ -267,9 +281,8 @@ def delete_matching_keys(spark: SparkSession, table_dir: str,
     try:
         cand = sorted({
             r["b"]
-            for r in k.select(
-                F.pmod(F.col("hash"), F.lit(N_BUCKETS)).alias("b")
-            ).distinct().collect()
+            for r in k.select(_bucket_of(F.col("hash")).alias("b"))
+            .distinct().collect()
             if r["b"] is not None
         })
         if not cand:
@@ -291,20 +304,20 @@ def delete_matching_keys(spark: SparkSession, table_dir: str,
         k.unpersist()
 
 
-def compact_table(spark: SparkSession, table_dir: str,
-                  min_files: int = 2) -> dict[int, int]:
-    """Compaction: rewrite every bucket fragmented into >= ``min_files``
-    parquet files as one hash-sorted file. Streaming/bulk ingest appends
-    one file per micro-batch per bucket (streaming/ingest.py), so an
-    ingest-heavy table degrades into many small row groups — the classic
-    small-files problem; this is the OPTIMIZE/rewrite_data_files analogue
-    (and the Cassandra-compaction parity point: the reference's store
-    compacts SSTables in the background, application.conf's cluster side).
+def compact_table(spark: SparkSession, table_dir: str) -> dict[int, int]:
+    """Compaction: rewrite every bucket fragmented into more than one
+    parquet file as one hash-sorted file. Every ingest append adds one
+    file per touched bucket (``write_buckets``; a drop-dir stream, one
+    per micro-batch), so an ingest-heavy table degrades into many small
+    row groups — the classic small-files problem; this is the
+    OPTIMIZE/rewrite_data_files analogue (and the Cassandra-compaction
+    parity point: the reference's store compacts SSTables in the
+    background, application.conf's cluster side).
 
     Returns {bucket: n_files_before} for the buckets rewritten.
 
-    At 100 TB: each bucket rewrite is an independent coalesce-and-sort of
-    one directory — schedulable bucket-by-bucket (here: a loop, on a
+    At 100 TB: each bucket rewrite is an independent ``_rewrite_buckets``
+    of one directory — schedulable bucket-by-bucket (here: a loop, on a
     cluster: parallel jobs), never a full-table shuffle. File listing
     uses the local filesystem; a cluster deployment swaps in the Hadoop
     FileSystem API, the rewrite is unchanged.
@@ -317,7 +330,7 @@ def compact_table(spark: SparkSession, table_dir: str,
             f for f in os.listdir(os.path.join(table_dir, entry))
             if f.endswith(".parquet")
         ]
-        if len(files) >= min_files:
+        if len(files) > 1:
             fragmented[int(entry.split("=", 1)[1])] = len(files)
     if not fragmented:
         return fragmented
@@ -325,18 +338,7 @@ def compact_table(spark: SparkSession, table_dir: str,
     # files, so the listing stays valid for the buckets still to come
     df = read_feature_table(spark, table_dir)
     for b in fragmented:
-        # checkpoint cuts lineage from the files about to be overwritten
-        # (same FileNotFound hazard as delete_where)
-        rows = (df.filter(F.col("bucket") == b).drop("bucket")
-                .localCheckpoint(eager=True))
-        (
-            rows.coalesce(1)
-            .sortWithinPartitions("hash")  # coalesce first -> globally sorted file
-            .write.mode("overwrite")
-            .parquet(f"{table_dir}/bucket={b}")
-        )
-        rows.unpersist()
-    refresh_table(spark, table_dir)
+        _rewrite_buckets(spark, table_dir, df.filter(F.col("bucket") == b), [b])
     return fragmented
 
 

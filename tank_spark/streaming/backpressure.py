@@ -24,8 +24,9 @@ escape for per-row poison).
 Retry safety: a failed ``df.write.parquet`` attempt commits nothing —
 task output lives under the FileOutputCommitter's _temporary until
 job commit, so re-running the phase cannot duplicate committed rows.
-The ingest sink applies one backoff call PER PHASE (accepted-store,
-rejects-store) for the same reason: a phase that already committed is
+The ingest stream passes ``call`` as the commit-phase runner of
+``api.Tank._ingest_raw``, one call PER PHASE (accepted-store,
+rejects-store), for the same reason: a phase that already committed is
 never re-entered because a LATER phase failed.
 """
 

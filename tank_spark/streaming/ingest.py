@@ -7,7 +7,7 @@ Reference semantics preserved:
   proceeds asynchronously (HTTP 202 ~ non-blocking stream trigger);
 * schema coercion with per-type defaults (Tyler.kt:77-116);
 * un-coercible rows go to a rejects sink instead of failing the batch
-  (the "Exhauster" dead-letter, Tyler.kt:152-169 — here a rejects table);
+  (the "Exhauster" dead-letter, Tyler.kt:152-169 — here ``<table>/_rejects``);
 * every accepted row gets centroid -> zoom-13 tile -> Morton ``hash``
   (Tyler.kt:127-131) and a server-assigned ingest timestamp;
 * the ``.lock``-file work-queue protocol (FileWaitGroup.kt:19-73) is
@@ -15,13 +15,14 @@ Reference semantics preserved:
   ``maxFilesPerTrigger`` plays the max-2-concurrent-runners role.
 
 At scale: the same topology runs against a cloud bucket with thousands of
-arriving files; foreachBatch appends hash-partitioned parquet so the read
-path gets partition pruning on ``hash``.
+arriving files; foreachBatch runs ``api.Tank``'s store tail, which appends
+bucket-partitioned parquet so the read path prunes on ``hash``.
 """
 
 from __future__ import annotations
 
 import math
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,6 +32,9 @@ from pyspark.sql import Column
 
 from tank_spark.geom.morton import morton_col
 from tank_spark.sources.features import HASH_LEVEL
+
+if TYPE_CHECKING:
+    from tank_spark.api import Tank
 
 # ---------------------------------------------------- declared attr schema
 #
@@ -186,26 +190,27 @@ def coerce_features(raw: DataFrame, attr_fields: str = DEFAULT_ATTR_FIELDS) -> D
 
 def start_ingest_stream(
     spark: SparkSession,
+    tank: Tank,
     drop_dir: str,
-    table_dir: str,
-    rejects_dir: str,
     checkpoint_dir: str,
     max_files_per_trigger: int = 2,
-    attr_fields: str = DEFAULT_ATTR_FIELDS,
     upsert: bool = False,
     wire_format: str = "json",
     sink_max_retries: int = 0,
     sink_backoff_s: float = 1.0,
 ):
-    """Start the drop-dir ingest stream. Returns the StreamingQuery.
+    """Start the drop-dir ingest stream into the layer ``tank``. Returns
+    the StreamingQuery.
 
-    foreachBatch writes accepted rows to ``table_dir`` (parquet) and
-    rejects to ``rejects_dir`` in the same epoch — the one-pass
-    valid/dead-letter split the reference does per feature.
-    ``attr_fields`` declares the layer's attribute schema (name + type) —
-    the same declaration drives wire parsing and coercion.
+    foreachBatch runs the layer's store tail (``Tank._ingest_raw``, the
+    one every batch ingest runs) on each micro-batch: accepted rows are
+    aligned to the table and appended to its buckets, rejects go to
+    ``<table>/_rejects`` in the same epoch — the one-pass valid/dead-letter
+    split the reference does per feature — and each epoch invalidates the
+    layer's tile cache over the tiles it wrote. The layer's ``attr_fields``
+    declaration drives wire parsing and coercion.
     ``wire_format``: "json" (NDJSON, the reference's wire) or "csv"
-    (header CSV with the same wire columns — api.Layer.ingest_csv's
+    (header CSV with the same wire columns — api.Tank.ingest_csv's
     format, streamed); both feed the identical coercion path.
 
     ``upsert``: CDC-style apply for a primary_keys="uid" layer
@@ -219,15 +224,13 @@ def start_ingest_stream(
 
     ``sink_max_retries`` > 0 enables ADAPTIVE BACKPRESSURE (the
     reference's I6, Tyler.kt:145-176, at the micro-batch altitude —
-    see streaming/backpressure.py): each sink phase retries through a
-    shared delay that grows 2x + ``sink_backoff_s`` on storage failure
-    and decays per success. The default 0 keeps the exact
+    see streaming/backpressure.py): each commit phase of the tail
+    retries through a shared delay that grows 2x + ``sink_backoff_s`` on
+    storage failure and decays per success; a phase that has committed
+    is never re-entered. The default 0 keeps the exact
     fail-fast-to-the-query behavior (Spark task retries still cover
     task-level failures inside the write jobs either way).
     """
-    from tank_spark.operators.table_ops import (
-        delete_matching_keys, refresh_table,
-    )
     from tank_spark.streaming.backpressure import AdaptiveBackoff
 
     backoff = AdaptiveBackoff(step_s=sink_backoff_s,
@@ -235,56 +238,19 @@ def start_ingest_stream(
     if wire_format not in ("json", "csv"):
         raise ValueError(f"unsupported wire_format: {wire_format!r}")
     reader = (
-        spark.readStream.schema(attr_wire_schema(attr_fields))
+        spark.readStream.schema(attr_wire_schema(tank.attr_fields))
         .option("maxFilesPerTrigger", max_files_per_trigger)
     )
     if wire_format == "csv":
         raw = reader.option("header", True).csv(drop_dir)
     else:
         raw = reader.json(drop_dir)
-    coerced = coerce_features(raw, attr_fields)
 
     def sink(batch: DataFrame, epoch_id: int) -> None:
-        batch.persist()
-        try:
-            ok = batch.filter(~F.col("rejected")).drop("rejected")
-
-            def store_accepted() -> None:
-                if upsert:
-                    import os
-
-                    # first epoch: nothing stored yet -> nothing to
-                    # replace (re-running this after a failed append is
-                    # safe: the delete is keyed on the incoming rows)
-                    if os.path.isdir(table_dir) and any(
-                        e.startswith("bucket=") for e in os.listdir(table_dir)
-                    ):
-                        delete_matching_keys(spark, table_dir, ok)
-                # bucket-partitioned append, mirroring ingest_features —
-                # the table dir layout is bucket=N/ subdirs; flat files at
-                # the root would break partition discovery and the
-                # mutation paths that filter on `bucket`
-                (ok.withColumn("bucket", F.pmod(F.col("hash"), F.lit(64)))
-                 .write.mode("append").partitionBy("bucket").parquet(table_dir))
-                refresh_table(spark, table_dir)
-
-            def store_rejects() -> None:
-                rejects = batch.filter(F.col("rejected")) \
-                    .drop("rejected", "hash")
-                if rejects.limit(1).count() > 0:
-                    rejects.write.mode("append").parquet(rejects_dir)
-
-            # one backoff call PER PHASE: a phase that already committed
-            # is never re-entered because a later phase failed (a failed
-            # parquet write commits nothing — retrying a phase cannot
-            # duplicate rows)
-            backoff.call(store_accepted, "accepted-store")
-            backoff.call(store_rejects, "rejects-store")
-        finally:
-            batch.unpersist()
+        tank._ingest_raw(batch, upsert, phase=backoff.call)
 
     return (
-        coerced.writeStream.foreachBatch(sink)
+        raw.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

@@ -13,10 +13,11 @@ total. The idiomatic equivalents, both here:
   and on termination the reference's "importing finished" line. This
   is push-based and costs nothing: Spark already computes
   ``numInputRows`` for every batch.
-- BATCH (the bulk NDJSON/GeoJSON/CSV routes): api._ingest_raw logs
-  "importing starts" before the store and "#n features importing
-  finished (accepted=.. rejected=..)" after — the counts it already
-  computes for its return value, so no extra job.
+- BATCH (the bulk NDJSON/GeoJSON/CSV routes): api.Tank._ingest_batch
+  logs "importing starts" before the store tail (``Tank._ingest_raw``,
+  which the stream's micro-batches run too, without these lines) and
+  "#n features importing finished (accepted=.. rejected=..)" after —
+  the counts the tail already returns, so no extra job.
 
 Everything goes through the ``tank_spark.ingest`` logger; deployments
 route it wherever the reference's log.info went.

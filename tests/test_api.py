@@ -310,7 +310,7 @@ def test_tile_cache_roundtrip_and_invalidation(spark, tmp_path):
 
 def test_write_paths_invalidate_tile_cache(spark, tmp_path):
     """Reference cache discipline (Tyler.kt:139/:183): EVERY write —
-    ingest, update, delete-by-uid — invalidates the cover of the
+    ingest, update, delete-by-uid, bulk stream — invalidates the cover of the
     touched feature's tile, so a cached blob never serves stale."""
     import json as _json
 
@@ -348,6 +348,18 @@ def test_write_paths_invalidate_tile_cache(spark, tmp_path):
     assert t.delete_feature("cached-1") == 1
     feats3 = mvtmod.decode(t.tile_mvt(13, ix, iy))["io.marauder.tank"]["features"]
     assert not any(f["props"].get("kind") == "poi" for f in feats3)
+
+    # BULK (the drop-dir stream) into the cached tile -> its epoch
+    # invalidates the cover like every other write
+    t.tile_mvt(13, ix, iy)                          # re-fill
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    (drop / "b0.ndjson").write_text(_json.dumps(
+        {"id": "cached-2", "lon": lon, "lat": lat, "kind": "bulkpoi",
+         "score": "1", "cnt": "1", "tag": "t"}) + "\n")
+    t.ingest_bulk(str(drop), str(tmp_path / "ckpt")).awaitTermination(120)
+    feats4 = mvtmod.decode(t.tile_mvt(13, ix, iy))["io.marauder.tank"]["features"]
+    assert sum(f["props"].get("kind") == "bulkpoi" for f in feats4) == 1
 
 
 def test_layer_config_persists_with_table(spark, tmp_path):

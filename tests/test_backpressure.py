@@ -15,7 +15,7 @@ import pytest
 
 @pytest.fixture()
 def tmp_dirs(tmp_path):
-    d = {k: str(tmp_path / k) for k in ("drop", "table", "rejects", "ckpt")}
+    d = {k: str(tmp_path / k) for k in ("drop", "table", "ckpt")}
     (tmp_path / "drop").mkdir()
     return d
 
@@ -81,7 +81,10 @@ def test_ingest_stream_recovers_through_transient_storage_failure(
     sink_max_retries enabled the epoch retries through the growing
     delay and lands EXACTLY the expected rows — no loss, no
     duplication (a failed parquet write commits nothing)."""
+    from tank_spark.api import Tank
     from tank_spark.streaming.ingest import start_ingest_stream
+
+    tank = Tank(spark, tmp_dirs["table"])
 
     rows = [{"id": f"r{i}", "lon": float(i % 90), "lat": float(i % 45),
              "kind": "poi"} for i in range(8)]
@@ -99,8 +102,8 @@ def test_ingest_stream_recovers_through_transient_storage_failure(
     t = threading.Thread(target=clear_blocker, daemon=True)
     t.start()
     q = start_ingest_stream(
-        spark, tmp_dirs["drop"], tmp_dirs["table"], tmp_dirs["rejects"],
-        tmp_dirs["ckpt"], sink_max_retries=5, sink_backoff_s=1.0,
+        spark, tank, tmp_dirs["drop"], tmp_dirs["ckpt"],
+        sink_max_retries=5, sink_backoff_s=1.0,
     )
     q.awaitTermination(120)
     t.join()
@@ -116,16 +119,16 @@ def test_ingest_stream_fail_fast_without_retries(spark, tmp_dirs):
     table path kills the query (Spark's standard foreachBatch
     behavior), it does not silently spin."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
+    from tank_spark.api import Tank
     from tank_spark.streaming.ingest import start_ingest_stream
+
+    tank = Tank(spark, tmp_dirs["table"])
 
     _write_ndjson(f"{tmp_dirs['drop']}/b1.ndjson",
                   [{"id": "a", "lon": 1.0, "lat": 2.0, "kind": "poi"}])
     with open(tmp_dirs["table"], "w") as f:
         f.write("blocker")
-    q = start_ingest_stream(
-        spark, tmp_dirs["drop"], tmp_dirs["table"], tmp_dirs["rejects"],
-        tmp_dirs["ckpt"],
-    )
+    q = start_ingest_stream(spark, tank, tmp_dirs["drop"], tmp_dirs["ckpt"])
     # awaitTermination re-raises the query's failure; a clean
     # termination instead would return without raising and fail the
     # pytest.raises expectation

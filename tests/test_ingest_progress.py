@@ -14,7 +14,7 @@ import pytest
 
 @pytest.fixture()
 def tmp_dirs(tmp_path):
-    d = {k: str(tmp_path / k) for k in ("drop", "table", "rejects", "ckpt")}
+    d = {k: str(tmp_path / k) for k in ("drop", "table", "ckpt")}
     (tmp_path / "drop").mkdir()
     return d
 
@@ -26,6 +26,7 @@ def _write_ndjson(path, rows):
 
 
 def test_stream_progress_listener_counts_and_logs(spark, tmp_dirs, caplog):
+    from tank_spark.api import Tank
     from tank_spark.streaming.ingest import start_ingest_stream
     from tank_spark.streaming.progress import attach_ingest_progress
 
@@ -38,8 +39,8 @@ def test_stream_progress_listener_counts_and_logs(spark, tmp_dirs, caplog):
     try:
         with caplog.at_level(logging.INFO, logger="tank_spark.ingest"):
             q = start_ingest_stream(
-                spark, tmp_dirs["drop"], tmp_dirs["table"],
-                tmp_dirs["rejects"], tmp_dirs["ckpt"],
+                spark, Tank(spark, tmp_dirs["table"]), tmp_dirs["drop"],
+                tmp_dirs["ckpt"],
                 max_files_per_trigger=1,  # force >= 2 epochs
             )
             qid = str(q.id)

@@ -13,7 +13,7 @@ from tests.conftest import SF_DIR
 
 @pytest.fixture()
 def tmp_dirs(tmp_path):
-    d = {k: str(tmp_path / k) for k in ("drop", "table", "rejects", "ckpt")}
+    d = {k: str(tmp_path / k) for k in ("drop", "table", "ckpt")}
     (tmp_path / "drop").mkdir()
     return d
 
@@ -24,8 +24,21 @@ def _write_ndjson(path, rows):
             f.write(json.dumps(r) + "\n")
 
 
-def test_ingest_stream_end_to_end(spark, tmp_dirs):
+def _stream(spark, tmp_dirs, attr_fields=None, **kw):
+    """One drop-dir stream into the layer at ``tmp_dirs["table"]``."""
+    from tank_spark.api import Tank
     from tank_spark.streaming.ingest import start_ingest_stream
+
+    tank = Tank(spark, tmp_dirs["table"], attr_fields=attr_fields)
+    return start_ingest_stream(spark, tank, tmp_dirs["drop"],
+                               tmp_dirs["ckpt"], **kw)
+
+
+def _rejects(spark, tmp_dirs):
+    return spark.read.parquet(f"{tmp_dirs['table']}/_rejects")
+
+
+def test_ingest_stream_end_to_end(spark, tmp_dirs):
     from tank_spark.geom import morton, tilemath
 
     good = [
@@ -44,14 +57,11 @@ def test_ingest_stream_end_to_end(spark, tmp_dirs):
     ]
     _write_ndjson(f"{tmp_dirs['drop']}/batch1.ndjson", good + bad)
 
-    q = start_ingest_stream(
-        spark, tmp_dirs["drop"], tmp_dirs["table"], tmp_dirs["rejects"],
-        tmp_dirs["ckpt"],
-    )
+    q = _stream(spark, tmp_dirs)
     q.awaitTermination(60)
 
     accepted = spark.read.parquet(tmp_dirs["table"])
-    rejects = spark.read.parquet(tmp_dirs["rejects"])
+    rejects = _rejects(spark, tmp_dirs)
     assert accepted.count() == 3
     assert rejects.count() == 2
     # bulk sink writes the bucket-partitioned layout (bucket=N/ subdirs) so
@@ -79,8 +89,6 @@ def test_ingest_stream_declared_schema(spark, tmp_dirs):
     ones (Tyler.kt:67-125)."""
     import datetime
 
-    from tank_spark.streaming.ingest import start_ingest_stream
-
     attrs = "label text, rank int, img_date date"
     rows = [
         {"id": "a", "lon": 1.0, "lat": 2.0, "label": "ok", "rank": "3",
@@ -91,9 +99,7 @@ def test_ingest_stream_declared_schema(spark, tmp_dirs):
         {"id": "x", "lon": 5.0, "lat": 6.0, "img_date": "June 9th"},
     ]
     _write_ndjson(f"{tmp_dirs['drop']}/d1.ndjson", rows)
-    q = start_ingest_stream(spark, tmp_dirs["drop"], tmp_dirs["table"],
-                            tmp_dirs["rejects"], tmp_dirs["ckpt"],
-                            attr_fields=attrs)
+    q = _stream(spark, tmp_dirs, attr_fields=attrs)
     q.awaitTermination(60)
 
     acc = {r["uid"]: r for r in spark.read.parquet(tmp_dirs["table"]).collect()}
@@ -102,7 +108,7 @@ def test_ingest_stream_declared_schema(spark, tmp_dirs):
     assert acc["a"]["img_date"] == datetime.date(2021, 6, 9)
     assert acc["b"]["label"] == "" and acc["b"]["rank"] == 0
     assert acc["b"]["img_date"] == datetime.date(1970, 1, 1)
-    rej = spark.read.parquet(tmp_dirs["rejects"])
+    rej = _rejects(spark, tmp_dirs)
     assert [r["uid"] for r in rej.collect()] == ["x"]
 
 
@@ -136,19 +142,16 @@ def test_attr_declaration_uuid_timestamp_skipped(spark):
 def test_ingest_stream_incremental_files(spark, tmp_dirs):
     """Second file dropped later is picked up; checkpoint prevents
     reprocessing (the reference's .lock protocol, done right)."""
-    from tank_spark.streaming.ingest import start_ingest_stream
 
     _write_ndjson(f"{tmp_dirs['drop']}/f1.ndjson",
                   [{"id": "a", "lon": 1.0, "lat": 1.0}])
-    q = start_ingest_stream(spark, tmp_dirs["drop"], tmp_dirs["table"],
-                            tmp_dirs["rejects"], tmp_dirs["ckpt"])
+    q = _stream(spark, tmp_dirs)
     q.awaitTermination(60)
     assert spark.read.parquet(tmp_dirs["table"]).count() == 1
 
     _write_ndjson(f"{tmp_dirs['drop']}/f2.ndjson",
                   [{"id": "b", "lon": 2.0, "lat": 2.0}])
-    q2 = start_ingest_stream(spark, tmp_dirs["drop"], tmp_dirs["table"],
-                             tmp_dirs["rejects"], tmp_dirs["ckpt"])
+    q2 = _stream(spark, tmp_dirs)
     q2.awaitTermination(60)
     df = spark.read.parquet(tmp_dirs["table"])
     assert df.count() == 2  # a not duplicated, b added
@@ -339,6 +342,17 @@ def test_feature_lifecycle_ingest_compact_serve_delete(spark, tmp_dirs):
     bdir = os.path.join(table, f"bucket={bucket}")
     n_files = len([f for f in os.listdir(bdir) if f.endswith(".parquet")])
     assert n_files >= 3  # fragmented by the appends
+    # the stream's appends are aligned to the table schema: the seed has
+    # no `ts`, so no stream-written file carries one
+    import pyarrow.parquet as pq
+
+    from tank_spark.operators.table_ops import read_feature_table
+
+    cols = [c for c in read_feature_table(spark, table).columns if c != "bucket"]
+    for root, _dirs, names in os.walk(table):
+        for name in names:
+            if name.endswith(".parquet"):
+                assert pq.read_schema(os.path.join(root, name)).names == cols
 
     compacted = compact_table(spark, table)
     assert bucket in compacted
@@ -388,27 +402,20 @@ def test_ingest_stream_upsert_mode(spark, tmp_dirs):
     """CDC-style streaming upsert: a later epoch's (hash, uid) replaces
     the stored rows; unrelated uids and moved features are untouched
     (streaming twin of api.ingest_features(upsert=True))."""
-    from tank_spark.streaming.ingest import start_ingest_stream
 
     row = {"id": "a", "lon": -122.4194, "lat": 37.7749, "kind": "poi",
            "score": "1", "cnt": "7", "tag": "t1"}
     other = {"id": "b", "lon": 13.4, "lat": 52.5, "kind": "road",
              "score": "2", "cnt": "3", "tag": "t2"}
     _write_ndjson(f"{tmp_dirs['drop']}/batch1.ndjson", [row, other])
-    q = start_ingest_stream(
-        spark, tmp_dirs["drop"], tmp_dirs["table"], tmp_dirs["rejects"],
-        tmp_dirs["ckpt"], upsert=True,
-    )
+    q = _stream(spark, tmp_dirs, upsert=True)
     q.awaitTermination(60)
 
     # epoch 2: new version of `a` (same position = same hash) must
     # REPLACE; `b` untouched
     _write_ndjson(f"{tmp_dirs['drop']}/batch2.ndjson",
                   [dict(row, score="9")])
-    q = start_ingest_stream(
-        spark, tmp_dirs["drop"], tmp_dirs["table"], tmp_dirs["rejects"],
-        tmp_dirs["ckpt"], upsert=True,
-    )
+    q = _stream(spark, tmp_dirs, upsert=True)
     q.awaitTermination(60)
 
     rows = spark.read.parquet(tmp_dirs["table"]).collect()
@@ -424,7 +431,6 @@ def test_ingest_stream_csv_wire(spark, tmp_dirs):
     files, quoted commas, and the dead-letter split — identical coercion
     path to NDJSON; the checkpoint still prevents reprocessing across
     restarts."""
-    from tank_spark.streaming.ingest import start_ingest_stream
 
     with open(f"{tmp_dirs['drop']}/f1.csv", "w") as fh:
         fh.write(
@@ -432,22 +438,18 @@ def test_ingest_stream_csv_wire(spark, tmp_dirs):
             'c1,1.0,1.0,,"poi,main",7.5,3,t\n'
             "c-bad,2.0,2.0,,road,zzz,1,t\n"
         )
-    q = start_ingest_stream(spark, tmp_dirs["drop"], tmp_dirs["table"],
-                            tmp_dirs["rejects"], tmp_dirs["ckpt"],
-                            wire_format="csv")
+    q = _stream(spark, tmp_dirs, wire_format="csv")
     q.awaitTermination(60)
     ok = spark.read.parquet(tmp_dirs["table"])
     assert ok.count() == 1
     row = ok.collect()[0]
     assert row["uid"] == "c1" and row["kind"] == "poi,main"
-    assert spark.read.parquet(tmp_dirs["rejects"]).count() == 1
+    assert _rejects(spark, tmp_dirs).count() == 1
 
     with open(f"{tmp_dirs['drop']}/f2.csv", "w") as fh:
         fh.write("id,lon,lat,geometry,kind,score,cnt,tag\n"
                  "c2,3.0,3.0,,road,1.0,1,t\n")
-    q2 = start_ingest_stream(spark, tmp_dirs["drop"], tmp_dirs["table"],
-                             tmp_dirs["rejects"], tmp_dirs["ckpt"],
-                             wire_format="csv")
+    q2 = _stream(spark, tmp_dirs, wire_format="csv")
     q2.awaitTermination(60)
     df = spark.read.parquet(tmp_dirs["table"])
     assert set(r["uid"] for r in df.collect()) == {"c1", "c2"}

@@ -429,3 +429,50 @@ def test_handle_builds_and_cache_hits_start_no_spark_job(spark, tmp_path):
     assert tc.get("tile", 9, 80, 196) == b"blob-1"
     assert _spark_jobs(spark, lambda: tc.get("tile", 9, 80, 196)) == 0
     assert spark.conf.get(key, None) == old
+
+
+def test_ingest_features_job_count(spark, table_dir):
+    """An uncached layer's ingest of a small batch (accepted rows and a
+    reject) starts a fixed number of Spark jobs: the observed checkpoint,
+    the bucketed append and the rejects append."""
+    import json
+
+    from tank_spark.api import Tank
+
+    t = Tank(spark, table_dir)
+    rows = [json.dumps({"id": f"jobs-{i}", "lon": 10.0 + i, "lat": 50.0,
+                        "kind": "poi"}) for i in range(3)]
+    rows.append(json.dumps({"id": "jobs-bad", "kind": "poi"}))  # no geometry
+    assert _spark_jobs(spark, lambda: t.ingest_features(rows)) == 3
+
+
+def test_rewrite_of_a_fragmented_bucket_is_one_hash_sorted_file(
+        spark, table_dir):
+    """A bucket held in several files with overlapping hash ranges is
+    rewritten as ONE file whose ``hash`` column is non-decreasing, not
+    as concatenated sorted runs."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from tank_spark.operators import table_ops as ops
+
+    df = ops.read_feature_table(spark, table_dir)
+    b = df.filter(F.col("uid") == "feat-8001").first()["bucket"]
+    rows = df.filter(F.col("bucket") == b)
+    n = rows.count()
+    for i in range(2):   # two more files spanning the bucket's hash range
+        (rows.withColumn("uid", F.concat(F.lit(f"frag{i}-"), F.col("uid")))
+         .repartition(1).write.mode("append")
+         .partitionBy("bucket").parquet(table_dir))
+    ops.refresh_table(spark, table_dir)
+    bdir = f"{table_dir}/bucket={b}"
+    assert len(glob.glob(f"{bdir}/*.parquet")) == 3
+
+    assert ops.update_by_uid(spark, table_dir, "feat-8001", {"tag": "t-upd"},
+                             ops.uid_rows(spark, table_dir, "feat-8001")) == 1
+    files = glob.glob(f"{bdir}/*.parquet")
+    assert len(files) == 1
+    h = pq.read_table(files[0], columns=["hash"]).column("hash").to_pylist()
+    assert len(h) == 3 * n
+    assert h == sorted(h)
