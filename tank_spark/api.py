@@ -68,7 +68,7 @@ class Tank:
         if cache_dir is not None:
             from tank_spark.operators.tile_cache import TileCache
 
-            self._cache = TileCache(spark, cache_dir)
+            self._cache = TileCache(cache_dir)
 
     def _layer_config_path(self) -> str:
         import os

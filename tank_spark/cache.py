@@ -22,8 +22,8 @@ localCheckpoint, unpersist, removing a layout directory — lives in the
 caller's ``build``/``release`` callables. Keys carry everything the value
 depends on besides the data version (session applicationId, sf_dir,
 dials); the fingerprint carries the data version — ``fingerprint`` for
-files, ``dir_version`` for partitioned table directories (the feature
-table's and the tile cache's session handles).
+files, ``dir_version`` for the feature table's directory (its session
+handle).
 """
 
 from __future__ import annotations
@@ -68,40 +68,39 @@ def local_fs_path(path: str) -> str:
     return path
 
 
-def dir_version(path: str, depth: int) -> tuple:
+def local_dir(path: str) -> str:
+    """The local path of a directory given as a path or a 'file:' URI.
+    A remote path (hdfs://, s3a://, ...) raises ValueError: a driver-side
+    reader would take it for a missing directory."""
+    if "://" in path and not path.startswith("file:"):
+        raise ValueError(f"needs a local directory: {path!r}")
+    return local_fs_path(path)
+
+
+def dir_version(path: str) -> tuple:
     """The data version of a partitioned parquet directory: ``(relative
-    path, mtime_ns, size)`` of ``path`` and of every ``key=value``
-    partition directory below it, down to ``depth`` levels, in name
-    order; ``(("", 0, 0),)`` for a missing directory.
+    path, mtime_ns, size)`` of ``path`` and of each ``key=value``
+    partition directory in it (the feature table's ``bucket=*``), in
+    name order; ``(("", 0, 0),)`` for a missing directory.
 
     Writers never rewrite a data file in place, so a change shows in a
     directory's mtime: an append adds a file to a partition directory,
     and an overwrite removes and recreates it (its parent's entries
-    change). Metadata only: one listing per directory, no Spark job.
-
-    Local paths and 'file:' URIs only: a remote path (hdfs://, s3a://,
-    ...) raises ValueError, since reading it as a missing directory would
-    give a version that never moves."""
-    if "://" in path and not path.startswith("file:"):
-        raise ValueError(f"dir_version needs a local directory: {path!r}")
+    change). Metadata only: one listing, no Spark job. Local paths and
+    'file:' URIs only (``local_dir``)."""
+    d = local_dir(path)
+    try:
+        with os.scandir(d) as it:
+            subs = sorted(e.name for e in it if "=" in e.name and e.is_dir())
+    except OSError:
+        return (("", 0, 0),)
     out = []
-
-    def visit(d: str, rel: str, level: int) -> None:
-        subs = []
+    for rel in ["", *(f"/{name}" for name in subs)]:
         try:
-            st = os.stat(d)
-            if level < depth:
-                with os.scandir(d) as it:
-                    subs = sorted(e.name for e in it
-                                  if "=" in e.name and e.is_dir())
-        except OSError:  # missing, or removed while listed
+            st = os.stat(d + rel)
+            out.append((rel, st.st_mtime_ns, st.st_size))
+        except OSError:   # removed while listed
             out.append((rel, 0, 0))
-            return
-        out.append((rel, st.st_mtime_ns, st.st_size))
-        for name in subs:
-            visit(os.path.join(d, name), f"{rel}/{name}", level + 1)
-
-    visit(local_fs_path(path), "", 0)
     return tuple(out)
 
 

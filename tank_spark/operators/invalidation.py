@@ -1,6 +1,6 @@
 """Tile-cache invalidation — the reference's quadtree cover walk
 (SURVEY.md §2.6: RegionManager.kt:145-184, BoundingManager.kt:37-90,
-Region.kt, Tile.kt) re-expressed for a table-backed tile cache.
+Region.kt, Tile.kt) re-expressed for a key-per-file tile cache.
 
 Semantics preserved from the reference:
 
@@ -16,9 +16,10 @@ Semantics preserved from the reference:
 
 Spark integration: ``invalidation_keys_for`` is driver-side planning math
 (the key list is bounded by the quadtree, not the data — exactly like the
-reference's memcached deletes); applying it to a cache table is one
-partition-pruned anti-join / DELETE. The per-mutation dirty-bucket lists
-from operators/table_ops.py give the dirty geometry for free.
+reference's memcached deletes); applying it to the cache is one unlink
+per cached key in the cover (``tile_cache``). The per-mutation
+dirty-bucket lists from operators/table_ops.py give the dirty geometry
+for free.
 """
 
 from __future__ import annotations
@@ -92,7 +93,7 @@ def quadtree_cover(
 
     BFS from (0,0,0); a tile fully covered by the dirty region is emitted
     as a SUBTREE ROOT (its 4^(zoom_end-z) descendants are implied — a
-    range predicate on a table-backed cache, never an enumeration; the
+    directory walk of the cache, never an enumeration; the
     reference enumerates every key for memcached, which explodes for
     large regions). Merely-intersecting tiles are emitted individually
     and recursed — O(perimeter) per zoom.
@@ -139,8 +140,8 @@ def feature_quadtree_cover(
     since membership never depends on visit order); a tile
     ``coveredBy`` the geometry becomes a SUBTREE ROOT (the reference
     enumerates every descendant for memcached,
-    BoundingManager.kt:63-77 — a table-backed cache keeps the root as a
-    range predicate, same compression as V2); a merely-intersecting
+    BoundingManager.kt:63-77 — the cache keeps the root as one
+    directory walk, same compression as V2); a merely-intersecting
     tile is emitted individually and its children recurse; disjoint
     branches prune.  Unlike the V2 region walk there is no zoom_start
     band — the reference's per-feature set starts at z=0.
@@ -194,7 +195,7 @@ class FeatureBoundingManager:
     flat ``tilingSet.size`` sees.
 
     ``on_flush(tiles, roots)`` is the sink hook — wire it to
-    ``TileCache.invalidate_cover`` for the table-backed delete, or
+    ``TileCache.invalidate_cover`` for the cache's file deletes, or
     leave unset and consume the returned key lists (the memcached
     shape).  Each flush returns the paired ``tile/`` + ``heatmap/``
     key list it drained, like the reference's paired deletes.

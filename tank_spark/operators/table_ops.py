@@ -16,17 +16,17 @@ whole buckets. The read path filters on ``bucket`` (derived from
 the reference's partition key, and of what a 100 TB deployment gets from
 hash-bucketed table layout.
 
-Session handle: every read of a table goes through ``read_table``
-(``read_feature_table`` for the feature table, ``tile_cache.TileCache``
-for the cache table), which serves one DataFrame per (session, table
+Session handle: every read of the feature table goes through
+``read_feature_table``, which serves one DataFrame per (session, table
 directory, data version) from the session cache, like the reference's
 one Cassandra table per process (application.kt:677-681). The version is
-``cache.dir_version`` of the directory and its partition subdirectories
-(``bucket=*`` here). Every writer (the functions here, ``api.Tank``'s
-ingest tail, which every batch and drop-dir stream ingest runs, and the
-tile cache) ends with ``refresh_table``, which drops the handle, so
-in-process writes are seen exactly; the directory version catches
-writers this process does not see (a direct append, another process).
+``cache.dir_version`` of the directory and its ``bucket=*``
+subdirectories. Every writer (the functions here, and ``api.Tank``'s
+ingest tail, which every batch and drop-dir stream ingest runs) ends
+with ``refresh_table``, which drops the handle, so in-process writes are
+seen exactly; the directory version catches writers this process does
+not see (a direct append, another process). The tile cache is no table:
+``tile_cache`` keeps one file per key and never reads through here.
 
 A handle (re)build starts no Spark job: the data schema is the Spark
 schema the writer stored in one data file's parquet footer, read on the
@@ -34,9 +34,9 @@ driver, and the partition directories are listed on the driver (Spark
 lists more than ``spark.sql.sources.parallelPartitionDiscovery.threshold``
 sibling directories with a job; the threshold is raised above the
 table's directory count for the duration of the read). Spark still infers
-the partition columns from the paths. Every writer of these tables
-(Spark's, and ``TileCache.put``'s) stores that schema, so a data file
-without it raises instead of falling back to a job-starting inference.
+the partition columns from the paths. Spark's writer stores that schema,
+so a data file without it raises instead of falling back to a
+job-starting inference.
 """
 
 from __future__ import annotations
@@ -147,20 +147,15 @@ def _build_table(spark: SparkSession, table_dir: str) -> DataFrame:
                 conf.set(LISTING_THRESHOLD, old)
 
 
-def read_table(spark: SparkSession, table_dir: str, depth: int) -> DataFrame:
-    """The session handle of the parquet table at ``table_dir`` at its
-    current data version: the directory and its partition directories
-    down to ``depth`` levels."""
+def read_feature_table(spark: SparkSession, table_dir: str) -> DataFrame:
+    """The session handle of the feature table at ``table_dir`` at its
+    current data version (the directory and its ``bucket=*``
+    directories)."""
     return cache.cached(
         "table_ops.table", _handle_key(spark, table_dir),
         lambda: _build_table(spark, table_dir),
-        fp=cache.dir_version(table_dir, depth),
+        fp=cache.dir_version(table_dir),
     )
-
-
-def read_feature_table(spark: SparkSession, table_dir: str) -> DataFrame:
-    """The feature table's handle (partitions: ``bucket=*``)."""
-    return read_table(spark, table_dir, 1)
 
 
 def refresh_table(spark: SparkSession, table_dir: str) -> None:

@@ -30,22 +30,23 @@ def test_fingerprint_per_path_and_missing_file(tmp_path):
 
 
 def test_dir_version_follows_partition_dirs(tmp_path):
-    """The directory version covers the partition directories down to
-    ``depth``: a file added two levels down moves a depth-2 version and
-    not a depth-1 one; a missing directory has the (0, 0) version."""
-    leaf = tmp_path / "kind=tile" / "z=3"
-    leaf.mkdir(parents=True)
-    (leaf / "a.parquet").write_bytes(b"a")
+    """The directory version covers the directory and its ``key=value``
+    partition directories: a file added in a partition moves it; other
+    directories are not listed; a missing directory has the (0, 0)
+    version."""
+    part = tmp_path / "bucket=3"
+    part.mkdir()
+    (part / "a.parquet").write_bytes(b"a")
     (tmp_path / "_rejects").mkdir()   # not a partition directory
     d = str(tmp_path)
-    v1, v2 = cache.dir_version(d, 1), cache.dir_version(d, 2)
-    assert [rel for rel, *_ in v2] == ["", "/kind=tile", "/kind=tile/z=3"]
-    os.utime(leaf, ns=(1, 1))   # so the write below surely moves it
-    v2 = cache.dir_version(d, 2)
-    (leaf / "b.parquet").write_bytes(b"b")
-    assert cache.dir_version(d, 1) == v1
-    assert cache.dir_version(d, 2) != v2
-    assert cache.dir_version(str(tmp_path / "gone"), 1) == (("", 0, 0),)
+    os.utime(part, ns=(1, 1))   # so the write below surely moves it
+    v = cache.dir_version(d)
+    assert [rel for rel, *_ in v] == ["", "/bucket=3"]
+    (tmp_path / "_rejects" / "r.parquet").write_bytes(b"r")
+    assert cache.dir_version(d) == v
+    (part / "b.parquet").write_bytes(b"b")
+    assert cache.dir_version(d) != v
+    assert cache.dir_version(str(tmp_path / "gone")) == (("", 0, 0),)
 
 
 def test_dir_version_of_uris(tmp_path):
@@ -54,167 +55,168 @@ def test_dir_version_of_uris(tmp_path):
     moves."""
     (tmp_path / "bucket=1").mkdir()
     d = str(tmp_path)
-    assert cache.dir_version("file://" + d, 1) == cache.dir_version(d, 1)
-    assert cache.dir_version("file:" + d, 1) == cache.dir_version(d, 1)
+    assert cache.dir_version("file://" + d) == cache.dir_version(d)
+    assert cache.dir_version("file:" + d) == cache.dir_version(d)
     with pytest.raises(ValueError, match="local directory"):
-        cache.dir_version("hdfs://nn/tables/features", 1)
+        cache.dir_version("hdfs://nn/tables/features")
 
 
-def test_tile_cache_put_then_get_in_one_session(spark, tmp_path):
-    """A blob put is served by the next get, from the in-process front:
-    that hit looks up no table handle. The put moves the directory
-    version, so another key's entry re-probes the table once."""
-    from tank_spark.operators.tile_cache import FRONT, TileCache
+def test_tile_cache_rejects_a_remote_directory():
+    from tank_spark.operators.tile_cache import TileCache
 
-    tc = TileCache(spark, str(tmp_path / "cache"))
+    with pytest.raises(ValueError, match="local directory"):
+        TileCache("hdfs://nn/tiles/cache")
+
+
+def test_tile_cache_put_then_get_in_one_session(tmp_path):
+    """A put is served by the next get; a newer put replaces the key's file;
+    zooms outside [2, 15] are never stored; a kind must be one path part."""
+    from tank_spark.operators.tile_cache import TileCache
+
+    tc = TileCache(str(tmp_path / "cache"))
     assert tc.get("tile", 9, 80, 196) is None
     tc.put("tile", 9, 80, 196, b"blob-1")
     assert tc.get("tile", 9, 80, 196) == b"blob-1"
-    tc.put("heatmap", 9, 80, 196, b"hm-1")
-    before, front = cache.stats("table_ops.table"), cache.stats(FRONT)
-    assert tc.get("heatmap", 9, 80, 196) == b"hm-1"
-    assert _delta("table_ops.table", before) == {
-        "hits": 0, "misses": 0, "evictions": 0}
-    assert _delta(FRONT, front) == {"hits": 1, "misses": 0, "evictions": 0}
-    assert tc.get("tile", 9, 80, 196) == b"blob-1"
-    assert tc.get("tile", 9, 80, 196) == b"blob-1"
-    assert _delta("table_ops.table", before) == {
-        "hits": 0, "misses": 1, "evictions": 0}
-    assert _delta(FRONT, front) == {"hits": 2, "misses": 1, "evictions": 1}
+    assert tc.get("heatmap", 9, 80, 196) is None
+    tc.put("tile", 9, 80, 196, b"blob-2")
+    assert tc.get("tile", 9, 80, 196) == b"blob-2"
+    path = tmp_path / "cache" / "tile" / "9" / "80" / "196.parquet"
+    assert os.listdir(path.parent) == ["196.parquet"]
+    tc.put("tile", 1, 0, 0, b"low")
+    tc.put("tile", 16, 0, 0, b"deep")
+    assert tc.get("tile", 1, 0, 0) is None and tc.get("tile", 16, 0, 0) is None
+    assert os.listdir(tmp_path / "cache" / "tile") == ["9"]
+    with pytest.raises(ValueError, match="cache kind"):
+        tc.put("tile/../x", 9, 80, 196, b"blob")
 
 
-def test_tile_cache_front_checks_ttl_on_every_serve(spark, tmp_path, monkeypatch):
-    """A blob older than the TTL is not served, from the front or from
-    the table probe."""
+def test_tile_cache_front_checks_ttl_on_every_serve(tmp_path, monkeypatch):
+    """Every get checks the TTL, counted from the stored ``created_at``
+    (not the file's mtime): a blob older than the TTL is not served."""
     import time
 
     from tank_spark.operators.tile_cache import TileCache
 
-    tc = TileCache(spark, str(tmp_path / "cache"), ttl_seconds=60)
-    tc.put("tile", 9, 80, 196, b"blob-1")
-    assert tc.get("tile", 9, 80, 196) == b"blob-1"
+    tc = TileCache(str(tmp_path / "cache"), ttl_seconds=60)
+    tc.put("tile", 9, 80, 196, b"blob-2")
+    path = tmp_path / "cache" / "tile" / "9" / "80" / "196.parquet"
+    os.utime(path, (0, 0))
+    assert tc.get("tile", 9, 80, 196) == b"blob-2"
     later = time.time() + 61
     monkeypatch.setattr(time, "time", lambda: later)
     assert tc.get("tile", 9, 80, 196) is None
-    cache.clear()
     assert tc.get("tile", 9, 80, 196) is None
     monkeypatch.undo()
-    assert tc.get("tile", 9, 80, 196) == b"blob-1"
-
-
-def test_tile_cache_front_sees_an_append_it_did_not_make(spark, tmp_path):
-    """A newer blob for a key, appended by Spark outside the front, moves
-    the directory version: the next get serves it."""
-    import time
-
-    from tank_spark.operators.tile_cache import TileCache
-
-    d = str(tmp_path / "cache")
-    tc = TileCache(spark, d)
-    tc.put("tile", 9, 80, 196, b"blob-1")
-    assert tc.get("tile", 9, 80, 196) == b"blob-1"
-    (spark.createDataFrame(
-        [("tile", 9, 80, 196, bytearray(b"blob-2"), time.time() + 1)],
-        "kind string, z int, x int, y int, blob binary, created_at double")
-     .write.mode("append").partitionBy("kind", "z").parquet(d))
     assert tc.get("tile", 9, 80, 196) == b"blob-2"
 
 
-def test_tile_cache_put_vouches_only_for_its_own_key(spark, tmp_path,
-                                                     monkeypatch):
-    """A newer blob another writer appends while a put runs is served by
-    the next get of its key: the put moves the directory version, and
-    only the put key is stored under the new one."""
-    import os
-    import time
-
+def test_tile_cache_reads_back_byte_identical(tmp_path):
+    """A blob reads back as the same bytes it was put with, an empty blob
+    included (a hit, not a miss)."""
     from tank_spark.operators.tile_cache import TileCache
 
-    d = str(tmp_path / "cache")
-    tc = TileCache(spark, d)
-    tc.put("tile", 9, 81, 196, b"old")
-    assert tc.get("tile", 9, 81, 196) == b"old"
-    rename = os.replace
-
-    def rename_then_foreign_append(src, dst):
-        rename(src, dst)
-        (spark.createDataFrame(
-            [("tile", 9, 81, 196, bytearray(b"new"), time.time() + 1)],
-            "kind string, z int, x int, y int, blob binary, created_at double")
-         .write.mode("append").partitionBy("kind", "z").parquet(d))
-
-    monkeypatch.setattr(os, "replace", rename_then_foreign_append)
-    tc.put("tile", 9, 80, 196, b"blob-1")
-    monkeypatch.undo()
-    assert tc.get("tile", 9, 81, 196) == b"new"
-    assert tc.get("tile", 9, 80, 196) == b"blob-1"
-
-
-def test_tile_cache_invalidation_marks_at_most_the_front_cap(
-        spark, tmp_path, monkeypatch):
-    """An invalidation counts every key it deletes but holds at most
-    ``cache.MEMO_CAP`` of them as absent in the front; every deleted key
-    reads as absent."""
-    from tank_spark.operators.tile_cache import FRONT, TileCache
-
-    monkeypatch.setattr(cache, "MEMO_CAP", 4)
-    tc = TileCache(spark, str(tmp_path / "cache"))
-    keys = [(9, 80 + i, 196) for i in range(6)]
-    for k in keys:
-        tc.put("tile", *k, b"blob")
-    before = cache.stats(FRONT)
-    assert tc.invalidate_cover(keys, []) == 6
-    assert cache.stats(FRONT)["evictions"] == before["evictions"]
-    held = [cache.lookup(FRONT, tc._key("tile", *k), "none") for k in keys]
-    assert held.count(None) == 4
-    assert all(tc.get("tile", *k) is None for k in keys)
-
-
-def test_tile_cache_writers_drop_the_front(spark, tmp_path, monkeypatch):
-    """With the directory version frozen, a put and an invalidation made
-    in this process are still seen exactly: every writer replaces or drops
-    the front's entries for its directory."""
-    from tank_spark.operators.tile_cache import TileCache
-
-    monkeypatch.setattr(cache, "dir_version", lambda *a, **k: ())
-    tc = TileCache(spark, str(tmp_path / "cache"))
-    assert tc.get("tile", 9, 80, 196) is None
-    tc.put("tile", 9, 80, 196, b"blob-1")
-    tc.put("tile", 9, 81, 196, b"other")
-    assert tc.get("tile", 9, 80, 196) == b"blob-1"
-    tc.put("tile", 9, 80, 196, b"blob-2")
-    assert tc.get("tile", 9, 80, 196) == b"blob-2"
-    assert tc.get("tile", 9, 81, 196) == b"other"
-    assert tc.invalidate_cover([(9, 80, 196)], []) == 1
-    assert tc.get("tile", 9, 80, 196) is None
-    assert tc.get("tile", 9, 81, 196) == b"other"
-
-
-def test_tile_cache_put_reads_back_through_the_table(spark, tmp_path):
-    """A driver-side put is a Spark-readable cache row: with the front
-    cleared, the table probe serves the blob byte-identical, and the
-    table's Spark schema is the one Spark's own writer gives it."""
-    import time
-
-    from tank_spark.operators.tile_cache import TileCache
-
-    schema = "kind string, z int, x int, y int, blob binary, created_at double"
-    d = str(tmp_path / "cache")
+    tc = TileCache(str(tmp_path / "cache"))
     blob = bytes(range(256)) * 3
-    tc = TileCache(spark, d)
-    tc.put("tile", 9, 80, 196, blob)
+    tc.put("tile", 9, 80, 196, bytearray(blob))
     tc.put("heatmap", 10, 160, 392, b"")
-    cache.clear()
-    assert tc.get("tile", 9, 80, 196) == blob
+    got = tc.get("tile", 9, 80, 196)
+    assert type(got) is bytes and got == blob
     assert tc.get("heatmap", 10, 160, 392) == b""
-    ref = str(tmp_path / "ref")
-    (spark.createDataFrame([("tile", 9, 80, 196, bytearray(blob), time.time())],
-                           schema)
-     .write.partitionBy("kind", "z").parquet(ref))
-    got = spark.read.parquet(d).schema
-    assert got == spark.read.parquet(ref).schema
-    assert sorted(got.simpleString()[7:-1].split(",")) == sorted(
-        f.replace(" ", ":") for f in schema.split(", "))
+
+
+def test_tile_cache_second_instance_sees_puts_and_invalidations(tmp_path):
+    """A second ``TileCache`` over the same directory, as another process
+    would hold, sees the first one's put and invalidation on its next
+    get, and the other way round (one names it by a 'file:' URI)."""
+    from tank_spark.operators.tile_cache import TileCache
+
+    d = str(tmp_path / "cache")
+    a, b = TileCache(d), TileCache("file://" + d)
+    assert b.get("tile", 9, 80, 196) is None
+    a.put("tile", 9, 80, 196, b"blob-1")
+    assert b.get("tile", 9, 80, 196) == b"blob-1"
+    b.put("tile", 9, 80, 196, b"blob-2")
+    assert a.get("tile", 9, 80, 196) == b"blob-2"
+    assert a.invalidate_cover([(9, 80, 196)], []) == 1
+    assert b.get("tile", 9, 80, 196) is None
+    assert b.invalidate_cover([(9, 80, 196)], []) == 0
+
+
+def test_tile_cache_concurrent_puts_gets_and_invalidations(tmp_path):
+    """Threads putting, reading and invalidating one key (directly and
+    through a root) see a whole blob that was put, or a miss; no call
+    raises and no temp file is left behind."""
+    import sys
+    import threading
+    import time
+
+    from tank_spark.operators.tile_cache import TileCache
+
+    tc = TileCache(str(tmp_path / "cache"))
+    seen, errors = set(), []
+    stop = time.monotonic() + 1.0
+
+    def work(i):
+        try:
+            while time.monotonic() < stop:
+                tc.put("tile", 9, 80, 196, bytes([i]) * 5000)
+                seen.add(tc.get("tile", 9, 80, 196))
+                if i % 3 == 0:
+                    tc.invalidate_cover([(9, 80, 196)], [(8, 40, 98)])
+        except Exception as e:   # reported by the assertion below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=work, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert seen and seen <= {bytes([i]) * 5000 for i in range(8)} | {None}
+    assert set(os.listdir(tmp_path / "cache" / "tile" / "9" / "80")) <= {
+        "196.parquet"}
+
+
+def test_tile_cache_invalidation_is_bounded_by_its_cover(tmp_path):
+    """An invalidation deletes the cover's keys and touches no other
+    file: every cached file outside the cover keeps its path, inode and
+    mtime, at other zooms, tiles and kinds alike."""
+    from tank_spark.operators.tile_cache import TileCache
+
+    d = tmp_path / "cache"
+    tc = TileCache(str(d))
+    keys = [(k, z, x, y) for k in ("tile", "heatmap", "other")
+            for z, x, y in [(2, 0, 1), (9, 80, 196), (13, 1281, 3137),
+                            (13, 1281, 3136), (14, 2562, 6274),
+                            (15, 5124, 12548), (15, 5126, 12548),
+                            (15, 5125, 12551)]]
+    for key in keys:
+        tc.put(*key, "/".join(map(str, key)).encode())
+
+    def stats():
+        return {p: (st.st_ino, st.st_mtime_ns)
+                for p in map(str, d.rglob("*.parquet"))
+                for st in [os.stat(p)]}
+
+    def path(k, z, x, y):
+        return str(d / k / str(z) / str(x) / f"{y}.parquet")
+
+    before = stats()
+    assert tc.invalidate_cover([(13, 1281, 3137)], []) == 3
+    gone = {path(k, 13, 1281, 3137) for k in ("tile", "heatmap", "other")}
+    assert stats() == {p: v for p, v in before.items() if p not in gone}
+    # a root at z14: its z15 descendants (x 5124-5125, y 12548-12549) go
+    before = stats()
+    assert tc.invalidate_cover([], [(14, 2562, 6274)]) == 6
+    gone = {path(k, z, x, y) for k in ("tile", "heatmap", "other")
+            for z, x, y in [(14, 2562, 6274), (15, 5124, 12548)]}
+    assert stats() == {p: v for p, v in before.items() if p not in gone}
 
 
 def test_stale_fingerprint_releases_and_rebuilds():

@@ -226,7 +226,7 @@ def test_feature_bounding_manager_root_compression():
 def test_tile_cache_invalidate_features(spark, tmp_path):
     from tank_spark.operators.tile_cache import TileCache
 
-    cache = TileCache(spark, str(tmp_path / "cache"))
+    cache = TileCache(str(tmp_path / "cache"))
     # one entry inside the dirty polygon's z9 cover, one far away
     zin = (9, tilemath.tile_number(52.5, 13.4, 9)[0],
            tilemath.tile_number(52.5, 13.4, 9)[1])
@@ -270,7 +270,7 @@ def test_tile_cache_large_cover_matches_the_driver_model(spark, tmp_path):
             z >= rz and (x >> (z - rz), y >> (z - rz)) == (rx, ry)
             for rz, rx, ry in roots)
 
-    cache = TileCache(spark, str(tmp_path / "cache"))
+    cache = TileCache(str(tmp_path / "cache"))
     for k, z, x, y in sorted(keys):
         cache.put(k, z, x, y, f"{k}/{z}/{x}/{y}".encode())
     want = {key for key in keys if covered(*key[1:])}

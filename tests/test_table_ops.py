@@ -320,10 +320,10 @@ def _spark_jobs(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def _same_schema(spark, table_dir, depth):
-    from tank_spark.operators.table_ops import read_table
+def _same_schema(spark, table_dir):
+    from tank_spark.operators.table_ops import read_feature_table
 
-    got = read_table(spark, table_dir, depth).schema
+    got = read_feature_table(spark, table_dir).schema
     assert got == spark.read.parquet(table_dir).schema, got.simpleString()
 
 
@@ -360,39 +360,27 @@ def test_handle_schema_is_the_parquet_readers(spark, tmp_path):
     d = str(tmp_path / "layer")
     ops.write_feature_table(features_df(spark, SF_DIR), d)
     assert dict(ops.read_feature_table(spark, d).dtypes)["ts"] == "timestamp_ntz"
-    _same_schema(spark, d, 1)
+    _same_schema(spark, d)
     t = Tank(spark, d, cache_dir=str(tmp_path / "cache"))
     assert t.ingest_features([_json.dumps(
         {"id": "s-1", "lon": -123.7, "lat": 38.7, "kind": "poi",
          "score": "5", "cnt": "1", "tag": "t"})])["accepted"] == 1
-    _same_schema(spark, d, 1)
+    _same_schema(spark, d)
     assert t.update_feature("feat-4005", {"tag": "tag-s"}) >= 1
-    _same_schema(spark, d, 1)
+    _same_schema(spark, d)
     assert t.delete_feature("feat-8001") == 1
-    _same_schema(spark, d, 1)
+    _same_schema(spark, d)
     assert ops.compact_table(spark, d)
-    _same_schema(spark, d, 1)
-
-    c = str(tmp_path / "cache")
-    t._cache.put("tile", 9, 80, 196, b"blob")
-    t._cache.put("heatmap", 9, 80, 196, b"hm")
-    t._cache.put("tile", 10, 160, 392, b"blob-2")
-    _same_schema(spark, c, 2)
-    assert t._cache.invalidate_cover([(9, 80, 196)], []) == 2
-    _same_schema(spark, c, 2)               # the survivors, rewritten
-    t._cache.put("tile", 9, 81, 196, b"blob-3")
-    _same_schema(spark, c, 2)
+    _same_schema(spark, d)
 
 
 def test_handle_builds_and_cache_hits_start_no_spark_job(spark, tmp_path):
-    """A feature-handle rebuild after a write, a second ``get`` of one
-    key and the first ``get`` after a ``put`` start no Spark job; the
+    """A feature-handle rebuild after a write starts no Spark job; the
     listing threshold is back at its old value after every build,
     including one that raises."""
     from pyspark.errors import AnalysisException
 
     from tank_spark.operators import table_ops as ops
-    from tank_spark.operators.tile_cache import TileCache
     from tank_spark.sources.features import features_df
 
     key = ops.LISTING_THRESHOLD
@@ -406,29 +394,46 @@ def test_handle_builds_and_cache_hits_start_no_spark_job(spark, tmp_path):
     assert _spark_jobs(spark, lambda: ops.read_feature_table(spark, d)) == 0
     assert spark.conf.get(key, None) == old
 
-    tc = TileCache(spark, str(tmp_path / "cache"))
     # a threshold below any listing, so the failing build must raise it
     spark.conf.set(key, "0")
     try:
         with pytest.raises(AnalysisException):
-            ops.read_table(spark, tc.cache_dir, 2)
+            ops.read_feature_table(spark, str(tmp_path / "missing"))
         assert spark.conf.get(key) == "0"
     finally:
         if old is None:
             spark.conf.unset(key)
         else:
             spark.conf.set(key, old)
-    assert tc.get("tile", 9, 80, 196) is None
-    tc.put("tile", 9, 80, 196, b"blob-1")
-    assert _spark_jobs(spark, lambda: tc.get("tile", 9, 80, 196)) == 0
-    tc.put("tile", 9, 81, 196, b"blob-2")
-    assert _spark_jobs(spark, lambda: tc.get("tile", 9, 81, 196)) == 0
-    assert tc.get("tile", 9, 82, 196) is None       # a miss probes once
-    assert _spark_jobs(spark, lambda: tc.get("tile", 9, 82, 196)) == 0
-    # the put moved the version: another key re-probes once, then hits
-    assert tc.get("tile", 9, 80, 196) == b"blob-1"
-    assert _spark_jobs(spark, lambda: tc.get("tile", 9, 80, 196)) == 0
-    assert spark.conf.get(key, None) == old
+
+
+def test_tile_cache_calls_start_no_spark_job(spark, tmp_path):
+    """A get of an absent key, a put, a get hit and an invalidation that
+    deletes a key each start 0 Spark jobs: the tile cache does not import
+    pyspark."""
+    import ast
+    import inspect
+
+    from tank_spark.operators import tile_cache
+    from tank_spark.operators.tile_cache import TileCache
+
+    tree = ast.parse(inspect.getsource(tile_cache))
+    imported = [a.name for n in ast.walk(tree) if isinstance(n, ast.Import)
+                for a in n.names]
+    imported += [n.module for n in ast.walk(tree)
+                 if isinstance(n, ast.ImportFrom)]
+    assert not [m for m in imported if m.startswith("pyspark")]
+
+    assert _spark_jobs(spark, lambda: spark.range(3).collect()) >= 1
+    tc, got = TileCache(str(tmp_path / "cache")), []
+    calls = [
+        lambda: got.append(tc.get("tile", 9, 80, 196)),
+        lambda: tc.put("tile", 9, 80, 196, b"blob-1"),
+        lambda: got.append(tc.get("tile", 9, 80, 196)),
+        lambda: got.append(tc.invalidate_cover([(9, 80, 196)], [])),
+    ]
+    assert [_spark_jobs(spark, call) for call in calls] == [0, 0, 0, 0]
+    assert got == [None, b"blob-1", 1]
 
 
 def test_ingest_features_job_count(spark, table_dir):
